@@ -8,14 +8,18 @@ under batch and Structured Streaming here).
 Scale notes (100 TB):
 - filter/project/categorize are narrow (no shuffle); the predicates are
   Catalyst expressions so they push into the parquet/Kafka scan.
-- the interval JOIN variants broadcast the (tiny) ranges dimension — a
-  BroadcastNestedLoopJoin, the vectorized analog of the reference's
-  per-record state-store scan (EgvTransformer.java:51-81). The join
-  itself moves no fact rows, but the first-match election afterwards IS
-  one hash shuffle + sort of the joined stream on __event_pk (the
-  row_number window) — at 100 TB prefer interval_lookup_categorize_scan,
-  the genuinely zero-shuffle path (ranges inlined, first match picked
-  scan-side), whenever the dimension is driver-known.
+- the interval lookup of a small, in-memory ranges dimension
+  (interval_lookup_categorize_scan) is a narrow projection: the ranges
+  are inlined as a CASE WHEN chain plus literal arrays, the first match
+  is picked scan-side, and the fact side streams through with no join
+  and no shuffle. The flagship batch query and the P5 streaming
+  topology both run it.
+- the interval JOIN variants are the reference semantics and the path
+  for a dimension too large to inline. interval_join_categorize
+  broadcasts the ranges into a BroadcastNestedLoopJoin, then elects
+  the first match with a row_number window: one hash shuffle + sort of
+  the joined stream on __event_pk. interval_join_bucketized turns the
+  lookup into a shuffle-partitionable equi-join on a time bucket.
 - latest_per_key / dedup shuffle once on the key — unavoidable (it is the
   groupBy key) — and AQE handles skew. For repeated use, bucket the table
   by the key to amortize the shuffle across queries.
@@ -29,6 +33,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from kafka_streams_dexcom_spark.functions.json import json_int_or_zero
+from kafka_streams_dexcom_spark.schemas import RANGE_SCHEMA
 
 
 def filter_at_least(df: DataFrame, value_col: str, threshold: float) -> DataFrame:
@@ -145,10 +150,16 @@ def interval_join_categorize(
     tod_col: Column,
     value_col: str,
 ) -> DataFrame:
-    """P5 pipeline: interval lookup join, then per-row-bounds
+    """P5 pipeline as a join: interval lookup join, then per-row-bounds
     categorization ``lower_bound <= value <= upper_bound`` → "true"/"false"
     (reference: CategorizeWithKTableLookup.java:69-75). Unmatched rows get
-    in_range = null (left-join policy, documented §2.6 #4)."""
+    in_range = null (left-join policy, documented §2.6 #4).
+
+    The tests use it as the reference for
+    :func:`interval_lookup_categorize_scan`, which the flagship query and
+    the P5 topology run. It is the plan-audited path (BroadcastNestedLoopJoin
+    plus one window shuffle, tests/test_plans.py) for a ranges dimension
+    that is a DataFrame and cannot be collected and inlined."""
     joined = interval_join(events, ranges, tod_col, how="left")
     return joined.withColumn(
         "in_range",
@@ -158,6 +169,15 @@ def interval_join_categorize(
     )
 
 
+def _sql_literal(v: object, dtype: str) -> str:
+    """A typed Spark SQL literal for an int or string dimension value."""
+    if v is None:
+        return f"CAST(NULL AS {dtype})"
+    if dtype == "string":
+        return "'" + str(v).replace("\\", "\\\\").replace("'", "\\'") + "'"
+    return f"CAST({int(v)} AS {dtype})"
+
+
 def interval_lookup_categorize_scan(
     events: DataFrame,
     ranges_rows: Sequence[tuple],
@@ -165,52 +185,51 @@ def interval_lookup_categorize_scan(
     value_col: str,
 ) -> DataFrame:
     """Scan-side variant of :func:`interval_join_categorize` for a small,
-    driver-known ranges dimension: the ranges are inlined as an
-    array<struct> literal and the first match is found with
-    sort_array(filter(...))[0] — a pure narrow projection.
+    in-memory ranges dimension (``(range_id, start_time, end_time,
+    lower_bound, upper_bound)`` tuples or Rows): a pure narrow
+    projection, zero shuffle, zero join, no Spark job.
 
-    Zero shuffle, zero join: at 100 TB the fact side streams through the
-    scan untouched. This is exactly the reference's execution strategy
-    (per-record scan of a tiny in-memory store, EgvTransformer.java:51-81)
-    vectorized — and struct sort order starts at range_id, giving the
-    deterministic lowest-range_id first-match (§2.6 #6). Use the join
-    variant when the dimension is too big to inline/broadcast.
+    The rows are sorted by ``range_id`` (nulls last) and inlined as one
+    ``CASE WHEN`` chain that yields the index of the first range whose
+    [start_time, end_time] contains the time of day; each output column
+    is then one ``get`` from a literal array at that index. This is the
+    reference's execution strategy (per-record scan of a tiny in-memory
+    store, EgvTransformer.java:51-81) with the deterministic
+    lowest-range_id first match (§2.6 #6), compiled by whole-stage
+    codegen with no per-row allocation. No match, or an empty
+    dimension, gives null enrichment and null in_range (§2.6 #4).
+
+    The expressions are built as SQL text: one parse in the JVM instead
+    of a Py4J call per literal, which dominated construction time.
     """
-    ranges_lit = F.array(
-        *[
-            F.struct(
-                F.lit(rid).cast("int").alias("range_id"),
-                F.lit(st).alias("start_time"),
-                F.lit(et).alias("end_time"),
-                F.lit(lo).cast("int").alias("lower_bound"),
-                F.lit(hi).cast("int").alias("upper_bound"),
-            )
-            for rid, st, et, lo, hi in ranges_rows
-        ]
+    rows = sorted(ranges_rows, key=lambda r: (r[0] is None, r[0] or 0))
+    fields = [(f.name, f.dataType.simpleString()) for f in RANGE_SCHEMA]
+    whens = " ".join(
+        f"WHEN __tod >= {_sql_literal(r[1], 'string')} "
+        f"AND __tod <= {_sql_literal(r[2], 'string')} THEN {i}"
+        for i, r in enumerate(rows)
     )
-    e = events.withColumn("__tod", tod_col).withColumn("__ranges", ranges_lit)
-    first = F.get(
-        F.expr(
-            "sort_array(filter(__ranges, "
-            "r -> __tod >= r.start_time AND __tod <= r.end_time))"
-        ),
-        0,
+    idx = f"CASE {whens} END" if rows else "CAST(NULL AS INT)"
+    picks = {
+        name: F.expr(
+            f"get(array({', '.join(_sql_literal(r[pos], t) for r in rows)}), __idx)"
+            if rows
+            else f"CAST(NULL AS {t})"
+        )
+        for pos, (name, t) in enumerate(fields)
+    }
+    in_range = in_range_or_null(
+        F.col(value_col), picks["lower_bound"], picks["upper_bound"]
     )
     return (
-        e.withColumn("range_id", first.getField("range_id"))
-        .withColumn("start_time", first.getField("start_time"))
-        .withColumn("end_time", first.getField("end_time"))
-        .withColumn("lower_bound", first.getField("lower_bound"))
-        .withColumn("upper_bound", first.getField("upper_bound"))
-        .withColumn(
-            "in_range",
-            in_range_or_null(
-                F.col(value_col),
-                F.col("lower_bound"),
-                F.col("upper_bound"),
-            ),
+        events.withColumn("__tod", tod_col)
+        .selectExpr("*", f"{idx} AS __idx")
+        .select(
+            "*",
+            *[c.alias(name) for name, c in picks.items()],
+            in_range.alias("in_range"),
         )
-        .drop("__tod", "__ranges")
+        .drop("__tod", "__idx")
     )
 
 

@@ -36,7 +36,24 @@ RANGES_SQL_CTE = (
 
 
 def ranges_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(GOLDEN_RANGES, RANGE_SCHEMA)
+    """The golden ranges as a LocalRelation with exactly RANGE_SCHEMA.
+
+    ``spark.createDataFrame`` over Python rows plans a scan of a
+    pickled-row RDD, so every collect or broadcast of it runs a Spark
+    job; an inline VALUES table makes every column NOT NULL. The JVM's
+    ``createDataFrame(List<Row>, StructType)`` builds a LocalRelation
+    with the declared schema, which Spark collects without running a
+    job (P5 collects its ranges snapshot every micro-batch)."""
+    sc = spark.sparkContext
+    jvm = sc._jvm
+    rows = jvm.java.util.ArrayList()
+    for r in GOLDEN_RANGES:
+        fields = sc._gateway.new_array(jvm.java.lang.Object, len(r))
+        for i, v in enumerate(r):
+            fields[i] = v
+        rows.add(jvm.org.apache.spark.sql.RowFactory.create(fields))
+    jschema = spark._jsparkSession.parseDataType(RANGE_SCHEMA.json())
+    return DataFrame(spark._jsparkSession.createDataFrame(rows, jschema), spark)
 
 
 # --- queries ---------------------------------------------------------------

@@ -1,12 +1,13 @@
 """P5 with a TRUE stateful dimension: the ranges KTable maintained from
 a changelog stream inside engine state, not reloaded per micro-batch.
 
-The per-batch-reload variant (jobs.ktable_lookup_topology) models the
-dimension as an external snapshot. This module is the other half of the
-reference's design (CategorizeWithKTableLookup.java:60-62): the ranges
-topic IS a changelog, the operator consumes it as a second stream, and
-each event reads whatever the store holds when its batch runs
-(EgvTransformer.java:51's current-state reads, at micro-batch
+The per-batch-snapshot variant (jobs.ktable_lookup_topology) models
+the dimension as an external snapshot, collected into Python each
+batch and inlined into a narrow projection. This module is the other
+half of the reference's design (CategorizeWithKTableLookup.java:60-62):
+the ranges topic IS a changelog, the operator consumes it as a second
+stream, and each event reads whatever the store holds when its batch
+runs (EgvTransformer.java:51's current-state reads, at micro-batch
 granularity).
 
 Shape — the GlobalKTable analog, scale-honest:

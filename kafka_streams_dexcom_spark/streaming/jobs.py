@@ -16,6 +16,7 @@ from kafka_streams_dexcom_spark.functions.timeofday import (
     time_of_day_from_iso_string,
 )
 from kafka_streams_dexcom_spark.operators import core as ops
+from kafka_streams_dexcom_spark.schemas import RANGE_SCHEMA
 
 
 def filter_high_topology(stream: DataFrame) -> DataFrame:
@@ -47,28 +48,27 @@ def categorize_simple_branches() -> (
 def ktable_lookup_topology(
     ranges_loader: Callable[[], DataFrame],
 ) -> Callable[[DataFrame, int], DataFrame]:
-    """P5 (CategorizeWithKTableLookup.java:47-79): per micro-batch, reload
-    the ranges dimension (latest-per-key = the KTable's current state),
-    broadcast it, interval-join + categorize. The reload-per-batch is the
-    Spark analog of the reference reading whatever state the store holds
-    when each record arrives (EgvTransformer.java:51) — a snapshot per
-    batch, documented in SURVEY.md §7 hard-parts #3."""
+    """P5 (CategorizeWithKTableLookup.java:47-79): per micro-batch,
+    collect the ranges dimension into Python (latest-per-key = the
+    KTable's current state) and categorize every record against that
+    snapshot with :func:`ops.interval_lookup_categorize_scan` — a narrow
+    projection, no join, no shuffle. The collect-per-batch is the Spark
+    analog of the reference reading whatever state the store holds when
+    each record arrives (EgvTransformer.java:51) — a snapshot per batch,
+    documented in SURVEY.md §7 hard-parts #3.
+
+    Collecting a LocalRelation loader (``queries.core.ranges_df``) runs
+    no Spark job; a file- or Kafka-backed snapshot costs one small job
+    per batch. A dimension too large to collect belongs in
+    ``streaming.dim_state`` or ``ops.interval_join_bucketized``."""
 
     def run_batch(batch_df: DataFrame, batch_id: int) -> DataFrame:
-        ranges = ranges_loader()
-        # Per-RECORD pk: the reference emits one output per input record
-        # (EgvTransformer.java:51), so the first-match window must never
-        # collapse distinct records. systemTime is NOT unique (second
-        # resolution collides across users at bench volume); a synthetic
-        # id preserves every record.
-        egvs = batch_df.withColumn(
-            "__event_pk", F.monotonically_increasing_id()
-        )
-        return ops.interval_join_categorize(
-            egvs,
-            ranges,
+        rows = ranges_loader().select(*RANGE_SCHEMA.fieldNames()).collect()
+        return ops.interval_lookup_categorize_scan(
+            batch_df,
+            rows,
             time_of_day_from_iso_string("systemTime"),
             "value",
-        ).drop("__event_pk")  # internal, and id values are run-dependent
+        )
 
     return run_batch

@@ -4,6 +4,7 @@ through the injectable DataFrame transforms instead of TopologyTestDriver."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from kafka_streams_dexcom_spark.operators import core as ops
@@ -11,6 +12,8 @@ from kafka_streams_dexcom_spark.queries.core import ranges_df
 from kafka_streams_dexcom_spark.functions.timeofday import (
     time_of_day_from_iso_string,
 )
+from kafka_streams_dexcom_spark.schemas import RANGE_SCHEMA
+from kafka_streams_dexcom_spark.streaming import jobs
 
 
 def test_categorize_simple_golden(spark):
@@ -33,57 +36,119 @@ def test_categorize_bounds_inclusive(spark):
     assert got == {75: "true", 180: "true", 74: "false", 181: "false"}
 
 
-def test_ktable_lookup_golden(spark):
+def _egvs(spark, rows):
+    return spark.createDataFrame(rows, "key string, systemTime string, value int")
+
+
+def _ranges(spark, rows):
+    return spark.createDataFrame(rows, RANGE_SCHEMA)
+
+
+def _join_path(egvs, ranges):
+    return ops.interval_join_categorize(
+        egvs.withColumn("__event_pk", F.monotonically_increasing_id()),
+        ranges,
+        time_of_day_from_iso_string("systemTime"),
+        "value",
+    )
+
+
+def _p5_path(egvs, ranges):
+    return jobs.ktable_lookup_topology(lambda: ranges)(egvs, 0)
+
+
+# Every interval-lookup edge case runs through the join-based reference
+# and the P5 topology (collected snapshot + scan-side CASE kernel).
+lookup_paths = pytest.mark.parametrize(
+    "lookup",
+    [_join_path, _p5_path],
+    ids=["interval_join_categorize", "ktable_lookup_topology"],
+)
+
+
+@lookup_paths
+def test_ktable_lookup_golden(spark, lookup):
     # CategorizeWithKTableLookupTest.java:76-111 — 75@02:00 → "false",
     # 100@12:00 → "true", 265@19:00 → "false".
-    egvs = spark.createDataFrame(
+    egvs = _egvs(
+        spark,
         [
             ("robert", "2020-11-02T02:00:00", 75),
             ("robert", "2020-11-02T12:00:00", 100),
             ("robert", "2020-11-02T19:00:00", 265),
         ],
-        "key string, systemTime string, value int",
-    ).withColumn("__event_pk", F.col("systemTime"))
-    out = ops.interval_join_categorize(
-        egvs, ranges_df(spark), time_of_day_from_iso_string("systemTime"), "value"
     )
-    got = {r.value: r.in_range for r in out.collect()}
+    out = lookup(egvs, ranges_df(spark)).collect()
+    got = {r.value: r.in_range for r in out}
     assert got == {75: "false", 100: "true", 265: "false"}
     # range resolution: 02:00 → sleeping range 1, 12:00/19:00 → active 2
-    rid = {r.value: r.range_id for r in out.collect()}
+    rid = {r.value: r.range_id for r in out}
     assert rid == {75: 1, 100: 2, 265: 2}
 
 
-def test_interval_join_no_match_gives_nulls(spark):
+@lookup_paths
+def test_interval_join_no_match_gives_nulls(spark, lookup):
     # SURVEY.md §2.6 #4: unmatched → null enrichment (left-join policy).
-    egvs = spark.createDataFrame(
-        [("k", "10:00:00", 100)], "key string, tod string, value int"
-    ).withColumn("__event_pk", F.col("tod"))
+    egvs = _egvs(spark, [("k", "2020-11-02T10:00:00", 100)])
     narrow = ranges_df(spark).filter(F.col("range_id") == 1)  # 00:00-05:59 only
-    out = ops.interval_join_categorize(
-        egvs, narrow, F.col("tod"), "value"
-    ).collect()
+    out = lookup(egvs, narrow).collect()
     assert len(out) == 1
     assert out[0].range_id is None and out[0].in_range is None
 
 
-def test_interval_join_first_match_tiebreak(spark):
+@lookup_paths
+def test_interval_join_first_match_tiebreak(spark, lookup):
     # SURVEY.md §2.6 #6: overlapping ranges → lowest range_id wins.
-    overlapping = spark.createDataFrame(
+    overlapping = _ranges(
+        spark,
         [
             (2, "00:00:00", "23:59:59", 0, 50),
             (1, "00:00:00", "23:59:59", 60, 300),
         ],
-        ranges_df(spark).schema,
     )
-    egvs = spark.createDataFrame(
-        [("k", "10:00:00", 100)], "key string, tod string, value int"
-    ).withColumn("__event_pk", F.col("tod"))
-    out = ops.interval_join_categorize(
-        egvs, overlapping, F.col("tod"), "value"
-    ).collect()
+    egvs = _egvs(spark, [("k", "2020-11-02T10:00:00", 100)])
+    out = lookup(egvs, overlapping).collect()
     assert len(out) == 1
     assert out[0].range_id == 1 and out[0].in_range == "true"
+
+
+@lookup_paths
+def test_interval_lookup_empty_dimension(spark, lookup):
+    egvs = _egvs(
+        spark,
+        [("k", "2020-11-02T02:00:00", 75), ("k", "2020-11-02T12:00:00", 100)],
+    )
+    out = lookup(egvs, _ranges(spark, [])).collect()
+    assert len(out) == 2
+    for r in out:
+        assert (r.range_id, r.start_time, r.end_time) == (None, None, None)
+        assert (r.lower_bound, r.upper_bound, r.in_range) == (None, None, None)
+
+
+@lookup_paths
+def test_interval_lookup_null_bounds(spark, lookup):
+    ranges = _ranges(
+        spark,
+        [
+            (0, None, "23:59:59", 0, 500),  # null start: matches nothing
+            (1, "00:00:00", "11:59:59", None, 150),
+            (2, "12:00:00", "23:59:59", 70, None),
+        ],
+    )
+    egvs = _egvs(
+        spark,
+        [("k", "2020-11-02T10:00:00", 100), ("k", "2020-11-02T13:00:00", 100)],
+    )
+    got = {
+        r.systemTime[11:]: (r.range_id, r.lower_bound, r.upper_bound, r.in_range)
+        for r in lookup(egvs, ranges).collect()
+    }
+    assert got == {
+        # null lower bound → null in_range, as for no match (§2.6 #4)
+        "10:00:00": (1, None, 150, None),
+        # null upper bound → the inclusive test is never true: "false"
+        "13:00:00": (2, 70, None, "false"),
+    }
 
 
 def test_filter_missing_json_field_is_zero(spark):

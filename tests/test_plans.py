@@ -65,6 +65,37 @@ def test_interval_join_variant_is_broadcast_nlj(spark, sf_dir):
     assert "SortMergeJoin" not in plan
 
 
+def test_ktable_lookup_topology_is_one_narrow_projection(spark):
+    # P5 per batch: no join, no shuffle, no window, and no per-row
+    # higher-order function — the snapshot is inlined as a CASE kernel.
+    from pyspark.sql import types as T
+
+    from kafka_streams_dexcom_spark.queries.core import ranges_df
+    from kafka_streams_dexcom_spark.streaming import jobs
+
+    batch = spark.createDataFrame(
+        [("robert", "2020-11-02T02:00:00", 75)],
+        "key string, systemTime string, value int",
+    )
+    out = jobs.ktable_lookup_topology(lambda: ranges_df(spark))(batch, 0)
+    plan = explain_str(out)
+    for node in ("Exchange", "Join", "Window", "sort_array", "filter(", "lambda"):
+        assert node not in plan, (node, plan)
+    assert out.schema == T.StructType(
+        [
+            T.StructField("key", T.StringType()),
+            T.StructField("systemTime", T.StringType()),
+            T.StructField("value", T.IntegerType()),
+            T.StructField("range_id", T.IntegerType()),
+            T.StructField("start_time", T.StringType()),
+            T.StructField("end_time", T.StringType()),
+            T.StructField("lower_bound", T.IntegerType()),
+            T.StructField("upper_bound", T.IntegerType()),
+            T.StructField("in_range", T.StringType()),
+        ]
+    )
+
+
 def test_top_customers_broadcasts_dimension(spark, sf_dir):
     df = q_top_customers(spark, sf_dir)
     assert plan_has(df, "BroadcastHashJoin"), explain_str(df)

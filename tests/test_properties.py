@@ -8,8 +8,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from kafka_streams_dexcom_spark.operators import core as ops
-from kafka_streams_dexcom_spark.queries.core import ranges_df
-from kafka_streams_dexcom_spark.schemas import GOLDEN_RANGES
+from kafka_streams_dexcom_spark.schemas import RANGE_SCHEMA
 
 import pyspark.sql.functions as F
 
@@ -24,22 +23,40 @@ tod_strategy = st.tuples(
 ).map(lambda t: f"{t[0]:02d}:{t[1]:02d}:{t[2]:02d}")
 
 
-def _ref_lookup(tod: str):
+def _ref_lookup(tod: str, ranges):
     """Python reference of the interval lookup: lowest range_id whose
     [start, end] contains tod (inclusive)."""
-    for rid, st_, et, lo, hi in sorted(GOLDEN_RANGES):
+    for rid, st_, et, lo, hi in sorted(ranges):
         if st_ <= tod <= et:
             return rid, lo, hi
     return None, None, None
 
 
+# 1-6 ranges: unique range_ids in drawn (unsorted) order, overlaps allowed.
+ranges_strategy = st.lists(
+    st.integers(0, 50), min_size=1, max_size=6, unique=True
+).flatmap(
+    lambda ids: st.tuples(
+        *[
+            st.tuples(
+                st.just(rid),
+                st.lists(tod_strategy, min_size=2, max_size=2).map(sorted),
+                st.lists(st.integers(0, 400), min_size=2, max_size=2).map(sorted),
+            ).map(lambda t: (t[0], t[1][0], t[1][1], t[2][0], t[2][1]))
+            for rid in ids
+        ]
+    ).map(list)
+)
+
+
 @given(
     rows=st.lists(
         st.tuples(tod_strategy, st.integers(0, 400)), min_size=1, max_size=12
-    )
+    ),
+    ranges=ranges_strategy,
 )
 @settings(**_SETTINGS)
-def test_interval_lookup_matches_reference(spark, rows):
+def test_interval_lookup_matches_reference(spark, rows, ranges):
     df = spark.createDataFrame(
         [(f"e{i}", tod, v) for i, (tod, v) in enumerate(rows)],
         "pk string, tod string, value int",
@@ -48,21 +65,22 @@ def test_interval_lookup_matches_reference(spark, rows):
     got_scan = {
         r.pk: (r.range_id, r.in_range)
         for r in ops.interval_lookup_categorize_scan(
-            df, GOLDEN_RANGES, F.col("tod"), "value"
+            df, ranges, F.col("tod"), "value"
         ).collect()
     }
-    # join variant must agree with the scan variant AND the reference
+    # join variant (the reference path) must agree with the scan variant
+    # AND the Python reference
     got_join = {
         r.pk: (r.range_id, r.in_range)
         for r in ops.interval_join_categorize(
             df.withColumn("__event_pk", F.col("pk")),
-            ranges_df(spark),
+            spark.createDataFrame(ranges, RANGE_SCHEMA),
             F.col("tod"),
             "value",
         ).collect()
     }
     for i, (tod, v) in enumerate(rows):
-        rid, lo, hi = _ref_lookup(tod)
+        rid, lo, hi = _ref_lookup(tod, ranges)
         want = (
             (rid, "true" if lo <= v <= hi else "false")
             if rid is not None

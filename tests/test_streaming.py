@@ -70,6 +70,35 @@ def test_interval_join_batch_stream_equivalent(spark):
     assert sorted(batch_rows, key=key) == sorted(stream_rows, key=key)
 
 
+def test_ktable_lookup_builds_without_spark_jobs(spark):
+    """P5 collects its ranges snapshot every batch; a LocalRelation
+    loader makes that (and the whole per-batch build) job-free."""
+    from kafka_streams_dexcom_spark.schemas import GOLDEN_RANGES, RANGE_SCHEMA
+
+    assert ranges_df(spark).schema == RANGE_SCHEMA
+    egvs = spark.createDataFrame(
+        [("robert", "2020-11-02T02:00:00", 75)],
+        "key string, systemTime string, value int",
+    )
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs_started(build, group):
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return tracker.getJobIdsForGroup(group)
+
+    p5 = jobs.ktable_lookup_topology(lambda: ranges_df(spark))
+    assert jobs_started(lambda: p5(egvs, 0), "p5-build") == []
+    # control: the tracker does see a Python-rows dimension's collect
+    rdd_ranges = lambda: spark.createDataFrame(GOLDEN_RANGES, RANGE_SCHEMA)  # noqa: E731
+    rdd_p5 = jobs.ktable_lookup_topology(rdd_ranges)
+    assert jobs_started(lambda: rdd_p5(egvs, 0), "p5-build-rdd") != []
+
+
 def test_fan_out_single_pass_two_sinks(spark):
     """P4: one source batch feeds both output 'topics'."""
     outs: dict[str, list] = {"integer-values": [], "are-values-in-range": []}
