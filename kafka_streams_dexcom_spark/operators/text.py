@@ -8,6 +8,8 @@ marker-dictionary aggregation, and the dictionary itself is broadcast.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -1516,14 +1518,7 @@ def bpe_pair_stats(
     size), and the weighted pair aggregate is alphabet²-bounded.
     Ranking is (count desc, pair asc) — a total order, so top-k is
     deterministic and compiles to TakeOrderedAndProject."""
-    toks_expr = f"filter(split({text_col}, '\\\\s+'), t -> t != '')"
-    words = (
-        fan_out_small(df)
-        .select(F.explode(F.expr(toks_expr)).alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("wc"))
-        .filter(F.length("w") >= 2)
-    )
+    words = _word_counts(df, text_col).filter(F.length("w") >= 2)
     pair_expr = F.expr(
         "transform(sequence(1, length(w) - 1), i -> substring(w, i, 2))"
     )
@@ -1545,20 +1540,12 @@ def bpe_train(
     and rewrites the vocabulary with the merged symbol (greedy
     left-to-right, the standard BPE merge semantics) — and return the
     merge table (round, pair, weighted count): the actual artifact a
-    tokenizer trainer produces.
-
-    Scale: ONE token-scale shuffle total (the initial word count); every
-    round then operates on the DISTINCT-WORD vocabulary — corpus-size-
-    independent. The per-round argmax is a 1-row broadcast joined into
-    a scan-side fold (`aggregate`) that rewrites symbol arrays in
-    codegen; localCheckpoint per round is the same iterative-lineage
-    hygiene as kmeans/pagerank. Driver never sees data — the loop is a
-    fixed unroll, not convergence-dependent.
+    tokenizer trainer produces. See :func:`_merge_loop` for scale.
 
     Determinism: counts are exact integers; (n desc, s1 asc, s2 asc)
     totally orders candidate pairs, so every round's merge is exactly
     replayable — the oracle unrolls the same rounds in SQL."""
-    merges, _vocab = _bpe_loop(df, text_col, n_merges, apply_last=False)
+    merges, _vocab = _merge_loop(df, text_col, n_merges, BPE)
     return merges
 
 
@@ -1574,54 +1561,137 @@ BYTEBPE_SYMS_TPL = (
     "transform(sequence(1, octet_length({w})), "
     "i -> substring(hex(encode({w}, 'utf-8')), 2*i - 1, 2))"
 )
-BYTEBPE_SYMS_SQL = BYTEBPE_SYMS_TPL.format(w="w")
 
 
-def _bpe_loop(
-    df: DataFrame,
-    text_col: str,
-    n_merges: int,
-    apply_last: bool,
-    syms_sql: str = "split(w, '')",
-) -> tuple[DataFrame, DataFrame]:
-    """Shared BPE merge loop: returns (merge table, vocabulary). With
-    ``apply_last`` the final round's merge is also folded into the
-    vocabulary — training only needs the merge TABLE (bpe_train), while
-    encoding needs the fully-merged vocab (bpe_encode_counts).
-    ``syms_sql`` picks the base alphabet: per-character splitting
-    (classic BPE, the default) or per-UTF-8-byte hex symbols
-    (BYTEBPE_SYMS_SQL — the GPT-2 byte-level family). The merge
-    semantics, ranking order, and fold are IDENTICAL across alphabets;
-    only the seed decomposition differs."""
+class MergeFamily(NamedTuple):
+    """What a merge-trained tokenizer family varies in :func:`_merge_loop`.
+
+    ``seed``: SQL over the word ``w`` giving its initial symbol array.
+    ``scored``: rank pairs by WordPiece's likelihood gain
+    n_ab / (n_a * n_b) (and report it as ``score``) instead of the raw
+    word-weighted pair count. ``strip_cont``: the merged symbol drops
+    the '##' continuation mark of the absorbed right symbol."""
+
+    seed: str
+    scored: bool
+    strip_cont: bool
+
+
+# classic BPE: one symbol per character
+BPE = MergeFamily("split(w, '')", scored=False, strip_cont=False)
+# byte-level BPE: one two-char hex symbol per UTF-8 byte
+BYTEBPE = MergeFamily(
+    BYTEBPE_SYMS_TPL.format(w="w"), scored=False, strip_cont=False
+)
+# WordPiece: first char bare, every continuation char '##'-prefixed —
+# the convention that lets one vocabulary tell word-initial from
+# word-internal pieces
+WORDPIECE = MergeFamily(
+    "transform(sequence(1, length(w)), i -> IF(i = 1, substring(w, i, 1), "
+    "'##' || substring(w, i, 1)))",
+    scored=True,
+    strip_cont=True,
+)
+
+
+def _word_counts(df: DataFrame, text_col: str) -> DataFrame:
+    """Distinct-word counts (w, wc) — the single token-scale shuffle
+    every tokenizer trainer and apply map amortizes."""
     toks_expr = f"filter(split({text_col}, '\\\\s+'), t -> t != '')"
-    vocab = (
+    return (
         fan_out_small(df)
         .select(F.explode(F.expr(toks_expr)).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("wc"))
-        .select(
-            "w",
-            "wc",
-            F.expr(syms_sql).alias("syms"),
-        )
+    )
+
+
+def _merge_loop(
+    df: DataFrame, text_col: str, n_merges: int, family: MergeFamily
+) -> tuple[DataFrame, DataFrame]:
+    """The one merge-training driver for the BPE, byte-level BPE and
+    WordPiece families: returns (merge table, fully-merged vocabulary
+    (w, wc, syms)). Per round it counts word-frequency-weighted
+    adjacent symbol pairs, picks the argmax pair — by count, or by
+    ``family.scored``'s likelihood gain — with ties broken (s1 asc,
+    s2 asc), a total order, appends the merge row, then rewrites every
+    word with the greedy left-to-right fold. The merge table is
+    (round, pair, n_occurrences), plus the trunc6 ``score`` for scored
+    families. A round with no pair left (every word is one symbol)
+    adds no merge row and leaves the vocabulary unchanged.
+
+    Scale: ONE token-scale shuffle total (the initial word count);
+    every round then operates on the DISTINCT-WORD vocabulary —
+    corpus-size-independent. The per-round argmax is a 1-row broadcast
+    joined into a scan-side fold (``aggregate``) that rewrites symbol
+    arrays in codegen; localCheckpoint per round is the same
+    iterative-lineage hygiene as kmeans/pagerank. Driver never sees
+    data — the loop is a fixed unroll, not convergence-dependent."""
+    vocab = (
+        _word_counts(df, text_col)
+        .select("w", "wc", F.expr(family.seed).alias("syms"))
         .localCheckpoint()
+    )
+    pair_expr = F.expr(
+        "transform(sequence(1, size(syms) - 1), "
+        "i -> struct(element_at(syms, i) AS s1, "
+        "element_at(syms, i + 1) AS s2))"
+    )
+    right = (
+        "IF(substring(bp2, 1, 2) = '##', substring(bp2, 3), bp2)"
+        if family.strip_cont
+        else "bp2"
+    )
+    merge_fold = F.expr(
+        "CASE WHEN size(syms) <= 1 THEN syms ELSE "
+        "aggregate(syms, CAST(array() AS array<string>), (acc, s) -> "
+        "IF(size(acc) > 0 AND element_at(acc, -1) = bp1 AND s = bp2, "
+        "concat(slice(acc, 1, size(acc) - 1), "
+        f"array(concat(bp1, {right}))), "
+        "concat(acc, array(s)))) END"
     )
     merges = None
     for rnd in range(1, n_merges + 1):
-        pair_expr = F.expr(
-            "transform(sequence(1, size(syms) - 1), "
-            "i -> struct(element_at(syms, i) AS s1, "
-            "element_at(syms, i + 1) AS s2))"
-        )
-        best = (
+        pairs = (
             vocab.filter(F.size("syms") >= 2)
             .select("wc", F.explode(pair_expr).alias("p"))
             .groupBy(F.col("p.s1").alias("bp1"), F.col("p.s2").alias("bp2"))
             .agg(F.sum("wc").alias("n_occurrences"))
-            .orderBy(
-                F.col("n_occurrences").desc(),
-                F.col("bp1").asc(),
-                F.col("bp2").asc(),
+        )
+        rank = "n_occurrences"
+        if family.scored:
+            sym_counts = (
+                vocab.select("wc", F.explode("syms").alias("s"))
+                .groupBy("s")
+                .agg(F.sum("wc").alias("cnt"))
+            )
+            def counts(i: int) -> DataFrame:
+                return F.broadcast(
+                    sym_counts.select(
+                        F.col("s").alias(f"bp{i}"), F.col("cnt").alias(f"c{i}")
+                    )
+                )
+
+            pairs = (
+                pairs.join(counts(1), "bp1")
+                .join(counts(2), "bp2")
+                .select(
+                    "bp1",
+                    "bp2",
+                    "n_occurrences",
+                    (
+                        F.col("n_occurrences").cast("double")
+                        / (
+                            F.col("c1").cast("double")
+                            * F.col("c2").cast("double")
+                        )
+                    ).alias("score"),
+                )
+            )
+            rank = "score"
+        best = (
+            pairs.orderBy(
+                F.col(rank).desc(), F.col("bp1").asc(), F.col("bp2").asc()
             )
             .limit(1)
             .localCheckpoint()
@@ -1630,19 +1700,17 @@ def _bpe_loop(
             F.lit(rnd).alias("round"),
             F.concat(F.col("bp1"), F.lit("+"), F.col("bp2")).alias("pair"),
             "n_occurrences",
+            *(
+                [trunc6(F.col("score")).alias("score")]
+                if family.scored
+                else []
+            ),
         )
         merges = row if merges is None else merges.union(row)
-        if rnd == n_merges and not apply_last:
-            break
-        merge_fold = F.expr(
-            "CASE WHEN size(syms) <= 1 THEN syms ELSE "
-            "aggregate(syms, CAST(array() AS array<string>), (acc, s) -> "
-            "IF(size(acc) > 0 AND element_at(acc, -1) = bp1 AND s = bp2, "
-            "concat(slice(acc, 1, size(acc) - 1), array(concat(bp1, bp2))), "
-            "concat(acc, array(s)))) END"
-        )
+        # left join: an exhausted round's empty ``best`` gives null
+        # bp1/bp2, which the fold never matches — syms stay as they are
         vocab = (
-            vocab.crossJoin(F.broadcast(best.select("bp1", "bp2")))
+            vocab.join(F.broadcast(best.select("bp1", "bp2")), how="left")
             .select("w", "wc", merge_fold.alias("syms"))
             .localCheckpoint()
         )
@@ -1678,13 +1746,13 @@ def bpe_encode_counts(
     production shape, where the tokenizer is a frozen published
     artifact and this function is pure apply."""
     if vocab is None:
-        _merges, vocab = _bpe_loop(df, text_col, n_merges, apply_last=True)
+        _merges, vocab = _merge_loop(df, text_col, n_merges, BPE)
     enc = vocab.select(
         "w",
         F.size("syms").alias("wtok"),
         F.length("w").alias("wlen"),
     )
-    return _apply_vocab_counts(df, enc, id_col, text_col, "n_chars")
+    return _encode_counts(df, enc, id_col, text_col, n_chars="wlen")
 
 
 def bytebpe_encode_counts(
@@ -1694,7 +1762,7 @@ def bytebpe_encode_counts(
     text_col: str = "text",
 ) -> DataFrame:
     """Tokenize under a learned BYTE-level BPE vocabulary (GPT-2 /
-    Radford et al. 2019; trained via _bpe_loop with BYTEBPE_SYMS_SQL):
+    Radford et al. 2019; trained via _merge_loop with BYTEBPE):
     per doc the word count, token count, UTF-8 BYTE count, and
     bytes-per-token compression — the byte-level family's signature
     metric (its merges buy compression against the raw byte stream, the
@@ -1707,7 +1775,7 @@ def bytebpe_encode_counts(
         F.size("syms").alias("wtok"),
         F.expr("octet_length(w)").alias("wlen"),
     )
-    return _apply_vocab_counts(df, enc, id_col, text_col, "n_bytes")
+    return _encode_counts(df, enc, id_col, text_col, n_bytes="wlen")
 
 
 def bytebpe_apply_merges(
@@ -1761,45 +1829,63 @@ def bytebpe_apply_merges(
     )
 
 
-def _apply_vocab_counts(
+def vocab_sums(
     df: DataFrame,
     enc: DataFrame,
-    id_col: str,
-    text_col: str,
-    len_name: str,
+    key: str,
+    text_col: str = "text",
+    **sums: str,
 ) -> DataFrame:
-    """Shared apply side of the BPE-family tokenizers: join per-doc word
-    counts through the (w → token-count, unit-length) map ``enc`` and
-    aggregate exact integer counts + the floor-truncated units-per-token
-    compression ratio. Documents with no words survive the left join
-    with zero counts (the phantom-empty-token discipline)."""
+    """The shared apply aggregation of every tokenizer family: count
+    words per ``key`` (a doc id, a language), join them through the
+    word map ``enc`` (w → wtok and per-word columns), and sum exact
+    integers per key — n_words, n_tokens, and ``name = sum(n * col)``
+    for each keyword in ``sums`` (e.g. ``n_chars="wlen"``). Words
+    missing from ``enc`` drop out of the inner join; keys with no
+    words produce no row."""
     toks_expr = f"filter(split({text_col}, '\\\\s+'), t -> t != '')"
     wc = (
-        df.select(F.col(id_col), F.explode(F.expr(toks_expr)).alias("w"))
-        .groupBy(id_col, "w")
+        df.select(F.col(key), F.explode(F.expr(toks_expr)).alias("w"))
+        .groupBy(key, "w")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    per_doc = (
+    return (
         wc.join(enc, "w")
-        .groupBy(id_col)
+        .groupBy(key)
         .agg(
             F.sum("n").alias("n_words"),
             F.sum(F.col("n") * F.col("wtok")).alias("n_tokens"),
-            F.sum(F.col("n") * F.col("wlen")).alias(len_name),
+            *(
+                F.sum(F.col("n") * F.col(col)).alias(name)
+                for name, col in sums.items()
+            ),
         )
     )
+
+
+def _encode_counts(
+    df: DataFrame, enc: DataFrame, id_col: str, text_col: str, **sums: str
+) -> DataFrame:
+    """Per-doc encode counts: :func:`vocab_sums` keyed by ``id_col``,
+    left-joined back to every document so docs with no words keep zero
+    counts (the phantom-empty-token discipline), plus the
+    floor-truncated compression — the FIRST of ``sums`` (the unit
+    mass: chars or bytes) per token."""
+    per_doc = vocab_sums(df, enc, id_col, text_col, **sums)
+    unit = next(iter(sums))
     return (
         df.select(id_col)
         .join(per_doc, id_col, "left")
         .select(
             id_col,
-            F.coalesce("n_words", F.lit(0)).alias("n_words"),
-            F.coalesce("n_tokens", F.lit(0)).alias("n_tokens"),
-            F.coalesce(len_name, F.lit(0)).alias(len_name),
+            *(
+                F.coalesce(c, F.lit(0)).alias(c)
+                for c in ("n_words", "n_tokens", *sums)
+            ),
             F.when(
                 F.coalesce("n_tokens", F.lit(0)) > 0,
                 F.floor(
-                    F.col(len_name)
+                    F.col(unit)
                     * F.lit(1_000_000).cast("double")
                     / F.col("n_tokens")
                 )
@@ -2317,16 +2403,12 @@ def source_divergence(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def _word_table(df: DataFrame, text_col: str) -> DataFrame:
-    """Distinct-word table (w, wc, L) for the unigram-LM family — the
-    single token-scale shuffle every downstream stage amortizes (same
-    contract as _bpe_loop's initial word count). Callers derive their
-    own short/long split from L."""
-    toks_expr = f"filter(split({text_col}, '\\\\s+'), t -> t != '')"
+    """Distinct-word table (w, wc, L) for the unigram-LM family and the
+    apply maps — :func:`_word_counts` (the prefix _merge_loop shares)
+    plus the word length. Callers derive their own short/long split
+    from L."""
     return (
-        fan_out_small(df)
-        .select(F.explode(F.expr(toks_expr)).alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("wc"))
+        _word_counts(df, text_col)
         .withColumn("L", F.length("w"))
         .localCheckpoint()
     )
@@ -2473,7 +2555,7 @@ def _unigram_em_loop(
 
     Scale: ONE token-scale shuffle (the word count); seeding, every EM
     round, and the DP itself run on the DISTINCT-WORD vocabulary —
-    corpus-size-independent, the _bpe_loop argument. The piece table is
+    corpus-size-independent, the _merge_loop argument. The piece table is
     broadcast (|chars| + seed_k rows); totals are broadcast 1-row
     aggregates; localCheckpoint per round is the iterative-lineage
     hygiene shared with kmeans/pagerank/bpe. Probability-space products
@@ -2610,40 +2692,7 @@ def unigram_encode_counts(
         )
     words = _word_table(df, text_col)
     enc = _unigram_word_tokens(words, vocab, max_piece_len, max_word_len)
-    toks_expr = f"filter(split({text_col}, '\\\\s+'), t -> t != '')"
-    wc = (
-        df.select(F.col(id_col), F.explode(F.expr(toks_expr)).alias("w"))
-        .groupBy(id_col, "w")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    per_doc = (
-        wc.join(enc, "w")
-        .groupBy(id_col)
-        .agg(
-            F.sum("n").alias("n_words"),
-            F.sum(F.col("n") * F.col("wtok")).alias("n_tokens"),
-            F.sum(F.col("n") * F.col("wlen")).alias("n_chars"),
-        )
-    )
-    return (
-        df.select(id_col)
-        .join(per_doc, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("n_words", F.lit(0)).alias("n_words"),
-            F.coalesce("n_tokens", F.lit(0)).alias("n_tokens"),
-            F.coalesce("n_chars", F.lit(0)).alias("n_chars"),
-            F.when(
-                F.coalesce("n_tokens", F.lit(0)) > 0,
-                F.floor(
-                    F.col("n_chars")
-                    * F.lit(1_000_000).cast("double")
-                    / F.col("n_tokens")
-                )
-                / F.lit(1_000_000.0),
-            ).alias("compression"),
-        )
-    )
+    return _encode_counts(df, enc, id_col, text_col, n_chars="wlen")
 
 
 # WordPiece (Schuster & Nakajima 2012; the BERT tokenizer). Training is
@@ -2663,122 +2712,13 @@ WORDPIECE_MAX_WORD = 16  # longer words -> [UNK], BERT's
 # UNIGRAM_MAX_WORD)
 
 
-def _wordpiece_syms_expr(word_col: str = "w"):
-    """Initial WordPiece symbol array: first char bare, every
-    continuation char '##'-prefixed — the convention that lets one
-    vocabulary distinguish word-initial from word-internal pieces."""
-    return F.expr(
-        f"transform(sequence(1, length({word_col})), i -> "
-        f"IF(i = 1, substring({word_col}, i, 1), "
-        f"'##' || substring({word_col}, i, 1)))"
-    )
-
-
-def _wordpiece_loop(
-    df: DataFrame, text_col: str, n_merges: int
-) -> tuple[DataFrame, DataFrame]:
-    """Shared WordPiece merge loop → (merge table, final symbol table).
-
-    Per round: symbol counts and adjacent-pair counts are both
-    word-frequency-weighted aggregates over the DISTINCT-WORD
-    vocabulary (corpus-size-independent after the single token-scale
-    shuffle, the _bpe_loop contract); the argmax by
-    (n_ab / (n_a * n_b) desc, s1 asc, s2 asc) is a 1-row broadcast; the
-    vocabulary rewrite is the same greedy left-to-right scan-side fold
-    as BPE with the merged symbol ``s1 || strip_##(s2)`` (continuation
-    marking survives on s1's side only — '##wo' + '##rd' → '##word',
-    'wo' + '##rd' → 'word')."""
-    toks_expr = f"filter(split({text_col}, '\\\\s+'), t -> t != '')"
-    vocab = (
-        fan_out_small(df)
-        .select(F.explode(F.expr(toks_expr)).alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("wc"))
-        .select("w", "wc", _wordpiece_syms_expr("w").alias("syms"))
-        .localCheckpoint()
-    )
-    merges = None
-    pair_expr = F.expr(
-        "transform(sequence(1, size(syms) - 1), "
-        "i -> struct(element_at(syms, i) AS s1, "
-        "element_at(syms, i + 1) AS s2))"
-    )
-    for rnd in range(1, n_merges + 1):
-        sym_counts = (
-            vocab.select("wc", F.explode("syms").alias("s"))
-            .groupBy("s")
-            .agg(F.sum("wc").alias("cnt"))
-        )
-        pairs = (
-            vocab.filter(F.size("syms") >= 2)
-            .select("wc", F.explode(pair_expr).alias("p"))
-            .groupBy(F.col("p.s1").alias("bp1"), F.col("p.s2").alias("bp2"))
-            .agg(F.sum("wc").alias("n_occurrences"))
-        )
-        best = (
-            pairs.join(
-                F.broadcast(
-                    sym_counts.select(
-                        F.col("s").alias("bp1"), F.col("cnt").alias("c1")
-                    )
-                ),
-                "bp1",
-            )
-            .join(
-                F.broadcast(
-                    sym_counts.select(
-                        F.col("s").alias("bp2"), F.col("cnt").alias("c2")
-                    )
-                ),
-                "bp2",
-            )
-            .select(
-                "bp1",
-                "bp2",
-                "n_occurrences",
-                (
-                    F.col("n_occurrences").cast("double")
-                    / (F.col("c1").cast("double") * F.col("c2").cast("double"))
-                ).alias("score"),
-            )
-            .orderBy(
-                F.col("score").desc(),
-                F.col("bp1").asc(),
-                F.col("bp2").asc(),
-            )
-            .limit(1)
-            .localCheckpoint()
-        )
-        row = best.select(
-            F.lit(rnd).alias("round"),
-            F.concat(F.col("bp1"), F.lit("+"), F.col("bp2")).alias("pair"),
-            "n_occurrences",
-            trunc6(F.col("score")).alias("score"),
-        )
-        merges = row if merges is None else merges.union(row)
-        merge_fold = F.expr(
-            "CASE WHEN size(syms) <= 1 THEN syms ELSE "
-            "aggregate(syms, CAST(array() AS array<string>), (acc, s) -> "
-            "IF(size(acc) > 0 AND element_at(acc, -1) = bp1 AND s = bp2, "
-            "concat(slice(acc, 1, size(acc) - 1), array(concat(bp1, "
-            "IF(substring(bp2, 1, 2) = '##', substring(bp2, 3), bp2)))), "
-            "concat(acc, array(s)))) END"
-        )
-        vocab = (
-            vocab.crossJoin(F.broadcast(best.select("bp1", "bp2")))
-            .select("w", "wc", merge_fold.alias("syms"))
-            .localCheckpoint()
-        )
-    return merges, vocab
-
-
 def wordpiece_train(
     df: DataFrame, text_col: str = "text", n_merges: int = 5
 ) -> DataFrame:
     """Train the WordPiece tokenizer: the merge table
     (round, pair, n_occurrences, score) — the likelihood-scored merge
-    sequence the trainer publishes. See :func:`_wordpiece_loop`."""
-    merges, _vocab = _wordpiece_loop(df, text_col, n_merges)
+    sequence the trainer publishes. See :func:`_merge_loop`."""
+    merges, _vocab = _merge_loop(df, text_col, n_merges, WORDPIECE)
     return merges
 
 
@@ -2878,47 +2818,14 @@ def wordpiece_encode_counts(
     shape. [UNK] chars count toward n_chars (the word was read) but the
     token count is 1 — the real sequence-length cost of an [UNK]."""
     if pieces is None:
-        _m, vocab = _wordpiece_loop(df, text_col, n_merges)
+        _m, vocab = _merge_loop(df, text_col, n_merges, WORDPIECE)
         pieces = (
             vocab.select(F.explode("syms").alias("s")).distinct()
         )
     words = _word_table(df, text_col)
     enc = _wordpiece_word_tokens(words, pieces, max_word_len)
-    toks_expr = f"filter(split({text_col}, '\\\\s+'), t -> t != '')"
-    wc = (
-        df.select(F.col(id_col), F.explode(F.expr(toks_expr)).alias("w"))
-        .groupBy(id_col, "w")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    per_doc = (
-        wc.join(enc, "w")
-        .groupBy(id_col)
-        .agg(
-            F.sum("n").alias("n_words"),
-            F.sum(F.col("n") * F.col("wtok")).alias("n_tokens"),
-            F.sum(F.col("n") * F.col("wlen")).alias("n_chars"),
-            F.sum(F.col("n") * F.col("is_unk")).alias("n_unk_words"),
-        )
-    )
-    return (
-        df.select(id_col)
-        .join(per_doc, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("n_words", F.lit(0)).alias("n_words"),
-            F.coalesce("n_tokens", F.lit(0)).alias("n_tokens"),
-            F.coalesce("n_chars", F.lit(0)).alias("n_chars"),
-            F.coalesce("n_unk_words", F.lit(0)).alias("n_unk_words"),
-            F.when(
-                F.coalesce("n_tokens", F.lit(0)) > 0,
-                F.floor(
-                    F.col("n_chars")
-                    * F.lit(1_000_000).cast("double")
-                    / F.col("n_tokens")
-                )
-                / F.lit(1_000_000.0),
-            ).alias("compression"),
-        )
+    return _encode_counts(
+        df, enc, id_col, text_col, n_chars="wlen", n_unk_words="is_unk"
     )
 
 

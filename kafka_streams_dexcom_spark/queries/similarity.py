@@ -421,34 +421,19 @@ def pq_artifacts(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame
     from kafka_streams_dexcom_spark.operators.quantize import pq_train_encode
     from kafka_streams_dexcom_spark.sources.files import (
         corpus_fingerprint,
-        session_artifact,
+        session_artifacts,
     )
 
     key = (
         os.path.abspath(sf_dir),
         corpus_fingerprint(os.path.join(sf_dir, "embeddings.parquet")),
     )
-    # one training run feeds BOTH artifacts: stash the pair from the
-    # first build closure so the second tag's build doesn't retrain
-    trained: dict[str, DataFrame] = {}
-
-    def _train() -> None:
-        if not trained:
-            cents, codes = pq_train_encode(
-                load_table(spark, sf_dir, "embeddings")
-            )
-            trained["cents"], trained["codes"] = cents, codes
-
-    def _build(which: str):
-        def build() -> DataFrame:
-            _train()
-            return trained[which]
-
-        return build
-
-    cents = session_artifact(spark, "pq_cents", key, _build("cents"))
-    codes = session_artifact(spark, "pq_codes", key, _build("codes"))
-    return cents, codes
+    return session_artifacts(
+        spark,
+        ("pq_cents", "pq_codes"),
+        key,
+        lambda: pq_train_encode(load_table(spark, sf_dir, "embeddings")),
+    )
 
 
 def q_kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:

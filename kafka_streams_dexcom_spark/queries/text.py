@@ -966,6 +966,32 @@ def q_bpe_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 BPE_MERGES = 5
 
 
+def _tokenizer_artifacts(
+    spark: SparkSession, sf_dir: str, tags: tuple[str, ...], n: int, train
+) -> tuple[DataFrame, ...]:
+    """Publish a tokenizer's legs (``tags``) from ONE run of ``train``
+    over the documents table (sources/files.session_artifacts), keyed
+    by (corpus, its fingerprint, the round count ``n``)."""
+    import os
+
+    from kafka_streams_dexcom_spark.sources.files import (
+        corpus_fingerprint,
+        session_artifacts,
+    )
+
+    key = (
+        os.path.abspath(sf_dir),
+        corpus_fingerprint(os.path.join(sf_dir, "documents.parquet")),
+        n,
+    )
+    return session_artifacts(
+        spark,
+        tags,
+        key,
+        lambda: train(load_table(spark, sf_dir, "documents")),
+    )
+
+
 def bpe_artifacts(
     spark: SparkSession, sf_dir: str, n_merges: int = BPE_MERGES
 ) -> tuple[DataFrame, DataFrame]:
@@ -976,50 +1002,17 @@ def bpe_artifacts(
     data pipeline: at 100 TB nobody re-runs the merge loop per query;
     every downstream job reads the frozen merges/vocab tables (same
     publish-once contract as the coarse quantizer and PQ codebooks in
-    queries/similarity.py). One ``_bpe_loop`` run feeds BOTH artifacts
-    via the stash-dict pattern; oracles are unchanged — they replay
-    training from the data, and the parquet round-trip is bit-exact.
-
-    The merge TABLE is identical whether or not the final round's merge
-    is folded into the vocabulary (``apply_last`` only affects the vocab
-    side — operators/text.py:_bpe_loop appends each round's merge row
-    BEFORE the fold), so training once with ``apply_last=True`` serves
-    both the train and encode surfaces."""
-    import os
-
-    from kafka_streams_dexcom_spark.operators.text import _bpe_loop
-    from kafka_streams_dexcom_spark.sources.files import (
-        corpus_fingerprint,
-        session_artifact,
-    )
-
-    key = (
-        os.path.abspath(sf_dir),
-        corpus_fingerprint(os.path.join(sf_dir, "documents.parquet")),
+    queries/similarity.py). One ``operators/text.py:_merge_loop`` run
+    feeds BOTH artifacts (``_tokenizer_artifacts``); oracles are
+    unchanged — they replay training from the data, and the parquet
+    round-trip is bit-exact."""
+    return _tokenizer_artifacts(
+        spark,
+        sf_dir,
+        ("bpe_merges", "bpe_vocab"),
         n_merges,
+        lambda docs: tx._merge_loop(docs, "text", n_merges, tx.BPE),
     )
-    trained: dict[str, DataFrame] = {}
-
-    def _train() -> None:
-        if not trained:
-            merges, vocab = _bpe_loop(
-                load_table(spark, sf_dir, "documents"),
-                "text",
-                n_merges,
-                apply_last=True,
-            )
-            trained["merges"], trained["vocab"] = merges, vocab
-
-    def _build(which: str):
-        def build() -> DataFrame:
-            _train()
-            return trained[which]
-
-        return build
-
-    merges = session_artifact(spark, "bpe_merges", key, _build("merges"))
-    vocab = session_artifact(spark, "bpe_vocab", key, _build("vocab"))
-    return merges, vocab
 
 
 def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1031,8 +1024,8 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     return merges
 
 
-# DuckDB twins of the two base alphabets (operators/text.py:_bpe_loop's
-# syms_sql): per-character (classic BPE) and per-UTF-8-byte uppercase
+# DuckDB twins of the two base alphabets (operators/text.py:BPE and
+# BYTEBPE seeds): per-character (classic BPE) and per-UTF-8-byte uppercase
 # hex pairs (byte-level / GPT-2 — hex() casing agrees across engines)
 _CHAR_SYMS_DUCK = (
     "list_transform(range(1, length(w) + 1), i -> w[i:i])"
@@ -1049,7 +1042,8 @@ def _bpe_train_oracle(
     """Unrolled replay of bpe_train: per round, the argmax pair CTE and
     the greedy left-to-right merge fold (list_reduce over singleton
     lists — the same fold shape as Spark's aggregate). ``syms_duck``
-    picks the base alphabet (char or byte), mirroring _bpe_loop."""
+    picks the base alphabet (char or byte), mirroring _merge_loop's
+    BPE/BYTEBPE families."""
     parts = [f"""
         v0 AS (
             SELECT wc,
@@ -1087,7 +1081,7 @@ def _bpe_train_oracle(
                                                [bp1 || bp2])
                               ELSE list_concat(acc, el) END)
                    END AS syms
-            FROM v{r - 1} CROSS JOIN b{r}
+            FROM v{r - 1} LEFT JOIN b{r} ON true
         )""")
     selects = [
         f"SELECT CAST({r} AS INTEGER) AS round, bp1 || '+' || bp2 AS pair,"
@@ -1161,7 +1155,7 @@ def _bpe_enc_head(
                                                [bp1 || bp2])
                               ELSE list_concat(acc, el) END)
                    END AS syms
-            FROM v{r - 1} CROSS JOIN b{r}
+            FROM v{r - 1} LEFT JOIN b{r} ON true
         )""")
     return (
         "WITH " + ",".join(parts) + f""",
@@ -1220,51 +1214,17 @@ def bytebpe_artifacts(
     pair — the fourth tokenizer family (GPT-2 / Radford et al. 2019;
     the tiktoken production shape): the same merge loop as classic BPE
     over a 256-symbol UTF-8-byte base alphabet (two-char uppercase hex
-    symbols — operators/text.py:BYTEBPE_SYMS_SQL), so there is never an
+    symbols — operators/text.py:BYTEBPE), so there is never an
     [UNK], never a word-length cap, and the tokenizer is total on any
     unicode input. Publish-once per (application, corpus), exactly
     bpe_artifacts' contract."""
-    import os
-
-    from kafka_streams_dexcom_spark.operators.text import (
-        BYTEBPE_SYMS_SQL,
-        _bpe_loop,
-    )
-    from kafka_streams_dexcom_spark.sources.files import (
-        corpus_fingerprint,
-        session_artifact,
-    )
-
-    key = (
-        os.path.abspath(sf_dir),
-        corpus_fingerprint(os.path.join(sf_dir, "documents.parquet")),
+    return _tokenizer_artifacts(
+        spark,
+        sf_dir,
+        ("bytebpe_merges", "bytebpe_vocab"),
         n_merges,
+        lambda docs: tx._merge_loop(docs, "text", n_merges, tx.BYTEBPE),
     )
-    trained: dict[str, DataFrame] = {}
-
-    def _train() -> None:
-        if not trained:
-            merges, vocab = _bpe_loop(
-                load_table(spark, sf_dir, "documents"),
-                "text",
-                n_merges,
-                apply_last=True,
-                syms_sql=BYTEBPE_SYMS_SQL,
-            )
-            trained["merges"], trained["vocab"] = merges, vocab
-
-    def _build(which: str):
-        def build() -> DataFrame:
-            _train()
-            return trained[which]
-
-        return build
-
-    merges = session_artifact(
-        spark, "bytebpe_merges", key, _build("merges")
-    )
-    vocab = session_artifact(spark, "bytebpe_vocab", key, _build("vocab"))
-    return merges, vocab
 
 
 def q_bytebpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1301,21 +1261,7 @@ def q_bytebpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size("syms").alias("wtok"),
         F.expr("octet_length(w)").alias("wb"),
     )
-    toks_expr = "filter(split(text, '\\\\s+'), t -> t != '')"
-    wc = (
-        docs.select("lang", F.explode(F.expr(toks_expr)).alias("w"))
-        .groupBy("lang", "w")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    agg = (
-        wc.join(enc, "w")
-        .groupBy("lang")
-        .agg(
-            F.sum("n").alias("n_words"),
-            F.sum(F.col("n") * F.col("wtok")).alias("n_tokens"),
-            F.sum(F.col("n") * F.col("wb")).alias("n_bytes"),
-        )
-    )
+    agg = tx.vocab_sums(docs, enc, "lang", n_bytes="wb")
     return agg.select(
         "lang",
         "n_words",
@@ -1386,31 +1332,23 @@ def unigram_artifacts(
     publish-once artifact, exactly bpe_artifacts' contract (a frozen
     tokenizer is read by every downstream job, never retrained per
     query)."""
-    import os
-
-    from kafka_streams_dexcom_spark.operators.text import _unigram_em_loop
-    from kafka_streams_dexcom_spark.sources.files import (
-        corpus_fingerprint,
-        session_artifact,
-    )
-
-    key = (
-        os.path.abspath(sf_dir),
-        corpus_fingerprint(os.path.join(sf_dir, "documents.parquet")),
+    (vocab,) = _tokenizer_artifacts(
+        spark,
+        sf_dir,
+        ("unigram_vocab",),
         n_rounds,
+        lambda docs: (
+            tx._unigram_em_loop(
+                docs,
+                "text",
+                n_rounds,
+                UNIGRAM_SEED_K,
+                UNIGRAM_MAX_PIECE,
+                UNIGRAM_MAX_WORD,
+            ),
+        ),
     )
-
-    def _build() -> DataFrame:
-        return _unigram_em_loop(
-            load_table(spark, sf_dir, "documents"),
-            "text",
-            n_rounds,
-            UNIGRAM_SEED_K,
-            UNIGRAM_MAX_PIECE,
-            UNIGRAM_MAX_WORD,
-        )
-
-    return session_artifact(spark, "unigram_vocab", key, _build)
+    return vocab
 
 
 def q_unigram_train(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3586,20 +3524,7 @@ def q_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     _merges, vocab = bpe_artifacts(spark, sf_dir, n_merges=5)
     enc = vocab.select("w", F.size("syms").alias("wtok"))
-    toks_expr = "filter(split(text, '\\\\s+'), t -> t != '')"
-    wc = (
-        docs.select("lang", F.explode(F.expr(toks_expr)).alias("w"))
-        .groupBy("lang", "w")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    agg = (
-        wc.join(enc, "w")
-        .groupBy("lang")
-        .agg(
-            F.sum("n").alias("n_words"),
-            F.sum(F.col("n") * F.col("wtok")).alias("n_tokens"),
-        )
-    )
+    agg = tx.vocab_sums(docs, enc, "lang")
     return agg.select(
         "lang",
         "n_words",
@@ -3661,20 +3586,7 @@ def q_unigram_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     enc = _unigram_word_tokens(
         words, vocab, UNIGRAM_MAX_PIECE, UNIGRAM_MAX_WORD
     ).select("w", "wtok")
-    toks_expr = "filter(split(text, '\\\\s+'), t -> t != '')"
-    wc = (
-        docs.select("lang", F.explode(F.expr(toks_expr)).alias("w"))
-        .groupBy("lang", "w")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    agg = (
-        wc.join(enc, "w")
-        .groupBy("lang")
-        .agg(
-            F.sum("n").alias("n_words"),
-            F.sum(F.col("n") * F.col("wtok")).alias("n_tokens"),
-        )
-    )
+    agg = tx.vocab_sums(docs, enc, "lang")
     return agg.select(
         "lang",
         "n_words",
@@ -3731,49 +3643,22 @@ def wordpiece_artifacts(
     bpe_artifacts publish-once contract for the third family. The piece
     set is the distinct symbols of the fully-merged vocabulary
     (word-initial bare, continuations '##'-prefixed)."""
-    import os
 
-    from kafka_streams_dexcom_spark.operators.text import _wordpiece_loop
-    from kafka_streams_dexcom_spark.sources.files import (
-        corpus_fingerprint,
-        session_artifact,
-    )
+    def train(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+        merges, vocab = tx._merge_loop(docs, "text", n_merges, tx.WORDPIECE)
+        return merges, vocab.select(F.explode("syms").alias("s")).distinct()
 
-    key = (
-        os.path.abspath(sf_dir),
-        corpus_fingerprint(os.path.join(sf_dir, "documents.parquet")),
+    return _tokenizer_artifacts(
+        spark,
+        sf_dir,
+        ("wordpiece_merges", "wordpiece_pieces"),
         n_merges,
+        train,
     )
-    trained: dict[str, DataFrame] = {}
-
-    def _train() -> None:
-        if not trained:
-            merges, vocab = _wordpiece_loop(
-                load_table(spark, sf_dir, "documents"), "text", n_merges
-            )
-            trained["merges"] = merges
-            trained["pieces"] = (
-                vocab.select(F.explode("syms").alias("s")).distinct()
-            )
-
-    def _build(which: str):
-        def build() -> DataFrame:
-            _train()
-            return trained[which]
-
-        return build
-
-    merges = session_artifact(
-        spark, "wordpiece_merges", key, _build("merges")
-    )
-    pieces = session_artifact(
-        spark, "wordpiece_pieces", key, _build("pieces")
-    )
-    return merges, pieces
 
 
 def q_wordpiece_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WordPiece tokenizer training (operators/text.py:_wordpiece_loop —
+    """WordPiece tokenizer training (operators/text.py:_merge_loop —
     Schuster & Nakajima 2012 / BERT): 5 merge rounds picked by the
     likelihood gain count(ab)/(count(a)·count(b)) instead of BPE's raw
     pair frequency; returns the scored merge table. Served from the
@@ -3795,11 +3680,11 @@ def q_wordpiece_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _wordpiece_cte_chain(n_merges: int = WORDPIECE_MERGES) -> str:
-    """Shared CTE chain replaying _wordpiece_loop: '##'-marked initial
-    symbols, then per round the symbol counts, the likelihood-scored
-    argmax pair (the ONE double division — IEEE-exact both engines),
-    and the greedy left-to-right merge fold with '##' stripped from the
-    absorbed right symbol.
+    """Shared CTE chain replaying _merge_loop's WORDPIECE family:
+    '##'-marked initial symbols, then per round the symbol counts, the
+    likelihood-scored argmax pair (the ONE double division — IEEE-exact
+    both engines), and the greedy left-to-right merge fold with '##'
+    stripped from the absorbed right symbol.
 
     Every v{r} is MATERIALIZED: it is referenced THREE times (symbol
     counts, pair counts, next rewrite), so plain-CTE inlining
@@ -3856,7 +3741,7 @@ def _wordpiece_cte_chain(n_merges: int = WORDPIECE_MERGES) -> str:
                                                 ELSE bp2 END])
                               ELSE list_concat(acc, el) END)
                    END AS syms
-            FROM v{r - 1} CROSS JOIN b{r}
+            FROM v{r - 1} LEFT JOIN b{r} ON true
         )""")
     return ",".join(parts)
 
@@ -4011,21 +3896,7 @@ def q_wordpiece_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     enc = _wordpiece_word_tokens(words, pieces, WORDPIECE_MAX_WORD).select(
         "w", "wtok", "is_unk"
     )
-    toks_expr = "filter(split(text, '\\\\s+'), t -> t != '')"
-    wc = (
-        docs.select("lang", F.explode(F.expr(toks_expr)).alias("w"))
-        .groupBy("lang", "w")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    agg = (
-        wc.join(enc, "w")
-        .groupBy("lang")
-        .agg(
-            F.sum("n").alias("n_words"),
-            F.sum(F.col("n") * F.col("wtok")).alias("n_tokens"),
-            F.sum(F.col("n") * F.col("is_unk")).alias("n_unk_words"),
-        )
-    )
+    agg = tx.vocab_sums(docs, enc, "lang", n_unk_words="is_unk")
     return agg.select(
         "lang",
         "n_words",

@@ -221,6 +221,36 @@ def session_artifact(
         return out
 
 
+def session_artifacts(
+    spark: SparkSession,
+    tags: tuple[str, ...],
+    key_parts: tuple,
+    train,
+) -> tuple[DataFrame, ...]:
+    """Several artifacts from ONE training run (a tokenizer's merges and
+    vocabulary, PQ codebooks and codes): ``train`` is a zero-arg callable
+    returning one DataFrame per tag, in order. Each leg is published
+    through :func:`session_artifact` under its own tag; ``train`` runs
+    at most once, and only if some leg misses the cache. The lock is
+    held across all legs so a concurrent caller cannot find the first
+    leg cached and the second missing, and retrain."""
+    trained: list[tuple[DataFrame, ...]] = []
+
+    def leg(i: int):
+        def build() -> DataFrame:
+            if not trained:
+                trained.append(tuple(train()))
+            return trained[0][i]
+
+        return build
+
+    with _ARTIFACT_LOCK:
+        return tuple(
+            session_artifact(spark, tag, key_parts, leg(i))
+            for i, tag in enumerate(tags)
+        )
+
+
 _VALUE_CACHE: dict[tuple, object] = {}
 
 

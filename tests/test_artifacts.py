@@ -14,6 +14,7 @@ from kafka_streams_dexcom_spark.operators.quantize import (
 )
 from kafka_streams_dexcom_spark.sources.files import (
     corpus_fingerprint,
+    session_artifacts,
     session_value,
 )
 
@@ -51,6 +52,25 @@ def test_session_value_builds_once(spark):
     assert session_value(spark, "t", k, build) == 42
     assert session_value(spark, "t", k, build) == 42
     assert len(calls) == 1
+
+
+def test_session_artifacts_train_once_per_key(spark):
+    """One ``train`` run publishes every leg; a repeat call is a cache
+    hit for all of them; a changed key retrains."""
+    calls = []
+
+    def train():
+        calls.append(1)
+        return spark.range(2), spark.range(3)
+
+    tags = ("t_leg_a", "t_leg_b")
+    k = ("test_session_artifacts", "unique-key-xyz")
+    a, b = session_artifacts(spark, tags, k, train)
+    assert (a.count(), b.count(), len(calls)) == (2, 3, 1)
+    a2, b2 = session_artifacts(spark, tags, k, train)
+    assert a2 is a and b2 is b and len(calls) == 1
+    a3, b3 = session_artifacts(spark, tags, (*k, "changed"), train)
+    assert (a3.count(), b3.count(), len(calls)) == (2, 3, 2)
 
 
 def _tiny_corpus(spark, tmp_path):

@@ -10,6 +10,7 @@ divergence for identical distributions, weight arithmetic).
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from kafka_streams_dexcom_spark.operators.text import (
@@ -706,7 +707,8 @@ def test_bpe_encode_matches_train_merge_table(spark):
     """The encode path folds the SAME merges bpe_train reports — the
     shared loop cannot diverge between the two query surfaces."""
     from kafka_streams_dexcom_spark.operators.text import (
-        _bpe_loop,
+        BPE,
+        _merge_loop,
         bpe_train,
     )
 
@@ -717,7 +719,7 @@ def test_bpe_encode_matches_train_merge_table(spark):
     want = {
         (r["round"], r["pair"]) for r in bpe_train(df, n_merges=3).collect()
     }
-    merges, _ = _bpe_loop(df, "text", 3, apply_last=True)
+    merges, _ = _merge_loop(df, "text", 3, BPE)
     got = {(r["round"], r["pair"]) for r in merges.collect()}
     assert got == want and len(got) == 3
 
@@ -889,13 +891,16 @@ def test_wordpiece_train_likelihood_objective(spark):
     is l+##o (8 word-weighted occurrences) but rarer symbols give
     ##s+##t the better count/(c1*c2) score — and the merged symbol
     keeps exactly one '##' (continuation side stripped)."""
-    from kafka_streams_dexcom_spark.operators.text import _wordpiece_loop
+    from kafka_streams_dexcom_spark.operators.text import (
+        WORDPIECE,
+        _merge_loop,
+    )
 
     df = spark.createDataFrame(
         [(1, "low lower lowest low low slow"), (2, "low slow slowest")],
         "doc_id bigint, text string",
     )
-    merges, vocab = _wordpiece_loop(df, "text", 4)
+    merges, vocab = _merge_loop(df, "text", 4, WORDPIECE)
     rows = {r["round"]: r for r in merges.collect()}
     assert rows[1]["pair"] == "##s+##t"  # 2/(3*3) beats l+##o's 8/(8*8)
     assert rows[4]["pair"] == "s+##l"
@@ -912,7 +917,8 @@ def test_wordpiece_encode_greedy_and_unk_legs(spark):
     from pyspark.sql import functions as F
 
     from kafka_streams_dexcom_spark.operators.text import (
-        _wordpiece_loop,
+        WORDPIECE,
+        _merge_loop,
         wordpiece_encode_counts,
     )
 
@@ -920,7 +926,7 @@ def test_wordpiece_encode_greedy_and_unk_legs(spark):
         [(1, "low lower lowest low low slow"), (2, "low slow slowest")],
         "doc_id bigint, text string",
     )
-    _m, vocab = _wordpiece_loop(train, "text", 4)
+    _m, vocab = _merge_loop(train, "text", 4, WORDPIECE)
     pieces = vocab.select(F.explode("syms").alias("s")).distinct()
     apply_df = spark.createDataFrame(
         [(9, "low lowx zz " + "a" * 20), (10, "")],
@@ -939,6 +945,48 @@ def test_wordpiece_encode_greedy_and_unk_legs(spark):
     ) == (4, 6, 29, 3)
     assert (got[10]["n_tokens"], got[10]["n_unk_words"]) == (0, 0)
     assert got[10]["compression"] is None
+
+
+@pytest.mark.parametrize("family", ["bpe", "wordpiece"])
+def test_exhausted_merge_round_keeps_vocabulary(spark, family):
+    """Once every word is a single symbol there is no pair left to
+    merge: later rounds add no merge row and leave the vocabulary as it
+    is — in the Spark driver AND in the DuckDB replay. (An empty argmax
+    cross-joined into the vocabulary used to wipe it, so encode counted
+    nothing and WordPiece called every word [UNK].)"""
+    import duckdb
+
+    from kafka_streams_dexcom_spark.operators import text as tx
+    from kafka_streams_dexcom_spark.queries import text as qt
+
+    rows = [(1, "ab ab"), (2, "ab")]
+    df = spark.createDataFrame(rows, "doc_id bigint, text string")
+    fam = {"bpe": tx.BPE, "wordpiece": tx.WORDPIECE}[family]
+    merges, vocab = tx._merge_loop(df, "text", 3, fam)
+    assert merges.count() == 1
+    assert {r["w"]: r["syms"] for r in vocab.collect()} == {"ab": ["ab"]}
+    if family == "bpe":
+        enc = tx.bpe_encode_counts(df, n_merges=3)
+        oracle = qt._bpe_encode_oracle(3)
+        cols = ["n_words", "n_tokens", "n_chars", "compression"]
+        want = {1: (2, 2, 4, 2.0), 2: (1, 1, 2, 2.0)}
+    else:
+        enc = tx.wordpiece_encode_counts(df, n_merges=3)
+        oracle = qt._wordpiece_encode_oracle(3)
+        cols = ["n_words", "n_tokens", "n_chars", "n_unk_words", "compression"]
+        want = {1: (2, 2, 4, 0, 2.0), 2: (1, 1, 2, 0, 2.0)}
+    got = {r["doc_id"]: tuple(r[c] for c in cols) for r in enc.collect()}
+    assert got == want
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE documents AS SELECT * FROM (VALUES "
+        + ", ".join(f"({i}, '{t}')" for i, t in rows)
+        + ") AS t(doc_id, text)"
+    )
+    dk = con.execute(oracle).fetchdf().set_index("doc_id")
+    assert {
+        i: tuple(dk.loc[i, c].item() for c in cols) for i in dk.index
+    } == want
 
 
 def test_wordpiece_encode_longest_match_first(spark):

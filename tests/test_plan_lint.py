@@ -17,7 +17,6 @@ from kafka_streams_dexcom_spark.queries import all_queries
 
 # eager-checkpoint construction (iterative / multi-consumer pipelines)
 EAGER = {
-    "bpe_train",
     "dedup_best_survivors",
     "dedup_clusters",
     "dedup_survivors",
@@ -42,15 +41,7 @@ EAGER = {
     "contamination_check",
     "doc_perplexity",
     "dup_span_fraction",
-    "bpe_train",
     "bm25_rerank",
-    # round-6: bpe_encode/bpe_fertility share bpe_train's eager loop
-    "bpe_encode",
-    "bpe_fertility",
-    # round-8: the unigram-LM EM loop localCheckpoints per round
-    "unigram_train",
-    "unigram_encode",
-    "unigram_fertility",
 }
 
 

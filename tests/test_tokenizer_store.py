@@ -171,8 +171,8 @@ def test_bytebpe_family_republish_and_total_apply(spark, tmp_path):
     non-ASCII, where one char is several byte symbols), matching a
     Python replay of the greedy fold exactly."""
     from kafka_streams_dexcom_spark.operators.text import (
-        BYTEBPE_SYMS_SQL,
-        _bpe_loop,
+        BYTEBPE,
+        _merge_loop,
         bytebpe_apply_merges,
     )
 
@@ -180,10 +180,7 @@ def test_bytebpe_family_republish_and_total_apply(spark, tmp_path):
     rows_b = [(1, "zz zz zz zip"), (2, "zip zip zap zz")]
 
     def train(rows):
-        merges, vocab = _bpe_loop(
-            _corpus(spark, rows), "text", 3, apply_last=True,
-            syms_sql=BYTEBPE_SYMS_SQL,
-        )
+        merges, vocab = _merge_loop(_corpus(spark, rows), "text", 3, BYTEBPE)
         return {"merges": merges, "vocab": vocab}
 
     store = TokenizerArtifactStore(str(tmp_path / "bytebpe"))
