@@ -31,17 +31,17 @@ Each micro-batch:
    applied map + lineage) so index content and watermark can never
    disagree.
 
-``compact_every=k`` folds the accumulated increment files back into
-one replace commit every k versions — the maintenance job a real table
-format schedules separately (Delta OPTIMIZE / Iceberg rewrite_data_files);
-until it runs, vacuum correctly collects nothing because every old file
-is still part of the live table.
+The per-batch protocol — lineage and replay guards, the commit-retry
+loop, timings, compaction every COMPACT_EVERY versions and vacuum — is
+streaming/commitlog.BatchMaintainer; this module is only the fold.
+Compaction folds the accumulated increment files back into one replace
+commit — the maintenance job a real table format schedules separately
+(Delta OPTIMIZE / Iceberg rewrite_data_files); until it runs, vacuum
+correctly collects nothing because every old file is still part of the
+live table.
 """
 
 from __future__ import annotations
-
-import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -50,23 +50,23 @@ from kafka_streams_dexcom_spark.operators.clustering import (
     assign_to_centroids,
 )
 from kafka_streams_dexcom_spark.operators.dedup import with_embedding_norm
-from kafka_streams_dexcom_spark.streaming.commitlog import (
-    CommitConflict,
-    VersionedTable,
-)
+from kafka_streams_dexcom_spark.streaming.commitlog import BatchMaintainer
 
 _POSTINGS_SCHEMA = "vec_id long, cell int"
 
 
-class IvfPostingsMaintainer:
+class IvfPostingsMaintainer(BatchMaintainer):
     """foreachBatch sink maintaining the (vec_id, cell) IVF postings
     table for a stream of new embeddings against a frozen quantizer.
 
     ``centroids``: the trained (cid, cvec) frame — tiny, broadcast per
     batch. ``lineage_id`` binds the index to one streaming query's
-    batch-id sequence (same loud-failure contract as the cluster-map
-    maintainer: a NEW query pointed at an EXISTING index would replay
-    batch ids from 0 and silently skip every early batch)."""
+    batch-id sequence (a NEW query pointed at an EXISTING index would
+    replay batch ids from 0 and silently skip every early batch)."""
+
+    # the assignment depends only on the FROZEN quantizer, never on the
+    # stored postings: staged once, a rebase re-links the same files
+    AUTO_COMPACT = True
 
     def __init__(
         self,
@@ -77,173 +77,35 @@ class IvfPostingsMaintainer:
         id_col: str = "vec_id",
         vec_col: str = "embedding",
         writer_id: str | None = None,
-        max_commit_attempts: int = 10,
-        compact_every: int | None = 64,
     ) -> None:
-        self.spark = spark
-        self.table = VersionedTable(path)
+        super().__init__(spark, path, lineage_id, writer_id)
         self.centroids = centroids.select(
             F.col("cid").cast("int").alias("cid"), "cvec"
         ).localCheckpoint()
-        self.lineage_id = lineage_id
         self.id_col = id_col
         self.vec_col = vec_col
-        # per-WRITER replay watermark (cluster_map_stream discipline):
-        # concurrent maintainers carry independent foreachBatch
-        # counters, so a shared high-water mark would mask one writer's
-        # batch 0 as a replay after the other committed batch 1
-        self.writer_id = writer_id if writer_id is not None else (
-            lineage_id or ""
-        )
-        self.max_commit_attempts = max_commit_attempts
-        self.compact_every = compact_every
-        # per-batch cost breakdown for the scale bench: "stage" is the
-        # assignment + increment parquet write (O(batch)); "commit" is
-        # the manifest link (O(files), metadata-only). The append-
-        # granular contract is commit staying FLAT while the index grows.
-        self.timings: list[dict] = []
 
     # -- read side -----------------------------------------------------
-    def _meta(self, version: int) -> dict:
-        if version < 0:
-            return {}
-        return self.table.read_manifest(version).get("meta", {})
-
-    def _applied(self, version: int) -> dict:
-        """writer_id -> last applied batch_id at ``version``. Legacy
-        single-counter manifests carried one shared ``batch_id``; its
-        writer was the default-keyed one (writer_id = lineage or ""),
-        so fold it in under THAT key — otherwise the first new-format
-        commit on an upgraded table would drop the old watermark and a
-        replayed batch would be re-applied, duplicating postings."""
-        meta = self._meta(version)
-        applied = dict(meta.get("applied", {}))
-        if "batch_id" in meta:
-            legacy_key = meta.get("lineage") or ""
-            if applied.get(legacy_key, -1) < meta["batch_id"]:
-                applied[legacy_key] = meta["batch_id"]
-        return applied
-
-    def _last_meta(self) -> dict:
-        version = self.table.latest_version()
-        return {
-            "batch_id": self._applied(version).get(self.writer_id, -1),
-            "lineage": self._meta(version).get("lineage"),
-        }
-
     def postings(self, version: int | None = None) -> DataFrame:
-        empty = self.spark.createDataFrame([], _POSTINGS_SCHEMA)
-        if self.table.latest_version() < 0 and version is None:
-            return empty
-        df = self.table.read(self.spark, version)
-        return empty if df is None else df
+        return self._read(_POSTINGS_SCHEMA, version)
 
     def cell_counts(self) -> DataFrame:
         return self.postings().groupBy("cell").agg(
             F.count(F.lit(1)).alias("n_vectors")
         )
 
-    # -- maintenance -----------------------------------------------------
-    def compact(self) -> int | None:
-        """Fold the increment files into one replace commit (carrying
-        the meta forward — the watermarks describe the table's CONTENT,
-        which compaction preserves byte-for-byte). Returns the new
-        version, or None when a concurrent commit won the race — the
-        next cycle gets it; compaction is best-effort maintenance, not
-        correctness."""
-        base = self.table.latest_version()
-        if base < 0:
-            return None
-        try:
-            return self.table.write_commit(
-                self.table.read(self.spark, base),
-                base_version=base,
-                meta=self._meta(base),
-            )
-        except CommitConflict:
-            return None
-
-    # -- the sink --------------------------------------------------------
-    def _stage(self, assigned: DataFrame) -> str:
-        staged = self.table.stage()
-        assigned.write.mode("overwrite").parquet(staged)
-        return staged
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        meta = self._last_meta()
-        last_id, last_lineage = meta.get("batch_id", -1), meta.get("lineage")
-        if self.lineage_id is not None and self.table.latest_version() >= 0:
-            if last_lineage != self.lineage_id:
-                raise RuntimeError(
-                    f"IVF postings index at {self.table.root} belongs to "
-                    f"lineage {last_lineage!r}; refusing batches from "
-                    f"{self.lineage_id!r} — replay guards would silently "
-                    "drop this query's early batches"
-                )
-        if batch_id <= last_id:
-            return  # replayed micro-batch: already committed
+    # -- the fold --------------------------------------------------------
+    def _prepare(self, batch_df: DataFrame) -> DataFrame:
         base = with_embedding_norm(
             batch_df.select(self.id_col, self.vec_col), self.vec_col
         ).select(F.col(self.id_col).alias("vid"), "vec")
-        # the assignment depends only on the FROZEN quantizer, never on
-        # the stored postings — compute AND STAGE once; rebases re-link
-        # the same staged files against the new base (pure metadata)
-        import time
-
-        t0 = time.time()
-        assigned = assign_to_centroids(base, self.centroids).select(
+        return assign_to_centroids(base, self.centroids).select(
             F.col("vid").alias("vec_id"),
             F.col("cid").cast("int").alias("cell"),
         ).localCheckpoint()
-        staged = self._stage(assigned)
-        stage_sec = time.time() - t0
-        t0 = time.time()
-        for _ in range(self.max_commit_attempts):
-            # capture the base BEFORE building the meta: the commit must
-            # declare the version this increment lands on, so a
-            # concurrent maintainer landing in between surfaces as
-            # CommitConflict — passing the at-commit-time latest instead
-            # would silently absorb and lose the other writer's batch
-            base_version = self.table.latest_version()
-            applied = self._applied(base_version)
-            if applied.get(self.writer_id, -1) >= batch_id:
-                shutil.rmtree(staged, ignore_errors=True)
-                return  # the race winner was a replay of THIS batch
-            applied[self.writer_id] = batch_id
-            if not os.path.isdir(staged):
-                # a racing vacuum collected the withdrawn loser dir
-                # (only possible past the grace window) — re-stage from
-                # the checkpointed assignment, still never recomputed
-                staged = self._stage(assigned)
-            try:
-                version = self.table.commit_append(
-                    staged,
-                    base_version=base_version,
-                    meta={
-                        "applied": applied,
-                        "lineage": self.lineage_id,
-                    },
-                )
-            except CommitConflict:
-                continue  # rebase: re-link the increment on the winner
-            self.timings.append(
-                {
-                    "batch_id": batch_id,
-                    "stage_sec": round(stage_sec, 3),
-                    "commit_sec": round(time.time() - t0, 3),
-                    "version": version,
-                }
-            )
-            if (
-                self.compact_every is not None
-                and version > 0
-                and version % self.compact_every == 0
-            ):
-                self.compact()
-            self.table.vacuum(keep_last=3)
-            return
-        shutil.rmtree(staged, ignore_errors=True)
-        raise CommitConflict(
-            f"IVF ingest batch {batch_id} gave up after "
-            f"{self.max_commit_attempts} conflicting commits"
-        )
+
+    def _stage(self, assigned: DataFrame, base: int) -> tuple:
+        return assigned, {}
+
+    def _compacted(self, base: int) -> DataFrame:
+        return self.postings(base)

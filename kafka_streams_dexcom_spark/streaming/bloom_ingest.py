@@ -1,7 +1,9 @@
 """Streaming Bloom-filter dedup maintainer — the stream twin of
 operators/dedup.py:bloom_dedup_screen, published through the optimistic
 commit log (the batch/stream-dual discipline every stateful operator
-here keeps: ann_ingest, cluster_map_stream, semdedup_stream).
+here keeps: ann_ingest, cluster_map_stream, semdedup_stream). The
+per-batch protocol — guards, verdict re-emission, commit-retry loop,
+timings, vacuum — is streaming/commitlog.BatchMaintainer.
 
 The Dolma pipeline's dedupe runs exactly this shape: documents arrive
 continuously, each batch is screened against the filter built from
@@ -47,10 +49,6 @@ contract with O(1)-bounded state instead of an O(corpus) index.
 
 from __future__ import annotations
 
-import os
-import shutil
-import time
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -59,22 +57,26 @@ from kafka_streams_dexcom_spark.operators.dedup import (
     HASH60_TPL,
     _bloom_positions_expr,
 )
-from kafka_streams_dexcom_spark.streaming.commitlog import (
-    CommitConflict,
-    VersionedTable,
-)
+from kafka_streams_dexcom_spark.streaming.commitlog import BatchMaintainer
 
 _BITS_SCHEMA = "pos bigint"
 
 
-class BloomFilterMaintainer:
+class BloomFilterMaintainer(BatchMaintainer):
     """foreachBatch sink maintaining a fixed-width Bloom filter over a
     document stream and screening each batch against it.
 
     ``screened(df, batch_id)`` receives (id_col, probably_seen int)
     for every batch row BEFORE the batch's bits commit. ``lineage_id``
     binds the filter to one streaming query's batch-id sequence (the
-    ann_ingest loud-failure contract)."""
+    commitlog.BatchMaintainer lineage guard)."""
+
+    # positions depend only on the batch and the fixed geometry, never
+    # on stored state: staged once, a rebase re-links the same files
+    SCREENS = True
+    # the batch's genuinely-new bits, summed onto the base's running
+    # count: the O(1) fill_bits a monitor alarms on without a scan
+    COUNTERS = ("fill_bits",)
 
     def __init__(
         self,
@@ -87,7 +89,6 @@ class BloomFilterMaintainer:
         screened=None,
         lineage_id: str | None = None,
         writer_id: str | None = None,
-        max_commit_attempts: int = 10,
     ) -> None:
         if m_bits < 1:
             raise ValueError("m_bits must be positive")
@@ -102,38 +103,18 @@ class BloomFilterMaintainer:
                 f"m_bits={m_bits} exceeds the 2^31-1 position ceiling; "
                 "shard the filter by key prefix beyond ~268M keys"
             )
-        self.spark = spark
-        self.table = VersionedTable(path)
+        super().__init__(spark, path, lineage_id, writer_id, screened)
         self.m_bits = m_bits
         self.k = k
         self.id_col = id_col
         self.text_col = text_col
-        self.screened = screened
-        self.lineage_id = lineage_id
-        self.writer_id = writer_id if writer_id is not None else (
-            lineage_id or ""
-        )
-        self.max_commit_attempts = max_commit_attempts
-        self.timings: list[dict] = []
 
     # -- read side -----------------------------------------------------
-    def _meta(self, version: int) -> dict:
-        if version < 0:
-            return {}
-        return self.table.read_manifest(version).get("meta", {})
-
-    def _applied(self, version: int) -> dict:
-        return dict(self._meta(version).get("applied", {}))
-
     def bits(self, version: int | None = None) -> DataFrame:
         """The set-bit relation (pos) at ``version`` (latest default).
         May carry duplicate rows across increments — consumers use set
         semantics (semi joins / distinct), and compact() dedups."""
-        empty = self.spark.createDataFrame([], _BITS_SCHEMA)
-        if self.table.latest_version() < 0 and version is None:
-            return empty
-        df = self.table.read(self.spark, version)
-        return empty if df is None else df
+        return self._read(_BITS_SCHEMA, version)
 
     def fill_ratio(self) -> float:
         """Fraction of the m positions set — the rebuild-due signal
@@ -147,11 +128,9 @@ class BloomFilterMaintainer:
         scan of the bit set. Exact for the single-writer streaming
         contract (one query per lineage); under concurrent writers it
         is an UPPER bound (each writer counts its new bits against its
-        own screen base, so bits two writers race to set count twice) —
-        the conservative direction for a rebuild-due alarm."""
+        own staging base, so bits two writers race to set count twice)
+        — the conservative direction for a rebuild-due alarm."""
         v = self.table.latest_version() if version is None else version
-        if v < 0:
-            return 0.0
         return self._meta(v).get("fill_bits", 0) / self.m_bits
 
     def rebuild_due(self, threshold: float = 0.5) -> bool:
@@ -161,25 +140,8 @@ class BloomFilterMaintainer:
         the latest manifest — no Spark job."""
         return self.fill_ratio_meta() >= threshold
 
-    # -- maintenance -----------------------------------------------------
-    def compact(self) -> int | None:
-        """Fold increments into one DISTINCT replace commit (set
-        semantics preserved by definition). Best-effort: a losing race
-        returns None and the next cycle gets it."""
-        base = self.table.latest_version()
-        if base < 0:
-            return None
-        try:
-            return self.table.write_commit(
-                self.table.read(self.spark, base).distinct(),
-                base_version=base,
-                meta=self._meta(base),
-            )
-        except CommitConflict:
-            return None
-
-    # -- the sink --------------------------------------------------------
-    def _positions(self, batch_df: DataFrame) -> DataFrame:
+    # -- the fold --------------------------------------------------------
+    def _keys(self, batch_df: DataFrame) -> DataFrame:
         h = HASH60_TPL.format(x=self.text_col)
         return batch_df.select(
             self.id_col,
@@ -188,27 +150,19 @@ class BloomFilterMaintainer:
             ).alias("pos"),
         )
 
-    def _stage(self, new_bits: DataFrame) -> str:
-        staged = self.table.stage()
-        new_bits.write.mode("overwrite").parquet(staged)
-        return staged
+    def _prepare(self, batch_df: DataFrame) -> DataFrame:
+        return self._keys(batch_df).localCheckpoint()
 
     def _screen(self, batch_df: DataFrame, pos: DataFrame,
                 version: int) -> DataFrame:
         """(id, probably_seen) for the batch against the bit set at
         ``version`` (-1 = empty filter). Read-only — safe to re-run on
-        replay against the recorded pre-batch version. -1 must mean
-        EMPTY even when later state exists (bits(None) reads LATEST):
-        a replayed batch 0 screens against the pre-ingest filter, not
-        its own committed bits — the line_census discipline, fixed
-        here in round 12."""
-        stored = (
-            self.bits(version)
-            if version >= 0
-            else self.spark.createDataFrame([], _BITS_SCHEMA)
-        )
+        replay against the recorded pre-batch version."""
         hits = (
-            pos.join(F.broadcast(stored.select("pos").distinct()), "pos")
+            pos.join(
+                F.broadcast(self.bits(version).select("pos").distinct()),
+                "pos",
+            )
             .groupBy(self.id_col)
             .agg(F.count(F.lit(1)).alias("n_hit"))
         )
@@ -223,106 +177,19 @@ class BloomFilterMaintainer:
             )
         )
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        latest = self.table.latest_version()
-        if self.lineage_id is not None and latest >= 0:
-            stored = self._meta(latest).get("lineage")
-            if stored != self.lineage_id:
-                raise RuntimeError(
-                    f"bloom filter at {self.table.root} belongs to "
-                    f"lineage {stored!r}; refusing batches from "
-                    f"{self.lineage_id!r}"
-                )
-        applied_now = self._applied(latest)
-        if batch_id <= applied_now.get(self.writer_id, -1):
-            # Replayed micro-batch: bits already committed (idempotent —
-            # re-setting the same positions is a no-op), but the screen
-            # verdicts must be RE-EMITTED so a downstream consumer that
-            # had not durably persisted the previous delivery still gets
-            # this batch's results (at-least-once). The screen re-runs
-            # read-only against the PRE-batch filter version recorded in
-            # the manifest at first processing, so the replayed verdicts
-            # are bit-identical to the originals. Spark only ever
-            # replays the most recent batch after a restart, which is
-            # exactly the one whose screen base the manifest retains.
-            if self.screened is not None and batch_id == applied_now.get(
-                self.writer_id, -1
-            ):
-                base = self._meta(latest).get("screen_base", {}).get(
-                    self.writer_id, -1
-                )
-                pos = self._positions(batch_df)
-                self.screened(
-                    self._screen(batch_df, pos, base), batch_id
-                )
-            return
-        t0 = time.time()
-        pos = self._positions(batch_df).localCheckpoint()
-        if self.screened is not None:
-            self.screened(self._screen(batch_df, pos, latest), batch_id)
-        # stage ONCE: positions depend only on the batch and the fixed
-        # geometry, never on stored state — rebases re-link as metadata
-        staged = self._stage(pos.select("pos").distinct())
-        # the batch's genuinely-new bits, counted against the screen
-        # base: feeds the O(1) fill_bits counter in the manifest so a
-        # monitor can alarm rebuild-due without scanning the bit set
-        n_new = (
-            pos.select("pos")
-            .distinct()
-            .join(
-                F.broadcast(
-                    self.bits(latest if latest >= 0 else None)
-                    .select("pos")
-                    .distinct()
-                ),
-                "pos",
-                "left_anti",
-            )
-            .count()
-        )
-        stage_sec = time.time() - t0
-        t0 = time.time()
-        for _ in range(self.max_commit_attempts):
-            base_version = self.table.latest_version()
-            applied = self._applied(base_version)
-            if applied.get(self.writer_id, -1) >= batch_id:
-                shutil.rmtree(staged, ignore_errors=True)
-                return  # race winner was a replay of THIS batch
-            applied[self.writer_id] = batch_id
-            # record the version the screen ran against so a replay can
-            # re-emit bit-identical verdicts (carry other writers' bases)
-            base_meta = self._meta(base_version)
-            screen_base = dict(base_meta.get("screen_base", {}))
-            screen_base[self.writer_id] = latest
-            fill_bits = base_meta.get("fill_bits", 0) + n_new
-            if not os.path.isdir(staged):
-                staged = self._stage(pos.select("pos").distinct())
-            try:
-                version = self.table.commit_append(
-                    staged,
-                    base_version=base_version,
-                    meta={
-                        "applied": applied,
-                        "screen_base": screen_base,
-                        "fill_bits": fill_bits,
-                        "lineage": self.lineage_id,
-                        "m_bits": self.m_bits,
-                        "k": self.k,
-                    },
-                )
-            except CommitConflict:
-                continue
-            self.timings.append(
-                {
-                    "batch_id": batch_id,
-                    "version": version,
-                    "stage_sec": round(stage_sec, 4),
-                    "commit_sec": round(time.time() - t0, 4),
-                    "fill_ratio": round(fill_bits / self.m_bits, 4),
-                }
-            )
-            return
-        raise RuntimeError(
-            f"bloom commit for batch {batch_id} lost "
-            f"{self.max_commit_attempts} races"
-        )
+    def _stage(self, pos: DataFrame, base: int) -> tuple:
+        new_bits = pos.select("pos").distinct()
+        n_new = new_bits.join(
+            F.broadcast(self.bits(base).select("pos").distinct()),
+            "pos",
+            "left_anti",
+        ).count()
+        return new_bits, {
+            "fill_bits": n_new, "m_bits": self.m_bits, "k": self.k,
+        }
+
+    def _compacted(self, base: int) -> DataFrame:
+        return self.bits(base).distinct()
+
+    def _timing(self, version: int) -> dict:
+        return {"fill_ratio": round(self.fill_ratio_meta(version), 4)}

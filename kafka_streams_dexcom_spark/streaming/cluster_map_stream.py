@@ -29,25 +29,23 @@ Each micro-batch of new documents:
    put-if-absent manifest creation gives exactly-one-winner semantics
    when several maintainers race the same view.
 
-``compact_every=k``: every k commits the maintainer folds the
-changelog into a resolved snapshot and the appended band/set increments
-into single files (one replace-legs commit carrying the meta forward) —
-the scheduled-maintenance job of a real table format (Delta OPTIMIZE),
+Every COMPACT_EVERY commits the maintainer folds the changelog into a
+resolved snapshot and the appended band/set increments into single
+files (one replace-legs commit carrying the meta forward) — the
+scheduled-maintenance job of a real table format (Delta OPTIMIZE),
 bounding read amplification without ever blocking the write path.
 
-Exactly-once effect: foreachBatch is at-least-once, so the manifest
-meta records the per-WRITER applied batch_id map + lineage and a
-replayed batch is a no-op — the same marker discipline as
-IncrementalCounts, including the loud failure when a NEW query lineage
-points at an EXISTING view (batch ids restart at 0 and would otherwise
-be silently skipped).
-
-Concurrent writers: each batch folds against the version it read
-(base); a losing commit raises CommitConflict and the FOLD reruns
-against the winner's output (the serializable rebase contract — the
-label delta is base-dependent) while the batch minhash artifacts are
-reused as-is. tests/test_cluster_map_stream pins a two-maintainer race
-ending bit-equal to the sequential fold.
+The per-batch protocol is streaming/commitlog.BatchMaintainer:
+exactly-once effect over at-least-once foreachBatch (the manifest meta
+records the per-WRITER applied batch_id map + lineage and a replayed
+batch is a no-op — the same marker discipline as IncrementalCounts,
+including the loud failure when a NEW query lineage points at an
+EXISTING view), and the serializable rebase for concurrent writers:
+each batch folds against the version it read (base); a losing commit
+raises CommitConflict and the FOLD reruns against the winner's output
+(the label delta is base-dependent) while the batch minhash artifacts
+are reused as-is. tests/test_cluster_map_stream pins a two-maintainer
+race ending bit-equal to the sequential fold.
 
 Equivalence contract (pinned by tests/test_cluster_map_stream.py): with
 the bucket cap disabled, the final labels after streaming the corpus in
@@ -74,9 +72,6 @@ whole-artifact versions, and its append-with-stable-ids shape
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -87,84 +82,25 @@ from kafka_streams_dexcom_spark.operators.dedup import (
     minhash_signature,
 )
 from kafka_streams_dexcom_spark.operators.graph import cc_incremental_delta
-from kafka_streams_dexcom_spark.streaming.commitlog import (
-    CommitConflict,
-    VersionedTable,
-)
+from kafka_streams_dexcom_spark.streaming.commitlog import BatchMaintainer
+
+_LABEL_SCHEMA = "node long, component long, seq long"
 
 
-class ClusterMapMaintainer:
-    """foreachBatch sink maintaining (labels, band index, shingle sets)
-    for a stream of new documents. See module docstring."""
+class LabelChangelogMaintainer(BatchMaintainer):
+    """A maintainer whose ``labels`` leg is a CC label CHANGELOG
+    (node, component, seq): each commit appends only the created or
+    changed rows, stamped with the target version, and readers resolve
+    latest-per-node. The label delta depends on the base labeling, so
+    a lost race re-folds against the winner (``REBASE``); compaction
+    folds the log into its resolved snapshot. Shared by the cluster
+    map, the phash index and SemDeDup."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        path: str,
-        lineage_id: str | None = None,
-        threshold: float = 0.2,
-        max_bucket: int | None = None,
-        id_col: str = "doc_id",
-        text_col: str = "text",
-        max_commit_attempts: int = 10,
-        writer_id: str | None = None,
-        compact_every: int | None = 64,
-    ) -> None:
-        self.spark = spark
-        self.path = path
-        self.table = VersionedTable(path)
-        self.lineage_id = lineage_id
-        self.threshold = threshold
-        self.max_bucket = max_bucket
-        self.id_col = id_col
-        self.text_col = text_col
-        self.max_commit_attempts = max_commit_attempts
-        self.compact_every = compact_every
-        # replay guards are PER WRITER: concurrent maintainers each
-        # carry their own foreachBatch counter, so a shared high-water
-        # mark would silently skip writer A's batch 0 after writer B
-        # committed batch 1. Writers of one view share a lineage but
-        # not a batch-id space.
-        self.writer_id = writer_id if writer_id is not None else (
-            lineage_id or ""
-        )
-        # per-batch cost breakdown for the scale bench: "stage" is the
-        # fold compute + increment parquet writes (∝ batch); "commit"
-        # is the manifest link (metadata-only under append granularity)
-        self.timings: list[dict] = []
-
-    # -- marker ----------------------------------------------------------
-    def _applied(self, version: int) -> dict:
-        """writer_id -> last applied batch_id at ``version``."""
-        if version < 0:
-            return {}
-        return self.table.read_manifest(version).get("meta", {}).get(
-            "applied", {}
-        )
-
-    def _read_marker(self, version: int | None = None) -> tuple[int, str | None]:
-        """(this writer's last applied batch_id, view lineage) from the
-        manifest meta of ``version`` (default latest); (-1, None) on an
-        empty view."""
-        v = self.table.latest_version() if version is None else version
-        if v < 0:
-            return -1, None
-        meta = self.table.read_manifest(v).get("meta", {})
-        applied = meta.get("applied", {})
-        return applied.get(self.writer_id, -1), meta.get("lineage") or None
-
-    # -- stored artifacts ------------------------------------------------
-    def _read(self, sub: str, schema: str, version: int) -> DataFrame:
-        if version >= 0:
-            df = self.table.read(self.spark, version, sub=sub)
-            if df is not None:
-                return df
-        return self.spark.createDataFrame([], schema)
+    REBASE = True
+    AUTO_COMPACT = True
 
     def _label_log(self, version: int) -> DataFrame:
-        return self._read(
-            "labels", "node long, component long, seq long", version
-        )
+        return self._read(_LABEL_SCHEMA, version, "labels")
 
     def labels(self, version: int | None = None) -> DataFrame:
         """The resolved labeling at ``version``: latest-per-node over
@@ -177,75 +113,69 @@ class ClusterMapMaintainer:
             .agg(F.max_by("component", "seq").alias("component"))
         )
 
+    def _label_delta(self, edges: DataFrame, base: int) -> DataFrame:
+        """Fold verified (doc_a, doc_b) edges into the base labeling:
+        only created/changed rows, stamped base+1 (the latest-wins
+        sequence)."""
+        return cc_incremental_delta(edges, self.labels(base)).select(
+            "node", "component", F.lit(base + 1).cast("long").alias("seq")
+        )
+
+    def _label_snapshot(self, base: int) -> DataFrame:
+        return self.labels(base).withColumn(
+            "seq", F.lit(base).cast("long")
+        )
+
+
+class ClusterMapMaintainer(LabelChangelogMaintainer):
+    """foreachBatch sink maintaining (labels, band index, shingle sets)
+    for a stream of new documents. See module docstring."""
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        path: str,
+        lineage_id: str | None = None,
+        threshold: float = 0.2,
+        max_bucket: int | None = None,
+        id_col: str = "doc_id",
+        text_col: str = "text",
+        writer_id: str | None = None,
+    ) -> None:
+        super().__init__(spark, path, lineage_id, writer_id)
+        self.threshold = threshold
+        self.max_bucket = max_bucket
+        self.id_col = id_col
+        self.text_col = text_col
+
+    # -- stored artifacts ------------------------------------------------
     def _bands(self, version: int) -> DataFrame:
         return self._read(
-            "bands",
             f"{self.id_col} long, band_idx int, band_hash long",
             version,
+            "bands",
         )
 
     def _sets(self, version: int) -> DataFrame:
         return self._read(
-            "sets", f"{self.id_col} long, sh_hashes array<long>", version
+            f"{self.id_col} long, sh_hashes array<long>", version, "sets"
         )
 
-    # -- maintenance -------------------------------------------------------
-    def compact(self) -> int | None:
-        """Fold the label changelog into its resolved snapshot and the
-        appended band/set files into one file per leg — a replace-legs
-        commit carrying the meta forward (the table's CONTENT is
-        preserved, so the watermarks still describe it). Best-effort:
-        a lost race returns None and the next cycle compacts."""
-        base = self.table.latest_version()
-        if base < 0:
-            return None
-        staged = self.table.stage()
-        self.labels(base).withColumn(
-            "seq", F.lit(base).cast("long")
-        ).write.parquet(os.path.join(staged, "labels"))
-        self._bands(base).write.parquet(os.path.join(staged, "bands"))
-        self._sets(base).write.parquet(os.path.join(staged, "sets"))
-        meta = self.table.read_manifest(base).get("meta", {})
-        try:
-            return self.table.commit_append(
-                staged,
-                base,
-                meta=meta,
-                replace_subs=("labels", "bands", "sets"),
-            )
-        except CommitConflict:
-            shutil.rmtree(staged, ignore_errors=True)
-            return None
+    def _compacted(self, base: int) -> dict:
+        return {
+            "labels": self._label_snapshot(base),
+            "bands": self._bands(base),
+            "sets": self._sets(base),
+        }
 
-    # -- the sink --------------------------------------------------------
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        last_id, last_lineage = self._read_marker()
-        if self.lineage_id is not None and self.table.latest_version() >= 0:
-            if last_lineage is None:
-                raise RuntimeError(
-                    f"cluster-map view at {self.path} carries a commit "
-                    "with no lineage; this view type has no adoption "
-                    "path — rebuild the view or construct the "
-                    "maintainer with lineage_id=None to accept the "
-                    "directory-is-bound-to-one-lineage contract yourself"
-                )
-            if last_lineage != self.lineage_id:
-                raise RuntimeError(
-                    "cluster-map view at "
-                    f"{self.path} belongs to lineage {last_lineage!r}; "
-                    f"refusing batches from {self.lineage_id!r} — replay "
-                    "guards would silently drop this query's early "
-                    "batches"
-                )
-        if batch_id <= last_id:
-            return  # replayed micro-batch: already folded in
+    # -- the fold --------------------------------------------------------
+    def _prepare(self, batch_df: DataFrame) -> tuple:
+        """The batch's minhash artifacts (cost ∝ batch) — they depend
+        only on the batch, so a commit-race rebase reuses them instead
+        of re-shingling. Shingle ONCE (the function is eagerly
+        materialized), derive sets and bands from it; bands feed two
+        joins so they get their own cut."""
         idc = self.id_col
-        # batch artifacts (cost ∝ batch) — hoisted OUT of the retry
-        # loop: they depend only on the batch, so a commit-race rebase
-        # reuses the materialized frames instead of re-shingling.
-        # Shingle ONCE (the function is eagerly materialized), derive
-        # sets and bands from it; bands feed two joins so they get
-        # their own cut.
         hfull = hashed_shingle_corpus(
             batch_df.select(idc, self.text_col), idc, self.text_col
         )
@@ -255,30 +185,12 @@ class ClusterMapMaintainer:
             .select(idc, "band_idx", "band_hash")
             .localCheckpoint()
         )
-        for _ in range(self.max_commit_attempts):
-            base = self.table.latest_version()
-            # False = lost the commit race: rebase against the winner's
-            # version and fold again (never re-publish stale bytes)
-            if self._fold_and_commit(hn, bn, batch_id, base):
-                return
-        raise CommitConflict(
-            f"cluster-map batch {batch_id} gave up after "
-            f"{self.max_commit_attempts} conflicting commits"
-        )
+        return hn, bn
 
-    def _fold_and_commit(
-        self, hn: DataFrame, bn: DataFrame, batch_id: int, base: int
-    ) -> bool:
+    def _stage(self, art: tuple, base: int) -> tuple:
         """Fold one micro-batch's prebuilt minhash artifacts against
-        version ``base`` and commit the increment as base+1. True on
-        success or replay no-op; False on a lost race (caller
-        rebases)."""
-        import time
-
-        applied = dict(self._applied(base))
-        if applied.get(self.writer_id, -1) >= batch_id:
-            return True  # the race winner was a replay of THIS batch
-        t0 = time.time()
+        version ``base``: the three legs' increments."""
+        hn, bn = art
         idc = self.id_col
         bc = self._bands(base)
         bn_probe, bc_probe = bn, bc
@@ -324,45 +236,11 @@ class ClusterMapMaintainer:
                 F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
             )
         )
-        # the label CHANGELOG increment: only created/changed rows,
-        # stamped with the target version as the latest-wins sequence
-        label_delta = cc_incremental_delta(edges, self.labels(base)).select(
-            "node", "component", F.lit(base + 1).cast("long").alias("seq")
-        )
-        # append-granular publish: the staged dir holds ONLY this
-        # batch's increment for each leg; commit_append links it onto
-        # the base's file list — O(batch) commit, and all three legs
-        # move in one atomic manifest so labels can never disagree with
-        # their band index
-        staged = self.table.stage()
-        label_delta.write.parquet(os.path.join(staged, "labels"))
-        bn.write.parquet(os.path.join(staged, "bands"))
-        hn.write.parquet(os.path.join(staged, "sets"))
-        applied[self.writer_id] = batch_id
-        stage_sec = time.time() - t0
-        t0 = time.time()
-        try:
-            version = self.table.commit_append(
-                staged,
-                base,
-                meta={"applied": applied, "lineage": self.lineage_id or ""},
-            )
-        except CommitConflict:
-            shutil.rmtree(staged, ignore_errors=True)
-            return False
-        self.timings.append(
-            {
-                "batch_id": batch_id,
-                "stage_sec": round(stage_sec, 3),
-                "commit_sec": round(time.time() - t0, 3),
-                "version": version,
-            }
-        )
-        if (
-            self.compact_every is not None
-            and version > 0
-            and version % self.compact_every == 0
-        ):
-            self.compact()
-        self.table.vacuum(keep_last=3)
-        return True
+        # the label CHANGELOG increment plus the batch's band rows and
+        # shingle sets: all three legs move in one atomic manifest, so
+        # labels can never disagree with their band index
+        return {
+            "labels": self._label_delta(edges, base),
+            "bands": bn,
+            "sets": hn,
+        }, {}

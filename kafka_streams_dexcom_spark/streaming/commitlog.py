@@ -41,18 +41,62 @@ This module is that protocol on a filesystem:
 Write-skew note: ``commit(base_version=...)`` fails unless the caller's
 base IS the latest version — the serializable-writer check. A retrying
 writer must re-read the table and REBUILD its output against the new
-base (see ``commit_retry``), not blindly re-attempt the same bytes.
+base (see ``commit_loop``), not blindly re-attempt the same bytes —
+unless its output depends only on its own input, in which case the
+same staged files are re-linked onto the new base.
+
+The per-batch commit protocol
+-----------------------------
+Every streaming maintainer here (and the tokenizer artifact store)
+publishes through ONE loop, ``commit_loop``, and the foreachBatch
+maintainers share ONE protocol around it, ``BatchMaintainer`` — the
+reference's effectively-once rule (offsets commit only after a
+successful write, document ids are deterministic:
+ElasticSearchConsumer.java:45-55) stated once:
+
+1. **Reads.** ``_meta(v)``/``_applied(v)`` read a manifest's meta and
+   per-writer watermark map (version -1 = empty; a legacy single
+   ``batch_id`` counter folds in under its default writer key);
+   ``_read(schema, v, sub)`` is the typed empty-or-parquet read of one
+   leg, so -1 always means the EMPTY table.
+2. **Guards.** A stored lineage that differs from the maintainer's —
+   or no stored lineage at all — raises ``RuntimeError`` (a new query
+   on an old table would replay batch ids from 0 and be silently
+   skipped). A batch at or below the writer's watermark is a no-op; a
+   screening maintainer re-emits the newest batch's verdicts against
+   the recorded ``screen_base`` and raises on an older replay, whose
+   verdicts are unrecoverable.
+3. **Commit loop.** Up to ``MAX_COMMIT_ATTEMPTS``: read the base,
+   re-check the watermark, stage, ``commit_append``; on
+   ``CommitConflict`` rebase and retry, then give up with
+   ``CommitConflict``. A fold whose increment depends only on the batch
+   (``REBASE = False``) stages once and re-links the same files; a
+   base-dependent fold re-stages against each new base. Batch
+   artifacts are prepared once, outside the loop.
+4. **After commit.** One ``timings`` record (``stage_sec`` = fold plus
+   parquet writes, ``commit_sec`` = the manifest commit), a compaction
+   every ``COMPACT_EVERY`` versions for the ``AUTO_COMPACT`` folds, and
+   ``vacuum(keep_last=KEEP_LAST)`` after every commit.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
+import shutil
+import time
 import uuid
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
 _COMMITS = "_commits"
+
+# the protocol's constants — one value for every maintainer
+MAX_COMMIT_ATTEMPTS = 10
+COMPACT_EVERY = 64
+KEEP_LAST = 3
 
 
 class CommitConflict(RuntimeError):
@@ -271,28 +315,6 @@ class VersionedTable:
             os.unlink(tmp_path)
         return version
 
-    def commit_retry(self, build, max_attempts: int = 10) -> int:
-        """Serializable-writer loop: ``build(latest_version, staged_dir)``
-        writes the candidate output (derived from the CURRENT latest
-        version — the rebase) into ``staged_dir``; on conflict the
-        build runs again against the new latest. Raises after
-        ``max_attempts`` conflicts rather than spinning forever."""
-        last: CommitConflict | None = None
-        for _ in range(max_attempts):
-            base = self.latest_version()
-            staged = self.stage()
-            build(base, staged)
-            try:
-                return self.commit(staged, base)
-            except CommitConflict as e:
-                last = e
-                import shutil
-
-                shutil.rmtree(staged, ignore_errors=True)
-        raise CommitConflict(
-            f"gave up after {max_attempts} conflicting attempts"
-        ) from last
-
     # -- maintenance ---------------------------------------------------
     def vacuum(
         self, keep_last: int = 2, grace_seconds: float = 600.0
@@ -326,10 +348,6 @@ class VersionedTable:
           ages past it. ``grace_seconds=0`` restores eager collection
           for single-writer offline cleanup.
         """
-        import re
-        import shutil
-        import time
-
         latest = self.latest_version()
         keep_dirs = set()
         for v in range(max(0, latest - keep_last + 1), latest + 1):
@@ -389,5 +407,304 @@ class VersionedTable:
         happened earlier."""
         base = self.latest_version() if base_version is None else base_version
         staged = self.stage()
-        df.write.mode("overwrite").parquet(staged)
+        write_frames(staged, df)
         return self.commit(staged, base, meta=meta)
+
+
+def write_frames(
+    staged: str, frames: DataFrame | dict[str, DataFrame]
+) -> None:
+    """Write one frame into ``staged``, or each leg of a
+    ``{leg: frame}`` dict into ``staged/<leg>/``."""
+    if isinstance(frames, DataFrame):
+        frames.write.mode("overwrite").parquet(staged)
+        return
+    for sub, df in frames.items():
+        df.write.mode("overwrite").parquet(os.path.join(staged, sub))
+
+
+class Committed(NamedTuple):
+    version: int
+    stage_sec: float  # the committed attempt's staging
+    commit_sec: float  # the winning manifest commit
+
+
+def commit_loop(
+    table: VersionedTable,
+    stage,
+    meta=None,
+    *,
+    restage: bool = True,
+    settled=None,
+    append: bool = True,
+    replace_subs: tuple[str, ...] = (),
+) -> Committed | None:
+    """The package's one commit-retry loop (the serializable writer).
+
+    Each attempt reads the latest version as its base;
+    ``settled(base)`` ends the loop with None when a race winner
+    already made this commit's effect (a replay of the same batch, the
+    same artifact). ``stage(base, staged_dir)`` writes the candidate
+    files and returns a note that ``meta(base, note)`` turns into the
+    manifest meta. ``restage`` re-runs the stage against every new
+    base (a base-dependent output); without it the staged files are
+    re-linked onto the new base, and re-staged only when a racing
+    vacuum collected the withdrawn loser dir. ``append`` picks
+    ``commit_append`` (with ``replace_subs``) over the replacing
+    ``commit``. Raises CommitConflict after MAX_COMMIT_ATTEMPTS lost
+    races, and never leaves a staged dir behind."""
+    staged = None
+    last: CommitConflict | None = None
+    try:
+        for _ in range(MAX_COMMIT_ATTEMPTS):
+            base = table.latest_version()
+            if settled is not None and settled(base):
+                return None
+            if restage or staged is None or not os.path.isdir(staged):
+                if staged is not None:
+                    shutil.rmtree(staged, ignore_errors=True)
+                t0 = time.time()
+                staged = table.stage()
+                note = stage(base, staged)
+                stage_sec = time.time() - t0
+            m = meta(base, note) if meta is not None else None
+            t0 = time.time()
+            try:
+                version = table._commit(
+                    staged, base, m, append=append, replace_subs=replace_subs
+                )
+            except CommitConflict as e:
+                last = e
+                continue
+            staged = None  # renamed into the committed version
+            return Committed(version, stage_sec, time.time() - t0)
+        raise CommitConflict(
+            f"gave up after {MAX_COMMIT_ATTEMPTS} conflicting commits "
+            f"under {table.root}"
+        ) from last
+    finally:
+        if staged is not None:
+            shutil.rmtree(staged, ignore_errors=True)
+
+
+def _watermarks(meta: dict) -> dict:
+    """writer_id -> last applied batch_id in a manifest meta. A legacy
+    single-counter meta carried one shared ``batch_id``, written by the
+    default-keyed writer (lineage or ""); it folds in under THAT key, or
+    the first new-format commit would drop the old watermark and a
+    replayed batch would be applied twice."""
+    applied = dict(meta.get("applied", {}))
+    if "batch_id" in meta:
+        key = meta.get("lineage") or ""
+        applied[key] = max(applied.get(key, -1), meta["batch_id"])
+    return applied
+
+
+class BatchMaintainer:
+    """A foreachBatch sink publishing through a VersionedTable; owns
+    the per-batch commit protocol (module docstring), so a subclass
+    supplies only its fold:
+
+    - ``_keys(batch_df)``: the lazy per-batch frame a screen reads
+      (default: the batch itself);
+    - ``_prepare(batch_df)``: the batch artifacts, built once per batch
+      outside the commit loop (default: ``_keys``);
+    - ``_screen(batch_df, keys, version)``: the verdicts handed to
+      ``screened``, scored against ``version``;
+    - ``_stage(art, base)``: the increment (one frame, or a
+      ``{leg: frame}`` dict) and the extra meta it records;
+    - ``_compacted(base)``: the table folded for ``compact()``.
+
+    Class flags: ``REBASE`` (the increment depends on the base, so a
+    lost race re-stages it; otherwise the staged files are re-linked),
+    ``AUTO_COMPACT`` (compact every COMPACT_EVERY versions), ``SCREENS``
+    (record each writer's ``screen_base``), ``COUNTERS`` (extra-meta
+    keys that are running sums over the base's value)."""
+
+    REBASE = False
+    AUTO_COMPACT = False
+    SCREENS = False
+    COUNTERS: tuple[str, ...] = ()
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        path: str,
+        lineage_id: str | None = None,
+        writer_id: str | None = None,
+        screened=None,
+    ) -> None:
+        self.spark = spark
+        self.path = path
+        self.table = VersionedTable(path)
+        self.lineage_id = lineage_id
+        # the replay watermark is PER WRITER: concurrent maintainers
+        # each carry their own foreachBatch counter, so a shared
+        # high-water mark would skip writer A's batch 0 after writer B
+        # committed batch 1. Writers of one table share a lineage but
+        # not a batch-id space.
+        self.writer_id = writer_id if writer_id is not None else (
+            lineage_id or ""
+        )
+        self.screened = screened
+        # per-batch cost breakdown: "stage" is the fold plus the
+        # increment's parquet writes (∝ batch); "commit" is the
+        # manifest link (metadata-only, flat while the table grows)
+        self.timings: list[dict] = []
+
+    # -- reads -----------------------------------------------------------
+    def _meta(self, version: int) -> dict:
+        if version < 0:
+            return {}
+        return self.table.read_manifest(version).get("meta", {})
+
+    def _applied(self, version: int) -> dict:
+        return _watermarks(self._meta(version))
+
+    def _read(
+        self, schema: str, version: int | None = None, sub: str | None = None
+    ) -> DataFrame:
+        """Leg ``sub`` (the whole table when None) at ``version``
+        (latest by default); a typed empty frame when the version is -1
+        or holds no files for the leg."""
+        v = self.table.latest_version() if version is None else version
+        df = self.table.read(self.spark, v, sub=sub) if v >= 0 else None
+        return self.spark.createDataFrame([], schema) if df is None else df
+
+    # -- the fold (subclass hooks) ---------------------------------------
+    def _keys(self, batch_df: DataFrame) -> DataFrame:
+        return batch_df
+
+    def _prepare(self, batch_df: DataFrame):
+        return self._keys(batch_df)
+
+    def _screen(
+        self, batch_df: DataFrame, keys: DataFrame, version: int
+    ) -> DataFrame:
+        raise NotImplementedError
+
+    def _stage(self, art, base: int) -> tuple:
+        raise NotImplementedError
+
+    def _compacted(self, base: int):
+        raise NotImplementedError
+
+    def _timing(self, version: int) -> dict:
+        return {}
+
+    # -- maintenance -----------------------------------------------------
+    def compact(self) -> int | None:
+        """Fold the table into one compacted commit carrying the base
+        meta forward (compaction preserves the CONTENT, so the
+        watermarks still describe it): a single frame replaces the
+        table, a ``{leg: frame}`` dict replaces those legs. Best-effort
+        maintenance: None when another commit landed first — the next
+        cycle gets it."""
+        base = self.table.latest_version()
+        if base < 0:
+            return None
+        frames = self._compacted(base)
+        legs = isinstance(frames, dict)
+        done = commit_loop(
+            self.table,
+            lambda _base, staged: write_frames(staged, frames),
+            lambda _base, _note: self._meta(base),
+            settled=lambda now: now != base,
+            append=legs,
+            replace_subs=tuple(frames) if legs else (),
+        )
+        return None if done is None else done.version
+
+    # -- the sink --------------------------------------------------------
+    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
+        latest = self.table.latest_version()
+        meta = self._meta(latest)
+        stored = meta.get("lineage") or None
+        if self.lineage_id is not None and latest >= 0:
+            if stored != self.lineage_id:
+                raise RuntimeError(
+                    f"{type(self).__name__} table at {self.path} belongs "
+                    f"to lineage {stored!r}; refusing batches from "
+                    f"{self.lineage_id!r} — replay guards would silently "
+                    "drop this query's early batches"
+                )
+        newest = _watermarks(meta).get(self.writer_id, -1)
+        if batch_id <= newest:
+            # Replayed micro-batch: already applied. A screen re-emits
+            # its verdicts (at-least-once delivery) against the
+            # pre-batch version recorded at first processing, so they
+            # are bit-identical. Only the newest batch's screen base is
+            # retained: an older replay means the checkpoint was
+            # restored further back than the table, and its verdicts
+            # are unrecoverable — raise, never emit nothing.
+            if self.screened is None:
+                return
+            if batch_id < newest:
+                raise RuntimeError(
+                    f"{type(self).__name__} table at {self.path}: replay "
+                    f"of batch {batch_id} but writer {self.writer_id!r} "
+                    f"already applied batch {newest} — verdict re-emission "
+                    "only covers the most recent batch; restore a "
+                    "checkpoint no older than the table, or rebuild it"
+                )
+            base = meta.get("screen_base", {}).get(self.writer_id, -1)
+            self.screened(
+                self._screen(batch_df, self._keys(batch_df), base), batch_id
+            )
+            return
+        t0 = time.time()
+        art = self._prepare(batch_df)
+        if self.REBASE:
+            t0 = time.time()  # hoisted batch artifacts: no attempt's fold
+        if self.screened is not None:
+            self.screened(self._screen(batch_df, art, latest), batch_id)
+        pre_sec = time.time() - t0
+
+        def stage(base: int, staged: str) -> dict:
+            frames, extra = self._stage(art, base)
+            write_frames(staged, frames)
+            return extra
+
+        def commit_meta(base: int, extra: dict) -> dict:
+            base_meta = self._meta(base)
+            applied = _watermarks(base_meta)
+            applied[self.writer_id] = batch_id
+            out = {"applied": applied, "lineage": self.lineage_id, **extra}
+            if self.SCREENS:
+                # the version the screen ran against, so a replay can
+                # re-emit bit-identical verdicts (other writers' carried)
+                out["screen_base"] = {
+                    **base_meta.get("screen_base", {}),
+                    self.writer_id: latest,
+                }
+            for key in self.COUNTERS:
+                out[key] = base_meta.get(key, 0) + extra[key]
+            return out
+
+        done = commit_loop(
+            self.table,
+            stage,
+            commit_meta,
+            restage=self.REBASE,
+            settled=lambda base: (
+                self._applied(base).get(self.writer_id, -1) >= batch_id
+            ),
+        )
+        if done is None:
+            return  # the race winner was a replay of THIS batch
+        self.timings.append(
+            {
+                "batch_id": batch_id,
+                "version": done.version,
+                "stage_sec": round(pre_sec + done.stage_sec, 4),
+                "commit_sec": round(done.commit_sec, 4),
+                **self._timing(done.version),
+            }
+        )
+        if (
+            self.AUTO_COMPACT
+            and done.version > 0
+            and done.version % COMPACT_EVERY == 0
+        ):
+            self.compact()
+        self.table.vacuum(keep_last=KEEP_LAST)

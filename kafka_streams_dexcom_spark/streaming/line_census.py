@@ -32,6 +32,11 @@ Two properties worth naming:
    repeats feed the census directly because the Bloom screen is
    prior-state only), FP-promoted extras bounded by fill^k.
 
+The per-batch protocol — guards, verdict re-emission (newest batch
+only; an older replay raises), commit-retry loop, timings, vacuum — is
+streaming/commitlog.BatchMaintainer. Counts are NOT idempotent, so its
+replay guard is correctness-critical here, unlike the Bloom twin's.
+
 Equality contract (pinned in tests/test_line_census_stream.py): after
 streaming any partition of the corpus through in any batch order,
 ``rewrite(all_docs)`` against the converged census equals the batch
@@ -39,9 +44,6 @@ operator's output on the same corpus, bit for bit.
 """
 
 from __future__ import annotations
-
-import shutil
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -51,15 +53,12 @@ from kafka_streams_dexcom_spark.operators.text import (
     LINE_WORDS,
     host_lines,
 )
-from kafka_streams_dexcom_spark.streaming.commitlog import (
-    CommitConflict,
-    VersionedTable,
-)
+from kafka_streams_dexcom_spark.streaming.commitlog import BatchMaintainer
 
 _CENSUS_SCHEMA = "host string, lh bigint, nd bigint"
 
 
-class HostLineCensusMaintainer:
+class HostLineCensusMaintainer(BatchMaintainer):
     """foreachBatch sink maintaining the per-(host, line) distinct-doc
     census and flagging chrome lines incrementally.
 
@@ -67,6 +66,10 @@ class HostLineCensusMaintainer:
     every batch row scored against the census BEFORE this batch —
     provisional in the documented monotone sense. ``lineage_id`` binds
     the census to one streaming query's batch-id sequence."""
+
+    # a batch's counts depend only on the batch: staged once, a rebase
+    # re-links the same files
+    SCREENS = True
 
     def __init__(
         self,
@@ -79,40 +82,19 @@ class HostLineCensusMaintainer:
         screened=None,
         lineage_id: str | None = None,
         writer_id: str | None = None,
-        max_commit_attempts: int = 10,
     ) -> None:
-        self.spark = spark
-        self.table = VersionedTable(path)
+        super().__init__(spark, path, lineage_id, writer_id, screened)
         self.host_col = host_col
         self.text_col = text_col
         self.line_words = line_words
         self.min_docs = min_docs
-        self.screened = screened
-        self.lineage_id = lineage_id
-        self.writer_id = writer_id if writer_id is not None else (
-            lineage_id or ""
-        )
-        self.max_commit_attempts = max_commit_attempts
-        self.timings: list[dict] = []
 
     # -- read side -----------------------------------------------------
-    def _meta(self, version: int) -> dict:
-        if version < 0:
-            return {}
-        return self.table.read_manifest(version).get("meta", {})
-
-    def _applied(self, version: int) -> dict:
-        return dict(self._meta(version).get("applied", {}))
-
     def census(self, version: int | None = None) -> DataFrame:
         """(host, lh, nd) increments at ``version`` (latest default);
         the effective count is sum(nd) per (host, lh) — consumers
         aggregate, compact() folds."""
-        empty = self.spark.createDataFrame([], _CENSUS_SCHEMA)
-        if self.table.latest_version() < 0 and version is None:
-            return empty
-        df = self.table.read(self.spark, version)
-        return empty if df is None else df
+        return self._read(_CENSUS_SCHEMA, version)
 
     def chrome(self, version: int | None = None) -> DataFrame:
         """(host, lh) of every line at/over the distinct-doc threshold."""
@@ -153,26 +135,7 @@ class HostLineCensusMaintainer:
             F.coalesce("txt", F.lit("")).alias("clean_text"),
         )
 
-    # -- maintenance ---------------------------------------------------
-    def compact(self) -> int | None:
-        """Fold increments into one summed replace commit. Best-effort:
-        a losing race returns None and the next cycle gets it."""
-        base = self.table.latest_version()
-        if base < 0:
-            return None
-        folded = (
-            self.table.read(self.spark, base)
-            .groupBy("host", "lh")
-            .agg(F.sum("nd").cast("bigint").alias("nd"))
-        )
-        try:
-            return self.table.write_commit(
-                folded, base_version=base, meta=self._meta(base)
-            )
-        except CommitConflict:
-            return None
-
-    # -- the sink ------------------------------------------------------
+    # -- the fold ------------------------------------------------------
     def _batch_counts(self, batch_df: DataFrame) -> DataFrame:
         """Per-(host, lh) DISTINCT-doc contribution of one batch —
         distinct within the batch (a line twice in one doc counts that
@@ -188,19 +151,16 @@ class HostLineCensusMaintainer:
             .agg(F.count(F.lit(1)).cast("bigint").alias("nd"))
         )
 
-    def _screen(self, batch_df: DataFrame, version: int) -> DataFrame:
+    def _screen(
+        self, batch_df: DataFrame, keys: DataFrame, version: int
+    ) -> DataFrame:
         """(doc_id, n_chrome_lines) for the batch against the census at
         ``version`` (-1 = empty). Read-only; replay-safe."""
         lines = host_lines(
             batch_df, self.host_col, self.text_col, self.line_words
         )
-        chrome = (
-            self.chrome(version)
-            if version >= 0
-            else self.spark.createDataFrame([], "host string, lh bigint")
-        )
         hits = (
-            lines.join(chrome, ["host", "lh"])
+            lines.join(self.chrome(version), ["host", "lh"])
             .groupBy("doc_id")
             .agg(F.count(F.lit(1)).alias("n_hit"))
         )
@@ -215,86 +175,13 @@ class HostLineCensusMaintainer:
             )
         )
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        latest = self.table.latest_version()
-        if self.lineage_id is not None and latest >= 0:
-            stored = self._meta(latest).get("lineage")
-            if stored != self.lineage_id:
-                raise RuntimeError(
-                    f"line census at {self.table.root} belongs to "
-                    f"lineage {stored!r}; refusing batches from "
-                    f"{self.lineage_id!r}"
-                )
-        applied_now = self._applied(latest)
-        newest = applied_now.get(self.writer_id, -1)
-        if batch_id <= newest:
-            # Replayed micro-batch: counts already committed (adding
-            # them again WOULD double-count — the replay guard is
-            # correctness-critical here, unlike the Bloom twin's
-            # idempotent bits). Verdict re-emission covers exactly the
-            # NEWEST applied batch (Spark's normal crash-replay replays
-            # the last uncommitted-to-the-checkpoint batch): its
-            # verdicts re-emit against the recorded pre-batch census,
-            # bit-identical. A replay of any OLDER batch means the
-            # checkpoint was restored further back than the retained
-            # census — screen_base only keeps the last commit's base
-            # per writer, so those verdicts are unrecoverable; raise
-            # instead of silently emitting nothing.
-            if batch_id < newest:
-                raise RuntimeError(
-                    f"line census at {self.table.root}: replay of batch "
-                    f"{batch_id} but writer {self.writer_id!r} already "
-                    f"applied batch {newest} — verdict re-emission only "
-                    "covers the most recent batch; restore a checkpoint "
-                    "no older than the census, or rebuild the census"
-                )
-            if self.screened is not None:
-                base = self._meta(latest).get("screen_base", {}).get(
-                    self.writer_id, -1
-                )
-                self.screened(self._screen(batch_df, base), batch_id)
-            return
-        t0 = time.time()
-        if self.screened is not None:
-            self.screened(self._screen(batch_df, latest), batch_id)
-        counts = self._batch_counts(batch_df)
-        staged = self.table.stage()
-        counts.write.mode("overwrite").parquet(staged)
-        stage_sec = time.time() - t0
-        t0 = time.time()
-        for _ in range(self.max_commit_attempts):
-            base_version = self.table.latest_version()
-            applied = self._applied(base_version)
-            if applied.get(self.writer_id, -1) >= batch_id:
-                shutil.rmtree(staged, ignore_errors=True)
-                return  # race winner was a replay of THIS batch
-            applied[self.writer_id] = batch_id
-            base_meta = self._meta(base_version)
-            screen_base = dict(base_meta.get("screen_base", {}))
-            screen_base[self.writer_id] = latest
-            meta = {
-                "applied": applied,
-                "screen_base": screen_base,
-            }
-            if self.lineage_id is not None:
-                meta["lineage"] = self.lineage_id
-            try:
-                self.table.commit_append(
-                    staged, base_version=base_version, meta=meta
-                )
-                break
-            except CommitConflict:
-                continue
-        else:
-            shutil.rmtree(staged, ignore_errors=True)
-            raise RuntimeError(
-                f"line census commit for batch {batch_id} lost "
-                f"{self.max_commit_attempts} races"
-            )
-        self.timings.append(
-            {
-                "batch_id": batch_id,
-                "stage_sec": stage_sec,
-                "commit_sec": time.time() - t0,
-            }
+    def _stage(self, batch_df: DataFrame, base: int) -> tuple:
+        return self._batch_counts(batch_df), {}
+
+    def _compacted(self, base: int) -> DataFrame:
+        """Increments folded into one summed frame."""
+        return (
+            self.census(base)
+            .groupBy("host", "lh")
+            .agg(F.sum("nd").cast("bigint").alias("nd"))
         )

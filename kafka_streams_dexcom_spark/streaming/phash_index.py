@@ -24,7 +24,8 @@ the SemClusterMaintainer shape on the Hamming geometry:
    (the changelog shape of cluster_map_stream);
 5. commit_append publishes the batch's fingerprints and label delta in
    ONE manifest: O(batch) data motion per commit, per-writer replay
-   watermarks, exactly-one-winner races.
+   watermarks, exactly-one-winner races — the per-batch protocol of
+   streaming/commitlog.BatchMaintainer.
 
 Equivalence (pinned by tests/test_phash_index.py): after streaming a
 corpus in any number of micro-batches, ``survivors_view()`` equals the
@@ -46,10 +47,6 @@ perceptual-duplicate view.
 
 from __future__ import annotations
 
-import os
-import shutil
-import time
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -57,16 +54,13 @@ from kafka_streams_dexcom_spark.operators.dedup import (
     SIMHASH_MAX_BUCKET,
     pairs_within_buckets,
 )
-from kafka_streams_dexcom_spark.operators.graph import cc_incremental_delta
-from kafka_streams_dexcom_spark.streaming.commitlog import (
-    CommitConflict,
-    VersionedTable,
+from kafka_streams_dexcom_spark.streaming.cluster_map_stream import (
+    LabelChangelogMaintainer,
 )
 
 _FP_SCHEMA = (
     "doc_id long, b0 long, b1 long, b2 long, b3 long"
 )
-_LABEL_SCHEMA = "node long, component long, seq long"
 
 _HAM_TPL = (
     "CAST(bit_count({a}0 ^ {b}0) + bit_count({a}1 ^ {b}1)"
@@ -90,7 +84,7 @@ def _bands(fp: DataFrame, prefix: str) -> DataFrame:
     )
 
 
-class PhashIndexMaintainer:
+class PhashIndexMaintainer(LabelChangelogMaintainer):
     """foreachBatch sink maintaining (fingerprints, near-dup cluster
     labels) for a stream of 64-bit banded perceptual fingerprints.
     See module docstring."""
@@ -102,62 +96,15 @@ class PhashIndexMaintainer:
         lineage_id: str | None = None,
         max_hamming: int = 4,
         writer_id: str | None = None,
-        max_commit_attempts: int = 10,
-        compact_every: int | None = 64,
         max_bucket_probe: int | None = SIMHASH_MAX_BUCKET,
     ) -> None:
-        self.spark = spark
-        self.table = VersionedTable(path)
-        self.lineage_id = lineage_id
+        super().__init__(spark, path, lineage_id, writer_id)
         self.max_hamming = max_hamming
-        self.writer_id = writer_id if writer_id is not None else (
-            lineage_id or ""
-        )
-        self.max_commit_attempts = max_commit_attempts
-        self.compact_every = compact_every
         self.max_bucket_probe = max_bucket_probe
-        self.timings: list[dict] = []
-
-    # -- marker (cluster_map_stream discipline) ---------------------------
-    def _applied(self, version: int) -> dict:
-        if version < 0:
-            return {}
-        return self.table.read_manifest(version).get("meta", {}).get(
-            "applied", {}
-        )
-
-    def _read_marker(self) -> tuple[int, str | None]:
-        v = self.table.latest_version()
-        if v < 0:
-            return -1, None
-        meta = self.table.read_manifest(v).get("meta", {})
-        return (
-            meta.get("applied", {}).get(self.writer_id, -1),
-            meta.get("lineage") or None,
-        )
 
     # -- stored artifacts ------------------------------------------------
-    def _read(self, sub: str, schema: str, version: int) -> DataFrame:
-        if version >= 0:
-            df = self.table.read(self.spark, version, sub=sub)
-            if df is not None:
-                return df
-        return self.spark.createDataFrame([], schema)
-
     def fingerprints(self, version: int | None = None) -> DataFrame:
-        v = self.table.latest_version() if version is None else version
-        return self._read("fingerprints", _FP_SCHEMA, v)
-
-    def _label_log(self, version: int) -> DataFrame:
-        return self._read("labels", _LABEL_SCHEMA, version)
-
-    def labels(self, version: int | None = None) -> DataFrame:
-        v = self.table.latest_version() if version is None else version
-        return (
-            self._label_log(v)
-            .groupBy("node")
-            .agg(F.max_by("component", "seq").alias("component"))
-        )
+        return self._read(_FP_SCHEMA, version, "fingerprints")
 
     def survivors_view(self, version: int | None = None) -> DataFrame:
         """(doc_id, canonical_id, is_survivor) over the maintained
@@ -185,64 +132,21 @@ class PhashIndexMaintainer:
             )
         )
 
-    # -- maintenance -------------------------------------------------------
-    def compact(self) -> int | None:
-        base = self.table.latest_version()
-        if base < 0:
-            return None
-        staged = self.table.stage()
-        self.labels(base).withColumn(
-            "seq", F.lit(base).cast("long")
-        ).write.parquet(os.path.join(staged, "labels"))
-        self.fingerprints(base).write.parquet(
-            os.path.join(staged, "fingerprints")
-        )
-        meta = self.table.read_manifest(base).get("meta", {})
-        try:
-            return self.table.commit_append(
-                staged,
-                base,
-                meta=meta,
-                replace_subs=("labels", "fingerprints"),
-            )
-        except CommitConflict:
-            shutil.rmtree(staged, ignore_errors=True)
-            return None
+    def _compacted(self, base: int) -> dict:
+        return {
+            "labels": self._label_snapshot(base),
+            "fingerprints": self.fingerprints(base),
+        }
 
-    # -- the sink --------------------------------------------------------
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        last_id, last_lineage = self._read_marker()
-        if self.lineage_id is not None and self.table.latest_version() >= 0:
-            if last_lineage != self.lineage_id:
-                raise RuntimeError(
-                    f"phash index at {self.table.root} belongs to "
-                    f"lineage {last_lineage!r}; refusing batches from "
-                    f"{self.lineage_id!r} — replay guards would silently "
-                    "drop this query's early batches"
-                )
-        if batch_id <= last_id:
-            return  # replayed micro-batch: already folded in
-        # batch artifact — depends only on the batch, hoisted out of
-        # the commit-retry loop
-        bn = batch_df.select(
+    # -- the fold --------------------------------------------------------
+    def _prepare(self, batch_df: DataFrame) -> DataFrame:
+        # the batch artifact depends only on the batch: materialized
+        # once, reused by every rebase
+        return batch_df.select(
             "doc_id", "b0", "b1", "b2", "b3"
         ).localCheckpoint()
-        for _ in range(self.max_commit_attempts):
-            base = self.table.latest_version()
-            if self._fold_and_commit(bn, batch_id, base):
-                return
-        raise CommitConflict(
-            f"phash batch {batch_id} gave up after "
-            f"{self.max_commit_attempts} conflicting commits"
-        )
 
-    def _fold_and_commit(
-        self, bn: DataFrame, batch_id: int, base: int
-    ) -> bool:
-        applied = dict(self._applied(base))
-        if applied.get(self.writer_id, -1) >= batch_id:
-            return True  # the race winner was a replay of THIS batch
-        t0 = time.time()
+    def _stage(self, bn: DataFrame, base: int) -> tuple:
         batch_bands = _bands(bn, "ba_b")
         stored_bands = _bands(self.fingerprints(base), "bb_b")
         if self.max_bucket_probe is not None:
@@ -308,37 +212,7 @@ class PhashIndexMaintainer:
         edges = cross.union(within).select(
             F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
         )
-        label_delta = cc_incremental_delta(edges, self.labels(base)).select(
-            "node", "component", F.lit(base + 1).cast("long").alias("seq")
-        )
-        staged = self.table.stage()
-        label_delta.write.parquet(os.path.join(staged, "labels"))
-        bn.write.parquet(os.path.join(staged, "fingerprints"))
-        applied[self.writer_id] = batch_id
-        stage_sec = time.time() - t0
-        t0 = time.time()
-        try:
-            version = self.table.commit_append(
-                staged,
-                base,
-                meta={"applied": applied, "lineage": self.lineage_id or ""},
-            )
-        except CommitConflict:
-            shutil.rmtree(staged, ignore_errors=True)
-            return False
-        self.timings.append(
-            {
-                "batch_id": batch_id,
-                "stage_sec": round(stage_sec, 3),
-                "commit_sec": round(time.time() - t0, 3),
-                "version": version,
-            }
-        )
-        if (
-            self.compact_every is not None
-            and version > 0
-            and version % self.compact_every == 0
-        ):
-            self.compact()
-        self.table.vacuum(keep_last=3)
-        return True
+        return {
+            "labels": self._label_delta(edges, base),
+            "fingerprints": bn,
+        }, {}

@@ -22,7 +22,8 @@ non-starter. This maintainer is the incremental contract:
    (the changelog shape of cluster_map_stream);
 5. commit_append publishes the batch's member vectors and label delta
    in ONE manifest: O(batch) data motion per commit, per-writer replay
-   watermarks, exactly-one-winner races.
+   watermarks, exactly-one-winner races — the per-batch protocol of
+   streaming/commitlog.BatchMaintainer.
 
 Equivalence (pinned by tests/test_semdedup_stream.py): after streaming
 a corpus in any number of micro-batches, ``membership()`` equals the
@@ -60,10 +61,6 @@ a maintained semantic-duplicate view.
 
 from __future__ import annotations
 
-import os
-import shutil
-import time
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -75,14 +72,11 @@ from kafka_streams_dexcom_spark.operators.dedup import (
     DOT_EXPR_TPL,
     with_embedding_norm,
 )
-from kafka_streams_dexcom_spark.operators.graph import cc_incremental_delta
-from kafka_streams_dexcom_spark.streaming.commitlog import (
-    CommitConflict,
-    VersionedTable,
+from kafka_streams_dexcom_spark.streaming.cluster_map_stream import (
+    LabelChangelogMaintainer,
 )
 
 _VEC_SCHEMA = "vec_id long, cell int, vec array<double>, norm double"
-_LABEL_SCHEMA = "node long, component long, seq long"
 
 # Per-cell stored-side probe cap: a batch vector is compared against at
 # most this many stored members of its cell (the lowest-vec_id
@@ -92,7 +86,7 @@ _LABEL_SCHEMA = "node long, component long, seq long"
 SEM_MAX_CELL_PROBE = 100_000
 
 
-class SemClusterMaintainer:
+class SemClusterMaintainer(LabelChangelogMaintainer):
     """foreachBatch sink maintaining (member vectors, semantic cluster
     labels) for a stream of new embeddings against a frozen quantizer.
     See module docstring."""
@@ -107,67 +101,20 @@ class SemClusterMaintainer:
         id_col: str = "vec_id",
         vec_col: str = "embedding",
         writer_id: str | None = None,
-        max_commit_attempts: int = 10,
-        compact_every: int | None = 64,
         max_cell_probe: int | None = SEM_MAX_CELL_PROBE,
     ) -> None:
-        self.spark = spark
-        self.table = VersionedTable(path)
+        super().__init__(spark, path, lineage_id, writer_id)
         self.centroids = centroids.select(
             F.col("cid").cast("int").alias("cid"), "cvec"
         ).localCheckpoint()
-        self.lineage_id = lineage_id
         self.tau = tau
         self.id_col = id_col
         self.vec_col = vec_col
-        self.writer_id = writer_id if writer_id is not None else (
-            lineage_id or ""
-        )
-        self.max_commit_attempts = max_commit_attempts
-        self.compact_every = compact_every
         self.max_cell_probe = max_cell_probe
-        self.timings: list[dict] = []
-
-    # -- marker (cluster_map_stream discipline) ---------------------------
-    def _applied(self, version: int) -> dict:
-        if version < 0:
-            return {}
-        return self.table.read_manifest(version).get("meta", {}).get(
-            "applied", {}
-        )
-
-    def _read_marker(self) -> tuple[int, str | None]:
-        v = self.table.latest_version()
-        if v < 0:
-            return -1, None
-        meta = self.table.read_manifest(v).get("meta", {})
-        return (
-            meta.get("applied", {}).get(self.writer_id, -1),
-            meta.get("lineage") or None,
-        )
 
     # -- stored artifacts ------------------------------------------------
-    def _read(self, sub: str, schema: str, version: int) -> DataFrame:
-        if version >= 0:
-            df = self.table.read(self.spark, version, sub=sub)
-            if df is not None:
-                return df
-        return self.spark.createDataFrame([], schema)
-
     def vectors(self, version: int | None = None) -> DataFrame:
-        v = self.table.latest_version() if version is None else version
-        return self._read("vectors", _VEC_SCHEMA, v)
-
-    def _label_log(self, version: int) -> DataFrame:
-        return self._read("labels", _LABEL_SCHEMA, version)
-
-    def labels(self, version: int | None = None) -> DataFrame:
-        v = self.table.latest_version() if version is None else version
-        return (
-            self._label_log(v)
-            .groupBy("node")
-            .agg(F.max_by("component", "seq").alias("component"))
-        )
+        return self._read(_VEC_SCHEMA, version, "vectors")
 
     def membership(self, version: int | None = None) -> DataFrame:
         """(vec_id, cell, sem_cluster) — every stored vector with its
@@ -277,48 +224,21 @@ class SemClusterMaintainer:
             selected.alias("selected"),
         )
 
-    # -- maintenance -------------------------------------------------------
-    def compact(self) -> int | None:
-        base = self.table.latest_version()
-        if base < 0:
-            return None
-        staged = self.table.stage()
-        self.labels(base).withColumn(
-            "seq", F.lit(base).cast("long")
-        ).write.parquet(os.path.join(staged, "labels"))
-        self.vectors(base).write.parquet(os.path.join(staged, "vectors"))
-        meta = self.table.read_manifest(base).get("meta", {})
-        try:
-            return self.table.commit_append(
-                staged,
-                base,
-                meta=meta,
-                replace_subs=("labels", "vectors"),
-            )
-        except CommitConflict:
-            shutil.rmtree(staged, ignore_errors=True)
-            return None
+    def _compacted(self, base: int) -> dict:
+        return {
+            "labels": self._label_snapshot(base),
+            "vectors": self.vectors(base),
+        }
 
-    # -- the sink --------------------------------------------------------
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        last_id, last_lineage = self._read_marker()
-        if self.lineage_id is not None and self.table.latest_version() >= 0:
-            if last_lineage != self.lineage_id:
-                raise RuntimeError(
-                    f"semantic cluster view at {self.table.root} belongs "
-                    f"to lineage {last_lineage!r}; refusing batches from "
-                    f"{self.lineage_id!r} — replay guards would silently "
-                    "drop this query's early batches"
-                )
-        if batch_id <= last_id:
-            return  # replayed micro-batch: already folded in
+    # -- the fold --------------------------------------------------------
+    def _prepare(self, batch_df: DataFrame) -> DataFrame:
+        """The frozen-quantizer assignment + norms — depends only on the
+        batch, materialized once and reused by every rebase."""
         idc = self.id_col
-        # batch artifact (frozen-quantizer assignment + norms) — depends
-        # only on the batch, hoisted out of the commit-retry loop
         base_vecs = with_embedding_norm(
             batch_df.select(idc, self.vec_col), self.vec_col
         ).select(F.col(idc).alias("vid"), "vec", "norm")
-        bn = (
+        return (
             assign_to_centroids(
                 base_vecs.select("vid", "vec"), self.centroids
             )
@@ -330,14 +250,6 @@ class SemClusterMaintainer:
                 "norm",
             )
             .localCheckpoint()
-        )
-        for _ in range(self.max_commit_attempts):
-            base = self.table.latest_version()
-            if self._fold_and_commit(bn, batch_id, base):
-                return
-        raise CommitConflict(
-            f"semantic cluster batch {batch_id} gave up after "
-            f"{self.max_commit_attempts} conflicting commits"
         )
 
     def _pairs(self, a: DataFrame, b: DataFrame, ordered: bool) -> DataFrame:
@@ -369,13 +281,7 @@ class SemClusterMaintainer:
             .select("id_a", "id_b")
         )
 
-    def _fold_and_commit(
-        self, bn: DataFrame, batch_id: int, base: int
-    ) -> bool:
-        applied = dict(self._applied(base))
-        if applied.get(self.writer_id, -1) >= batch_id:
-            return True  # the race winner was a replay of THIS batch
-        t0 = time.time()
+    def _stage(self, bn: DataFrame, base: int) -> tuple:
         stored = self.vectors(base)
         if self.max_cell_probe is not None:
             # hot-cell bound: probe only the cap-many lowest-vec_id
@@ -396,37 +302,7 @@ class SemClusterMaintainer:
         ).select(
             F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
         )
-        label_delta = cc_incremental_delta(edges, self.labels(base)).select(
-            "node", "component", F.lit(base + 1).cast("long").alias("seq")
-        )
-        staged = self.table.stage()
-        label_delta.write.parquet(os.path.join(staged, "labels"))
-        bn.write.parquet(os.path.join(staged, "vectors"))
-        applied[self.writer_id] = batch_id
-        stage_sec = time.time() - t0
-        t0 = time.time()
-        try:
-            version = self.table.commit_append(
-                staged,
-                base,
-                meta={"applied": applied, "lineage": self.lineage_id or ""},
-            )
-        except CommitConflict:
-            shutil.rmtree(staged, ignore_errors=True)
-            return False
-        self.timings.append(
-            {
-                "batch_id": batch_id,
-                "stage_sec": round(stage_sec, 3),
-                "commit_sec": round(time.time() - t0, 3),
-                "version": version,
-            }
-        )
-        if (
-            self.compact_every is not None
-            and version > 0
-            and version % self.compact_every == 0
-        ):
-            self.compact()
-        self.table.vacuum(keep_last=3)
-        return True
+        return {
+            "labels": self._label_delta(edges, base),
+            "vectors": bn,
+        }, {}

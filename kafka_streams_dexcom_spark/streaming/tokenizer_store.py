@@ -11,7 +11,8 @@ app; this store is the cross-job publish path:
 - every publish is one atomic ``commit_append`` whose artifact legs
   (``vocab``, and ``merges`` for the BPE family) are swapped via
   ``replace_subs`` — a new manifest version, O(artifact) data motion,
-  exactly-one-winner races (streaming/commitlog.py:173);
+  exactly-one-winner races through the package's one retry loop
+  (streaming/commitlog.commit_loop);
 - readers of ``latest`` pick up exactly the new vocabulary the moment
   the manifest lands (no torn reads — the commit log's link-CAS);
 - readers PINNED to a version replay bit-identically forever (time
@@ -30,14 +31,12 @@ trained-model tables.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 
 from kafka_streams_dexcom_spark.streaming.commitlog import (
-    CommitConflict,
     VersionedTable,
+    commit_loop,
+    write_frames,
 )
 
 
@@ -80,15 +79,15 @@ class TokenizerArtifactStore:
         family: str,
         fingerprint: str,
         params: dict | None = None,
-        max_attempts: int = 10,
     ) -> int:
         """Atomically publish the artifact frames as a new version.
         A bare DataFrame publishes as the ``vocab`` leg. On a lost
         race, if the winner already published the SAME
         (family, fingerprint, params) the winner's version is returned
-        (the retrain was redundant, not wrong); otherwise the commit is
-        retried against the new base — an artifact publish depends only
-        on its own training output, so no rebuild is needed."""
+        (the retrain was redundant, not wrong); otherwise the staged
+        legs are re-linked onto the new base — an artifact publish
+        depends only on its own training output, so no rebuild is
+        needed."""
         if isinstance(frames, DataFrame):
             frames = {"vocab": frames}
         meta = {
@@ -96,28 +95,16 @@ class TokenizerArtifactStore:
             "fingerprint": fingerprint,
             "params": dict(params or {}),
         }
-        for _ in range(max_attempts):
-            base = self.table.latest_version()
-            staged = self.table.stage()
-            for sub, df in frames.items():
-                df.write.mode("overwrite").parquet(
-                    os.path.join(staged, sub)
-                )
-            try:
-                return self.table.commit_append(
-                    staged,
-                    base,
-                    meta=meta,
-                    replace_subs=tuple(frames),
-                )
-            except CommitConflict:
-                shutil.rmtree(staged, ignore_errors=True)
-                if self.meta() == meta:
-                    return self.table.latest_version()
-        raise CommitConflict(
-            f"tokenizer publish gave up after {max_attempts} conflicting "
-            f"commits under {self.table.root}"
+        first = self.table.latest_version()
+        done = commit_loop(
+            self.table,
+            lambda _base, staged: write_frames(staged, frames),
+            lambda _base, _note: meta,
+            restage=False,
+            settled=lambda base: base > first and self.meta(base) == meta,
+            replace_subs=tuple(frames),
         )
+        return self.table.latest_version() if done is None else done.version
 
     def ensure(
         self,

@@ -32,28 +32,27 @@ Per micro-batch:
    address is in the stored index, ``batch`` when a smaller doc_id in
    THIS batch holds it; handed to ``screened`` before the commit;
 3. append the genuinely-new (url_hash, doc_id) rows; O(batch) commit
-   with the per-writer applied watermark.
+   with the per-writer applied watermark. The new rows are subtracted
+   from the base, so a lost race re-stages them against the winner's
+   version (racing epochs that share an address converge to one
+   holder).
+
+The per-batch protocol — guards, verdict re-emission, commit-retry
+loop, timings, vacuum — is streaming/commitlog.BatchMaintainer.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
-import time
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_streams_dexcom_spark.operators.dedup import HASH60_TPL
-from kafka_streams_dexcom_spark.streaming.commitlog import (
-    CommitConflict,
-    VersionedTable,
-)
+from kafka_streams_dexcom_spark.streaming.commitlog import BatchMaintainer
 
 _IDX_SCHEMA = "url_hash bigint, doc_id bigint"
 
 
-class UrlFirstSeenMaintainer:
+class UrlFirstSeenMaintainer(BatchMaintainer):
     """foreachBatch sink maintaining the canonical-URL first-seen
     index and screening each batch against it.
 
@@ -61,6 +60,9 @@ class UrlFirstSeenMaintainer:
     dup_kind string) for every batch row BEFORE the batch's new
     addresses commit; ``url_col`` names the already-canonical URL
     column on the batch frame."""
+
+    REBASE = True
+    SCREENS = True
 
     def __init__(
         self,
@@ -71,60 +73,34 @@ class UrlFirstSeenMaintainer:
         screened=None,
         lineage_id: str | None = None,
         writer_id: str | None = None,
-        max_commit_attempts: int = 10,
     ) -> None:
-        self.spark = spark
-        self.table = VersionedTable(path)
+        super().__init__(spark, path, lineage_id, writer_id, screened)
         self.id_col = id_col
         self.url_col = url_col
-        self.screened = screened
-        self.lineage_id = lineage_id
-        self.writer_id = writer_id if writer_id is not None else (
-            lineage_id or ""
-        )
-        self.max_commit_attempts = max_commit_attempts
-        self.timings: list[dict] = []
 
     # -- read side -----------------------------------------------------
-    def _meta(self, version: int) -> dict:
-        if version < 0:
-            return {}
-        return self.table.read_manifest(version).get("meta", {})
-
-    def _applied(self, version: int) -> dict:
-        return dict(self._meta(version).get("applied", {}))
-
     def index(self, version: int | None = None) -> DataFrame:
         """The (url_hash, doc_id) first-seen relation at ``version``
         (latest default). Appends are disjoint on url_hash by
         construction, so the relation is a function."""
-        empty = self.spark.createDataFrame([], _IDX_SCHEMA)
-        if self.table.latest_version() < 0 and version is None:
-            return empty
-        df = self.table.read(self.spark, version)
-        return empty if df is None else df
+        return self._read(_IDX_SCHEMA, version)
 
-    # -- the sink --------------------------------------------------------
-    def _hashed(self, batch_df: DataFrame) -> DataFrame:
+    # -- the fold --------------------------------------------------------
+    def _keys(self, batch_df: DataFrame) -> DataFrame:
         h = HASH60_TPL.format(x=self.url_col)
         return batch_df.select(
             F.col(self.id_col), F.expr(h).alias("url_hash")
         )
 
-    def _screen(
-        self, hashed: DataFrame, version: int
-    ) -> DataFrame:
-        from pyspark.sql import Window
+    def _prepare(self, batch_df: DataFrame) -> DataFrame:
+        return self._keys(batch_df).localCheckpoint()
 
-        # -1 means EMPTY even when later state exists (index(None)
-        # reads LATEST): a replayed batch 0 screens against the
-        # pre-ingest index, not its own committed addresses
-        base = (
-            self.index(version)
-            if version >= 0
-            else self.spark.createDataFrame([], _IDX_SCHEMA)
+    def _screen(
+        self, batch_df: DataFrame, hashed: DataFrame, version: int
+    ) -> DataFrame:
+        stored = self.index(version).select(
+            "url_hash", F.lit(1).alias("__prior")
         )
-        stored = base.select("url_hash", F.lit(1).alias("__prior"))
         holder = F.min(self.id_col).over(
             Window.partitionBy("url_hash")
         )
@@ -147,110 +123,19 @@ class UrlFirstSeenMaintainer:
             )
         )
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        latest = self.table.latest_version()
-        if self.lineage_id is not None and latest >= 0:
-            stored = self._meta(latest).get("lineage")
-            if stored != self.lineage_id:
-                raise RuntimeError(
-                    f"url index at {self.table.root} belongs to "
-                    f"lineage {stored!r}; refusing batches from "
-                    f"{self.lineage_id!r}"
-                )
-        applied_now = self._applied(latest)
-        if batch_id <= applied_now.get(self.writer_id, -1):
-            # replayed epoch: the index already holds these addresses;
-            # re-emit the screen against the recorded pre-batch version
-            # (at-least-once delivery, bit-identical verdicts)
-            if self.screened is not None and batch_id == applied_now.get(
-                self.writer_id, -1
-            ):
-                base = self._meta(latest).get("screen_base", {}).get(
-                    self.writer_id, -1
-                )
-                self.screened(
-                    self._screen(self._hashed(batch_df), base), batch_id
-                )
-            return
-        t0 = time.time()
-        hashed = self._hashed(batch_df).localCheckpoint()
-        if self.screened is not None:
-            self.screened(self._screen(hashed, latest), batch_id)
-        # the batch's first-seen holders, minus addresses any stored
-        # version already holds
+    def _stage(self, hashed: DataFrame, base: int) -> tuple:
+        # the batch's first-seen holders, minus addresses the base holds
         new_rows = (
             hashed.groupBy("url_hash")
             .agg(F.min(self.id_col).alias(self.id_col))
             .join(
-                F.broadcast(
-                    self.index(latest if latest >= 0 else None).select(
-                        "url_hash"
-                    )
-                ),
+                F.broadcast(self.index(base).select("url_hash")),
                 "url_hash",
                 "left_anti",
             )
             .select("url_hash", F.col(self.id_col).alias("doc_id"))
         )
-        staged = self.table.stage()
-        new_rows.write.mode("overwrite").parquet(staged)
-        stage_sec = time.time() - t0
-        t0 = time.time()
-        for _ in range(self.max_commit_attempts):
-            base_version = self.table.latest_version()
-            applied = self._applied(base_version)
-            if applied.get(self.writer_id, -1) >= batch_id:
-                shutil.rmtree(staged, ignore_errors=True)
-                return
-            applied[self.writer_id] = batch_id
-            base_meta = self._meta(base_version)
-            screen_base = dict(base_meta.get("screen_base", {}))
-            screen_base[self.writer_id] = latest
-            if base_version != latest:
-                # a concurrent writer advanced the index: re-subtract
-                # against the new base so racing epochs that share an
-                # address converge to one holder (rebase-refold, the
-                # commit-log discipline)
-                shutil.rmtree(staged, ignore_errors=True)
-                new_rows = (
-                    hashed.groupBy("url_hash")
-                    .agg(F.min(self.id_col).alias(self.id_col))
-                    .join(
-                        F.broadcast(
-                            self.index(base_version).select("url_hash")
-                        ),
-                        "url_hash",
-                        "left_anti",
-                    )
-                    .select(
-                        "url_hash", F.col(self.id_col).alias("doc_id")
-                    )
-                )
-                staged = self.table.stage()
-                new_rows.write.mode("overwrite").parquet(staged)
-                latest = base_version
-            try:
-                version = self.table.commit_append(
-                    staged,
-                    base_version=base_version,
-                    meta={
-                        "applied": applied,
-                        "screen_base": screen_base,
-                        "lineage": self.lineage_id,
-                    },
-                )
-            except CommitConflict:
-                continue
-            self.timings.append(
-                {
-                    "batch_id": batch_id,
-                    "version": version,
-                    "stage_sec": round(stage_sec, 4),
-                    "commit_sec": round(time.time() - t0, 4),
-                }
-            )
-            return
-        raise RuntimeError(
-            f"url index commit for batch {batch_id} lost "
-            f"{self.max_commit_attempts} races"
-        )
+        return new_rows, {}
+
+    def _compacted(self, base: int) -> DataFrame:
+        return self.index(base)

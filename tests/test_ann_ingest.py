@@ -229,7 +229,7 @@ def test_legacy_batch_id_manifest_seeds_applied_watermark(spark, tmp_path):
     fresh = IvfPostingsMaintainer(
         spark, str(tmp_path / "index"), cents, lineage_id="q1"
     )
-    assert fresh._last_meta()["batch_id"] == 2
+    assert fresh._applied(t.latest_version())["q1"] == 2
     # replay batch 1: must be a no-op, not a duplicate append
     batch = e.select("vec_id", "embedding").limit(50)
     fresh(batch, 1)

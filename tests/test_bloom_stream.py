@@ -1,7 +1,9 @@
 """Streaming Bloom-filter maintainer (streaming/bloom_ingest.py):
 stream≡batch screen equality against the prefix corpus, the structural
 no-false-negative guarantee across batches, replay/width bounds, and
-commit-log versioning."""
+commit-log versioning — plus its screening sibling, the URL first-seen
+index (streaming/url_index.py): lineage guard and verdict
+re-emission."""
 
 from __future__ import annotations
 
@@ -14,6 +16,9 @@ from kafka_streams_dexcom_spark.operators.dedup import (
 from kafka_streams_dexcom_spark.sources.files import load_table
 from kafka_streams_dexcom_spark.streaming.bloom_ingest import (
     BloomFilterMaintainer,
+)
+from kafka_streams_dexcom_spark.streaming.url_index import (
+    UrlFirstSeenMaintainer,
 )
 from tests.conftest import SF_DIR
 
@@ -125,6 +130,7 @@ def test_replay_guard_and_versions(spark, tmp_path, docs):
     assert m.table.latest_version() == 3  # one commit per micro-batch
     before = m.bits().count()
     # replayed batch: no new version, no new bits
+    m.screened = None
     m(docs.limit(5), 0)
     assert m.table.latest_version() == 3
     assert m.bits().count() == before
@@ -243,3 +249,109 @@ def test_lineage_guard(spark, tmp_path, docs):
     )
     with pytest.raises(RuntimeError, match="lineage"):
         m2(docs.limit(1), 0)
+
+
+def test_replay_older_than_newest_raises(spark, tmp_path, docs):
+    """Only the newest batch's screen base is retained, so a screened
+    replay of an OLDER batch cannot re-emit its verdicts: it must fail
+    loudly, not return with nothing emitted."""
+    m, verdicts = _run_stream(spark, tmp_path, docs)
+    last_bid = max(verdicts)
+    with pytest.raises(RuntimeError, match="most recent batch"):
+        m(docs.limit(5), last_bid - 1)
+    assert m.table.latest_version() == 3
+
+
+# -- the URL first-seen index -------------------------------------------
+
+
+def _url_docs(docs):
+    # 7 distinct addresses over the corpus: prior AND in-batch dups fire
+    return docs.select(
+        "doc_id",
+        F.concat(
+            F.lit("http://example.test/"), (F.col("doc_id") % 7).cast("string")
+        ).alias("url"),
+    )
+
+
+def _url_maintainer(spark, path, lineage="u1"):
+    """(maintainer, verdicts per batch_id as {doc_id: (url_dup,
+    dup_kind)}); the callback is rebindable through ``m.screened``."""
+    verdicts: dict[int, dict] = {}
+
+    def screened(df, bid):
+        verdicts[bid] = {
+            r["doc_id"]: (r["url_dup"], r["dup_kind"]) for r in df.collect()
+        }
+
+    m = UrlFirstSeenMaintainer(
+        spark, path, screened=screened, lineage_id=lineage
+    )
+    return m, verdicts
+
+
+def _url_batches(docs):
+    u = _url_docs(docs).limit(40).localCheckpoint()
+    return (
+        u.filter(F.col("doc_id") % 2 == 0).localCheckpoint(),
+        u.filter(F.col("doc_id") % 2 == 1).localCheckpoint(),
+    )
+
+
+def test_url_lineage_guard(spark, tmp_path, docs):
+    b0, _ = _url_batches(docs)
+    m, _ = _url_maintainer(spark, str(tmp_path / "urls"), lineage="u1")
+    m(b0, 0)
+    rogue = UrlFirstSeenMaintainer(
+        spark, str(tmp_path / "urls"), lineage_id="u2"
+    )
+    with pytest.raises(RuntimeError, match="lineage"):
+        rogue(b0, 1)
+    assert m.table.latest_version() == 0
+
+
+def test_url_replay_of_last_batch_reemits_identical_verdicts(
+    spark, tmp_path, docs
+):
+    """Replaying the newest epoch commits nothing and re-emits its
+    verdicts bit-identically against the recorded pre-batch index —
+    not the post-commit one, which holds the epoch's own addresses
+    and would flip every holder to a ``prior`` duplicate."""
+    b0, b1 = _url_batches(docs)
+    m, verdicts = _url_maintainer(spark, str(tmp_path / "urls"))
+    m(b0, 0)
+    m(b1, 1)
+    assert "prior" in {kind for _, kind in verdicts[1].values()}
+    version, rows = m.table.latest_version(), m.index().count()
+    original = dict(verdicts[1])
+    m(b1, 1)
+    assert verdicts[1] == original
+    assert m.table.latest_version() == version  # no new commit
+    assert m.index().count() == rows
+
+
+def test_url_replay_older_than_newest_raises(spark, tmp_path, docs):
+    b0, b1 = _url_batches(docs)
+    m, _ = _url_maintainer(spark, str(tmp_path / "urls"))
+    m(b0, 0)
+    m(b1, 1)
+    with pytest.raises(RuntimeError, match="most recent batch"):
+        m(b0, 0)
+    assert m.table.latest_version() == 1
+
+
+def test_url_replay_of_batch_zero_reemits_identical_verdicts(
+    spark, tmp_path, docs
+):
+    """The batch-0 edge: screen_base is -1, the EMPTY pre-ingest index,
+    never the latest version that holds batch 0's own addresses."""
+    b0, _ = _url_batches(docs)
+    m, verdicts = _url_maintainer(spark, str(tmp_path / "urls0"))
+    m(b0, 0)
+    original = dict(verdicts[0])
+    assert "prior" not in {kind for _, kind in original.values()}
+    assert "batch" in {kind for _, kind in original.values()}
+    m(b0, 0)
+    assert verdicts[0] == original
+    assert m.table.latest_version() == 0

@@ -70,7 +70,7 @@ def test_stream_equals_one_shot_batch(spark, tmp_path):
 def test_replayed_batch_is_noop(spark, tmp_path):
     m, d = _stream_corpus(spark, tmp_path)
     before = sorted((r.node, r.component) for r in m.labels().collect())
-    last = m._read_marker()[0]
+    last = m._applied(m.table.latest_version()).get(m.writer_id, -1)
     # simulate the at-least-once replay: re-apply an already-folded batch
     m(d.limit(5), last)
     after = sorted((r.node, r.component) for r in m.labels().collect())

@@ -11,8 +11,12 @@ import threading
 import pytest
 
 from kafka_streams_dexcom_spark.streaming.commitlog import (
+    MAX_COMMIT_ATTEMPTS,
+    BatchMaintainer,
     CommitConflict,
     VersionedTable,
+    commit_loop,
+    write_frames,
 )
 
 
@@ -117,7 +121,7 @@ def test_commit_retry_serializes_n_writers(tmp_path):
             # payload records which version it was derived from
             _write_payload(staged, 2, f"{tag}@base{base}")
 
-        t.commit_retry(build, max_attempts=50)
+        commit_loop(t, build, append=False)
 
     threads = [
         threading.Thread(target=writer, args=(f"w{i}",)) for i in range(n)
@@ -447,3 +451,132 @@ def test_spark_append_read_union(spark, tmp_path):
     assert t.read(spark, version=0).count() == 10
     assert t.read(spark, sub="data").count() == 25
     assert t.read(spark, sub="nosuch") is None
+
+
+# -- the per-batch protocol (BatchMaintainer) -----------------------------
+
+
+class _RacedFold(BatchMaintainer):
+    """A pass-through fold whose first ``races`` stagings each lose to a
+    rival commit landing on the same base — the two-writer race, made
+    deterministic. Counts how often the protocol prepares and stages."""
+
+    def __init__(self, spark, path, rebase, races=1):
+        super().__init__(spark, path, lineage_id="p")
+        self.REBASE = rebase
+        self.races = races
+        self.calls = {"prepare": 0, "stage": 0}
+
+    def _prepare(self, batch_df):
+        self.calls["prepare"] += 1
+        return batch_df
+
+    def _stage(self, art, base):
+        self.calls["stage"] += 1
+        if self.races:
+            self.races -= 1
+            rival = self.table.stage()
+            write_frames(rival, art.limit(0))
+            self.table.commit_append(rival, base, meta=self._meta(base))
+        return art, {}
+
+
+@pytest.mark.parametrize("rebase", [True, False], ids=["rebase", "relink"])
+def test_lost_race_reuses_batch_artifacts(spark, tmp_path, rebase):
+    """A losing writer never recomputes its hoisted batch artifacts: a
+    base-dependent fold re-stages against the winner, a batch-only fold
+    re-links the files it staged once."""
+    m = _RacedFold(spark, str(tmp_path / "t"), rebase)
+    m(spark.range(5), 0)
+    assert m.calls == {"prepare": 1, "stage": 2 if rebase else 1}
+    assert m.table.latest_version() == 1  # the rival's, then ours
+    assert m._applied(1) == {"p": 0}
+    assert m.timings[0]["version"] == 1
+    assert m.table.read(spark).count() == 5
+
+
+def test_exhausted_races_raise_and_leave_no_staging(spark, tmp_path):
+    m = _RacedFold(
+        spark, str(tmp_path / "t"), rebase=True, races=MAX_COMMIT_ATTEMPTS
+    )
+    with pytest.raises(CommitConflict, match="gave up"):
+        m(spark.range(5), 0)
+    assert not [n for n in os.listdir(m.path) if n.startswith("staging-")]
+    assert m.timings == []
+
+
+def _screen_batch(spark):
+    from pyspark.sql import functions as F
+
+    return spark.range(1, 9).select(
+        F.col("id").alias("doc_id"),
+        F.concat(F.lit("h"), (F.col("id") % 2).cast("string")).alias("host"),
+        F.lit("one two three four five six\nsame chrome line here ok").alias(
+            "text"
+        ),
+        F.concat(F.lit("http://x.test/"), F.col("id").cast("string")).alias(
+            "url"
+        ),
+    )
+
+
+@pytest.mark.parametrize("kind", ["bloom", "url", "census"])
+def test_screening_maintainers_vacuum_crash_debris(spark, tmp_path, kind):
+    """Every maintainer vacuums after its commit: a crash-orphaned
+    staging dir aged past the grace window is collected by the next
+    batch."""
+    import time
+
+    from kafka_streams_dexcom_spark.streaming.bloom_ingest import (
+        BloomFilterMaintainer,
+    )
+    from kafka_streams_dexcom_spark.streaming.line_census import (
+        HostLineCensusMaintainer,
+    )
+    from kafka_streams_dexcom_spark.streaming.url_index import (
+        UrlFirstSeenMaintainer,
+    )
+
+    path = str(tmp_path / kind)
+    m = {
+        "bloom": lambda: BloomFilterMaintainer(spark, path, m_bits=256),
+        "url": lambda: UrlFirstSeenMaintainer(spark, path),
+        "census": lambda: HostLineCensusMaintainer(spark, path),
+    }[kind]()
+    debris = os.path.join(path, "staging-crashed")
+    os.makedirs(debris)
+    aged = time.time() - 601
+    os.utime(debris, (aged, aged))
+    m(_screen_batch(spark), 0)
+    assert m.table.latest_version() == 0
+    assert not os.path.exists(debris)
+
+
+def test_one_commit_loop_in_streaming_package():
+    """commitlog.py holds the package's only commit-retry loop: no
+    other streaming module commits directly or re-grows a per-module
+    retry/compaction knob."""
+    import ast
+    import pathlib
+
+    import kafka_streams_dexcom_spark.streaming as pkg
+
+    banned_calls = {"commit_append", "commit", "write_commit"}
+    banned_params = {"max_commit_attempts", "compact_every"}
+    offenders = []
+    for f in sorted(pathlib.Path(pkg.__file__).parent.glob("*.py")):
+        if f.name == "commitlog.py":
+            continue
+        for node in ast.walk(ast.parse(f.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in banned_calls
+            ):
+                offenders.append(f"{f.name}:{node.lineno} .{node.func.attr}(")
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                a = node.args
+                for arg in a.posonlyargs + a.args + a.kwonlyargs:
+                    if arg.arg in banned_params:
+                        offenders.append(f"{f.name}:{node.lineno} {arg.arg}")
+    assert offenders == []

@@ -124,7 +124,6 @@ def _planted_hot_cell(spark, tmp_path, sub, max_cell_probe):
         cents,
         tau=0.99,
         max_cell_probe=max_cell_probe,
-        compact_every=None,
     )
     stored = spark.createDataFrame(
         [(i + 1, ang(20 * i)) for i in range(4)],
