@@ -38,7 +38,7 @@ bounding read amplification without ever blocking the write path.
 The per-batch protocol is streaming/commitlog.BatchMaintainer:
 exactly-once effect over at-least-once foreachBatch (the manifest meta
 records the per-WRITER applied batch_id map + lineage and a replayed
-batch is a no-op — the same marker discipline as IncrementalCounts,
+batch is a no-op — the replay and lineage guards of commitlog.py,
 including the loud failure when a NEW query lineage points at an
 EXISTING view), and the serializable rebase for concurrent writers:
 each batch folds against the version it read (base); a losing commit

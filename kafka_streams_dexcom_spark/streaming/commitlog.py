@@ -3,14 +3,14 @@ the transactional stand-in for a Delta/Iceberg commit while those jars
 are absent, with the SAME protocol shape so the swap-for-commit upgrade
 is a call-site change, not a redesign.
 
-The directory-rename publish (streaming/incremental.swap_directory)
-is atomic for ONE writer but has no concurrent-writer story: two
-maintainers publishing the same view race their renames and the loser's
-output silently vanishes (or worse, interleaves .old cleanup). Table
-formats solve this with OPTIMISTIC concurrency: writers prepare
-immutable data files, then commit by atomically creating the next
-numbered log entry; exactly one creator wins, losers rebase and retry.
-This module is that protocol on a filesystem:
+A directory-rename publish (stage, then swap the live dir by two
+renames) is atomic for ONE writer but has no concurrent-writer story:
+two maintainers publishing the same view race their renames and the
+loser's output silently vanishes. Table formats solve this with
+OPTIMISTIC concurrency: writers prepare immutable data files, then
+commit by atomically creating the next numbered log entry; exactly one
+creator wins, losers rebase and retry. This module is that protocol on
+a filesystem, and the package's only publish path:
 
     table_root/
       _commits/00000000.json   # manifest: version, file list, base, meta
@@ -60,9 +60,10 @@ ElasticSearchConsumer.java:45-55) stated once:
    ``_read(schema, v, sub)`` is the typed empty-or-parquet read of one
    leg, so -1 always means the EMPTY table.
 2. **Guards.** A stored lineage that differs from the maintainer's —
-   or no stored lineage at all — raises ``RuntimeError`` (a new query
+   or no stored lineage at all — raises ``LineageError`` (a new query
    on an old table would replay batch ids from 0 and be silently
-   skipped). A batch at or below the writer's watermark is a no-op; a
+   skipped); ``adopt_legacy()`` binds a pre-lineage table explicitly.
+   A batch at or below the writer's watermark is a no-op; a
    screening maintainer re-emits the newest batch's verdicts against
    the recorded ``screen_base`` and raises on an older replay, whose
    verdicts are unrecoverable.
@@ -102,6 +103,12 @@ KEEP_LAST = 3
 class CommitConflict(RuntimeError):
     """Another writer committed this version first — re-read, rebase,
     retry (or surface the loss; never ignore)."""
+
+
+class LineageError(RuntimeError, ValueError):
+    """The table belongs to another streaming lineage, or to none
+    (pre-lineage): applying this query's batches would let the replay
+    guard silently drop its early ones."""
 
 
 class VersionedTable:
@@ -615,14 +622,52 @@ class BatchMaintainer:
         )
         return None if done is None else done.version
 
+    def adopt_legacy(self) -> None:
+        """Bind a pre-lineage table to this maintainer's lineage — the
+        caller asserts the table WAS built by the same logical query
+        before the lineage upgrade. One commit that adds no files: it
+        stamps ``lineage`` and moves the default writer's ("")
+        watermark to ``writer_id``. No-op on an empty table or one that
+        already has a lineage."""
+        if self.lineage_id is None:
+            raise ValueError("adopt_legacy requires a lineage_id")
+
+        def adopted(base: int, _note) -> dict:
+            meta = dict(self._meta(base))
+            applied = _watermarks(meta)
+            meta.pop("batch_id", None)  # folded into applied above
+            if "" in applied:
+                applied[self.writer_id] = applied.pop("")
+            return {**meta, "applied": applied, "lineage": self.lineage_id}
+
+        commit_loop(
+            self.table,
+            lambda _base, _staged: None,
+            adopted,
+            settled=lambda base: (
+                base < 0 or bool(self._meta(base).get("lineage"))
+            ),
+        )
+
     # -- the sink --------------------------------------------------------
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         latest = self.table.latest_version()
         meta = self._meta(latest)
         stored = meta.get("lineage") or None
         if self.lineage_id is not None and latest >= 0:
+            if stored is None:
+                # a pre-lineage table is AMBIGUOUS: the same logical
+                # query upgraded, or a stale table from another one —
+                # stamping the lineage silently would hide the latter
+                raise LineageError(
+                    f"{type(self).__name__} table at {self.path} is "
+                    "legacy (pre-lineage, no lineage recorded); refusing "
+                    f"to bind lineage {self.lineage_id!r} to it. If it IS "
+                    "the same logical query, call adopt_legacy(); "
+                    "otherwise use a fresh directory"
+                )
             if stored != self.lineage_id:
-                raise RuntimeError(
+                raise LineageError(
                     f"{type(self).__name__} table at {self.path} belongs "
                     f"to lineage {stored!r}; refusing batches from "
                     f"{self.lineage_id!r} — replay guards would silently "

@@ -135,9 +135,7 @@ class CurationPipeline:
     ``chrome_host_expr`` (a SQL expression over the accepted doc
     columns yielding the registrable host) enables the chrome-census
     leg between the quarantine/contamination gates and the cluster
-    map. ``crash_after_census_commit`` / ``crash_after_cluster_commit``
-    inject a mid-epoch failure after that leg's publish for the given
-    batch id — test hooks for the replay contract."""
+    map."""
 
     def __init__(
         self,
@@ -152,9 +150,6 @@ class CurationPipeline:
         chrome_host_expr: str | None = None,
         robots: DataFrame | None = None,
         url_expr: str | None = None,
-        crash_after_url_commit: int | None = None,
-        crash_after_census_commit: int | None = None,
-        crash_after_cluster_commit: int | None = None,
     ) -> None:
         from kafka_streams_dexcom_spark.streaming.url_index import (
             UrlFirstSeenMaintainer,
@@ -195,7 +190,6 @@ class CurationPipeline:
             if url_expr is not None
             else None
         )
-        self.crash_after_url_commit = crash_after_url_commit
         self.cluster = ClusterMapMaintainer(
             spark,
             os.path.join(root, "cluster_map"),
@@ -218,7 +212,6 @@ class CurationPipeline:
             if chrome_host_expr is not None
             else None
         )
-        self.crash_after_census_commit = crash_after_census_commit
         self.index = IvfPostingsMaintainer(
             spark,
             os.path.join(root, "ann_postings"),
@@ -247,7 +240,6 @@ class CurationPipeline:
             else None
         )
         self.contamination_threshold = contamination_threshold
-        self.crash_after_cluster_commit = crash_after_cluster_commit
 
     def _ledger(self, name: str, df: DataFrame, batch_id: int) -> None:
         # idempotent per-epoch publish: a replayed batch overwrites its
@@ -313,11 +305,6 @@ class CurationPipeline:
             if self.url_index is not None:
                 docs = docs.localCheckpoint()
                 self.url_index(docs, batch_id)
-                if self.crash_after_url_commit == batch_id:
-                    raise RuntimeError(
-                        "injected crash after url-index commit, epoch "
-                        f"{batch_id}"
-                    )
                 # THIS epoch's screen verdicts (the ledger subdir the
                 # maintainer just published — re-published identically
                 # on replay, so the downstream filter is replay-stable)
@@ -374,18 +361,9 @@ class CurationPipeline:
                     "host", F.expr(self.chrome_host_expr)
                 )
                 self.census(hosted, batch_id)
-                if self.crash_after_census_commit == batch_id:
-                    raise RuntimeError(
-                        "injected crash after census commit, epoch "
-                        f"{batch_id}"
-                    )
             # leg 1: near-dup cluster map (commit-log publish, replay
             # no-op on its own manifest watermark)
             self.cluster(accepted, batch_id)
-            if self.crash_after_cluster_commit == batch_id:
-                raise RuntimeError(
-                    f"injected crash after cluster commit, epoch {batch_id}"
-                )
             # leg 2: ANN postings over the deterministic featurization
             featurized = text_feature_vector(accepted).select(
                 F.col("doc_id").alias("vec_id"), "embedding"

@@ -1,100 +1,50 @@
-"""Incremental materialized aggregate — a streaming-maintained upsert view.
+"""Incremental materialized aggregate — a streaming-maintained
+(key → n_events, sum_value) view published through the commit log.
 
-The pattern: each micro-batch computes its partial aggregate, merges it
-with the stored table (full outer on the group key, combine partials),
-and rewrites atomically. This is the KTable-with-aggregation shape the
-reference's stack offers via Kafka Streams state stores, implemented as
-a foreachBatch over a parquet-backed view.
+This is the KTable-with-aggregation shape the reference's stack offers
+via Kafka Streams state stores, as a foreachBatch fold: each
+micro-batch appends its partial aggregate (key, n_events, exact decimal
+sum) as one increment, and ``read()`` folds the increments. No base
+read and no rewrite per batch; ``compact()`` (every COMPACT_EVERY
+versions) replaces the increments with that same fold.
 
-Only *algebraic* aggregates merge correctly (count, sum, min, max —
+Only *algebraic* aggregates fold this way (count, sum, min, max —
 anything where combine(partial_a, partial_b) exists). avg is carried as
-(sum, count).
+(sum, count). The sum stays DECIMAL until ``read()`` casts it once, so
+the view equals a full recompute exactly — adding per-batch doubles
+would not (0.1 + 0.2).
 
-Replay safety: foreachBatch is at-least-once — after a crash between
-the view publish and the streaming checkpoint commit, Spark REPLAYS the
-last micro-batch. The view therefore records the last applied batch_id
-and skips any batch it has already merged; without that, a replayed
-batch double-counts every key it touched (exactly-once = at-least-once
-delivery + idempotent apply, the same recipe as the ES sink's
-deterministic doc ids).
-
-Scale: the merge join is keyed on the group key; the stored table is
-partition-pruned if partitioned by a stable key prefix. For very large
-views, swap the rewrite for a MERGE INTO on a table format (Delta/
-Iceberg) — identical logic, transactional commit.
+Publish, lineage guard, per-writer replay watermark, retry, vacuum and
+``timings`` are streaming/commitlog.BatchMaintainer's; a partial
+depends only on its batch, so a lost commit race re-links the staged
+increment. Counts are NOT idempotent, so the replay guard is
+correctness-critical here.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_streams_dexcom_spark.streaming.commitlog import BatchMaintainer
 
-def swap_directory(staging: str, live: str) -> None:
-    """Publish ``staging`` as ``live`` via two renames (never a
-    delete-and-rewrite of the live copy: the data always exists in full
-    somewhere on disk). A crash between the renames leaves ``live``
-    missing but ``live + ".old"`` intact — readers recover it (see
-    IncrementalCounts.read). The staging directory ceases to exist after
-    the swap, so nothing accumulates.
-
-    SINGLE-WRITER only: two concurrent publishers race the renames and
-    the loser's output silently vanishes. When the view can have
-    concurrent maintainers, publish through
-    streaming/commitlog.VersionedTable instead — same stage-then-publish
-    shape, but the commit is an atomic put-if-absent on a numbered
-    manifest (exactly one winner, losers rebase), the local stand-in
-    for a Delta/Iceberg transactional commit."""
-    old = live + ".old"
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    if os.path.exists(live):
-        os.rename(live, old)
-    os.rename(staging, live)
-    if os.path.exists(old):
-        shutil.rmtree(old)
+# one stored type for increments and compacted folds alike, so a
+# parquet scan across both never sees two decimal precisions
+_SUM_TYPE = "decimal(38,2)"
 
 
-def read_batch_marker(marker_path: str) -> tuple[int, str | None]:
-    """(last applied batch id, lineage id that applied it) from a
-    ``_last_batch_id`` marker file; (-1, None) when absent/corrupt. The
-    ONE parser for every streaming-maintained view's replay guard —
-    a format change here reaches all of them at once."""
-    try:
-        with open(marker_path) as f:
-            lines = f.read().splitlines()
-        return int(lines[0].strip()), (
-            lines[1].strip()
-            if len(lines) > 1 and lines[1].strip()
-            else None
-        )
-    except (OSError, ValueError, IndexError):
-        return -1, None
-
-
-def recover_directory(live: str) -> None:
-    """Crash recovery for swap_directory: if only the .old copy exists
-    (crash between the two renames), restore it."""
-    old = live + ".old"
-    if not os.path.exists(live) and os.path.exists(old):
-        os.rename(old, live)
-
-
-class IncrementalCounts:
+class IncrementalCounts(BatchMaintainer):
     """Maintains (key → n_events, sum_value) across micro-batches,
     idempotently under micro-batch replay.
 
-    ``lineage_id`` binds the view directory to ONE streaming-query
-    lineage (pass the checkpoint location, or the query id). The replay
-    guard skips batch_id <= the stored marker; without a lineage check,
-    pointing a NEW query (fresh checkpoint, batch ids restarting at 0)
-    at an EXISTING view directory would silently drop every early batch
-    and leave the view stale. With a lineage_id, that misuse fails
-    loudly instead. If omitted, the directory-is-bound-to-one-lineage
-    contract is the caller's responsibility (documented legacy mode)."""
+    ``lineage_id`` binds the view to ONE streaming-query lineage (pass
+    the checkpoint location, or the query id): a new query whose batch
+    ids restart at 0 fails loudly instead of being skipped by the
+    replay guard. If omitted, the directory-is-bound-to-one-lineage
+    contract is the caller's responsibility (legacy mode; see
+    ``adopt_legacy``)."""
+
+    AUTO_COMPACT = True
 
     def __init__(
         self,
@@ -103,151 +53,43 @@ class IncrementalCounts:
         key_col: str,
         lineage_id: str | None = None,
     ) -> None:
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path, lineage_id)
         self.key_col = key_col
-        self.lineage_id = lineage_id
 
-    def _batch_id_path(self) -> str:
-        return os.path.join(self.path, "_last_batch_id")
-
-    def _read_marker(self) -> tuple[int, str | None]:
-        """(last applied batch id, lineage id that applied it)."""
-        return read_batch_marker(self._batch_id_path())
-
-    def last_applied_batch_id(self) -> int:
-        return self._read_marker()[0]
-
-    def adopt_legacy(self) -> None:
-        """Explicitly bind this view's legacy (pre-lineage) marker to
-        this query's lineage_id — the caller asserts the view WAS built
-        by the same logical query before the lineage upgrade."""
-        if self.lineage_id is None:
-            raise ValueError("adopt_legacy requires a lineage_id")
-        last_id, last_lineage = self._read_marker()
-        if last_id < 0 or last_lineage is not None:
-            return  # nothing legacy to adopt
-        with open(self._batch_id_path(), "w") as f:
-            f.write(f"{last_id}\n{self.lineage_id}")
-
-    def _read_raw(self) -> DataFrame | None:
-        """The stored view, or None if the directory doesn't exist yet
-        (the Optional-signalling internal; public read() never returns
-        None)."""
-        recover_directory(self.path)
-        if not os.path.exists(self.path):
-            return None
-        return self.spark.read.parquet(self.path)
-
-    def read(self) -> DataFrame:
-        """The stored view as a DataFrame — ALWAYS a DataFrame, so
-        ``view.read().collect()`` on a fresh view yields an empty
-        result, never an AttributeError. A fresh view has no stored
-        schema to recover the key type from, so the empty frame
-        defaults the key to string; callers that merge against typed
-        batch data use read_or_empty(like) for an exact key type."""
-        current = self._read_raw()
-        if current is not None:
-            return current
-        return self.spark.createDataFrame(
-            [], f"{self.key_col} string, n_events long, sum_value double"
-        )
-
-    def read_or_empty(self, like: DataFrame) -> DataFrame:
-        """The stored view, or an empty frame whose key column takes its
-        TYPE from ``like`` (hardcoding e.g. long breaks the first merge
-        for a string-keyed view under ANSI casting)."""
-        current = self._read_raw()
-        if current is not None:
-            return current
-        key_type = dict(like.dtypes)[self.key_col]
-        return self.spark.createDataFrame(
-            [],
-            f"{self.key_col} {key_type}, n_events long, sum_value double",
-        )
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        last_id, last_lineage = self._read_marker()
-        if self.lineage_id is not None and last_id >= 0:
-            if last_lineage is None:
-                # a legacy (pre-lineage) marker is AMBIGUOUS: this could
-                # be the same logical query upgraded, or a stale view
-                # from a different one — and silently proceeding would
-                # both risk dropping batches 0..last_id AND stamp the
-                # new lineage onto the old view, hiding the corruption
-                # forever. Fail loudly; adoption must be explicit.
-                raise ValueError(
-                    f"view at {self.path!r} has a legacy marker with no "
-                    f"lineage (last batch {last_id}); refusing to bind "
-                    f"lineage {self.lineage_id!r} to it. If this IS the "
-                    "same logical query, adopt explicitly with "
-                    "adopt_legacy(); otherwise use a fresh directory."
-                )
-            if last_lineage != self.lineage_id:
-                raise ValueError(
-                    f"view at {self.path!r} was built by streaming lineage "
-                    f"{last_lineage!r}, but this query is {self.lineage_id!r}: "
-                    "a new query's batch ids restart at 0, so the replay guard "
-                    "would silently drop its early batches. Point the new query "
-                    "at a fresh view directory (or resume the old checkpoint)."
-                )
-        if batch_id <= last_id:
-            # at-least-once replay of an already-published batch: the
-            # merge is NOT idempotent (it adds partials), so skip.
-            return
-        partial = batch_df.groupBy(self.key_col).agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sum_value"),
-        )
-        current = self.read_or_empty(batch_df)
-        merged = (
-            current.alias("c")
-            .join(partial.alias("p"), self.key_col, "full_outer")
-            .select(
-                F.col(self.key_col),
-                (
-                    F.coalesce(F.col("c.n_events"), F.lit(0))
-                    + F.coalesce(F.col("p.n_events"), F.lit(0))
-                ).alias("n_events"),
-                (
-                    F.coalesce(F.col("c.sum_value"), F.lit(0.0))
-                    + F.coalesce(F.col("p.sum_value"), F.lit(0.0))
-                ).alias("sum_value"),
+    def _fold(self, version: int | None = None) -> DataFrame:
+        """The increments at ``version`` (latest default) summed per
+        key. A fresh view has no stored key type, so its empty frame
+        defaults the key to string."""
+        return (
+            self._read(
+                f"{self.key_col} string, n_events bigint, "
+                f"sum_value {_SUM_TYPE}",
+                version,
+            )
+            .groupBy(self.key_col)
+            .agg(
+                F.sum("n_events").alias("n_events"),
+                F.sum("sum_value").cast(_SUM_TYPE).alias("sum_value"),
             )
         )
-        # stage then swap-by-rename (parquet has no MERGE; a table format
-        # would make this a transactional MERGE INTO). The live view is
-        # never deleted-then-rewritten, so a crash cannot lose it. The
-        # batch-id marker is written INTO the staging dir before the
-        # swap, so view content and applied-batch marker publish
-        # atomically together.
-        tmp = self.path + ".staging"
-        merged.write.mode("overwrite").parquet(tmp)
-        with open(os.path.join(tmp, "_last_batch_id"), "w") as f:
-            f.write(str(batch_id))
-            if self.lineage_id is not None:
-                f.write("\n" + self.lineage_id)
-        swap_directory(tmp, self.path)
 
+    def read(self) -> DataFrame:
+        """The view: key, n_events bigint, sum_value double — ALWAYS a
+        DataFrame, empty on a fresh view."""
+        return self._fold().withColumn(
+            "sum_value", F.col("sum_value").cast("double")
+        )
 
-def compact_small_files(
-    spark: SparkSession, path: str, target_file_mb: int = 128
-) -> int:
-    """Data-lake hygiene: rewrite a directory of many small parquet files
-    into ~target-sized files (the small-files problem kills scan
-    parallelism economics at scale — per-file open cost dominates).
-    Returns the new file count."""
-    df = spark.read.parquet(path)
-    total_bytes = sum(
-        os.path.getsize(os.path.join(dp, f))
-        for dp, _, fs in os.walk(path)
-        for f in fs
-        if f.endswith(".parquet")
-    )
-    n_files = max(1, round(total_bytes / (target_file_mb * 1024 * 1024)))
-    tmp = path + ".compacting"
-    df.coalesce(n_files).write.mode("overwrite").parquet(tmp)
-    swap_directory(tmp, path)
-    return n_files
+    def _stage(self, batch_df: DataFrame, base: int) -> tuple:
+        return (
+            batch_df.groupBy(self.key_col).agg(
+                F.count(F.lit(1)).alias("n_events"),
+                F.sum(F.col("value").cast("decimal(18,2)"))
+                .cast(_SUM_TYPE)
+                .alias("sum_value"),
+            ),
+            {},
+        )
+
+    def _compacted(self, base: int) -> DataFrame:
+        return self._fold(base)

@@ -19,7 +19,7 @@ flags ride the same scan as the payload columns via gopher_rules'
 carry_cols, so the gate adds zero joins and zero extra source parses.
 All three writers receive (DataFrame, batch_id) and must be idempotent
 on batch_id — the foreachBatch at-least-once contract documented in
-streaming/incremental.py.
+streaming/commitlog.py.
 
 Reference anchor: this is the streaming form of the reference's
 filter-then-route topology (StreamsFilterEgvs.java:27-38 filters a

@@ -23,7 +23,6 @@ from typing import Any
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
 ALERT_SCHEMA = "user_id bigint, ts_us bigint, value double"
 STATE_SCHEMA = "last_alert_us bigint"
@@ -112,90 +111,3 @@ def debounced_alerts_batch_reference(
             last[user_id] = ts_us
     return out
 
-
-class DebounceProcessor(StatefulProcessor):
-    """`transformWithStateInPandas` flavor of the debounce operator — the
-    Spark 4 successor to applyInPandasWithState, and the closest
-    structural match to the reference's ValueTransformer lifecycle
-    (EgvTransformer.java:20-90): ``init`` receives a handle to named
-    state (the analog of init(ProcessorContext) + state-store lookup),
-    ``handleInputRows`` is the per-key transform, ``close`` the teardown.
-
-    State here is a typed named ValueState ("last_alert") in the engine
-    store — individually evolvable and TTL-capable, which is the API's
-    advance over the single untyped state tuple of the older operator.
-    """
-
-    def __init__(
-        self,
-        threshold: float,
-        debounce_s: int,
-        state_ttl_s: int | None = None,
-    ):
-        self._threshold = threshold
-        self._debounce_us = debounce_s * 1_000_000
-        self._state_ttl_s = state_ttl_s
-
-    def init(self, handle) -> None:  # StatefulProcessorHandle
-        # Optional TTL (production knob, see debounced_alerts): expired
-        # ≡ last=None, so any TTL ≥ the debounce window is
-        # semantics-preserving while the store stays bounded by ACTIVE
-        # users, not users-ever-seen. Requires timeMode=ProcessingTime.
-        if self._state_ttl_s is not None:
-            self._last = handle.getValueState(
-                "last_alert",
-                STATE_SCHEMA,
-                ttlDurationMs=self._state_ttl_s * 1000,
-            )
-        else:
-            self._last = handle.getValueState("last_alert", STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timer_values):
-        got = self._last.get()
-        last = got[0] if got is not None else None
-        out: list[tuple[int, int, float]] = []
-        for pdf in rows:
-            for ts_us, value in (
-                pdf[["ts_us", "value"]]
-                .sort_values("ts_us")
-                .itertuples(index=False)
-            ):
-                if value >= self._threshold and (
-                    last is None or ts_us - last >= self._debounce_us
-                ):
-                    out.append((key[0], int(ts_us), float(value)))
-                    last = int(ts_us)
-        if last is not None:
-            self._last.update((last,))
-        yield pd.DataFrame(out, columns=["user_id", "ts_us", "value"])
-
-    def handleInitialState(self, key, initial_state, timer_values) -> None:
-        pass
-
-    def handleExpiredTimer(self, key, timer_values, expired_timer_info):
-        return iter(())
-
-    def close(self) -> None:
-        pass
-
-
-def debounced_alerts_tws(
-    events: DataFrame,
-    threshold: float = 200.0,
-    debounce_s: int = 600,
-    state_ttl_s: int | None = None,
-) -> DataFrame:
-    """Same debounce semantics as :func:`debounced_alerts`, on the
-    transformWithStateInPandas API (batch≡stream equivalence and
-    cross-micro-batch state asserted in tests/test_stateful.py).
-    ``state_ttl_s`` as in debounced_alerts — the TTL needs a clock, so
-    setting it switches timeMode to ProcessingTime."""
-    events = events.filter(events.value >= threshold)
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=DebounceProcessor(
-            threshold, debounce_s, state_ttl_s
-        ),
-        outputStructType=ALERT_SCHEMA,
-        outputMode="append",
-        timeMode="ProcessingTime" if state_ttl_s is not None else "None",
-    )

@@ -89,6 +89,22 @@ def _run_stream(spark, drop, ckpt, pipe):
 HOST_EXPR = "concat('h', CAST(doc_id % 3 AS STRING), '.example')"
 
 
+def _crash_after(pipe, leg, epoch):
+    """Make ``pipe.<leg>`` fail mid-epoch ``epoch``: the real
+    maintainer publishes, then the epoch dies before the next leg."""
+    real = getattr(pipe, leg)
+
+    def crashing(df, batch_id):
+        real(df, batch_id)
+        if batch_id == epoch:
+            raise RuntimeError(
+                f"injected crash after {leg} commit, epoch {batch_id}"
+            )
+
+    setattr(pipe, leg, crashing)
+    return pipe
+
+
 def test_end_to_end_crash_restart_bit_equal(spark, tmp_path):
     drop = _drop_zone(spark, tmp_path)
     cents = _centroids(spark)
@@ -97,14 +113,17 @@ def test_end_to_end_crash_restart_bit_equal(spark, tmp_path):
 
     # run 1 crashes mid-epoch 1: AFTER the chrome-census commit,
     # BEFORE the cluster-map commit
-    crash1 = CurationPipeline(
-        spark,
-        root,
-        cents,
-        lineage_id=LINEAGE,
-        threshold=THRESHOLD,
-        chrome_host_expr=HOST_EXPR,
-        crash_after_census_commit=1,
+    crash1 = _crash_after(
+        CurationPipeline(
+            spark,
+            root,
+            cents,
+            lineage_id=LINEAGE,
+            threshold=THRESHOLD,
+            chrome_host_expr=HOST_EXPR,
+        ),
+        "census",
+        1,
     )
     with pytest.raises(Exception, match="injected crash"):
         _run_stream(spark, drop, ckpt, crash1)
@@ -113,14 +132,17 @@ def test_end_to_end_crash_restart_bit_equal(spark, tmp_path):
     # re-emits verdicts; cluster + postings apply), then crashes
     # mid-epoch 2 AFTER the cluster-map commit, BEFORE the postings
     # commit — both inter-leg gaps exercised across one lineage
-    crash2 = CurationPipeline(
-        spark,
-        root,
-        cents,
-        lineage_id=LINEAGE,
-        threshold=THRESHOLD,
-        chrome_host_expr=HOST_EXPR,
-        crash_after_cluster_commit=2,
+    crash2 = _crash_after(
+        CurationPipeline(
+            spark,
+            root,
+            cents,
+            lineage_id=LINEAGE,
+            threshold=THRESHOLD,
+            chrome_host_expr=HOST_EXPR,
+        ),
+        "cluster",
+        2,
     )
     with pytest.raises(Exception, match="injected crash"):
         _run_stream(spark, drop, ckpt, crash2)
@@ -421,8 +443,8 @@ def test_crawl_front_door_legs_crash_replay(spark, tmp_path):
         robots=robots_df,
         url_expr=url_expr,
     )
-    crash = CurationPipeline(
-        spark, root, cents, crash_after_url_commit=1, **kwargs
+    crash = _crash_after(
+        CurationPipeline(spark, root, cents, **kwargs), "url_index", 1
     )
     with pytest.raises(Exception, match="injected crash"):
         _run_stream(spark, str(drop), ckpt, crash)

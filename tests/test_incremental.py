@@ -3,15 +3,21 @@ reads."""
 
 from __future__ import annotations
 
-import glob
+import os
 import tempfile
 
 from pyspark.sql import functions as F
 
 from kafka_streams_dexcom_spark.streaming.incremental import (
     IncrementalCounts,
-    compact_small_files,
 )
+
+
+def _rows(view) -> dict:
+    return {
+        r[view.key_col]: (r.n_events, r.sum_value)
+        for r in view.read().collect()
+    }
 
 
 def test_incremental_counts_across_batches(spark):
@@ -37,7 +43,7 @@ def test_incremental_equals_full_recompute(spark, sf_dir):
 
     e = load_table(spark, sf_dir, "events").select("user_id", "value")
     full = {
-        r.user_id: (r.n_events, round(r.sum_value, 2))
+        r.user_id: (r.n_events, r.sum_value)
         for r in e.groupBy("user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -56,24 +62,44 @@ def test_incremental_equals_full_recompute(spark, sf_dir):
                 spark.createDataFrame(rows[start : start + third], e.schema),
                 i,
             )
-        inc = {
-            r.user_id: (r.n_events, round(r.sum_value, 2))
-            for r in view.read().collect()
-        }
+        inc = _rows(view)
     assert inc == full
 
 
-def test_compact_small_files(spark):
-    with tempfile.TemporaryDirectory() as d:
-        path = f"{d}/frag"
-        df = spark.range(1000).withColumn("v", F.col("id") * 2)
-        df.repartition(24).write.parquet(path)  # 24 tiny files
-        assert len(glob.glob(f"{path}/*.parquet")) == 24
-        compact_small_files(spark, path, target_file_mb=128)
-        assert len(glob.glob(f"{path}/*.parquet")) == 1  # tiny data → 1 file
-        back = spark.read.parquet(path)
-        assert back.count() == 1000
-        assert back.agg(F.sum("v")).collect()[0][0] == 999 * 1000
+def test_incremental_sum_is_exact_across_batches(spark, tmp_path):
+    """The sum stays decimal across batches and is cast to double once
+    at read — 0.1 + 0.2 reads as the full recompute's 0.3, not
+    0.30000000000000004."""
+    view = IncrementalCounts(spark, f"{tmp_path}/view", "user_id")
+    for i, v in enumerate((0.1, 0.2)):
+        view(spark.createDataFrame([(1, v)], "user_id long, value double"), i)
+    assert _rows(view) == {1: (2, 0.3)}
+    assert view.read().dtypes == [
+        ("user_id", "bigint"),
+        ("n_events", "bigint"),
+        ("sum_value", "double"),
+    ]
+
+
+def test_compact_small_files(spark, tmp_path):
+    """compact() folds the per-batch increments into fewer files; the
+    view reads the same and the replay watermark carries over."""
+    view = IncrementalCounts(spark, f"{tmp_path}/view", "user_id")
+    batches = [
+        spark.createDataFrame(
+            [(i % 3, 1.5 * i), (7, 0.25)], "user_id long, value double"
+        )
+        for i in range(4)
+    ]
+    for i, b in enumerate(batches):
+        view(b, i)
+    before = _rows(view)
+    n_files = len(view.table.files())
+    assert view.compact() == len(batches)
+    assert len(view.table.files()) < n_files
+    assert _rows(view) == before
+    view(batches[-1], len(batches) - 1)  # replay: still a no-op
+    assert _rows(view) == before
 
 
 def test_schema_evolution_merge_read(spark):
@@ -93,29 +119,85 @@ def test_schema_evolution_merge_read(spark):
         assert rows == {1: ("a", None), 2: ("b", 9.5)}
 
 
-def test_swap_directory_and_crash_recovery(tmp_path):
-    """swap publishes staging by rename (live never delete-rewritten);
-    recover_directory restores the .old copy if a crash stranded it."""
-    import os
+class _RacedCounts(IncrementalCounts):
+    """A writer whose first staging loses to ``rival_commit()``, run
+    mid-stage on the same base — the two-writer race, made
+    deterministic."""
 
-    from kafka_streams_dexcom_spark.streaming.incremental import (
-        recover_directory,
-        swap_directory,
-    )
+    def __init__(self, spark, path, writer_id, rival_commit):
+        super().__init__(spark, path, "user_id", lineage_id="L")
+        self.writer_id = writer_id
+        self.rival_commit = rival_commit
+        self.stagings = 0
 
-    live, staging = str(tmp_path / "view"), str(tmp_path / "view.staging")
-    os.makedirs(live), os.makedirs(staging)
-    open(os.path.join(live, "v1"), "w").write("old")
-    open(os.path.join(staging, "v2"), "w").write("new")
-    swap_directory(staging, live)
-    assert os.listdir(live) == ["v2"]
-    assert not os.path.exists(staging)
-    assert not os.path.exists(live + ".old")
+    def _stage(self, batch_df, base):
+        self.stagings += 1
+        if self.rival_commit is not None:
+            self.rival_commit()
+            self.rival_commit = None
+        return super()._stage(batch_df, base)
 
-    # simulate a crash between the two renames: live missing, .old present
-    os.rename(live, live + ".old")
-    recover_directory(live)
-    assert os.listdir(live) == ["v2"]
+
+def test_two_writer_race_equals_sequential_fold(spark, tmp_path):
+    """Two writers of one lineage race a commit: the loser re-links its
+    staged increment onto the winner's version, and the view equals
+    the sequential fold of every batch — nothing vanishes."""
+    schema = "user_id long, value double"
+    a = [
+        spark.createDataFrame([(1, 0.1), (2, 5.0)], schema),
+        spark.createDataFrame([(1, 0.2)], schema),
+    ]
+    b = [
+        spark.createDataFrame([(1, 0.7), (3, 1.0)], schema),
+        spark.createDataFrame([(2, 2.5)], schema),
+    ]
+    path = f"{tmp_path}/view"
+    writer_b = IncrementalCounts(spark, path, "user_id", lineage_id="L")
+    writer_b.writer_id = "b"
+    writer_a = _RacedCounts(spark, path, "a", lambda: writer_b(b[0], 0))
+    writer_a(a[0], 0)  # loses to b's batch 0, then commits on top
+    writer_b(b[1], 1)
+    writer_a(a[1], 1)
+    assert writer_a.stagings == 2  # one per batch: the race re-linked
+    assert writer_a._applied(writer_a.table.latest_version()) == {
+        "a": 1,
+        "b": 1,
+    }
+
+    sequential = IncrementalCounts(spark, f"{tmp_path}/seq", "user_id")
+    for i, df in enumerate([a[0], b[0], b[1], a[1]]):
+        sequential(df, i)
+    assert _rows(writer_a) == _rows(sequential)
+    assert _rows(writer_a)[1] == (3, 1.0)
+
+
+def test_crash_between_stage_and_commit_replays_once(spark, tmp_path):
+    """A crash after the increment is staged but before its manifest
+    commits leaves read() unchanged; the replayed batch applies once."""
+    import pytest
+
+    path = f"{tmp_path}/view"
+    schema = "user_id long, value double"
+    b0 = spark.createDataFrame([(1, 10.0)], schema)
+    b1 = spark.createDataFrame([(1, 1.0), (2, 2.0)], schema)
+    view = IncrementalCounts(spark, path, "user_id", lineage_id="ck")
+    view(b0, 0)
+    before = _rows(view)
+
+    def crash(staged, *args, **kwargs):
+        assert any(
+            f.endswith(".parquet") for _, _, fs in os.walk(staged) for f in fs
+        )
+        raise RuntimeError("injected crash before commit")
+
+    view.table._commit = crash
+    with pytest.raises(RuntimeError, match="injected crash"):
+        view(b1, 1)
+    restarted = IncrementalCounts(spark, path, "user_id", lineage_id="ck")
+    assert _rows(restarted) == before
+    restarted(b1, 1)  # the replay after restart
+    restarted(b1, 1)  # and a second delivery: a no-op
+    assert _rows(restarted) == {1: (2, 11.0), 2: (1, 2.0)}
 
 
 def test_incremental_replay_is_idempotent(spark):

@@ -559,3 +559,23 @@ def test_sales_rollup_expands_base_not_fact(spark, sf_dir):
     # base partial+final, rollup partial+final (each aggregate appears
     # in the tree header and its detail block)
     assert plan.count("HashAggregate") >= 8, plan
+
+
+def test_topk_rank_windows_prune_below_the_window(spark, sf_dir):
+    """Spark 4 prunes both top-k rank windows before they sort every
+    row, and the two take different nodes. sim_search_lsh's per-query
+    window (k <= spark.sql.optimizer.windowGroupLimitThreshold) carries
+    WindowGroupLimit. zipf_slope's unpartitioned k = 1000 window, exactly
+    at that threshold, becomes a TakeOrderedAndProject and no
+    WindowGroupLimit. Lowering the threshold below either k removes the
+    pruning node."""
+    from kafka_streams_dexcom_spark.queries.similarity import (
+        q_sim_search_lsh,
+    )
+    from kafka_streams_dexcom_spark.queries.text import q_zipf_slope
+
+    lsh = explain_str(q_sim_search_lsh(spark, sf_dir))
+    assert "WindowGroupLimit" in lsh, lsh
+    zipf = explain_str(q_zipf_slope(spark, sf_dir))
+    assert "TakeOrderedAndProject" in zipf, zipf
+    assert "WindowGroupLimit" not in zipf, zipf

@@ -100,54 +100,6 @@ def test_checkpoint_recovery_no_reprocessing(spark):
         assert out.select("user_id", "ts_us").distinct().count() == 5
 
 
-def test_tws_debounce_state_spans_micro_batches(spark):
-    """transformWithStateInPandas twin: same semantics, same cross-batch
-    state carry, on the Spark 4 StatefulProcessor API.
-
-    Skips where the TWS driver worker cannot start (it is a separate
-    Python server process the engine spawns; sandboxed CI environments
-    can block it — StreamsQueryException "driver worker exited"). The
-    operator itself is exercised for plan construction either way."""
-    import pytest
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
-    from kafka_streams_dexcom_spark.streaming.stateful import (
-        debounced_alerts_tws,
-    )
-
-    expected = sorted(debounced_alerts_batch_reference(ROWS))
-    with tempfile.TemporaryDirectory() as d:
-        chunk = 1
-        for i in range(0, len(ROWS), chunk):
-            spark.createDataFrame(ROWS[i : i + chunk], SCHEMA).coalesce(
-                1
-            ).write.mode("append").parquet(f"{d}/in")
-        stream = (
-            spark.readStream.schema(SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{d}/in")
-        )
-        collected = []
-        q = (
-            debounced_alerts_tws(stream, threshold=200.0, debounce_s=600)
-            .writeStream.foreachBatch(
-                lambda df, bid: collected.extend(df.collect())
-            )
-            .outputMode("append")
-            .option("checkpointLocation", f"{d}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        except StreamingQueryException as exc:
-            if "driver worker exited" in str(exc):
-                pytest.skip("TWS driver worker unavailable in this sandbox")
-            raise
-    got = sorted((r.user_id, r.ts_us, r.value) for r in collected)
-    assert got == expected
-
-
 def test_debounce_on_rocksdb_state_store(spark):
     """The RocksDB state store provider (SCALE.md's state ≫ heap path)
     must produce identical debounce output. providerClass is read at
