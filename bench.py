@@ -1,8 +1,10 @@
 #!/usr/bin/env python
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints TWO
+JSON lines: the full record {"metric": ..., "value": total_sec, "unit":
+"sec", "queries": {name: sec}, "sf": ..., load stamps}, then a compact
+tail-budgeted copy of it LAST, which is the line the driver parses (see
+emit).
 
 Each query is materialized through the `noop` sink so the full plan
 executes (a bare count() can satisfy itself from parquet metadata and
@@ -20,11 +22,12 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from kafka_streams_dexcom_spark.queries import all_queries  # noqa: E402
 from kafka_streams_dexcom_spark.session import get_spark  # noqa: E402
+from perfbench.common import cpu_steal_s, load1, nproc  # noqa: E402
 
 # Representative, scale-sensitive subset: every operator family, weighted
 # toward the shuffly/joiny ones that dominate at 100 TB.
 HEADLINE = [
-    "interval_join_categorize",  # broadcast NLJ + window + CASE
+    "interval_join_categorize",  # scan-side CASE range lookup, no join
     "interval_join_bucketized",  # equi-join scale path of the flagship
     "filter_high",               # pushdown filter scan
     "latest_per_key",            # shuffle + window dedup
@@ -189,24 +192,47 @@ FULL_OUT = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                         "BENCH_FULL_latest.json")
 
 
-def load1() -> float | None:
-    """1-minute load average — recorded at run start and end so a reader
-    can tell co-tenant contamination from a real regression (the sandbox
-    shares CPUs; round-12 measured 167.8 vs 239.4 s for IDENTICAL trees
-    under load 0.4 vs 14+). Additions-only: the JSON contract's existing
-    keys are untouched."""
-    try:
-        with open("/proc/loadavg") as f:
-            return float(f.read().split()[0])
-    except (OSError, ValueError, IndexError):
-        return None
+def start_stamp():
+    """Start a record's load stamp before the JVM launches; the returned
+    function gives ``load1_start`` (pure co-tenant signal, the < 1.0
+    gate), ``load1_end`` (self-induced by local[N]), ``cpus`` and
+    ``cpu_steal_share`` (hypervisor steal over wall x usable cores, as
+    perfbench computes it). Round 12 measured 167.8 vs 239.4 s for
+    IDENTICAL trees under load 0.4 vs 14+: the machine shares CPUs."""
+    load1_start, steal_start, t0 = load1(), cpu_steal_s(), time.time()
+
+    def stamp() -> dict:
+        wall = time.time() - t0
+        steal = cpu_steal_s() - steal_start
+        return {
+            "load1_start": load1_start,
+            "load1_end": load1(),
+            "cpus": os.cpu_count(),
+            "cpu_steal_share": round(steal / (wall * nproc()), 4),
+        }
+
+    return stamp
+
+
+def time_noop(build, reps: int) -> float:
+    """Min-of-``reps`` seconds to ``build()`` a DataFrame (or a tuple of
+    them) and run it through the ``noop`` sink; construction is timed
+    too, since eager lineage cuts run before a query returns."""
+    best = float("inf")
+    for _ in range(reps):
+        t0 = time.time()
+        out = build()
+        for df in out if isinstance(out, tuple) else (out,):
+            df.write.format("noop").mode("overwrite").save()
+        best = min(best, time.time() - t0)
+    return round(best, 3)
 
 
 def emit(result: dict, per_key: str) -> None:
     """Write the full result to FULL_OUT, print it for humans, then
     print the compact tail-budgeted line LAST (the driver parses that
     one). Only the --full suite owns BENCH_FULL_latest.json — a
-    headline or artifacts run must not clobber the 164-query record
+    headline or artifacts run must not clobber the every-query record
     BASELINE.md points at (it did once; the file held a 107-query
     headline map under the full-record name)."""
     if result.get("metric") == "all_queries_total":
@@ -231,7 +257,7 @@ def emit(result: dict, per_key: str) -> None:
     print(json.dumps(compact, separators=(",", ":")))
 
 
-def bench_artifacts(spark, sf_dir: str, sf, load1_start=None) -> None:
+def bench_artifacts(spark, sf_dir: str, sf, stamp) -> None:
     """Cold-build cost of the shared session artifacts (cluster map,
     ngram pair set, k-means cells, PQ codebooks). The per-query bench
     rows show the AMORTIZED cost (a cached parquet read); these rows
@@ -258,13 +284,6 @@ def bench_artifacts(spark, sf_dir: str, sf, load1_start=None) -> None:
         wordpiece_artifacts,
     )
 
-    def run(name, thunk):
-        t0 = time.time()
-        out = thunk()
-        for df in out if isinstance(out, tuple) else (out,):
-            df.write.format("noop").mode("overwrite").save()
-        return round(time.time() - t0, 3)
-
     builds = {
         "url_map": lambda: url_map(spark, sf_dir),
         "ngram_pairs": lambda: ngram_pairs_map(spark, sf_dir),
@@ -280,7 +299,7 @@ def bench_artifacts(spark, sf_dir: str, sf, load1_start=None) -> None:
         # of the stats row over the already-built index
         "bm25_stats": lambda: bm25_stats_map(spark, sf_dir),
     }
-    timings = {name: run(name, thunk) for name, thunk in builds.items()}
+    timings = {name: time_noop(build, 1) for name, build in builds.items()}
     emit(
         {
             "metric": "artifact_cold_builds_total",
@@ -288,9 +307,7 @@ def bench_artifacts(spark, sf_dir: str, sf, load1_start=None) -> None:
             "unit": "sec",
             "artifacts": timings,
             "sf": sf,
-            "load1_start": load1_start,
-            "load1_end": load1(),
-            "cpus": os.cpu_count(),
+            **stamp(),
         },
         "artifacts",
     )
@@ -303,7 +320,7 @@ def main() -> None:
     # its series comparable across rounds.
     full = "--full" in sys.argv[1:]
     artifacts = "--artifacts" in sys.argv[1:]
-    load1_start = load1()  # before Spark starts: pure co-tenant signal
+    stamp = start_stamp()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     try:
         sf = float(
@@ -314,7 +331,7 @@ def main() -> None:
     spark = get_spark(app_name="bench")
     spark.sparkContext.setLogLevel("ERROR")
     if artifacts:
-        bench_artifacts(spark, sf_dir, sf, load1_start)
+        bench_artifacts(spark, sf_dir, sf, stamp)
         spark.stop()
         return
     qs = all_queries()
@@ -327,9 +344,7 @@ def main() -> None:
     # (triangle_count 66.5s first vs 29.6s warm at sf1, ROUND9_NOTES
     # §1.7) that contaminates every solo re-time.
     for wq in ("filter_high", "dedup_embedding"):
-        qs[wq](spark, "/root/testdata/sf0.001").write.format(
-            "noop"
-        ).mode("overwrite").save()
+        time_noop(lambda: qs[wq](spark, "/root/testdata/sf0.001"), 1)
 
     # min of N reps: first runs pay one-time janino-codegen compilation and
     # Python-worker startup, which amortize to zero at scale; min-of-reps
@@ -345,16 +360,10 @@ def main() -> None:
             unknown = set(names) - set(qs)
             if unknown:
                 raise SystemExit(f"unknown queries: {sorted(unknown)}")
-    timings: dict[str, float] = {}
-    for name in names:
-        best = float("inf")
-        for _ in range(reps):
-            t0 = time.time()
-            qs[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            best = min(best, time.time() - t0)
-        timings[name] = round(best, 3)
+    timings = {
+        name: time_noop(lambda: qs[name](spark, sf_dir), reps)
+        for name in names
+    }
 
     total = round(sum(timings.values()), 3)
     result = {
@@ -363,14 +372,7 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": sf,
-        # Contamination legibility (round 13): the sandbox shares CPUs
-        # with co-tenants, and a run started under external load measures
-        # the co-tenant, not the tree. load1_start is sampled before the
-        # JVM launches (pure external signal); load1_end after the last
-        # query (self-induced by local[N] — only the start value gates).
-        "load1_start": load1_start,
-        "load1_end": load1(),
-        "cpus": os.cpu_count(),
+        **stamp(),
     }
     if not full and names is HEADLINE:
         # Round-current counter-evidence for the two stale driver reds

@@ -1,18 +1,22 @@
 #!/usr/bin/env python
 """Micro-batch throughput bench for the reference's streaming topologies
-(P3 filter, P4 fan-out, P5 KTable-lookup join) under Structured
-Streaming. Input: the events table at $SPARK_GRAFT_SF_DIR rendered into
-the reference's egv stream shapes, delivered as NUM_CHUNKS parquet files
-with maxFilesPerTrigger=1 (one micro-batch per file). Outputs are
-counted per batch (not collected) so the measurement is the engine's
-transform throughput, not driver serialization.
+(P3 filter, P4 fan-out, P5 KTable-lookup join) and the streaming
+maintainers around them, under Structured Streaming. Input: tables at
+$SPARK_GRAFT_SF_DIR rendered into each topology's stream shape,
+delivered as NUM_CHUNKS files with maxFilesPerTrigger=1 (one
+micro-batch per file). Outputs are counted per batch (not collected)
+so the measurement is the engine's transform throughput, not driver
+serialization.
 
-Prints ONE JSON line:
-{"metric": "streaming_rows_per_sec", "topologies": {...}, "sf": ...}
+Each topology is one TOPOLOGIES entry ``(name, build, drive)``; one
+loop runs them all through the one timed ``drain``. Prints ONE JSON
+line: {"metric": "streaming_rows_per_sec", "topologies": {...},
+"sf": ..., plus bench.start_stamp's load stamps}.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -22,16 +26,44 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from pyspark.sql import DataFrame, SparkSession  # noqa: E402
+from pyspark.sql import DataFrame  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
+from pyspark.sql import types as T  # noqa: E402
 
+from bench import start_stamp  # noqa: E402
+from kafka_streams_dexcom_spark.functions import url as ux  # noqa: E402
+from kafka_streams_dexcom_spark.operators import dedup, dq  # noqa: E402
+from kafka_streams_dexcom_spark.operators import similarity  # noqa: E402
 from kafka_streams_dexcom_spark.queries.core import ranges_df  # noqa: E402
+from kafka_streams_dexcom_spark.queries.dedup import SEMDEDUP_TAU  # noqa: E402
+from kafka_streams_dexcom_spark.schemas import GOLDEN_RANGES  # noqa: E402
 from kafka_streams_dexcom_spark.session import get_spark  # noqa: E402
+from kafka_streams_dexcom_spark.sources import corpus  # noqa: E402
 from kafka_streams_dexcom_spark.sources.files import load_table  # noqa: E402
-from kafka_streams_dexcom_spark.streaming import jobs  # noqa: E402
+from kafka_streams_dexcom_spark.streaming import (  # noqa: E402
+    ann_ingest,
+    bloom_ingest,
+    cluster_map_stream,
+    dim_state,
+    jobs,
+    line_census,
+    phash_index,
+    quality_gate,
+    semdedup_stream,
+)
 from kafka_streams_dexcom_spark.streaming.sinks import fan_out  # noqa: E402
 
 NUM_CHUNKS = 10
+N_BUCKETS = 8  # state buckets of the P5 stateful-dimension variant
+BURST = 200  # invalid JSON lines planted in the quarantine-alarm input
+ROUTES = ("accept", "reject", "quarantine")  # curation-gate sinks, in order
+GATE_SCHEMA = (
+    T.StructType()
+    .add("doc_id", "long")
+    .add("text", "string")
+    .add("lang", "string")
+    .add("source", "string")
+)
 
 
 def _write_chunks(df: DataFrame, path: str, chunks: int) -> int:
@@ -41,764 +73,496 @@ def _write_chunks(df: DataFrame, path: str, chunks: int) -> int:
     hash-partitioning `chunks` distinct key values collides (murmur3 on
     0..9 mod 10 hits only ~7 partitions — measured), which would write
     fewer, skewed files and distort the per-micro-batch throughput."""
-    (
-        df.repartition(chunks)
-        .write.mode("overwrite")
-        .parquet(path)
-    )
+    df.repartition(chunks).write.mode("overwrite").parquet(path)
     # count AFTER the write, from parquet footer metadata — a pre-write
     # df.count() would evaluate the whole transform twice
-    n = df.sparkSession.read.parquet(path).count()
-    return n
+    return df.sparkSession.read.parquet(path).count()
 
 
-def _stream(spark: SparkSession, in_dir: str, schema):
-    """One definition of the micro-batch source (schema +
-    maxFilesPerTrigger=1 + parquet) shared by all three topologies —
-    an option change must not skew the P3/P4/P5 comparison."""
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
+# -- the one drain, its sinks and summaries ---------------------------
+
+
+def drain(writer) -> float:
+    """Start a foreachBatch writer (checkpoint set) with availableNow and
+    return its wall seconds to termination: the one timed drain."""
+    t0 = time.time()
+    writer.trigger(availableNow=True).start().awaitTermination()
+    return time.time() - t0
+
+
+def foreach_batch(stream: DataFrame, sink, ckpt: str):
+    """The writer ``drain`` starts (streaming.sinks.fan_out returns the
+    same shape): ``sink`` on every micro-batch, checkpointed at ckpt."""
+    return stream.writeStream.foreachBatch(sink).option(
+        "checkpointLocation", ckpt
     )
 
 
-def _run_counted(
-    spark: SparkSession,
-    in_dir: str,
-    schema,
-    transform,
-    ckpt: str,
-) -> int:
-    """Stream in_dir through transform, counting output rows per batch."""
-    stream = _stream(spark, in_dir, schema)
-    out_rows = [0]
+def counting_sink(rows: dict, name: str, per_batch=None):
+    """foreachBatch sink that only counts: adds the rows of
+    ``per_batch(batch, batch_id)`` (default: the batch) to
+    ``rows[batch_id][name]``."""
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        out_rows[0] += batch_df.count()
+    def sink(df: DataFrame, batch_id: int) -> None:
+        out = per_batch(df, batch_id) if per_batch else df
+        epoch = rows.setdefault(batch_id, {})
+        epoch[name] = epoch.get(name, 0) + out.count()
 
-    q = (
-        transform(stream)
-        .writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return out_rows[0]
+    return sink
 
 
-def main() -> None:
-    try:  # pre-JVM load sample: pure co-tenant signal (round 13)
-        with open("/proc/loadavg") as f:
-            load1_start = float(f.read().split()[0])
-    except (OSError, ValueError, IndexError):
-        load1_start = None
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(
-        app_name="bench_streaming", master=f"local[{cpus}]"
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    e = load_table(spark, sf_dir, "events")
-    work = tempfile.mkdtemp(prefix="bench_streaming_")
-    results: dict[str, float] = {}
-    try:
-        # P3/P4 shape: (key, raw JSON value) — the egv topic wire format
-        json_in = f"{work}/json_in"
-        n_json = _write_chunks(
-            e.select(
-                F.col("user_id").cast("string").alias("key"),
-                # reference egvs are integral mg/dL values; the JSON
-                # filter casts with ANSI semantics, so render ints
-                F.to_json(
-                    F.struct(F.col("value").cast("int").alias("value"))
-                ).alias("value"),
-            ),
-            json_in,
-            NUM_CHUNKS,
+def timed(fn, secs: list):
+    """Wrap a foreachBatch function to append each batch's seconds."""
+
+    def sink(df: DataFrame, batch_id: int) -> None:
+        b0 = time.time()
+        fn(df, batch_id)
+        secs.append(round(time.time() - b0, 2))
+
+    return sink
+
+
+def summing(total: list, col: str):
+    """``screened=`` callback adding each batch's sum of ``col`` to
+    ``total[0]`` (an empty micro-batch sums to NULL, counted as 0)."""
+
+    def screened(df: DataFrame, batch_id: int) -> None:
+        total[0] += df.agg(F.coalesce(F.sum(col), F.lit(0))).collect()[0][0]
+
+    return screened
+
+
+def first_last_max(secs: list) -> dict:
+    """Per-batch seconds as first/last/max: a flat profile means the
+    cost does not grow with the stored index."""
+    if not secs:
+        return dict.fromkeys(("first", "last", "max"))
+    return {"first": secs[0], "last": secs[-1], "max": max(secs)}
+
+
+def commit_secs(maintainer) -> dict:
+    """The commit leg (manifest link) per batch: the append-granular
+    contract keeps it flat while the table grows; the stage leg is
+    proportional to the batch."""
+    return first_last_max([t["commit_sec"] for t in maintainer.timings])
+
+
+def no_report(rate: float) -> dict:
+    return {}
+
+
+# -- inputs (build): (input stream, rows/s numerator) -------------------
+
+
+class Run:
+    """One bench run: the session, its scratch directory, and each input
+    written once and shared by the topologies that read it."""
+
+    def __init__(self, spark, sf_dir: str, work: str) -> None:
+        self.spark, self.sf_dir, self.work = spark, sf_dir, work
+        self.rows: dict[str, int] = {}
+
+    def table(self, name: str, *cols) -> DataFrame:
+        return load_table(self.spark, self.sf_dir, name).select(*cols)
+
+    def chunks(self, key: str, make) -> tuple[DataFrame, int]:
+        """The micro-batch source over input ``key`` (``make()`` written
+        on first use as NUM_CHUNKS parquet files) and its row count. One
+        definition of the source (schema + maxFilesPerTrigger=1), so an
+        option change cannot skew one topology against another."""
+        path = f"{self.work}/{key}"
+        if key not in self.rows:
+            self.rows[key] = _write_chunks(make(), path, NUM_CHUNKS)
+        schema = self.spark.read.parquet(path).schema
+        stream = self.spark.readStream.schema(schema).option(
+            "maxFilesPerTrigger", 1
         )
-        json_schema = "key string, value string"
-        schema = spark.read.parquet(json_in).schema
-        assert [f.name for f in schema.fields] == ["key", "value"], (
-            json_schema
-        )
+        return stream.parquet(path), self.rows[key]
 
-        # P3: raw-JSON filter >= 200
-        t0 = time.time()
-        _run_counted(
-            spark,
-            json_in,
-            schema,
-            jobs.filter_high_topology,
-            f"{work}/ckpt_p3",
-        )
-        results["p3_filter"] = round(n_json / (time.time() - t0), 1)
+    @functools.cached_property
+    def centroids(self) -> DataFrame:
+        """The frozen IVF quantizer ANN and SemDeDup assign against."""
+        emb = self.table("embeddings", "vec_id", "embedding", "label")
+        return similarity.ivf_centroids(
+            dedup.with_embedding_norm(emb, "embedding").select("vec", "label"),
+            "label",
+        ).select(F.col("label").alias("cid"), F.col("centroid").alias("cvec"))
 
-        # P4: one pass, two sinks (integer-values + are-values-in-range)
-        branches = jobs.categorize_simple_branches()
-        counts = {name: 0 for name in branches}
 
-        def make_writer(name: str):
-            def w(df: DataFrame, batch_id: int) -> None:
-                counts[name] += df.count()
+def json_egvs(r: Run):
+    """P3/P4 input: (key, raw JSON value), the egv topic wire format."""
+    stream, n = r.chunks("json_in", lambda: r.table(
+        "events",
+        F.col("user_id").cast("string").alias("key"),
+        # reference egvs are integral mg/dL values; the JSON filter
+        # casts with ANSI semantics, so render ints
+        F.to_json(
+            F.struct(F.col("value").cast("int").alias("value"))
+        ).alias("value"),
+    ))
+    assert stream.columns == ["key", "value"], stream.columns
+    return stream, n
 
-            return w
 
-        stream = _stream(spark, json_in, schema)
-        t0 = time.time()
-        q = (
-            fan_out(
-                stream,
-                branches,
-                {name: make_writer(name) for name in branches},
-                f"{work}/ckpt_p4",
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        results["p4_fanout"] = round(n_json / (time.time() - t0), 1)
+def typed_egvs(r: Run):
+    """P5 input: typed egvs with ISO systemTime for the KTable join."""
+    return r.chunks("typed_in", lambda: r.table(
+        "events",
+        F.col("user_id").cast("string").alias("key"),
+        F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss").alias("systemTime"),
+        F.col("value").cast("int").alias("value"),
+    ))
 
-        # P5 shape: typed egvs with ISO systemTime for the KTable join
-        typed_in = f"{work}/typed_in"
-        n_typed = _write_chunks(
-            e.select(
-                F.col("user_id").cast("string").alias("key"),
-                F.date_format(
-                    "ts", "yyyy-MM-dd'T'HH:mm:ss"
-                ).alias("systemTime"),
-                F.col("value").cast("int").alias("value"),
-            ),
-            typed_in,
-            NUM_CHUNKS,
-        )
-        typed_schema = spark.read.parquet(typed_in).schema
-        run_batch = jobs.ktable_lookup_topology(
-            lambda: ranges_df(spark)
-        )
-        out_rows = [0]
 
-        def p5_sink(batch_df: DataFrame, batch_id: int) -> None:
-            out_rows[0] += run_batch(batch_df, batch_id).count()
+def tagged_egvs(r: Run):
+    """P5 stateful-dimension input: the typed egvs tagged into the
+    changelog-union shape (golden ranges as the seq-0..2 changelog
+    prefix). The numerator is the EVENT rows, comparable with
+    p5_ktable_join: replicated changelog rows produce no output."""
+    _, n_typed = typed_egvs(r)
 
-        stream = _stream(spark, typed_in, typed_schema)
-        t0 = time.time()
-        q = (
-            stream.writeStream.foreachBatch(p5_sink)
-            .outputMode("append")
-            .option("checkpointLocation", f"{work}/ckpt_p5")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        results["p5_ktable_join"] = round(
-            n_typed / (time.time() - t0), 1
-        )
-
-        # P5 stateful-dimension variant: same egv stream tagged into the
-        # changelog-union shape (golden ranges as the seq-0..2 changelog
-        # prefix), dimension maintained in engine state per bucket
-        from kafka_streams_dexcom_spark.schemas import GOLDEN_RANGES
-        from kafka_streams_dexcom_spark.streaming import dim_state
-
-        n_buckets = 8
-        dims = spark.createDataFrame(
+    def make() -> DataFrame:
+        dims = r.spark.createDataFrame(
             [
                 (rid - 1, rid, dim_state.range_json(st, et, lo, hi))
                 for rid, st, et, lo, hi in GOLDEN_RANGES
             ],
             "seq long, range_id int, range_json string",
         )
-        egvs = spark.read.parquet(typed_in).select(
+        egvs = r.spark.read.parquet(f"{r.work}/typed_in").select(
             (F.col("value").cast("long") + 100).alias("seq"),  # any order
             "key",
             F.col("systemTime").alias("system_time"),
             F.col("value").cast("int").alias("value"),
         )
-        tagged_in = f"{work}/tagged_in"
-        _write_chunks(
-            dim_state.tag_range_updates(dims, n_buckets).unionByName(
-                dim_state.tag_egvs(egvs, n_buckets)
-            ),
-            tagged_in,
-            NUM_CHUNKS,
-        )
-        tagged_schema = spark.read.parquet(tagged_in).schema
-        t0 = time.time()
-        _run_counted(
-            spark,
-            tagged_in,
-            tagged_schema,
-            dim_state.ktable_lookup_stateful,
-            f"{work}/ckpt_p5_stateful",
-        )
-        # numerator = EVENT rows (n_typed), comparable with
-        # p5_ktable_join: replicated changelog rows produce no output
-        # and must not inflate the throughput figure
-        results["p5_stateful_dim"] = round(
-            n_typed / (time.time() - t0), 1
+        return dim_state.tag_range_updates(dims, N_BUCKETS).unionByName(
+            dim_state.tag_egvs(egvs, N_BUCKETS)
         )
 
-        # Streaming cluster-map maintainer: the corpus-scale dedup-index
-        # builder (streaming/cluster_map_stream.py) fed the documents
-        # table in NUM_CHUNKS micro-batches. Unlike P3-P5 this is a
-        # stateful corpus-index topology — per-batch cost grows with
-        # the stored index, so the per-batch second figures matter as
-        # much as the aggregate rows/s (a flat profile at 10x corpus
-        # would mean the batch side is NOT what's being joined).
-        from kafka_streams_dexcom_spark.streaming.cluster_map_stream import (
-            ClusterMapMaintainer,
-        )
+    return r.chunks("tagged_in", make)[0], n_typed
 
-        docs = load_table(spark, sf_dir, "documents").select(
-            "doc_id", "text"
-        )
-        docs_in = f"{work}/docs_in"
-        n_docs = _write_chunks(docs, docs_in, NUM_CHUNKS)
-        maintainer = ClusterMapMaintainer(
-            spark, f"{work}/cluster_view", lineage_id="bench"
-        )
-        batch_secs: list[float] = []
 
-        def timed_maintainer(batch_df: DataFrame, batch_id: int) -> None:
-            b0 = time.time()
-            maintainer(batch_df, batch_id)
-            batch_secs.append(round(time.time() - b0, 2))
+def documents(r: Run):
+    return r.chunks("docs_in", lambda: r.table("documents", "doc_id", "text"))
 
-        docs_schema = spark.read.parquet(docs_in).schema
-        stream = _stream(spark, docs_in, docs_schema)
-        t0 = time.time()
-        q = (
-            stream.writeStream.foreachBatch(timed_maintainer)
-            .outputMode("append")
-            .option("checkpointLocation", f"{work}/ckpt_cmap")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        wall = time.time() - t0
-        n_labels = maintainer.labels().count()
-        results["cluster_map_stream"] = round(n_docs / wall, 1)
-        results["cluster_map_batch_sec"] = {
-            "first": batch_secs[0] if batch_secs else None,
-            "last": batch_secs[-1] if batch_secs else None,
-            "max": max(batch_secs) if batch_secs else None,
-            "n_batches": len(batch_secs),
-            "labels": n_labels,
-        }
-        # append-granular contract: the COMMIT leg (manifest link) must
-        # stay flat while the index grows; the fold/stage leg is ∝ batch
-        results["cluster_map_commit_sec"] = {
-            "first": maintainer.timings[0]["commit_sec"],
-            "last": maintainer.timings[-1]["commit_sec"],
-            "max": max(t["commit_sec"] for t in maintainer.timings),
-        } if maintainer.timings else None
 
-        # Streaming ANN ingest: per-batch argmin assignment of new
-        # embeddings to the frozen quantizer + a commit-log publish —
-        # the live IVF index-build path (streaming/ann_ingest.py).
-        from kafka_streams_dexcom_spark.operators.dedup import (
-            with_embedding_norm,
-        )
-        from kafka_streams_dexcom_spark.operators.similarity import (
-            ivf_centroids,
-        )
-        from kafka_streams_dexcom_spark.streaming.ann_ingest import (
-            IvfPostingsMaintainer,
-        )
+def embeddings(r: Run):
+    return r.chunks(
+        "emb_in", lambda: r.table("embeddings", "vec_id", "embedding")
+    )
 
-        emb = load_table(spark, sf_dir, "embeddings")
-        cents = ivf_centroids(
-            with_embedding_norm(
-                emb.select("vec_id", "embedding", "label"), "embedding"
-            ).select("vec", "label"),
-            "label",
-        ).select(F.col("label").alias("cid"), F.col("centroid").alias("cvec"))
-        emb_in = f"{work}/emb_in"
-        n_vecs = _write_chunks(
-            emb.select("vec_id", "embedding"), emb_in, NUM_CHUNKS
-        )
-        ann = IvfPostingsMaintainer(
-            spark, f"{work}/ann_index", cents, lineage_id="bench"
-        )
-        ann_secs: list[float] = []
 
-        def timed_ann(batch_df: DataFrame, batch_id: int) -> None:
-            b0 = time.time()
-            ann(batch_df, batch_id)
-            ann_secs.append(round(time.time() - b0, 2))
+def host_pages(r: Run):
+    """Line-census input: each document's canonical host and page text."""
+    return r.chunks("lc_in", lambda: r.table(
+        "documents",
+        "doc_id",
+        F.expr(
+            ux.host_sql(ux.canonical_url_sql(ux.messy_url_sql()))
+        ).alias("host"),
+        F.expr(ux.page_text_sql()).alias("text"),
+    ))
 
-        emb_schema = spark.read.parquet(emb_in).schema
-        stream = _stream(spark, emb_in, emb_schema)
-        t0 = time.time()
-        q = (
-            stream.writeStream.foreachBatch(timed_ann)
-            .outputMode("append")
-            .option("checkpointLocation", f"{work}/ckpt_ann")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        results["ann_ingest_stream"] = round(n_vecs / (time.time() - t0), 1)
-        results["ann_ingest_batch_sec"] = {
-            "first": ann_secs[0] if ann_secs else None,
-            "last": ann_secs[-1] if ann_secs else None,
-            "max": max(ann_secs) if ann_secs else None,
-            "n_batches": len(ann_secs),
-            "postings": ann.postings().count(),
-        }
-        results["ann_commit_sec"] = {
-            "first": ann.timings[0]["commit_sec"],
-            "last": ann.timings[-1]["commit_sec"],
-            "max": max(t["commit_sec"] for t in ann.timings),
-        } if ann.timings else None
 
-        # Streaming SemDeDup maintainer: per-batch frozen-quantizer cell
-        # assignment + within-cell cosine candidates vs batch+stored
-        # members, labels folded through cc_incremental_delta, commit-log
-        # published (streaming/semdedup_stream.py). stage vs commit legs
-        # reported separately — the append-granular manifest's contract
-        # is commit cost flat vs index size.
-        from kafka_streams_dexcom_spark.queries.dedup import SEMDEDUP_TAU
-        from kafka_streams_dexcom_spark.streaming.semdedup_stream import (
-            SemClusterMaintainer,
-        )
+def fingerprints(r: Run):
+    """Perceptual-dup input synthesized scan-side in the planted
+    re-encode geometry (group g = doc_id div 3; two exact twins + a 1-bit
+    near-dup), so the leg measures the MAINTAINER's fold (pairing, CC
+    delta, commit), not a codec pass."""
+    return r.chunks("fp_in", lambda: r.table(
+        "documents",
+        "doc_id",
+        *[
+            F.expr(
+                f"CAST(conv(substr(md5(concat('bfp:', "
+                f"CAST(doc_id div 3 AS STRING))), {1 + 4 * i}, 4), "
+                f"16, 10) AS BIGINT)"
+                + (" ^ CASE WHEN doc_id % 3 = 2 THEN 1 ELSE 0 END"
+                   if i == 0 else "")
+            ).alias(f"b{i}")
+            for i in range(4)
+        ],
+    ))
 
-        sem = SemClusterMaintainer(
-            spark,
-            f"{work}/sem_index",
-            cents,
-            lineage_id="bench",
-            tau=SEMDEDUP_TAU,
-        )
-        sem_secs: list[float] = []
 
-        def timed_sem(batch_df: DataFrame, batch_id: int) -> None:
-            b0 = time.time()
-            sem(batch_df, batch_id)
-            sem_secs.append(round(time.time() - b0, 2))
+def landing(key: str, burst: int = 0):
+    """Curation-gate input: the documents as NUM_CHUNKS JSONL landing
+    files, parsed PERMISSIVE one file per micro-batch. With ``burst``, a
+    producer lands one more file with a broken format (one valid row,
+    then ``burst`` invalid lines): its micro-batch is the hot epoch. A
+    new file, not an append: the local FS keeps CRC sidecars for
+    Spark-written files, and a real landing zone receives whole files."""
 
-        stream = _stream(spark, emb_in, emb_schema)
-        t0 = time.time()
-        q = (
-            stream.writeStream.foreachBatch(timed_sem)
-            .outputMode("append")
-            .option("checkpointLocation", f"{work}/ckpt_sem")
-            .trigger(availableNow=True)
-            .start()
+    def build(r: Run):
+        docs = r.table("documents", "doc_id", "text", "lang", "source")
+        path = f"{r.work}/{key}"
+        docs.repartition(NUM_CHUNKS).write.mode("overwrite").json(path)
+        n = docs.count()
+        if burst:
+            with open(os.path.join(path, "part-zz-burst.json"), "w") as fh:
+                fh.write('{"doc_id": -1, "text": "ok", "lang": "en", '
+                         '"source": "s"}\n')
+                for i in range(burst):
+                    fh.write('{"doc_id": broken line %d\n' % i)
+            n += burst + 1
+        stream = corpus.read_jsonl_stream(
+            r.spark, path, GATE_SCHEMA, max_files_per_trigger=1
         )
-        q.awaitTermination()
-        results["semdedup_stream"] = round(n_vecs / (time.time() - t0), 1)
-        results["semdedup_batch_sec"] = {
-            "first": sem_secs[0] if sem_secs else None,
-            "last": sem_secs[-1] if sem_secs else None,
-            "max": max(sem_secs) if sem_secs else None,
-            "n_batches": len(sem_secs),
-            "clusters": sem.labels().select("component").distinct().count(),
-        }
-        results["semdedup_commit_sec"] = {
-            "first": sem.timings[0]["commit_sec"],
-            "last": sem.timings[-1]["commit_sec"],
-            "max": max(t["commit_sec"] for t in sem.timings),
-        } if sem.timings else None
+        return stream, n
 
-        # The same topology with the hot-cell probe cap BINDING: on the
-        # deliberately dense synthetic corpus (every vector lands in a
-        # handful of cells) the uncapped stored side grows per batch;
-        # capped at ONE BATCH's per-cell share the stored probe can
-        # never exceed what batch 1 saw, so the fold must stay FLAT —
-        # the measured form of the r8 watch item (the pytest proves
-        # equality semantics; this row proves the bounded cost).
-        n_cells = cents.count()
-        cap = max(1, n_vecs // NUM_CHUNKS // max(1, n_cells))
-        sem_cap = SemClusterMaintainer(
-            spark,
-            f"{work}/sem_index_cap",
-            cents,
-            lineage_id="bench-cap",
-            tau=SEMDEDUP_TAU,
-            max_cell_probe=cap,
-        )
-        cap_secs: list[float] = []
+    return build
 
-        def timed_sem_cap(batch_df: DataFrame, batch_id: int) -> None:
-            b0 = time.time()
-            sem_cap(batch_df, batch_id)
-            cap_secs.append(round(time.time() - b0, 2))
 
-        stream = _stream(spark, emb_in, emb_schema)
-        t0 = time.time()
-        q = (
-            stream.writeStream.foreachBatch(timed_sem_cap)
-            .outputMode("append")
-            .option("checkpointLocation", f"{work}/ckpt_sem_cap")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        results["semdedup_capped_stream"] = round(
-            n_vecs / (time.time() - t0), 1
-        )
-        results["semdedup_capped_batch_sec"] = {
-            "first": cap_secs[0] if cap_secs else None,
-            "last": cap_secs[-1] if cap_secs else None,
-            "max": max(cap_secs) if cap_secs else None,
-            "cap": cap,
-        }
+# -- topologies (drive): (writer, report(rate) -> extra fields) ---------
 
-        # Streaming Bloom-filter dedup maintainer: per batch, screen
-        # against the width-bounded stored bit set (broadcast), commit
-        # the batch's bits O(batch). The contract under measurement is
-        # the same as ann_ingest: commit stays FLAT while the filter
-        # fills; the screen side is bounded by the FIXED width no
-        # matter how many batches have streamed.
-        from kafka_streams_dexcom_spark.streaming.bloom_ingest import (
-            BloomFilterMaintainer,
-        )
 
-        docs_bloom = load_table(spark, sf_dir, "documents").select(
-            "doc_id", "text"
-        )
-        bloom_in = f"{work}/bloom_in"
-        n_bloom = _write_chunks(docs_bloom, bloom_in, NUM_CHUNKS)
-        flagged = [0]
-        bloom = BloomFilterMaintainer(
-            spark,
-            f"{work}/bloom_filter",
-            m_bits=8 * n_bloom,
-            screened=lambda df, bid: flagged.__setitem__(
-                0, flagged[0] + df.agg(
-                    # empty micro-batch: F.sum yields NULL, not 0
-                    F.coalesce(F.sum("probably_seen"), F.lit(0))
-                ).collect()[0][0]
-            ),
-            lineage_id="bench-bloom",
-        )
-        t0 = time.time()
-        q = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(bloom_in)
-            .writeStream.foreachBatch(bloom)
-            .outputMode("append")
-            .option("checkpointLocation", f"{work}/ckpt_bloom")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        results["bloom_ingest_stream"] = round(
-            n_bloom / (time.time() - t0), 1
-        )
-        results["bloom_commit_sec"] = {
-            "first": bloom.timings[0]["commit_sec"],
-            "last": bloom.timings[-1]["commit_sec"],
-            "max": max(t["commit_sec"] for t in bloom.timings),
-        } if bloom.timings else None
-        results["bloom_flagged"] = {
+def count_output(transform):
+    """Drive that counts ``transform(stream)``'s output per batch."""
+
+    def drive(r: Run, stream: DataFrame, n: int, ckpt: str):
+        sink = counting_sink({}, "out")
+        return foreach_batch(transform(stream), sink, ckpt), no_report
+
+    return drive
+
+
+def p4_drive(r: Run, stream: DataFrame, n: int, ckpt: str):
+    """One pass, two sinks (integer-values + are-values-in-range)."""
+    branches = jobs.categorize_simple_branches()
+    writers = {name: counting_sink({}, name) for name in branches}
+    return fan_out(stream, branches, writers, ckpt), no_report
+
+
+def p5_drive(r: Run, stream: DataFrame, n: int, ckpt: str):
+    run_batch = jobs.ktable_lookup_topology(lambda: ranges_df(r.spark))
+    sink = counting_sink({}, "out", run_batch)
+    return foreach_batch(stream, sink, ckpt), no_report
+
+
+def timed_maintainer(make, batch_key: str, commit_key: str, **counts):
+    """Drive for a commit-log maintainer ``make(run)`` with each batch
+    timed. Reports the batch seconds (first/last/max, n_batches, and
+    each ``counts`` figure read off the maintainer after the drain) and
+    the commit seconds."""
+
+    def drive(r: Run, stream: DataFrame, n: int, ckpt: str):
+        m, secs = make(r), []
+
+        def report(rate: float) -> dict:
+            figures = {k: count(m) for k, count in counts.items()}
+            return {
+                batch_key: {
+                    **first_last_max(secs), "n_batches": len(secs), **figures
+                },
+                commit_key: commit_secs(m),
+            }
+
+        return foreach_batch(stream, timed(m, secs), ckpt), report
+
+    return drive
+
+
+def cluster_map(r: Run):
+    """The corpus-scale dedup-index builder: per-batch cost grows with
+    the stored index, so the batch seconds matter as much as rows/s."""
+    return cluster_map_stream.ClusterMapMaintainer(
+        r.spark, f"{r.work}/cluster_view", lineage_id="bench"
+    )
+
+
+def ann_index(r: Run):
+    """The live IVF index build: per-batch argmin assignment of new
+    embeddings to the frozen quantizer plus a commit-log publish."""
+    return ann_ingest.IvfPostingsMaintainer(
+        r.spark, f"{r.work}/ann_index", r.centroids, lineage_id="bench"
+    )
+
+
+def sem_clusters(r: Run):
+    """SemDeDup: within-cell cosine candidates vs batch+stored members,
+    labels folded through cc_incremental_delta."""
+    return semdedup_stream.SemClusterMaintainer(
+        r.spark, f"{r.work}/sem_index", r.centroids,
+        lineage_id="bench", tau=SEMDEDUP_TAU,
+    )
+
+
+def phash(r: Run):
+    """Perceptual-dup index: banded probe against the stored
+    fingerprints + incremental CC changelog."""
+    return phash_index.PhashIndexMaintainer(
+        r.spark, f"{r.work}/phash_index", lineage_id="bench-fp"
+    )
+
+
+def capped_drive(r: Run, stream: DataFrame, n: int, ckpt: str):
+    """SemDeDup with the hot-cell probe cap BINDING: capped at ONE
+    BATCH's per-cell share of the dense synthetic corpus, the stored
+    probe never exceeds what batch 1 saw, so the fold must stay FLAT."""
+    cap = max(1, n // NUM_CHUNKS // max(1, r.centroids.count()))
+    m = semdedup_stream.SemClusterMaintainer(
+        r.spark, f"{r.work}/sem_index_cap", r.centroids,
+        lineage_id="bench-cap", tau=SEMDEDUP_TAU, max_cell_probe=cap,
+    )
+    secs: list[float] = []
+    return foreach_batch(stream, timed(m, secs), ckpt), lambda rate: {
+        "semdedup_capped_batch_sec": {**first_last_max(secs), "cap": cap},
+    }
+
+
+def bloom_drive(r: Run, stream: DataFrame, n: int, ckpt: str):
+    """Per batch, screen against the width-bounded stored bit set
+    (broadcast) and commit the batch's bits O(batch): the screen is
+    bounded by the FIXED width however many batches have streamed."""
+    flagged = [0]
+    m = bloom_ingest.BloomFilterMaintainer(
+        r.spark, f"{r.work}/bloom_filter", m_bits=8 * n,
+        screened=summing(flagged, "probably_seen"),
+        lineage_id="bench-bloom",
+    )
+    return foreach_batch(stream, m, ckpt), lambda rate: {
+        "bloom_commit_sec": commit_secs(m),
+        "bloom_flagged": {
             "probable_seen": int(flagged[0]),
-            "fill_ratio": round(bloom.fill_ratio(), 4),
+            "fill_ratio": round(m.fill_ratio(), 4),
             # the O(1) manifest counter a monitor reads instead of
             # scanning the bit set — must track the exact scan above
-            "fill_ratio_meta": round(bloom.fill_ratio_meta(), 4),
-            "fill_trajectory": [
-                t["fill_ratio"] for t in bloom.timings
-            ],
-            "rebuild_due": bloom.rebuild_due(),
-        }
+            "fill_ratio_meta": round(m.fill_ratio_meta(), 4),
+            "fill_trajectory": [t["fill_ratio"] for t in m.timings],
+            "rebuild_due": m.rebuild_due(),
+        },
+    }
 
-        # Streaming per-domain line census: per batch, commit the
-        # batch's (host, line-hash) distinct-doc counts O(batch) and
-        # screen the batch against the PRE-batch chrome set. The
-        # contract under measurement: commit cost stays FLAT as the
-        # census grows (increments are batch-sized; the stored census
-        # is only read by the screen aggregate, never rewritten).
-        from kafka_streams_dexcom_spark.functions import url as ux
-        from kafka_streams_dexcom_spark.streaming.line_census import (
-            HostLineCensusMaintainer,
-        )
 
-        docs_lc = load_table(spark, sf_dir, "documents").select(
-            "doc_id",
-            F.expr(
-                ux.host_sql(ux.canonical_url_sql(ux.messy_url_sql()))
-            ).alias("host"),
-            F.expr(ux.page_text_sql()).alias("text"),
-        )
-        lc_in = f"{work}/lc_in"
-        n_lc = _write_chunks(docs_lc, lc_in, NUM_CHUNKS)
-        chrome_hits = [0]
-        lc = HostLineCensusMaintainer(
-            spark,
-            f"{work}/line_census",
-            screened=lambda df, bid: chrome_hits.__setitem__(
-                0, chrome_hits[0] + df.agg(
-                    F.coalesce(F.sum("n_chrome_lines"), F.lit(0))
-                ).collect()[0][0]
-            ),
-            lineage_id="bench-lc",
-        )
-        t0 = time.time()
-        q = (
-            spark.readStream.schema(
-                "doc_id long, host string, text string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(lc_in)
-            .writeStream.foreachBatch(lc)
-            .outputMode("append")
-            .option("checkpointLocation", f"{work}/ckpt_lc")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        results["line_census_stream"] = round(
-            n_lc / (time.time() - t0), 1
-        )
-        results["line_census_commit_sec"] = {
-            "first": lc.timings[0]["commit_sec"],
-            "last": lc.timings[-1]["commit_sec"],
-            "max": max(t["commit_sec"] for t in lc.timings),
-        } if lc.timings else None
-        results["line_census_chrome"] = {
-            "provisional_chrome_line_hits": int(chrome_hits[0]),
-            "chrome_lines_final": lc.chrome().count(),
-        }
+def census_drive(r: Run, stream: DataFrame, n: int, ckpt: str):
+    """Per batch, commit the batch's (host, line-hash) distinct-doc
+    counts O(batch) and screen it against the PRE-batch chrome set; the
+    stored census is only read by the screen, never rewritten."""
+    hits = [0]
+    m = line_census.HostLineCensusMaintainer(
+        r.spark, f"{r.work}/line_census",
+        screened=summing(hits, "n_chrome_lines"), lineage_id="bench-lc",
+    )
+    return foreach_batch(stream, m, ckpt), lambda rate: {
+        "line_census_commit_sec": commit_secs(m),
+        "line_census_chrome": {
+            "provisional_chrome_line_hits": int(hits[0]),
+            "chrome_lines_final": m.chrome().count(),
+        },
+    }
 
-        # Streaming perceptual-dup index: per batch, banded candidate
-        # probe against the stored fingerprint index + incremental CC
-        # changelog (streaming/phash_index.py). Fingerprints are
-        # synthesized scan-side in the planted re-encode geometry
-        # (group g = doc_id div 3; two exact twins + a 1-bit near-dup)
-        # so the leg measures the MAINTAINER's fold — pairing, CC
-        # delta, commit — not a codec pass. Same contract as the
-        # cluster-map maintainer: per-batch cost may grow with the
-        # index (the probe side), commits stay O(batch).
-        from kafka_streams_dexcom_spark.streaming.phash_index import (
-            PhashIndexMaintainer,
-        )
 
-        fp_bench = load_table(spark, sf_dir, "documents").select(
-            "doc_id",
-            *[
-                F.expr(
-                    f"CAST(conv(substr(md5(concat('bfp:', "
-                    f"CAST(doc_id div 3 AS STRING))), {1 + 4 * i}, 4), "
-                    f"16, 10) AS BIGINT)"
-                    + (" ^ CASE WHEN doc_id % 3 = 2 THEN 1 ELSE 0 END"
-                       if i == 0 else "")
-                ).alias(f"b{i}")
-                for i in range(4)
-            ],
-        )
-        fp_in = f"{work}/fp_in"
-        n_fp = _write_chunks(fp_bench, fp_in, NUM_CHUNKS)
-        pidx = PhashIndexMaintainer(
-            spark, f"{work}/phash_index", lineage_id="bench-fp"
-        )
-        fp_secs: list[float] = []
+def gate_drive(r: Run, stream: DataFrame, n: int, ckpt: str):
+    """PERMISSIVE parse -> three-way corrupt/rejected/accepted routing
+    with the gopher flags riding the landing scan, counted per sink."""
+    rows: dict = {}
+    sinks = (counting_sink(rows, k) for k in ROUTES)
+    gate = quality_gate.curation_gate_writer(*sinks)
 
-        def timed_fp(batch_df: DataFrame, batch_id: int) -> None:
-            b0 = time.time()
-            pidx(batch_df, batch_id)
-            fp_secs.append(round(time.time() - b0, 2))
+    def report(rate: float) -> dict:
+        routed = {k: sum(e[k] for e in rows.values()) for k in ROUTES}
+        assert routed["accept"] + routed["reject"] == n
+        return {"curation_gate_routed": routed}
 
-        t0 = time.time()
-        q = (
-            spark.readStream.schema(
-                "doc_id long, b0 long, b1 long, b2 long, b3 long"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(fp_in)
-            .writeStream.foreachBatch(timed_fp)
-            .outputMode("append")
-            .option("checkpointLocation", f"{work}/ckpt_fp")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        results["phash_index_stream"] = round(
-            n_fp / (time.time() - t0), 1
-        )
-        results["phash_index_batch_sec"] = {
-            "first": fp_secs[0] if fp_secs else None,
-            "last": fp_secs[-1] if fp_secs else None,
-            "max": max(fp_secs) if fp_secs else None,
-            "n_batches": len(fp_secs),
-            "dup_docs": pidx.survivors_view()
-            .filter(~F.col("is_survivor"))
-            .count(),
-        }
-        results["phash_index_commit_sec"] = {
-            "first": pidx.timings[0]["commit_sec"],
-            "last": pidx.timings[-1]["commit_sec"],
-            "max": max(t["commit_sec"] for t in pidx.timings),
-        } if pidx.timings else None
+    return foreach_batch(stream, gate, ckpt), report
 
-        # Streaming curation gate: JSONL landing -> PERMISSIVE parse ->
-        # three-way corrupt/rejected/accepted routing with the gopher
-        # flags riding the landing scan (streaming/quality_gate.py).
-        # Counted per sink so the figure is transform+routing
-        # throughput, not driver serialization.
-        from pyspark.sql import types as T
 
-        from kafka_streams_dexcom_spark.sources.corpus import (
-            read_jsonl_stream,
-        )
-        from kafka_streams_dexcom_spark.streaming.quality_gate import (
-            curation_gate_writer,
-        )
+def alarm_drive(r: Run, stream: DataFrame, n: int, ckpt: str):
+    """The gate fed the planted break; the per-epoch sink counts are the
+    ledger the shared alarm tail (dq.quarantine_alarm_from_counts) reads.
+    The ops contract: exactly the burst epoch alarms."""
+    rows: dict = {}
+    sinks = (counting_sink(rows, k) for k in ROUTES)
+    gate = quality_gate.curation_gate_writer(*sinks)
 
-        gate_schema = T.StructType(
-            [
-                T.StructField("doc_id", T.LongType()),
-                T.StructField("text", T.StringType()),
-                T.StructField("lang", T.StringType()),
-                T.StructField("source", T.StringType()),
-            ]
-        )
-        gate_in = f"{work}/gate_in"
-        docs_full = load_table(spark, sf_dir, "documents").select(
-            "doc_id", "text", "lang", "source"
-        )
-        n_gate = docs_full.count()
-        docs_full.repartition(NUM_CHUNKS).write.mode("overwrite").json(
-            gate_in
-        )
-        routed = {"accept": 0, "reject": 0, "quarantine": 0}
-
-        def counted(name: str):
-            def w(df: DataFrame, batch_id: int) -> None:
-                routed[name] += df.count()
-
-            return w
-
-        gate = curation_gate_writer(
-            counted("accept"), counted("reject"), counted("quarantine")
-        )
-        stream = read_jsonl_stream(
-            spark, gate_in, gate_schema, max_files_per_trigger=1
-        )
-        t0 = time.time()
-        q = (
-            stream.writeStream.foreachBatch(gate)
-            .option("checkpointLocation", f"{work}/ckpt_gate")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        assert routed["accept"] + routed["reject"] == n_gate
-        results["curation_gate_stream"] = round(
-            n_gate / (time.time() - t0), 1
-        )
-        results["curation_gate_routed"] = dict(routed)
-
-        # Quarantine-burst alarm, end-to-end: the same gate topology fed
-        # an input with a PLANTED format break (BURST invalid JSON lines
-        # appended to one landing file -> one hot micro-batch), per-epoch
-        # (rows, quarantined) counts folded from the three sinks'
-        # bookkeeping (O(1) driver data per batch), and the shared alarm
-        # tail (operators/dq.py:quarantine_alarm_from_counts) run over
-        # the resulting ledger. The ops contract under test: exactly the
-        # burst epoch alarms, every clean epoch stays quiet.
-        from kafka_streams_dexcom_spark.operators.dq import (
-            quarantine_alarm_from_counts,
-        )
-
-        BURST = 200
-        burst_in = f"{work}/gate_burst_in"
-        docs_full.repartition(NUM_CHUNKS).write.mode("overwrite").json(
-            burst_in
-        )
-        # the incident: a producer lands one more file in the drop zone
-        # with a broken format — its micro-batch is the hot epoch.
-        # (A new file, not an append: the local FS keeps CRC sidecars
-        # for Spark-written files, and a real landing zone receives
-        # whole files anyway.)
-        with open(os.path.join(burst_in, "part-zz-burst.json"), "w") as fh:
-            fh.write('{"doc_id": -1, "text": "ok", "lang": "en", '
-                     '"source": "s"}\n')
-            for i in range(BURST):
-                fh.write('{"doc_id": broken line %d\n' % i)
-
-        per_epoch: dict[int, dict[str, int]] = {}
-
-        def routed_counted(name: str):
-            def w(df: DataFrame, batch_id: int) -> None:
-                c = per_epoch.setdefault(
-                    batch_id, {"accept": 0, "reject": 0, "quarantine": 0}
-                )
-                c[name] += df.count()
-
-            return w
-
-        gate_b = curation_gate_writer(
-            routed_counted("accept"),
-            routed_counted("reject"),
-            routed_counted("quarantine"),
-        )
-        stream_b = read_jsonl_stream(
-            spark, burst_in, gate_schema, max_files_per_trigger=1
-        )
-        t0 = time.time()
-        q = (
-            stream_b.writeStream.foreachBatch(gate_b)
-            .option("checkpointLocation", f"{work}/ckpt_gate_burst")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        burst_wall = time.time() - t0
-        ledger = spark.createDataFrame(
+    def report(rate: float) -> dict:
+        ledger = r.spark.createDataFrame(
             [
                 (e, sum(c.values()), c["quarantine"])
-                for e, c in sorted(per_epoch.items())
+                for e, c in sorted(rows.items())
             ],
             "epoch bigint, n_rows bigint, n_quarantined bigint",
         )
         alarms = {
-            r["epoch"]: r
-            for r in quarantine_alarm_from_counts(ledger).collect()
-            if r["alarm"] == 1
+            a["epoch"]: a
+            for a in dq.quarantine_alarm_from_counts(ledger).collect()
+            if a["alarm"] == 1
         }
         assert len(alarms) == 1, f"expected 1 alarm epoch: {alarms}"
         (hot,) = alarms.values()
         assert hot["n_quarantined"] == BURST, hot
-        results["quarantine_alarm"] = {
-            "rows_per_sec": round((n_gate + BURST + 1) / burst_wall, 1),
+        return {"quarantine_alarm": {
+            "rows_per_sec": rate,
             "burst_rows": BURST,
             "alarm_epochs": 1,
             "alarm_rate_ppm": hot["rate_ppm"],
-            "n_epochs": len(per_epoch),
-        }
+            "n_epochs": len(rows),
+        }}
+
+    return foreach_batch(stream, gate, ckpt), report
+
+
+# (name, build, drive), run in this order: ``name`` keys the rows/s
+# figure, ``build(run)`` gives the input stream and the numerator,
+# ``drive(run, stream, n, ckpt)`` the writer and its report.
+TOPOLOGIES = [
+    ("p3_filter", json_egvs, count_output(jobs.filter_high_topology)),
+    ("p4_fanout", json_egvs, p4_drive),
+    ("p5_ktable_join", typed_egvs, p5_drive),
+    # the dimension maintained in engine state per bucket
+    ("p5_stateful_dim", tagged_egvs,
+     count_output(dim_state.ktable_lookup_stateful)),
+    ("cluster_map_stream", documents, timed_maintainer(
+        cluster_map, "cluster_map_batch_sec", "cluster_map_commit_sec",
+        labels=lambda m: m.labels().count(),
+    )),
+    ("ann_ingest_stream", embeddings, timed_maintainer(
+        ann_index, "ann_ingest_batch_sec", "ann_commit_sec",
+        postings=lambda m: m.postings().count(),
+    )),
+    ("semdedup_stream", embeddings, timed_maintainer(
+        sem_clusters, "semdedup_batch_sec", "semdedup_commit_sec",
+        clusters=lambda m: m.labels().select("component").distinct().count(),
+    )),
+    ("semdedup_capped_stream", embeddings, capped_drive),
+    ("bloom_ingest_stream", documents, bloom_drive),
+    ("line_census_stream", host_pages, census_drive),
+    ("phash_index_stream", fingerprints, timed_maintainer(
+        phash, "phash_index_batch_sec", "phash_index_commit_sec",
+        dup_docs=lambda m: m.survivors_view()
+        .filter(~F.col("is_survivor")).count(),
+    )),
+    ("curation_gate_stream", landing("gate_in"), gate_drive),
+    ("quarantine_alarm", landing("gate_burst_in", BURST), alarm_drive),
+]
+
+
+def main() -> None:
+    stamp = start_stamp()
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    spark = get_spark(app_name="bench_streaming")
+    spark.sparkContext.setLogLevel("ERROR")
+    work = tempfile.mkdtemp(prefix="bench_streaming_")
+    r = Run(spark, sf_dir, work)
+    results: dict = {}
+    try:
+        for name, build, drive in TOPOLOGIES:
+            stream, n = build(r)
+            writer, report = drive(r, stream, n, f"{work}/ckpt_{name}")
+            results[name] = round(n / drain(writer), 1)
+            # a report may replace the bare rate with a record nesting it
+            results.update(report(results[name]))
     finally:
         shutil.rmtree(work, ignore_errors=True)
-
-    def load1():
-        # co-tenant legibility, mirroring bench.py (round 13):
-        # additions-only — existing keys untouched
-        try:
-            with open("/proc/loadavg") as f:
-                return float(f.read().split()[0])
-        except (OSError, ValueError, IndexError):
-            return None
-
-    print(
-        json.dumps(
-            {
-                "metric": "streaming_rows_per_sec",
-                "unit": "rows/s",
-                "chunks": NUM_CHUNKS,
-                "input_rows": n_json,
-                "topologies": results,
-                "sf": sf_dir,
-                "load1_start": load1_start,
-                "load1_end": load1(),
-                "cpus": os.cpu_count(),
-            }
-        )
-    )
+    print(json.dumps({
+        "metric": "streaming_rows_per_sec",
+        "unit": "rows/s",
+        "chunks": NUM_CHUNKS,
+        "input_rows": r.rows["json_in"],
+        "topologies": results,
+        "sf": sf_dir,
+        **stamp(),
+    }))
 
 
 if __name__ == "__main__":

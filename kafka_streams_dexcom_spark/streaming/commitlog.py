@@ -18,10 +18,14 @@ a filesystem, and the package's only publish path:
       v00000000-<uuid>/        # immutable parquet data directories
       v00000001-<uuid>/
 
-- ``commit`` creates ``_commits/{N}.json`` with O_CREAT|O_EXCL — the
-  put-if-absent primitive (atomic on POSIX for threads AND processes;
-  on S3 the same role is played by conditional PUT, on HDFS by
-  create-no-overwrite — exactly what Delta's LogStore abstracts).
+- ``commit`` writes the manifest in full to a private temp name, fsyncs
+  it, and ``os.link``s it to ``_commits/{N}.json`` — the put-if-absent
+  primitive: the link fails if version N exists (atomic on POSIX for
+  threads AND processes) and the name appears with its whole content,
+  so no reader sees a torn manifest (a bare O_CREAT|O_EXCL create
+  would expose it empty). On S3 the same role is played by conditional
+  PUT, on HDFS by create-no-overwrite — exactly what Delta's LogStore
+  abstracts.
 - A manifest names the table's FULL FILE LIST at that version
   (Iceberg's snapshot shape; Delta reconstructs the same list from
   add/remove actions). ``commit`` replaces the list with the staged

@@ -19,10 +19,10 @@ import functools
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from bench import time_noop  # noqa: E402
 from kafka_streams_dexcom_spark.queries import all_queries  # noqa: E402
 from kafka_streams_dexcom_spark.session import get_spark  # noqa: E402
 
@@ -214,15 +214,6 @@ def build_x10(spark, out_dir: str) -> None:
         u.write.mode("overwrite").parquet(dst)
 
 
-def timed(fn, spark, sf_dir: str) -> float:
-    best = float("inf")
-    for _ in range(2):
-        t0 = time.time()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        best = min(best, time.time() - t0)
-    return round(best, 3)
-
-
 def main() -> None:
     # usage: scale_probe.py [out_dir [name ...]] — trailing names probe a
     # subset (new-query spot checks without re-timing the whole list)
@@ -238,8 +229,8 @@ def main() -> None:
     qs = all_queries()
     rows = {}
     for name in subset or PROBE_QUERIES:
-        base = timed(qs[name], spark, SRC)
-        x10 = timed(qs[name], spark, out_dir)
+        base = time_noop(lambda: qs[name](spark, SRC), 2)
+        x10 = time_noop(lambda: qs[name](spark, out_dir), 2)
         ratio = round(x10 / base, 2) if base > 0 else None
         rows[name] = {"sf0.1_s": base, "x10_s": x10, "ratio": ratio}
         print(f"{name:28s} {base:6.2f}s -> {x10:6.2f}s  x{ratio}")
@@ -292,16 +283,8 @@ def probe_cc_incremental(spark) -> dict:
     pairs = old_pairs.union(new_pairs).localCheckpoint()
     old_labels = connected_components(old_pairs).localCheckpoint()
 
-    def run(fn):
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.time()
-            fn().write.format("noop").mode("overwrite").save()
-            best = min(best, time.time() - t0)
-        return round(best, 3)
-
-    full_s = run(lambda: connected_components(pairs))
-    incr_s = run(lambda: cc_incremental(new_pairs, old_labels))
+    full_s = time_noop(lambda: connected_components(pairs), 2)
+    incr_s = time_noop(lambda: cc_incremental(new_pairs, old_labels), 2)
     out = {
         "full_cc_s": full_s,
         "incremental_s": incr_s,
