@@ -579,3 +579,93 @@ def test_topk_rank_windows_prune_below_the_window(spark, sf_dir):
     zipf = explain_str(q_zipf_slope(spark, sf_dir))
     assert "TakeOrderedAndProject" in zipf, zipf
     assert "WindowGroupLimit" not in zipf, zipf
+
+
+_SHAPE_NODES = (
+    "Exchange",
+    "SortMergeJoin",
+    "BroadcastHashJoin",
+    "BroadcastNestedLoopJoin",
+    "Generate",
+    "HashAggregate",
+    "Window",
+    "MapInPandas",
+)
+
+
+def _node_counts(df) -> dict:
+    """Physical-node census of the pre-execution plan: one count per
+    numbered detail block of the formatted explain."""
+    import collections
+    import re
+
+    seen = collections.Counter(
+        re.findall(r"^\(\d+\) (\w+)", explain_str(df), re.M)
+    )
+    return {n: seen[n] for n in _SHAPE_NODES}
+
+
+def _shape(exchange, smj, bhj, bnlj, generate, hash_agg, window, pandas):
+    return dict(
+        zip(
+            _SHAPE_NODES,
+            (exchange, smj, bhj, bnlj, generate, hash_agg, window, pandas),
+        )
+    )
+
+
+# the banded-Hamming family: fingerprint synth + decode, banded pairs,
+# oriented pairs, survivors, and the simhash twin
+_FINGERPRINT_SHAPES = {
+    "multimodal_phash": _shape(1, 0, 0, 0, 0, 0, 0, 2),
+    "multimodal_phash_dedup": _shape(2, 0, 0, 0, 2, 2, 0, 0),
+    "multimodal_phash_dct": _shape(1, 0, 0, 0, 0, 0, 0, 2),
+    "multimodal_phash_dct_dedup": _shape(2, 0, 2, 0, 3, 4, 0, 0),
+    "audio_phash": _shape(1, 0, 0, 0, 0, 0, 0, 2),
+    "audio_phash_dedup": _shape(2, 0, 0, 0, 2, 2, 0, 0),
+    "video_phash": _shape(1, 0, 0, 0, 0, 0, 0, 2),
+    "video_phash_dedup": _shape(2, 0, 0, 0, 2, 2, 0, 0),
+    "phash_survivors": _shape(2, 1, 0, 1, 0, 0, 0, 0),
+    "dedup_simhash_pairs": _shape(4, 0, 0, 0, 3, 4, 0, 0),
+}
+
+
+def test_fingerprint_family_plan_shapes(spark, sf_dir):
+    """Pinned node counts of every banded-Hamming query: a refactor of
+    the fingerprint families, the band-and-verify core or the oracles
+    must leave each plan's exchanges, joins, generators, aggregates,
+    windows and Python stages exactly as they are."""
+    from kafka_streams_dexcom_spark.queries import all_queries
+
+    qs = all_queries()
+    got = {n: _node_counts(qs[n](spark, sf_dir)) for n in _FINGERPRINT_SHAPES}
+    assert got == _FINGERPRINT_SHAPES
+
+
+def test_phash_index_stage_plan_shape(spark, tmp_path):
+    """One PhashIndexMaintainer fold over planted fingerprints (batch 1
+    probing the stored batch 0): the candidate + verify plan that feeds
+    the label delta keeps its shape."""
+    from pyspark.sql import functions as F
+
+    from kafka_streams_dexcom_spark.streaming.phash_index import (
+        PhashIndexMaintainer,
+    )
+
+    rows = [
+        (3 * g + v, g, g + 7, g + 11, (g + 13) ^ (v == 2))
+        for g in range(6)
+        for v in range(3)
+    ]
+    fp = spark.createDataFrame(
+        rows, "doc_id long, b0 long, b1 long, b2 long, b3 long"
+    )
+    m = PhashIndexMaintainer(spark, str(tmp_path / "idx"), lineage_id="q1")
+    m(fp.filter(F.col("doc_id") % 2 == 0), 0)
+    edges = []
+    m._label_delta = lambda e, base: edges.append(e) or e
+    m._stage(
+        m._prepare(fp.filter(F.col("doc_id") % 2 == 1)),
+        m.table.latest_version(),
+    )
+    assert _node_counts(edges[0]) == _shape(4, 0, 1, 0, 4, 4, 1, 0)
