@@ -74,9 +74,23 @@ def _write_chunks(df: DataFrame, path: str, chunks: int) -> int:
     0..9 mod 10 hits only ~7 partitions — measured), which would write
     fewer, skewed files and distort the per-micro-batch throughput."""
     df.repartition(chunks).write.mode("overwrite").parquet(path)
+    _in_part_order(path)
     # count AFTER the write, from parquet footer metadata — a pre-write
     # df.count() would evaluate the whole transform twice
     return df.sparkSession.read.parquet(path).count()
+
+
+def _in_part_order(path: str) -> None:
+    """Stamp the part files of one write with strictly increasing
+    mtimes, in part-index order, all in the past. The file source feeds
+    files oldest first; the tasks of one write finish in no fixed order,
+    often in the same millisecond, so micro-batch k held a different
+    file from run to run (the part files' contents do not change), and
+    with it every per-batch figure. A file landed later stays last."""
+    parts = sorted(f for f in os.listdir(path) if f.startswith("part-"))
+    t0 = time.time() - 60 - len(parts)
+    for k, name in enumerate(parts):
+        os.utime(os.path.join(path, name), (t0 + k, t0 + k))
 
 
 # -- the one drain, its sinks and summaries ---------------------------
@@ -297,6 +311,7 @@ def landing(key: str, burst: int = 0):
         docs = r.table("documents", "doc_id", "text", "lang", "source")
         path = f"{r.work}/{key}"
         docs.repartition(NUM_CHUNKS).write.mode("overwrite").json(path)
+        _in_part_order(path)
         n = docs.count()
         if burst:
             with open(os.path.join(path, "part-zz-burst.json"), "w") as fh:

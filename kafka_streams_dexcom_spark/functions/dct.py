@@ -44,6 +44,8 @@ from __future__ import annotations
 import math
 from functools import lru_cache
 
+from kafka_streams_dexcom_spark.functions.hashing import pack_bands
+
 DCTP_N = 16  # image side (square: the dihedral group must act on it)
 DCTP_BLOCK = 8  # low-frequency block side -> 64 bits
 DCT_SCALE = 1024  # fixed-point scale of the cosine table
@@ -102,48 +104,37 @@ def orient_matrix(coeff, orient: int):
     return m
 
 
-def fp_bands(m) -> tuple[int, int, int, int]:
-    """64-bit fingerprint of one oriented coefficient matrix as four
-    16-bit band ints: T = 32nd smallest of the 63 AC values (lower
-    median), bit k (row-major a*8+b) set iff flat[k] > T."""
+def median_bits(m):
+    """The 64 bits of one oriented coefficient matrix: T = 32nd smallest
+    of the 63 AC values (lower median), bit k (row-major a*8+b) set iff
+    flat[k] > T."""
     import numpy as np
 
     flat = np.asarray(m, dtype=np.int64).reshape(-1)
-    t = int(np.sort(flat[1:])[31])
-    bits = flat > t
-    bands = []
-    for b in range(4):
-        v = 0
-        for k in range(16):
-            if bits[16 * b + k]:
-                v |= 1 << k
-        bands.append(v)
-    return tuple(bands)
+    return flat > np.sort(flat[1:])[31]
 
 
-def dct_fingerprints(img) -> list[tuple[int, int, int, int, int, str]]:
+def dct_fingerprints(img) -> list[tuple[int, int, int, int, int]]:
     """All 8 orientation fingerprints of a 16x16 int raster:
-    [(orient, b0, b1, b2, b3, hex)] — the doc's fingerprint SET. Any
+    [(orient, b0, b1, b2, b3)] — the doc's fingerprint SET. Any
     dihedral re-post of the image produces the IDENTICAL set (the
     orbit is closed), so set-vs-set min-Hamming pairing is exact on
     rotations with no canonicalization decision boundary (an argmin
     canonical form flipped orientation under dither in the design
     study — p99 hamming 36; the set form is boundary-free)."""
     coeff = dct_coeff_matrix(img)
-    out = []
-    for o in range(len(ORIENTS)):
-        b0, b1, b2, b3 = fp_bands(orient_matrix(coeff, o))
-        out.append(
-            (o, b0, b1, b2, b3, f"{b3:04X}{b2:04X}{b1:04X}{b0:04X}")
-        )
-    return out
+    return [
+        (o, *pack_bands(median_bits(orient_matrix(coeff, o))))
+        for o in range(len(ORIENTS))
+    ]
 
 
 # ------------------------------------------------------------ SQL twins
 # Builders take COLUMN NAMES and compose as CTE stages (pixels -> row
-# pass -> coefficients -> per-orientation flats -> bands): a nested
-# inline form would re-evaluate the 2k-mult row pass once per lambda
-# element. The basis rides along as a one-row CROSS JOINed CTE.
+# pass -> coefficients -> per-orientation flats -> thresholds; the
+# oracle's one band packer makes the bands): a nested inline form would
+# re-evaluate the 2k-mult row pass once per lambda element. The basis
+# rides along as a one-row CROSS JOINed CTE.
 
 
 def dct_table_cte() -> str:
@@ -194,13 +185,3 @@ def threshold_sql(flat: str = "fl") -> str:
     """Lower-median threshold (32nd smallest of the 63 AC values) of an
     oriented flat-list column."""
     return f"list_sort(list_slice({flat}, 2, 64))[32]"
-
-
-def band_sql(flat: str, th: str, b: int) -> str:
-    """Band ``b``\'s 16-bit int from flat-list column + threshold column
-    (strict >, bit k of band b = flat[16b + k])."""
-    return " + ".join(
-        f"CASE WHEN {flat}[{16 * b + k + 1}] > {th} "
-        f"THEN {1 << k} ELSE 0 END"
-        for k in range(16)
-    )

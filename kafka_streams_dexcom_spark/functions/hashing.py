@@ -69,3 +69,12 @@ def minhash_perm_sql(expr: str, i: int) -> str:
     """Same permutation as :func:`minhash_perm`, as DuckDB SQL."""
     a, b = PERM_COEFFS[i]
     return f"(({expr}) % {MERSENNE_P} * {a} + {b}) % {MERSENNE_P}"
+
+
+def pack_bands(bits) -> tuple[int, int, int, int]:
+    """A 64-bit fingerprint (``bits[k]`` = bit k) as four 16-bit band
+    ints: band b holds bits [16b, 16b+16), bit 16b+t at position t.
+    Band ints stay sign-safe in both engines' BIGINT, and each band is
+    a bucket key for banded pairing."""
+    v = sum(1 << k for k, bit in enumerate(bits) if bit)
+    return tuple((v >> (16 * b)) & 0xFFFF for b in range(4))

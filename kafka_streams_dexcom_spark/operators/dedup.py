@@ -14,8 +14,9 @@ codegen and the only shuffles are the ones the algorithms require:
                 O(bands) times instead of O(n²).
 - simhash:      per-bit vote counts as codegen SUM aggregates over the
                 exploded token-hash stream (one narrow shuffle);
-                near-dup candidates via 15-bit-band equi-join +
-                popcount filter.
+                near-dup candidates via 15-bit band buckets + exact
+                popcount verify (hamming_band_pairs, the banded-Hamming
+                core every 64-bit perceptual fingerprint shares).
 - ngram-jaccard: prefix-filtered set-similarity join (PPJoin-style):
                 shingles ordered by global document frequency, only each
                 doc's first |s|-ceil(t*|s|)+1 indexed — lossless for
@@ -232,6 +233,61 @@ def dropped_buckets(
         df.groupBy(*bucket_cols)
         .agg(F.count(F.lit(1)).alias("bucket_size"))
         .filter(F.col("bucket_size") > max_bucket)
+    )
+
+
+def hamming(a: str, b: str, words: Sequence[str]) -> Column:
+    """Exact Hamming distance between two fingerprints held as integer
+    ``words``, read as ``{a}{w}`` and ``{b}{w}`` (a column prefix or a
+    struct path): the sum of the words' XOR popcounts, as BIGINT."""
+    pop = " + ".join(f"bit_count({a}{w} ^ {b}{w})" for w in words)
+    return F.expr(f"CAST({pop} AS BIGINT)")
+
+
+def band_rows(
+    fp: DataFrame, words: Sequence[str], bands: Sequence[str], prefix: str = ""
+) -> DataFrame:
+    """One row per (fingerprint, band) of a (doc_id, *words) frame:
+    the columns renamed ``{prefix}{c}``, and (band_idx, band_val) with
+    band j the SQL expression ``bands[j]`` over the words. The prefix
+    keeps the two sides of a band join apart."""
+    return fp.select(
+        *[F.col(c).alias(f"{prefix}{c}") for c in ("doc_id", *words)],
+        F.posexplode(F.array(*[F.expr(b) for b in bands])).alias(
+            "band_idx", "band_val"
+        ),
+    )
+
+
+def hamming_band_pairs(
+    fp: DataFrame,
+    *,
+    words: Sequence[str],
+    bands: Sequence[str],
+    max_hamming: int,
+    max_bucket: int | None,
+) -> DataFrame:
+    """Near-dup pairs (id_a < id_b, hamming) of a (doc_id, *words)
+    fingerprint frame: hash-bucket on the bands, verify exactly. Docs
+    sharing any (band_idx, band_val) bucket become candidates through
+    pairs_within_buckets (one shuffle, no self-join; buckets over
+    ``max_bucket`` dropped), and a candidate is kept when its exact
+    Hamming distance is at most ``max_hamming``. The one band-and-verify
+    plan of SimHash and every 64-bit perceptual fingerprint."""
+    pairs = pairs_within_buckets(
+        band_rows(fp, words, bands),
+        ["band_idx", "band_val"],
+        F.struct(F.col("doc_id").alias("id"), *words),
+        max_bucket=max_bucket,
+    )
+    return (
+        pairs.select(
+            F.col("pair_a.id").alias("id_a"),
+            F.col("pair_b.id").alias("id_b"),
+            hamming("pair_a.", "pair_b.", words).alias("hamming"),
+        )
+        .distinct()
+        .filter(F.col("hamming") <= max_hamming)
     )
 
 
@@ -461,37 +517,18 @@ def simhash_pairs(
     <=max_hamming pair set. Join key is (band_idx, band_val) — 32768
     buckets per band, and ``max_bucket`` drops the degenerate hot
     buckets (e.g. the all-zero band of trivially-short docs) that would
-    otherwise emit O(m²) pairs at 100 TB."""
+    otherwise emit O(m²) pairs at 100 TB. One word, four 15-bit bands
+    through hamming_band_pairs."""
     band_mask = (1 << SIMHASH_BAND_BITS) - 1
-    bands_df = fp.select(
-        id_col,
-        "simhash",
-        F.posexplode(
-            F.array(
-                *[
-                    F.expr(
-                        f"(shiftright(simhash, {SIMHASH_BAND_BITS * j})"
-                        f" & {band_mask})"
-                    )
-                    for j in range(SIMHASH_BANDS)
-                ]
-            )
-        ).alias("band_idx", "band_val"),
-    )
-    pairs = pairs_within_buckets(
-        bands_df,
-        ["band_idx", "band_val"],
-        F.struct(F.col(id_col).alias("id"), F.col("simhash").alias("sh")),
+    return hamming_band_pairs(
+        fp.select(F.col(id_col).alias("doc_id"), "simhash"),
+        words=("simhash",),
+        bands=[
+            f"(shiftright(simhash, {SIMHASH_BAND_BITS * j}) & {band_mask})"
+            for j in range(SIMHASH_BANDS)
+        ],
+        max_hamming=max_hamming,
         max_bucket=max_bucket,
-    )
-    return (
-        pairs.select(
-            F.col("pair_a.id").alias("id_a"),
-            F.col("pair_b.id").alias("id_b"),
-            F.expr("CAST(bit_count(pair_a.sh ^ pair_b.sh) AS BIGINT)").alias("hamming"),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
     )
 
 

@@ -18,11 +18,19 @@ Design (per the 100 TB pipeline shape):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import hashlib
+from collections.abc import Callable, Iterator
+from typing import NamedTuple
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kafka_streams_dexcom_spark.functions.avi import avi_decode, avi_encode
+from kafka_streams_dexcom_spark.functions.dct import DCTP_N, dct_fingerprints
+from kafka_streams_dexcom_spark.functions.hashing import pack_bands
+from kafka_streams_dexcom_spark.functions.png import decode_png, encode_png
+from kafka_streams_dexcom_spark.functions.wav import wav_decode, wav_encode
 from kafka_streams_dexcom_spark.sources.files import fan_out_small
 
 DECODE_SCHEMA = (
@@ -328,442 +336,34 @@ def video_features(media: DataFrame) -> DataFrame:
 
 
 # ------------------------------------------------- perceptual hashing
-# dHash geometry: source frames are PHASH_SRC_H x PHASH_SRC_W gray,
-# box-downsampled 2x2 to 8 rows x 9 cols, then bit (r, c) = d[r][c] >
-# d[r][c+1] -> the standard 64-bit difference hash, carried as four
-# 16-bit band ints (b0..b3) so banded blocking and XOR popcounts stay
-# sign-safe int arithmetic in BOTH engines.
+# Four fingerprint families, one MediaFamily row each. Every family
+# plants one corpus shape: group g = doc_id div PHASH_GROUP fixes the
+# content, drawn from an md5 byte stream the DuckDB oracle replays, and
+# variant v = doc_id % PHASH_GROUP picks a re-encode that shares no
+# payload bytes with v0. Every fingerprint is 64 bits carried as four
+# 16-bit band ints (PHASH_WORDS), so banded blocking and XOR popcounts
+# stay sign-safe int arithmetic in BOTH engines.
+PHASH_GROUP = 3  # docs per group: 3 encodings of the same content
+PHASH_PERTURB = 64  # variant 2's +64 (mod 256) on source byte 0
+PHASH_WORDS = ("b0", "b1", "b2", "b3")
+
+# dHash: 16x18 gray frames, box-downsampled 2x2 to 8 rows x 9 cols,
+# bit (r, c) = d[r][c] > d[r][c+1].
 PHASH_SRC_W = 18
 PHASH_SRC_H = 16
-PHASH_GROUP = 3  # docs per pixel-group: 3 encodings of the same frame
-PHASH_PERTURB = 64  # variant 2's +64 on source pixel 0 (a re-compress)
 
-PHASH_SCHEMA = (
-    "doc_id bigint, variant bigint, b0 bigint, b1 bigint, b2 bigint, "
-    "b3 bigint, phash_hex string"
-)
-
-
-def phash_src_pixels(g: int, perturb: bool) -> "np.ndarray":
-    """The deterministic source frame of pixel-group ``g`` — byte p of
-    the 16x18 gray raster is hex pair p%16 of md5('ph:<g>:<p//16>'),
-    so the DuckDB oracle replays every pixel with its own md5. The
-    perturbed variant bumps pixel 0 by PHASH_PERTURB (mod 256) — the
-    'slightly recompressed' near-duplicate."""
-    import hashlib
-
-    import numpy as np
-
-    n = PHASH_SRC_W * PHASH_SRC_H
-    out = np.empty(n, dtype=np.int64)
-    for row in range((n + 15) // 16):
-        h = hashlib.md5(f"ph:{g}:{row}".encode()).digest()
-        for k in range(min(16, n - row * 16)):
-            out[row * 16 + k] = h[k]
-    if perturb:
-        out[0] = (out[0] + PHASH_PERTURB) % 256
-    return out.reshape(PHASH_SRC_H, PHASH_SRC_W)
-
-
-def dhash_bands(gray: "np.ndarray") -> tuple[int, int, int, int]:
-    """64-bit dHash of an (even-H x even-W) gray raster as four 16-bit
-    band ints: 2x2 integer box-downsample to 8x9, bit k (= r*8+c) set
-    iff d[r][c] > d[r][c+1], band b = bits [16b, 16b+16)."""
-    d = (
-        gray[0::2, 0::2].astype("int64")
-        + gray[0::2, 1::2]
-        + gray[1::2, 0::2]
-        + gray[1::2, 1::2]
-    ) // 4
-    bits = d[:, :-1] > d[:, 1:]  # (8, 8)
-    flat = bits.reshape(-1)
-    bands = []
-    for b in range(4):
-        v = 0
-        for t in range(16):
-            if flat[16 * b + t]:
-                v |= 1 << t
-        bands.append(v)
-    return tuple(bands)
-
-
-def attach_phash_payload(docs: DataFrame) -> DataFrame:
-    """Synthesize the re-encoded-duplicate image corpus (Arrow-batched;
-    REAL PNG bytes, never touching the driver): pixel-group g =
-    doc_id div 3 fixes the frame content; variant v = doc_id % 3 picks
-    the ENCODING — v0 grayscale PNG, v1 RGB PNG with R=G=B (identical
-    luma, zero shared payload bytes with v0: the re-encoded duplicate
-    byte-exact dedup can never see), v2 grayscale PNG of the one-pixel
-    perturbed frame (the slightly-recompressed near-duplicate,
-    dHash hamming <= 1). Deterministic byte-for-byte — the
-    attach_wav_payload stand-in contract."""
-    from collections.abc import Iterator as _It
-
-    def run(batches: _It["pd.DataFrame"]) -> _It["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
-
-        from kafka_streams_dexcom_spark.functions.png import encode_png
-
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                g, v = did // PHASH_GROUP, did % PHASH_GROUP
-                px = phash_src_pixels(g, perturb=(v == 2)).astype(
-                    np.uint8
-                )
-                if v == 1:
-                    rgb = np.repeat(px.reshape(-1), 3).tobytes()
-                    payload = encode_png(
-                        PHASH_SRC_W, PHASH_SRC_H, rgb, channels=3
-                    )
-                else:
-                    payload = encode_png(
-                        PHASH_SRC_W, PHASH_SRC_H, px.tobytes(), channels=1
-                    )
-                rows.append((did, v, payload))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "variant", "payload"]
-            )
-
-    return fan_out_small(docs).select("doc_id").mapInPandas(
-        run, schema="doc_id bigint, variant bigint, payload binary"
-    )
-
-
-def phash_features(media: DataFrame) -> DataFrame:
-    """Arrow-batched REAL decode -> perceptual fingerprint over a
-    binary PNG column: vendored codec (functions/png.py) -> integer
-    luma (Pillow's exact (R*19595 + G*38470 + B*7471) >> 16 for RGB) ->
-    2x2 box downsample -> 64-bit dHash as four 16-bit bands + the hex
-    fingerprint. Payload bytes stay executor-side; a malformed payload
-    raises per-row. Which encoding produced a frame is unobservable in
-    the fingerprint — that IS the operator's point."""
-    from collections.abc import Iterator as _It
-
-    def run(batches: _It["pd.DataFrame"]) -> _It["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
-
-        from kafka_streams_dexcom_spark.functions.png import decode_png
-
-        for pdf in batches:
-            rows = []
-            for did, v, p in zip(
-                pdf["doc_id"], pdf["variant"], pdf["payload"]
-            ):
-                w, h, ch, px = decode_png(bytes(p))
-                arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-                if ch == 1:
-                    gray = arr.reshape(h, w)
-                else:
-                    rgb = arr.reshape(h, w, ch)
-                    gray = (
-                        rgb[:, :, 0] * 19595
-                        + rgb[:, :, 1] * 38470
-                        + rgb[:, :, 2] * 7471
-                    ) >> 16
-                b0, b1, b2, b3 = dhash_bands(gray)
-                rows.append(
-                    (
-                        int(did),
-                        int(v),
-                        b0,
-                        b1,
-                        b2,
-                        b3,
-                        f"{b3:04X}{b2:04X}{b1:04X}{b0:04X}",
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "variant", "b0", "b1", "b2", "b3",
-                    "phash_hex",
-                ],
-            )
-
-    return media.select("doc_id", "variant", "payload").mapInPandas(
-        run, schema=PHASH_SCHEMA
-    )
-
-
-# Rotation-invariant DCT perceptual hash (functions/dct.py): 16x16
-# gray corpus with planted DIHEDRAL re-posts + recompression dither —
-# the duplicate classes the dHash family above provably misses /
-# marginally catches. See the dct module docstring for the algebra.
-DCTP_GROUP = 3
+# Rotation-invariant DCT hash (functions/dct.py): 16x16 gray corpus
+# with planted DIHEDRAL re-posts + recompression dither, the duplicate
+# classes dHash provably misses / marginally catches.
 DCTP_DITHER = 4  # variant 2's per-pixel +/-4 (the re-compress artifact)
 DCTP_BRIGHT = 8  # variant 2's +8 brightness (clipped at 255)
 
-DCTP_SCHEMA = (
-    "doc_id bigint, variant bigint, orient bigint, b0 bigint, "
-    "b1 bigint, b2 bigint, b3 bigint, phash_hex string"
-)
-
-
-def dctp_src_pixels(g: int) -> "np.ndarray":
-    """Deterministic 16x16 source frame of pixel-group ``g`` — byte p
-    is hex pair p%16 of md5('phd:<g>:<p//16>') (the phash_src_pixels
-    rule under its own tag), so the oracle replays every pixel."""
-    import hashlib
-
-    import numpy as np
-
-    from kafka_streams_dexcom_spark.functions.dct import DCTP_N
-
-    n = DCTP_N * DCTP_N
-    out = np.empty(n, dtype=np.int64)
-    for row in range((n + 15) // 16):
-        h = hashlib.md5(f"phd:{g}:{row}".encode()).digest()
-        for k in range(min(16, n - row * 16)):
-            out[row * 16 + k] = h[k]
-    return out.reshape(DCTP_N, DCTP_N)
-
-
-def dctp_variant_pixels(g: int, v: int) -> "np.ndarray":
-    """Pixel raster of doc variant ``v`` in group ``g``: v0 the base
-    frame, v1 its 90-degree rotation (the rotated re-post — zero
-    shared payload bytes, ~32/64 dHash bits away, EXACTLY the same
-    DCT fingerprint set), v2 the dithered+brightened re-encode
-    (per-pixel +/-DCTP_DITHER from md5('phdn:...') byte parity, then
-    +DCTP_BRIGHT, clipped to [0, 255] — the recompression artifact,
-    within DCT threshold)."""
-    import hashlib
-
-    import numpy as np
-
-    from kafka_streams_dexcom_spark.functions.dct import DCTP_N
-
-    img = dctp_src_pixels(g)
-    if v == 1:
-        return np.rot90(img)
-    if v == 2:
-        n = DCTP_N * DCTP_N
-        d = np.empty(n, dtype=np.int64)
-        for row in range((n + 15) // 16):
-            h = hashlib.md5(f"phdn:{g}:{row}".encode()).digest()
-            for k in range(min(16, n - row * 16)):
-                d[row * 16 + k] = h[k]
-        dither = np.where(d % 2 == 1, DCTP_DITHER, -DCTP_DITHER)
-        return np.clip(
-            img + dither.reshape(DCTP_N, DCTP_N) + DCTP_BRIGHT, 0, 255
-        )
-    return img
-
-
-def attach_dct_phash_payload(docs: DataFrame) -> DataFrame:
-    """Synthesize the dihedral/recompressed duplicate image corpus as
-    REAL PNG bytes (Arrow-batched, never on the driver): group
-    g = doc_id div 3 fixes the content, variant v = doc_id % 3 picks
-    the re-encode (base / rot90 / dither+brighten). All three PNGs of
-    a group are pairwise byte-distinct — byte-exact dedup sees
-    nothing."""
-    from collections.abc import Iterator as _It
-
-    def run(batches: _It["pd.DataFrame"]) -> _It["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
-
-        from kafka_streams_dexcom_spark.functions.dct import DCTP_N
-        from kafka_streams_dexcom_spark.functions.png import encode_png
-
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                g, v = did // DCTP_GROUP, did % DCTP_GROUP
-                px = dctp_variant_pixels(g, v).astype(np.uint8)
-                payload = encode_png(
-                    DCTP_N, DCTP_N, px.tobytes(), channels=1
-                )
-                rows.append((did, v, payload))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "variant", "payload"]
-            )
-
-    return fan_out_small(docs).select("doc_id").mapInPandas(
-        run, schema="doc_id bigint, variant bigint, payload binary"
-    )
-
-
-def dct_phash_features(media: DataFrame) -> DataFrame:
-    """Arrow-batched REAL decode -> the 8-orientation DCT fingerprint
-    SET per image (functions/dct.py:dct_fingerprints): 8 rows per doc,
-    (orient, b0..b3, hex). Payload bytes stay executor-side; which
-    dihedral pose produced the bytes is unobservable in the SET —
-    that IS the operator's point."""
-    from collections.abc import Iterator as _It
-
-    def run(batches: _It["pd.DataFrame"]) -> _It["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
-
-        from kafka_streams_dexcom_spark.functions.dct import (
-            dct_fingerprints,
-        )
-        from kafka_streams_dexcom_spark.functions.png import decode_png
-
-        for pdf in batches:
-            rows = []
-            for did, v, p in zip(
-                pdf["doc_id"], pdf["variant"], pdf["payload"]
-            ):
-                w, h, ch, px = decode_png(bytes(p))
-                gray = (
-                    np.frombuffer(px, dtype=np.uint8)
-                    .astype(np.int64)
-                    .reshape(h, w)
-                )
-                for o, b0, b1, b2, b3, hx in dct_fingerprints(gray):
-                    rows.append(
-                        (int(did), int(v), o, b0, b1, b2, b3, hx)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "variant", "orient", "b0", "b1", "b2",
-                    "b3", "phash_hex",
-                ],
-            )
-
-    return media.select("doc_id", "variant", "payload").mapInPandas(
-        run, schema=DCTP_SCHEMA
-    )
-
-
-# Audio perceptual hash: 65-frame energy contour -> 64 derivative-sign
-# bits (the chromaprint/shazam family's simplest honest member). Same
-# band/carry conventions as the image dHash above.
+# Audio: 65-frame energy contour -> 64 derivative-sign bits (the
+# chromaprint/shazam family's simplest honest member).
 APH_FRAMES = 65
 APH_FRAME = 16  # samples per frame per channel
-APH_PERTURB = 64  # variant 2's +64 (mod 256) on source byte 0
 
-
-def aph_src_bytes(g: int, perturb: bool) -> "np.ndarray":
-    """Deterministic source bytes of audio pixel-group ``g``: byte i is
-    byte i%16 of md5('aph:<g>:<i//16>') — md5-replayable in SQL, the
-    phash_src_pixels discipline. Sample i = (byte−128)·256 (int16)."""
-    import hashlib
-
-    import numpy as np
-
-    n = APH_FRAMES * APH_FRAME
-    out = np.empty(n, dtype=np.int64)
-    for row in range((n + 15) // 16):
-        h = hashlib.md5(f"aph:{g}:{row}".encode()).digest()
-        for k in range(min(16, n - row * 16)):
-            out[row * 16 + k] = h[k]
-    if perturb:
-        out[0] = (out[0] + APH_PERTURB) % 256
-    return out
-
-
-def attach_audio_phash_payload(docs: DataFrame) -> DataFrame:
-    """The audio re-encoded-duplicate corpus (Arrow-batched; REAL WAV
-    bytes): group g = doc_id div 3 fixes the samples; v0 = mono 16-bit,
-    v1 = STEREO with L=R (twice the bytes, identical per-frame energy —
-    the re-encode byte dedup can't see), v2 = mono with sample 0
-    perturbed (the near-dup)."""
-    from collections.abc import Iterator as _It
-
-    def run(batches: _It["pd.DataFrame"]) -> _It["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
-
-        from kafka_streams_dexcom_spark.functions.wav import wav_encode
-
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                g, v = did // PHASH_GROUP, did % PHASH_GROUP
-                s = (
-                    aph_src_bytes(g, perturb=(v == 2)) - 128
-                ) * 256  # int16 range
-                if v == 1:
-                    s = np.repeat(s, 2)  # interleaved stereo, L = R
-                    payload = wav_encode(s, 8000, n_channels=2)
-                else:
-                    payload = wav_encode(s, 8000, n_channels=1)
-                rows.append((did, v, payload))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "variant", "payload"]
-            )
-
-    return fan_out_small(docs).select("doc_id").mapInPandas(
-        run, schema="doc_id bigint, variant bigint, payload binary"
-    )
-
-
-def contour_bands(energies: "np.ndarray") -> tuple[int, int, int, int]:
-    """64-bit energy-contour hash of APH_FRAMES integer frame energies
-    as four 16-bit band ints: bit k set iff e[k+1] > e[k]."""
-    bits = energies[1:] > energies[:-1]
-    bands = []
-    for b in range(4):
-        v = 0
-        for t in range(16):
-            if bits[16 * b + t]:
-                v |= 1 << t
-        bands.append(v)
-    return tuple(bands)
-
-
-def audio_phash_features(media: DataFrame) -> DataFrame:
-    """Arrow-batched REAL WAV decode -> perceptual fingerprint: vendored
-    codec (functions/wav.py) -> per-frame integer mean-abs energy
-    (channel-count invariant: an L=R stereo re-encode yields the exact
-    same contour) -> 64 derivative-sign bits as four 16-bit bands +
-    the hex fingerprint. Malformed payloads raise per-row."""
-    from collections.abc import Iterator as _It
-
-    def run(batches: _It["pd.DataFrame"]) -> _It["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
-
-        from kafka_streams_dexcom_spark.functions.wav import wav_decode
-
-        for pdf in batches:
-            rows = []
-            for did, v, p in zip(
-                pdf["doc_id"], pdf["variant"], pdf["payload"]
-            ):
-                _rate, ch, _bits, s = wav_decode(bytes(p))
-                a = np.abs(s.astype(np.int64))
-                per = APH_FRAME * ch
-                n_frames = a.size // per
-                e = a[: n_frames * per].reshape(n_frames, per).sum(
-                    axis=1
-                ) // per
-                b0, b1, b2, b3 = contour_bands(e)
-                rows.append(
-                    (
-                        int(did),
-                        int(v),
-                        b0,
-                        b1,
-                        b2,
-                        b3,
-                        f"{b3:04X}{b2:04X}{b1:04X}{b0:04X}",
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "variant", "b0", "b1", "b2", "b3",
-                    "phash_hex",
-                ],
-            )
-
-    return media.select("doc_id", "variant", "payload").mapInPandas(
-        run, schema=PHASH_SCHEMA
-    )
-
-
-# Video perceptual hash: 65-frame brightness contour -> 64
-# derivative-sign bits — the third modality of the phash family. The
+# Video: 65-frame brightness contour -> 64 derivative-sign bits. The
 # per-frame energy is floor(sum(pixels) / (w*h)), which is EXACTLY
 # invariant under integer pixel-doubling (4S // 4A == S // A), so a
 # 2x-upscaled re-encode fingerprints identically while sharing zero
@@ -771,66 +371,223 @@ def audio_phash_features(media: DataFrame) -> DataFrame:
 VPH_FRAMES = 65
 VPH_W = 4
 VPH_H = 4
-VPH_PERTURB = 64  # variant 2's +64 (mod 256) on frame 0, pixel 0
 
 
-def vph_src_bytes(g: int, perturb: bool) -> "np.ndarray":
-    """Deterministic source bytes of video pixel-group ``g``: pixel j of
-    frame f is byte j of md5('vph:<g>:<f>') — one digest per 16-pixel
-    frame, md5-replayable in SQL (the aph_src_bytes discipline)."""
-    import hashlib
-
-    import numpy as np
-
-    out = np.concatenate(
-        [
-            np.frombuffer(
-                hashlib.md5(f"vph:{g}:{f}".encode()).digest(),
-                dtype=np.uint8,
-            )
-            for f in range(VPH_FRAMES)
-        ]
-    ).astype(np.int64)
-    if perturb:
-        out[0] = (out[0] + VPH_PERTURB) % 256
-    return out
+def md5_bytes(key: str, n: int) -> np.ndarray:
+    """The first ``n`` bytes of md5('<key>:0') || md5('<key>:1') || ...
+    as int64: byte i is byte i%16 of md5('<key>:<i//16>'), which the
+    oracle replays with its own md5."""
+    digests = b"".join(
+        hashlib.md5(f"{key}:{r}".encode()).digest()
+        for r in range((n + 15) // 16)
+    )
+    return np.frombuffer(digests[:n], dtype=np.uint8).astype(np.int64)
 
 
-def attach_video_phash_payload(docs: DataFrame) -> DataFrame:
-    """The video re-encoded-duplicate corpus (Arrow-batched; REAL
-    uncompressed-AVI bytes): group g = doc_id div 3 fixes the 65-frame
-    clip; v0 = 4x4 gray frames, v1 = the SAME clip upscaled 2x to 8x8
-    (pixel-doubled — four times the frame bytes, zero shared with v0,
-    identical floor-mean contour: the upscaled re-encode byte dedup
-    can't see), v2 = 4x4 with frame-0 pixel 0 perturbed (the near-dup)."""
-    from collections.abc import Iterator as _It
+def _planted(tag: str, g: int, v: int, n: int) -> np.ndarray:
+    """Group ``g``'s ``n`` source bytes under ``tag``; variant 2 (the
+    near-dup) bumps byte 0 by PHASH_PERTURB (mod 256)."""
+    x = md5_bytes(f"{tag}:{g}", n)
+    if v == 2:
+        x[0] = (x[0] + PHASH_PERTURB) % 256
+    return x
 
-    def run(batches: _It["pd.DataFrame"]) -> _It["pd.DataFrame"]:
-        import numpy as np
+
+def fp_hex(bands) -> str:
+    """The 16-hex-digit fingerprint, b3 first."""
+    return "".join(f"{b:04X}" for b in reversed(bands))
+
+
+def dhash_bits(gray: np.ndarray) -> np.ndarray:
+    """64 dHash bits of an (even-H x even-W) gray raster: 2x2 integer
+    box-downsample to 8x9, bit k (= r*8+c) set iff d[r][c] > d[r][c+1]."""
+    d = (
+        gray[0::2, 0::2].astype("int64")
+        + gray[0::2, 1::2]
+        + gray[1::2, 0::2]
+        + gray[1::2, 1::2]
+    ) // 4
+    return (d[:, :-1] > d[:, 1:]).reshape(-1)
+
+
+def contour_bits(energies: np.ndarray) -> np.ndarray:
+    """64 contour bits of 65 integer frame energies: bit k set iff
+    e[k+1] > e[k]."""
+    return energies[1:] > energies[:-1]
+
+
+def dctp_src_pixels(g: int) -> np.ndarray:
+    """Deterministic 16x16 source frame of group ``g``: the md5 stream
+    under tag 'phd'."""
+    return md5_bytes(f"phd:{g}", DCTP_N * DCTP_N).reshape(DCTP_N, DCTP_N)
+
+
+def dctp_variant_pixels(g: int, v: int) -> np.ndarray:
+    """Pixel raster of doc variant ``v`` in group ``g``: v0 the base
+    frame, v1 its 90-degree rotation (the rotated re-post — zero
+    shared payload bytes, ~32/64 dHash bits away, EXACTLY the same
+    DCT fingerprint set), v2 the dithered+brightened re-encode
+    (per-pixel +/-DCTP_DITHER from the parity of the 'phdn' md5
+    stream, then +DCTP_BRIGHT, clipped to [0, 255] — the recompression
+    artifact, within DCT threshold)."""
+    img = dctp_src_pixels(g)
+    if v == 1:
+        return np.rot90(img)
+    if v == 2:
+        d = md5_bytes(f"phdn:{g}", DCTP_N * DCTP_N).reshape(DCTP_N, DCTP_N)
+        dither = np.where(d % 2 == 1, DCTP_DITHER, -DCTP_DITHER)
+        return np.clip(img + dither + DCTP_BRIGHT, 0, 255)
+    return img
+
+
+def _png(px: np.ndarray, channels: int) -> bytes:
+    """A gray raster as a PNG: one channel, or RGB with R=G=B."""
+    h, w = px.shape
+    raw = px.astype(np.uint8)
+    if channels == 3:
+        raw = np.repeat(raw.reshape(-1), 3)
+    return encode_png(w, h, raw.tobytes(), channels=channels)
+
+
+def _png_luma(payload: bytes) -> np.ndarray:
+    """Integer luma of a PNG: the gray channel, or Pillow's exact
+    (R*19595 + G*38470 + B*7471) >> 16 for RGB."""
+    w, h, ch, px = decode_png(payload)
+    a = np.frombuffer(px, dtype=np.uint8).astype(np.int64).reshape(h, w, ch)
+    if ch == 1:
+        return a[:, :, 0]
+    return (a[:, :, 0] * 19595 + a[:, :, 1] * 38470 + a[:, :, 2] * 7471) >> 16
+
+
+def _wav(b: np.ndarray, v: int) -> bytes:
+    """Source bytes as 16-bit samples (b-128)*256 at 8 kHz: mono, or
+    interleaved L=R stereo for variant 1."""
+    s = (b - 128) * 256
+    if v == 1:
+        return wav_encode(np.repeat(s, 2), 8000, n_channels=2)
+    return wav_encode(s, 8000, n_channels=1)
+
+
+def _wav_energy(payload: bytes) -> np.ndarray:
+    """Per-frame integer mean-abs energy of a WAV, channel-count
+    invariant: an L=R stereo re-encode yields the same contour."""
+    _rate, ch, _bits, s = wav_decode(payload)
+    a = np.abs(s.astype(np.int64))
+    per = APH_FRAME * ch
+    n_frames = a.size // per
+    return a[: n_frames * per].reshape(n_frames, per).sum(axis=1) // per
+
+
+def _avi(px: np.ndarray, v: int) -> bytes:
+    """A (frames, H, W) clip as an AVI; variant 1 pixel-doubled 2x."""
+    frames = px.astype(np.uint8)
+    if v == 1:
+        frames = frames.repeat(2, axis=1).repeat(2, axis=2)
+    return avi_encode(list(frames))
+
+
+def _avi_brightness(payload: bytes) -> np.ndarray:
+    """Per-frame integer brightness floor(sum/area) of the first
+    VPH_FRAMES frames; a shorter clip raises (a 64-bit contour needs 65
+    frames)."""
+    w, h, frames = avi_decode(payload)
+    if len(frames) < VPH_FRAMES:
+        raise ValueError(
+            f"video phash needs >= {VPH_FRAMES} frames, got {len(frames)}"
+        )
+    return (
+        np.stack(frames[:VPH_FRAMES]).astype(np.int64).sum(axis=(1, 2))
+        // (w * h)
+    )
+
+
+def _contour(energies: np.ndarray) -> list:
+    return [(0, *pack_bands(contour_bits(energies)))]
+
+
+class MediaFamily(NamedTuple):
+    """One perceptual fingerprint family. ``source(g, v)`` is the md5
+    source rule of group g's variant v and ``encode(x, v)`` turns it
+    into REAL payload bytes; ``decode(payload)`` recovers the integer
+    signal and ``fingerprint(x)`` its [(orient, b0, b1, b2, b3)]: one
+    row, or one per dihedral orientation when ``oriented``."""
+
+    name: str
+    source: Callable
+    encode: Callable
+    decode: Callable
+    fingerprint: Callable
+    oriented: bool = False
+
+
+# image dHash: v0 gray PNG, v1 RGB PNG with R=G=B (identical luma, the
+# re-encode byte dedup can't see), v2 the one-pixel perturbed frame
+IMAGE = MediaFamily(
+    "image",
+    lambda g, v: _planted("ph", g, v, PHASH_SRC_W * PHASH_SRC_H).reshape(
+        PHASH_SRC_H, PHASH_SRC_W
+    ),
+    lambda px, v: _png(px, 3 if v == 1 else 1),
+    _png_luma,
+    lambda gray: [(0, *pack_bands(dhash_bits(gray)))],
+)
+# audio contour: v0 mono 16-bit, v1 L=R stereo (twice the bytes, same
+# per-frame energy), v2 sample 0 perturbed
+AUDIO = MediaFamily(
+    "audio",
+    lambda g, v: _planted("aph", g, v, APH_FRAMES * APH_FRAME),
+    _wav,
+    _wav_energy,
+    _contour,
+)
+# video contour: v0 4x4 gray frames, v1 the clip upscaled 2x to 8x8
+# (four times the frame bytes, same floor-mean contour), v2 frame-0
+# pixel 0 perturbed
+VIDEO = MediaFamily(
+    "video",
+    lambda g, v: _planted("vph", g, v, VPH_FRAMES * VPH_H * VPH_W).reshape(
+        VPH_FRAMES, VPH_H, VPH_W
+    ),
+    _avi,
+    _avi_brightness,
+    _contour,
+)
+# DCT orientation set: base / rot90 / dither+brighten gray PNGs; 8
+# fingerprints per doc, one per dihedral orientation
+IMAGE_DCT = MediaFamily(
+    "image_dct",
+    dctp_variant_pixels,
+    lambda px, v: _png(px, 1),
+    _png_luma,
+    dct_fingerprints,
+    oriented=True,
+)
+MEDIA_FAMILIES = {f.name: f for f in (IMAGE, AUDIO, VIDEO, IMAGE_DCT)}
+
+
+def media_payload(family: MediaFamily, docs: DataFrame) -> DataFrame:
+    """Synthesize ``family``'s planted corpus as (doc_id, variant,
+    payload) REAL media bytes (Arrow-batched; the bytes never touch the
+    driver). Deterministic byte-for-byte — the attach_wav_payload
+    stand-in contract."""
+
+    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import pandas as pd
 
-        from kafka_streams_dexcom_spark.functions.avi import avi_encode
-
         for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                g, v = did // PHASH_GROUP, did % PHASH_GROUP
-                px = (
-                    vph_src_bytes(g, perturb=(v == 2))
-                    .astype(np.uint8)
-                    .reshape(VPH_FRAMES, VPH_H, VPH_W)
-                )
-                if v == 1:
-                    frames = [
-                        np.repeat(np.repeat(px[f], 2, axis=0), 2, axis=1)
-                        for f in range(VPH_FRAMES)
-                    ]
-                else:
-                    frames = [px[f] for f in range(VPH_FRAMES)]
-                rows.append((did, v, avi_encode(frames)))
+            ids = [int(d) for d in pdf["doc_id"]]
             yield pd.DataFrame(
-                rows, columns=["doc_id", "variant", "payload"]
+                {
+                    "doc_id": ids,
+                    "variant": [d % PHASH_GROUP for d in ids],
+                    "payload": [
+                        family.encode(
+                            family.source(d // PHASH_GROUP, d % PHASH_GROUP),
+                            d % PHASH_GROUP,
+                        )
+                        for d in ids
+                    ],
+                }
             )
 
     return fan_out_small(docs).select("doc_id").mapInPandas(
@@ -838,61 +595,33 @@ def attach_video_phash_payload(docs: DataFrame) -> DataFrame:
     )
 
 
-def video_phash_features(media: DataFrame) -> DataFrame:
-    """Arrow-batched REAL AVI decode -> perceptual fingerprint: vendored
-    codec (functions/avi.py) -> per-frame integer brightness
-    floor(sum/area) (resolution-invariant under exact pixel-doubling,
-    so an upscaled re-encode yields the same contour) -> 64
-    derivative-sign bits as four 16-bit bands + the hex fingerprint.
-    Clips shorter than VPH_FRAMES raise per-row (honest failure — a
-    64-bit contour needs 65 frames)."""
-    from collections.abc import Iterator as _It
+def media_fingerprints(family: MediaFamily, media: DataFrame) -> DataFrame:
+    """Arrow-batched REAL decode -> perceptual fingerprint over a
+    (doc_id, variant, payload) frame: (doc_id, variant[, orient], b0..b3,
+    phash_hex), one row per fingerprint. Payload bytes stay
+    executor-side; a malformed payload raises per-row. Which encoding
+    produced the bytes is unobservable in the fingerprint — that IS the
+    operator's point."""
+    # every fingerprint leads with its orient; a lone one drops it
+    skip = 0 if family.oriented else 1
+    cols = ["doc_id", "variant", *["orient", *PHASH_WORDS][skip:]]
 
-    def run(batches: _It["pd.DataFrame"]) -> _It["pd.DataFrame"]:
-        import numpy as np
+    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import pandas as pd
 
-        from kafka_streams_dexcom_spark.functions.avi import avi_decode
-
         for pdf in batches:
-            rows = []
-            for did, v, p in zip(
-                pdf["doc_id"], pdf["variant"], pdf["payload"]
-            ):
-                w, h, frames = avi_decode(bytes(p))
-                if len(frames) < VPH_FRAMES:
-                    raise ValueError(
-                        f"video phash needs >= {VPH_FRAMES} frames, "
-                        f"got {len(frames)}"
-                    )
-                e = (
-                    np.stack(frames[:VPH_FRAMES])
-                    .astype(np.int64)
-                    .sum(axis=(1, 2))
-                    // (w * h)
+            rows = [
+                (int(d), int(v), *fp[skip:], fp_hex(fp[1:]))
+                for d, v, p in zip(
+                    pdf["doc_id"], pdf["variant"], pdf["payload"]
                 )
-                b0, b1, b2, b3 = contour_bands(e)
-                rows.append(
-                    (
-                        int(did),
-                        int(v),
-                        b0,
-                        b1,
-                        b2,
-                        b3,
-                        f"{b3:04X}{b2:04X}{b1:04X}{b0:04X}",
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "variant", "b0", "b1", "b2", "b3",
-                    "phash_hex",
-                ],
-            )
+                for fp in family.fingerprint(family.decode(bytes(p)))
+            ]
+            yield pd.DataFrame(rows, columns=cols + ["phash_hex"])
 
     return media.select("doc_id", "variant", "payload").mapInPandas(
-        run, schema=PHASH_SCHEMA
+        run,
+        schema=", ".join(f"{c} bigint" for c in cols) + ", phash_hex string",
     )
 
 

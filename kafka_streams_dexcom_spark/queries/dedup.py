@@ -855,35 +855,90 @@ def _simhash_oracle() -> str:
     return f"WITH {_simhash_expr_duck()} SELECT doc_id, simhash FROM fp"
 
 
+def hamming_sql(a: str, b: str, words) -> str:
+    """DuckDB Hamming distance between the fingerprints whose integer
+    ``words`` are read as ``{a}{w}`` and ``{b}{w}``: summed XOR
+    popcounts, as BIGINT."""
+    pop = " + ".join(f"bit_count(xor({a}{w}, {b}{w}))" for w in words)
+    return f"CAST({pop} AS BIGINT)"
+
+
+def banded_pairs_sql(
+    fp: str,
+    *,
+    words,
+    bands,
+    max_hamming: int,
+    max_bucket: int,
+    oriented: bool = False,
+) -> str:
+    """DuckDB banded-pair replay over the CTE ``fp`` (doc_id, *words
+    [, orient]): CTEs ending in ``pairs(id_a, id_b, hamming)``. Band j
+    is the SQL expression ``bands[j]``; a (band_idx, band_val) bucket
+    holding more than ``max_bucket`` rows pairs nothing, and a pair is
+    kept at Hamming distance <= ``max_hamming``. Plain: each bucket
+    pairs its docs once, id_a < id_b. Oriented: L = orientation-0 rows
+    against R = all rows, the cap counted on R, min Hamming per
+    unordered pair."""
+    band_val = " ".join(f"WHEN {j} THEN {b}" for j, b in enumerate(bands))
+
+    def side(name: str, where: str = "") -> str:
+        return f"""{name} AS (
+            SELECT doc_id, {", ".join(words)}, bi AS band_idx,
+                   CASE bi {band_val} END AS band_val
+            FROM {fp}, generate_series(0, {len(bands) - 1}) gs(bi) {where}
+        )"""
+
+    if oriented:
+        sides = f"{side('l_bands', 'WHERE orient = 0')}, {side('r_bands')}"
+        id_a = "least(l.doc_id, r.doc_id)"
+        id_b = "greatest(l.doc_id, r.doc_id)"
+        on = "l.doc_id <> r.doc_id"
+        pairs = f"""SELECT id_a, id_b, min(hamming) AS hamming FROM cand
+            GROUP BY id_a, id_b HAVING min(hamming) <= {max_hamming}"""
+    else:
+        sides = f"{side('l_bands')}, r_bands AS (SELECT * FROM l_bands)"
+        id_a, id_b, on = "l.doc_id", "r.doc_id", "l.doc_id < r.doc_id"
+        pairs = f"""SELECT DISTINCT id_a, id_b, hamming FROM cand
+            WHERE hamming <= {max_hamming}"""
+    return f"""
+        {sides},
+        bsz AS (
+            SELECT band_idx, band_val, count(*) AS c
+            FROM r_bands GROUP BY 1, 2
+        ),
+        cand AS (
+            SELECT {id_a} AS id_a, {id_b} AS id_b,
+                   {hamming_sql("l.", "r.", words)} AS hamming
+            FROM l_bands l JOIN r_bands r
+              ON l.band_idx = r.band_idx AND l.band_val = r.band_val
+             AND {on}
+            JOIN bsz s
+              ON s.band_idx = l.band_idx AND s.band_val = l.band_val
+            WHERE s.c <= {max_bucket}
+        ),
+        pairs AS ({pairs})
+    """
+
+
 def _simhash_pairs_oracle() -> str:
     # Mirrors simhash_pairs exactly: 15-bit bands over the 60-bit
     # fingerprint, and the same max_bucket cap on band buckets (buckets
     # larger than the cap contribute no candidate pairs on either engine).
     mask = (1 << dd.SIMHASH_BAND_BITS) - 1
+    pairs = banded_pairs_sql(
+        "fp",
+        words=("simhash",),
+        bands=[
+            f"(simhash >> {dd.SIMHASH_BAND_BITS * j}) & {mask}"
+            for j in range(dd.SIMHASH_BANDS)
+        ],
+        max_hamming=MAX_HAMMING,
+        max_bucket=dd.SIMHASH_MAX_BUCKET,
+    )
     return f"""
-        WITH {_simhash_expr_duck()},
-        bands_cte AS (
-            SELECT doc_id, simhash, bi AS band_idx,
-                   (simhash >> ({dd.SIMHASH_BAND_BITS} * bi)) & {mask}
-                       AS band_val
-            FROM fp, generate_series(0, {dd.SIMHASH_BANDS - 1}) AS g(bi)
-        ),
-        bsz AS (
-            SELECT band_idx, band_val, count(*) AS c
-            FROM bands_cte GROUP BY 1, 2
-        ),
-        cand AS (
-            SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                   CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-            FROM bands_cte a JOIN bands_cte b
-              ON a.band_idx = b.band_idx AND a.band_val = b.band_val
-             AND a.doc_id < b.doc_id
-            JOIN bsz s
-              ON s.band_idx = a.band_idx AND s.band_val = a.band_val
-            WHERE s.c <= {dd.SIMHASH_MAX_BUCKET}
-        )
-        SELECT doc_a, doc_b, hamming FROM cand
-        WHERE hamming <= {MAX_HAMMING}
+        WITH {_simhash_expr_duck()}, {pairs}
+        SELECT id_a AS doc_a, id_b AS doc_b, hamming FROM pairs
     """
 
 

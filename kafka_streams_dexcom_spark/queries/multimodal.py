@@ -1,8 +1,14 @@
 """Multimodal-column queries: metadata-only access (column pruning keeps
 the payload bytes unread), the Arrow-batched decode stub, and the
-perceptual near-dup family (image dHash + audio energy contour over
-REAL codec decode — the duplicate class byte-exact dedup can't see).
-The decode
+perceptual near-dup family over REAL codec decode — the duplicate class
+byte-exact dedup can't see. The family has four legs, one
+operators/multimodal.MEDIA_FAMILIES row each: image dHash, the
+rotation-invariant image DCT set, audio energy contour and video
+brightness contour. Their pairs come from one banded-Hamming core in
+operators/dedup.py (hamming_band_pairs, band_rows, hamming); the
+oracles replay the planted rules and the banded pairing in DuckDB
+through one template per oracle kind (queries/dedup.banded_pairs_sql
+for the pairs), never through the Spark builders. The decode
 features are deterministic functions of the payload bytes, so the oracle
 can replay them in SQL even though Spark runs them through mapInPandas —
 this checks the full binary-column plumbing end-to-end. Oracle string
@@ -16,6 +22,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_streams_dexcom_spark.operators import multimodal as mm
+from kafka_streams_dexcom_spark.operators.dedup import (
+    SIMHASH_MAX_BUCKET,
+    band_rows,
+    hamming,
+    hamming_band_pairs,
+)
 from kafka_streams_dexcom_spark.sources.files import load_table
 
 
@@ -192,18 +204,25 @@ def q_paired_media_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 PHASH_MAX_HAMMING = 4
 
 
+def _fingerprints(
+    spark: SparkSession, sf_dir: str, family: mm.MediaFamily
+) -> DataFrame:
+    """``family``'s planted corpus over the documents, synthesized and
+    fingerprinted: two chained Arrow stages over one scan."""
+    docs = load_table(spark, sf_dir, "documents")
+    return mm.media_fingerprints(family, mm.media_payload(family, docs))
+
+
 def q_multimodal_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-image perceptual fingerprint (dHash) over REAL PNG bytes —
     the decode->luma->downsample->difference-hash path end to end
-    (operators/multimodal.py:phash_features over the vendored codec).
-    The planted corpus (attach_phash_payload) re-encodes each pixel
-    group three ways (gray PNG / RGB PNG / perturbed gray PNG), so the
-    gray and RGB variants of a group MUST emit the identical
-    fingerprint: the oracle replays the pixel arithmetic per (group,
-    perturbed) key and any codec, luma, downsample, or bit-order drift
-    fails the hash."""
-    media = mm.attach_phash_payload(load_table(spark, sf_dir, "documents"))
-    return mm.phash_features(media).select(
+    (the operators/multimodal.py IMAGE row over the vendored codec).
+    The planted corpus re-encodes each pixel group three ways (gray PNG
+    / RGB PNG / perturbed gray PNG), so the gray and RGB variants of a
+    group MUST emit the identical fingerprint: the oracle replays the
+    pixel arithmetic per (group, perturbed) key and any codec, luma,
+    downsample, or bit-order drift fails the hash."""
+    return _fingerprints(spark, sf_dir, mm.IMAGE).select(
         "doc_id", "variant", "phash_hex"
     )
 
@@ -223,56 +242,26 @@ def q_multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     artifact (_fp_artifact: ONE Arrow decode pass per modality per
     corpus, shared by every pair/survivor consumer — the cluster_map
     discipline; payloads never shuffle); candidate generation is one
-    groupBy on (band_idx,
-    band_val) — 65536 buckets per band — with pairs emitted only
-    inside buckets; the exact Hamming check is integer XOR popcounts
-    on the 8-byte fingerprint halves. No all-pairs anywhere; the
-    SIMHASH_MAX_BUCKET cap bounds degenerate buckets (e.g. flat-color
-    frames) at 100 TB."""
+    groupBy on (band_idx, band_val) — 65536 buckets per band — with
+    pairs emitted only inside buckets; the exact Hamming check is
+    integer XOR popcounts on the four band ints. No all-pairs anywhere;
+    the SIMHASH_MAX_BUCKET cap bounds degenerate buckets (e.g.
+    flat-color frames) at 100 TB."""
     return _banded_pairs(_fp_artifact(spark, sf_dir, "image"))
 
 
 def _banded_pairs(fp: DataFrame) -> DataFrame:
     """4×16-bit Hamming-banded candidate pairs + exact popcount verify
-    over a (doc_id, b0..b3) fingerprint frame — one blocking plan for
-    every 64-bit perceptual hash family (image dHash, audio contour)."""
-    from kafka_streams_dexcom_spark.operators.dedup import (
-        SIMHASH_MAX_BUCKET,
-        pairs_within_buckets,
-    )
-
-    bands_df = fp.select(
-        "doc_id",
-        "b0",
-        "b1",
-        "b2",
-        "b3",
-        F.posexplode(
-            F.array(F.col("b0"), F.col("b1"), F.col("b2"), F.col("b3"))
-        ).alias("band_idx", "band_val"),
-    )
-    pairs = pairs_within_buckets(
-        bands_df,
-        ["band_idx", "band_val"],
-        F.struct(
-            F.col("doc_id").alias("id"), "b0", "b1", "b2", "b3"
-        ),
+    over a (doc_id, b0..b3) fingerprint frame: operators/dedup's
+    hamming_band_pairs with the four words as their own bands, for
+    every single-fingerprint family (image dHash, audio contour, video
+    contour)."""
+    return hamming_band_pairs(
+        fp,
+        words=mm.PHASH_WORDS,
+        bands=mm.PHASH_WORDS,
+        max_hamming=PHASH_MAX_HAMMING,
         max_bucket=SIMHASH_MAX_BUCKET,
-    )
-    ham = F.expr(
-        "CAST(bit_count(pair_a.b0 ^ pair_b.b0)"
-        " + bit_count(pair_a.b1 ^ pair_b.b1)"
-        " + bit_count(pair_a.b2 ^ pair_b.b2)"
-        " + bit_count(pair_a.b3 ^ pair_b.b3) AS BIGINT)"
-    )
-    return (
-        pairs.select(
-            F.col("pair_a.id").alias("id_a"),
-            F.col("pair_b.id").alias("id_b"),
-            ham.alias("hamming"),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= PHASH_MAX_HAMMING)
     )
 
 
@@ -280,19 +269,16 @@ def q_multimodal_phash_dct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rotation-invariant DCT perceptual fingerprint SET over REAL PNG
     bytes (functions/dct.py): 8 rows per image — one per dihedral
     orientation of the integer 8x8 DCT low-frequency block, each a
-    64-bit lower-median sign hash. The planted corpus
-    (attach_dct_phash_payload) re-encodes each group as base gray /
-    90-degree-ROTATED / dithered+brightened PNGs: the rotated re-post
-    shares zero payload bytes yet produces the IDENTICAL fingerprint
-    set (the D4 orbit of the coefficient matrix is closed — exact
-    integer algebra, no canonicalization boundary), while the image
-    dHash lands ~32/64 bits away on it (the miss pinned in
-    tests/test_multimodal_dct.py). The oracle replays pixels, integer
-    DCT, orientation remaps, and median thresholds from the md5 rule."""
-    media = mm.attach_dct_phash_payload(
-        load_table(spark, sf_dir, "documents")
-    )
-    return mm.dct_phash_features(media).select(
+    64-bit lower-median sign hash. The planted corpus (the IMAGE_DCT
+    row) re-encodes each group as base gray / 90-degree-ROTATED /
+    dithered+brightened PNGs: the rotated re-post shares zero payload
+    bytes yet produces the IDENTICAL fingerprint set (the D4 orbit of
+    the coefficient matrix is closed — exact integer algebra, no
+    canonicalization boundary), while the image dHash lands ~32/64 bits
+    away on it (the miss pinned in tests/test_multimodal_dct.py). The
+    oracle replays pixels, integer DCT, orientation remaps, and median
+    thresholds from the md5 rule."""
+    return _fingerprints(spark, sf_dir, mm.IMAGE_DCT).select(
         "doc_id", "variant", "orient", "phash_hex"
     )
 
@@ -304,9 +290,9 @@ def q_multimodal_phash_dct_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dithered re-encode within PHASH_MAX_HAMMING. Pairing is min-over-
     orientations Hamming: side L contributes each doc's orientation-0
     fingerprint, side R all 8, candidates collide on any 16-bit band
-    (the _banded_pairs machinery with the same hot-bucket cap), and
-    the pair keeps min Hamming over every matched orientation — exact
-    on rotations because the re-post's SET equals the original's.
+    (the same band rows and hot-bucket cap as _banded_pairs), and the
+    pair keeps min Hamming over every matched orientation — exact on
+    rotations because the re-post's SET equals the original's.
 
     Scale shape: fingerprints from the per-session artifact (ONE
     decode pass; payloads never shuffle); the R side is 8 narrow rows
@@ -322,40 +308,25 @@ def _banded_pairs_oriented(fp: DataFrame) -> DataFrame:
     R = all rows; ham(L_a(0), R_b(k)) ranges over the full relative
     orbit (ham(a(j), b(0)) = ham(a(0), b(j^-1)) — the group acts by
     permutation), so min per unordered pair is orientation-complete
-    without an 8x8 cross."""
-    from kafka_streams_dexcom_spark.operators.dedup import (
-        SIMHASH_MAX_BUCKET,
-    )
-
-    def explode_bands(df: DataFrame, tag: str) -> DataFrame:
-        return df.select(
-            F.col("doc_id").alias(f"{tag}_id"),
-            *[F.col(c).alias(f"{tag}_{c}") for c in ("b0", "b1", "b2", "b3")],
-            F.posexplode(
-                F.array(F.col("b0"), F.col("b1"), F.col("b2"), F.col("b3"))
-            ).alias("band_idx", "band_val"),
-        )
-
-    left = explode_bands(fp.filter(F.col("orient") == 0), "l")
-    right = explode_bands(fp, "r")
+    without an 8x8 cross. A two-sided band join on operators/dedup's
+    band_rows and hamming; its cap drops hot R-side buckets."""
+    words = mm.PHASH_WORDS
+    left = band_rows(fp.filter(F.col("orient") == 0), words, words, "l_")
+    right = band_rows(fp, words, words, "r_")
     bsz = right.groupBy("band_idx", "band_val").agg(
         F.count(F.lit(1)).alias("c")
     )
-    ham = F.expr(
-        "CAST(bit_count(l_b0 ^ r_b0) + bit_count(l_b1 ^ r_b1)"
-        " + bit_count(l_b2 ^ r_b2) + bit_count(l_b3 ^ r_b3) AS BIGINT)"
-    )
     return (
         left.join(right, ["band_idx", "band_val"])
-        .filter(F.col("l_id") != F.col("r_id"))
+        .filter(F.col("l_doc_id") != F.col("r_doc_id"))
         .join(
             bsz.filter(F.col("c") <= SIMHASH_MAX_BUCKET),
             ["band_idx", "band_val"],
         )
         .select(
-            F.least("l_id", "r_id").alias("id_a"),
-            F.greatest("l_id", "r_id").alias("id_b"),
-            ham.alias("h"),
+            F.least("l_doc_id", "r_doc_id").alias("id_a"),
+            F.greatest("l_doc_id", "r_doc_id").alias("id_b"),
+            hamming("l_", "r_", words).alias("h"),
         )
         .groupBy("id_a", "id_b")
         .agg(F.min("h").alias("hamming"))
@@ -372,10 +343,7 @@ def q_audio_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes, identical contour), and a one-sample perturbation: mono and
     stereo MUST fingerprint identically, and the oracle replays every
     energy integer from the md5 sample rule."""
-    media = mm.attach_audio_phash_payload(
-        load_table(spark, sf_dir, "documents")
-    )
-    return mm.audio_phash_features(media).select(
+    return _fingerprints(spark, sf_dir, mm.AUDIO).select(
         "doc_id", "variant", "phash_hex"
     )
 
@@ -401,10 +369,7 @@ def q_video_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-pixel perturbation: original and upscale MUST fingerprint
     identically, and the oracle replays every brightness integer from
     the md5 frame rule."""
-    media = mm.attach_video_phash_payload(
-        load_table(spark, sf_dir, "documents")
-    )
-    return mm.video_phash_features(media).select(
+    return _fingerprints(spark, sf_dir, mm.VIDEO).select(
         "doc_id", "variant", "phash_hex"
     )
 
@@ -416,19 +381,19 @@ def q_video_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     but the identical brightness contour. Same blocking plan
     (_banded_pairs), same scale shape as the image/audio twins:
     fingerprints from the shared per-session artifact, (band_idx,
-    band_val) groupBy, XOR popcount verify, hot-bucket cap. Completes
-    the perceptual-dedup modality triptych."""
+    band_val) groupBy, XOR popcount verify, hot-bucket cap."""
     return _banded_pairs(_fp_artifact(spark, sf_dir, "video"))
 
 
 def _fp_artifact(spark: SparkSession, sf_dir: str, modality: str) -> DataFrame:
-    """Per-modality perceptual fingerprint table, MATERIALIZED once per
-    (Spark application, corpus) and shared — the cluster_map discipline:
-    at 100 TB the fingerprints of a media corpus are a published
-    artifact every downstream consumer (pairing, survivor election,
-    incremental screens) reads, never a decode pass each query re-runs.
-    The parquet round-trip also cuts the mapInPandas lineage, so
-    consumers plan against a flat (doc_id, b0..b3) scan."""
+    """Per-modality perceptual fingerprint table (``modality`` names a
+    mm.MEDIA_FAMILIES row), MATERIALIZED once per (Spark application,
+    corpus) and shared — the cluster_map discipline: at 100 TB the
+    fingerprints of a media corpus are a published artifact every
+    downstream consumer (pairing, survivor election, incremental
+    screens) reads, never a decode pass each query re-runs. The parquet
+    round-trip also cuts the mapInPandas lineage, so consumers plan
+    against a flat (doc_id, b0..b3) scan."""
     import os
 
     from kafka_streams_dexcom_spark.sources.files import (
@@ -436,18 +401,6 @@ def _fp_artifact(spark: SparkSession, sf_dir: str, modality: str) -> DataFrame:
         session_artifact,
     )
 
-    builders = {
-        "image": lambda d: mm.phash_features(mm.attach_phash_payload(d)),
-        "audio": lambda d: mm.audio_phash_features(
-            mm.attach_audio_phash_payload(d)
-        ),
-        "video": lambda d: mm.video_phash_features(
-            mm.attach_video_phash_payload(d)
-        ),
-        "image_dct": lambda d: mm.dct_phash_features(
-            mm.attach_dct_phash_payload(d)
-        ),
-    }
     return session_artifact(
         spark,
         f"phash_fp_{modality}",
@@ -455,29 +408,29 @@ def _fp_artifact(spark: SparkSession, sf_dir: str, modality: str) -> DataFrame:
             os.path.abspath(sf_dir),
             corpus_fingerprint(os.path.join(sf_dir, "documents.parquet")),
         ),
-        lambda: builders[modality](load_table(spark, sf_dir, "documents")),
+        lambda: _fingerprints(spark, sf_dir, mm.MEDIA_FAMILIES[modality]),
     )
 
 
 def q_phash_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The perceptual dedup pipeline's final materialization, across
-    ALL FOUR perceptual legs: every (modality, doc) mapped to its
-    near-dup cluster canonical (min doc_id of its perceptual component
-    via exact connected components; its own id when it has no
-    near-dup) and the keep/drop decision — the media twin of
-    dedup_survivors, the row a 100 TB media dedup job actually writes
-    back out. Round 12 adds the rotation-invariant image_dct leg
-    (oriented min-Hamming pairs), so a rotated re-post now loses its
+    ALL FOUR perceptual legs (one per mm.MEDIA_FAMILIES row): every
+    (modality, doc) mapped to its near-dup cluster canonical (min
+    doc_id of its perceptual component via exact connected components;
+    its own id when it has no near-dup) and the keep/drop decision —
+    the media twin of dedup_survivors, the row a 100 TB media dedup job
+    actually writes back out. The rotation-invariant image_dct leg
+    pairs by oriented min-Hamming, so a rotated re-post loses its
     survivor election too.
 
     Scale shape: fingerprints come from the per-session published
     artifact (_fp_artifact — ONE Arrow decode pass per modality per
     corpus, shared with every other consumer; payload bytes never
-    shuffle), then four banded pair plans (the _banded_pairs blocking
-    with the hot-bucket cap), four pointer-doubling CCs over pair
-    graphs that are linear in docs (each connects a handful of
-    re-encodes), and doc_id-keyed hash joins of the narrow label
-    tables. No leg's work gates another's — at cluster scale the
+    shuffle), then four banded pair plans (the operators/dedup band
+    core with the hot-bucket cap), one pointer-doubling CC over the
+    union of pair graphs that are linear in docs (each connects a
+    handful of re-encodes), and doc_id-keyed hash joins of the narrow
+    label tables. No leg's work gates another's — at cluster scale the
     legs schedule concurrently."""
     from kafka_streams_dexcom_spark.operators.graph import (
         CC_SINGLE_TASK_EDGES,
@@ -486,23 +439,22 @@ def q_phash_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     ids = docs.select("doc_id")
-    names = ("image", "audio", "video", "image_dct")
-    # Round-12 (guide §2.4/§2.6): ONE connected-components invocation
-    # over the union of the four per-leg pair graphs instead of four.
-    # The legs are disjoint by construction, so prefixing node ids with
-    # the leg index (doc_id·4 + leg) yields the identical labels — a
-    # component's min composite id decodes to the leg's min doc_id —
-    # while paying the CC machinery (edge materialization + count +
-    # label loop / single-task dispatch + survivor join) once instead
-    # of four times. The single-task dispatch bound scales by the
-    # number of merged legs, keeping the PER-LEG work bound the
-    # measured constant.
+    names = tuple(mm.MEDIA_FAMILIES)
+    # ONE connected-components invocation over the union of the four
+    # per-leg pair graphs instead of four. The legs are disjoint by
+    # construction, so prefixing node ids with the leg index (doc_id·4
+    # + leg) yields the identical labels — a component's min composite
+    # id decodes to the leg's min doc_id — while paying the CC
+    # machinery (edge materialization + count + label loop /
+    # single-task dispatch + survivor join) once instead of four times.
+    # The single-task dispatch bound scales by the number of merged
+    # legs, keeping the PER-LEG work bound the measured constant.
     allp = None
-    for idx, name in enumerate(names):
+    for idx, (name, family) in enumerate(mm.MEDIA_FAMILIES.items()):
         fp = _fp_artifact(spark, sf_dir, name)
         pairs = (
             _banded_pairs_oriented(fp)
-            if name == "image_dct"
+            if family.oriented
             else _banded_pairs(fp)
         )
         tagged = pairs.select(
@@ -543,140 +495,115 @@ def q_phash_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _phash_duck_cte() -> str:
-    """DuckDB replay of the planted pixel rule + dHash, per (group,
-    perturbed) key: the same md5-derived source bytes the Spark synth
-    encodes into PNGs, the same integer 2x2 box downsample, the same
-    bit order, as four 16-bit band ints."""
-    w, h = mm.PHASH_SRC_W, mm.PHASH_SRC_H
-    n = w * h
-    base = (
-        "CAST('0x' || substr(md5('ph:' || CAST(g AS VARCHAR) || ':' || "
-        "CAST(p // 16 AS VARCHAR)), CAST(2 * (p % 16) + 1 AS INT), 2) "
-        "AS INT)"
+# ------------------------------------------------ DuckDB fingerprint replay
+# One template per oracle kind: every family's CTE builds
+# ph_fp(g, k, o, b0..b3) from ph_keys(g, k), where k is the variant whose
+# source the doc was encoded from (v0 and v1 share one source in the
+# single-fingerprint families) and o the orientation. The SQL is written
+# from the planted rules, not from the Spark builders.
+
+
+def _md5_byte_sql(tag: str, i: str) -> str:
+    """Byte ``i`` of group g's md5 stream under ``tag`` (mm.md5_bytes)."""
+    return (
+        f"CAST('0x' || substr(md5('{tag}:' || CAST(g AS VARCHAR) || ':' "
+        f"|| CAST(({i}) // 16 AS VARCHAR)), "
+        f"CAST(2 * (({i}) % 16) + 1 AS INT), 2) AS BIGINT)"
     )
-    src = (
-        f"list_transform(range(0, {n}), p -> "
-        f"CASE WHEN pert = 1 AND p = 0 "
-        f"THEN ({base} + {mm.PHASH_PERTURB}) % 256 "
-        f"ELSE {base} END)"
+
+
+def _planted_sql(tag: str, i: str) -> str:
+    """Byte ``i`` of the planted source, byte 0 perturbed on k = 2."""
+    b = _md5_byte_sql(tag, i)
+    return (
+        f"CASE WHEN k = 2 AND ({i}) = 0 "
+        f"THEN ({b} + {mm.PHASH_PERTURB}) % 256 ELSE {b} END"
     )
+
+
+def _bands_sql(bit) -> str:
+    """b0..b3 columns from ``bit(k)``, the SQL condition of bit k."""
+    return ", ".join(
+        "("
+        + " + ".join(
+            f"CASE WHEN {bit(16 * b + t)} THEN {1 << t} ELSE 0 END"
+            for t in range(16)
+        )
+        + f") AS b{b}"
+        for b in range(4)
+    )
+
+
+def _image_fp_sql() -> str:
+    """dHash: 16x18 source, integer 2x2 box downsample to 8x9, bit
+    (r, c) = d[r][c] > d[r][c+1]."""
+    w, n = mm.PHASH_SRC_W, mm.PHASH_SRC_W * mm.PHASH_SRC_H
     x = f"(({w} * 2) * (q // 9) + 2 * (q % 9) + 1)"
     d72 = (
         f"list_transform(range(0, 72), q -> "
         f"(s[{x}] + s[{x} + 1] + s[{x} + {w}] + s[{x} + {w + 1}]) // 4)"
     )
-    band_exprs = []
-    for b in range(4):
-        terms = []
-        for t in range(16):
-            k = 16 * b + t
-            r, c = k // 8, k % 8
-            terms.append(
-                f"CASE WHEN d[{r * 9 + c + 1}] > d[{r * 9 + c + 2}] "
-                f"THEN {1 << t} ELSE 0 END"
-            )
-        band_exprs.append("(" + " + ".join(terms) + f") AS b{b}")
+
+    def bit(k: int) -> str:
+        r, c = k // 8, k % 8
+        return f"d[{r * 9 + c + 1}] > d[{r * 9 + c + 2}]"
+
+    src = f"list_transform(range(0, {n}), p -> {_planted_sql('ph', 'p')})"
     return f"""
-        ph_docs AS (
-            SELECT doc_id, doc_id // {mm.PHASH_GROUP} AS g,
-                   CASE WHEN doc_id % {mm.PHASH_GROUP} = 2
-                        THEN 1 ELSE 0 END AS pert,
-                   CAST(doc_id % {mm.PHASH_GROUP} AS BIGINT) AS variant
-            FROM documents
-        ),
-        ph_keys AS (SELECT DISTINCT g, pert FROM ph_docs),
-        ph_src AS (SELECT g, pert, {src} AS s FROM ph_keys),
-        ph_d AS (SELECT g, pert, {d72} AS d FROM ph_src),
-        ph_fp AS (
-            SELECT g, pert, {", ".join(band_exprs)} FROM ph_d
-        )
+        ph_src AS (SELECT g, k, {src} AS s FROM ph_keys),
+        ph_d AS (SELECT g, k, {d72} AS d FROM ph_src),
+        ph_fp AS (SELECT g, k, 0 AS o, {_bands_sql(bit)} FROM ph_d)
     """
 
 
-def _phash_oracle() -> str:
+def _contour_fp_sql(tag: str, frames: int, n: int, energy) -> str:
+    """Contour families: frame f's energy is ``energy(px)`` over the
+    list ``px`` of its ``n`` planted bytes, bit k = e[k+1] > e[k]."""
+    byte = _planted_sql(tag, f"f * {n} + j")
+    px = f"list_transform(range(0, {n}), j -> {byte})"
+    e = (
+        f"list_transform(range(0, {frames}), f -> "
+        f"CAST({energy(px)} AS BIGINT))"
+    )
+    bands = _bands_sql(lambda k: f"e[{k + 2}] > e[{k + 1}]")
     return f"""
-        WITH {_phash_duck_cte()}
-        SELECT pd.doc_id, pd.variant,
-               lpad(hex(f.b3), 4, '0') || lpad(hex(f.b2), 4, '0') ||
-               lpad(hex(f.b1), 4, '0') || lpad(hex(f.b0), 4, '0')
-                   AS phash_hex
-        FROM ph_docs pd
-        JOIN ph_fp f ON f.g = pd.g AND f.pert = pd.pert
+        ph_e AS (SELECT g, k, {e} AS e FROM ph_keys),
+        ph_fp AS (SELECT g, k, 0 AS o, {bands} FROM ph_e)
     """
 
 
-def _banded_pairs_duck() -> str:
-    """The banded-pair replay tail over a CTE named ``fp_docs``
-    (doc_id, b0..b3) — band explode, hot-bucket cap, XOR popcount,
-    threshold. Shared by the image and audio pair oracles."""
-    from kafka_streams_dexcom_spark.operators.dedup import (
-        SIMHASH_MAX_BUCKET,
+def _audio_fp_sql() -> str:
+    """Energy contour: sample = (byte-128)*256, frame energy =
+    16*sum|byte-128| (exact: 256/APH_FRAME)."""
+    scale = 256 // mm.APH_FRAME
+    return _contour_fp_sql(
+        "aph",
+        mm.APH_FRAMES,
+        mm.APH_FRAME,
+        lambda px: f"list_sum(list_transform({px}, b -> abs(b - 128)))"
+        f" * {scale}",
     )
 
-    return f"""
-        bands_cte AS (
-            SELECT doc_id, b0, b1, b2, b3, bi AS band_idx,
-                   CASE bi WHEN 0 THEN b0 WHEN 1 THEN b1
-                        WHEN 2 THEN b2 ELSE b3 END AS band_val
-            FROM fp_docs, generate_series(0, 3) gs(bi)
-        ),
-        bsz AS (
-            SELECT band_idx, band_val, count(*) AS c
-            FROM bands_cte GROUP BY 1, 2
-        ),
-        cand AS (
-            SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-                   CAST(bit_count(xor(a.b0, b.b0))
-                        + bit_count(xor(a.b1, b.b1))
-                        + bit_count(xor(a.b2, b.b2))
-                        + bit_count(xor(a.b3, b.b3)) AS BIGINT)
-                       AS hamming
-            FROM bands_cte a JOIN bands_cte b
-              ON a.band_idx = b.band_idx AND a.band_val = b.band_val
-             AND a.doc_id < b.doc_id
-            JOIN bsz s
-              ON s.band_idx = a.band_idx AND s.band_val = a.band_val
-            WHERE s.c <= {SIMHASH_MAX_BUCKET}
-        )
-        SELECT id_a, id_b, hamming FROM cand
-        WHERE hamming <= {PHASH_MAX_HAMMING}
-    """
+
+def _video_fp_sql() -> str:
+    """Brightness contour: frame energy = sum(pixels) // 16 (the 4x4
+    area — the SAME integer the 8x8 upscale floor-means to)."""
+    area = mm.VPH_W * mm.VPH_H
+    return _contour_fp_sql(
+        "vph", mm.VPH_FRAMES, area, lambda px: f"list_sum({px}) // {area}"
+    )
 
 
-def _phash_dedup_oracle() -> str:
-    return f"""
-        WITH {_phash_duck_cte()},
-        fp_docs AS (
-            SELECT pd.doc_id, f.b0, f.b1, f.b2, f.b3
-            FROM ph_docs pd
-            JOIN ph_fp f ON f.g = pd.g AND f.pert = pd.pert
-        ),
-        {_banded_pairs_duck()}
-    """
-
-
-def _dctp_duck_cte() -> str:
-    """DuckDB replay of the DCT phash corpus: the md5 pixel rules for
-    all three variants (base / rot90 index remap / dither+brighten
-    clip), the separable integer DCT (functions/dct.py SQL twins, CTE-
-    staged so the row pass runs once per image), the 8 orientation
-    remaps, and the lower-median band ints — ends in
-    ``dctp_fp(g, v, o, b0, b1, b2, b3)``."""
+def _image_dct_fp_sql() -> str:
+    """DCT orientation set: the md5 pixel rules for all three variants
+    (base / rot90 index remap / dither+brighten clip), the separable
+    integer DCT (functions/dct.py SQL twins, CTE-staged so the row pass
+    runs once per image), the 8 orientation remaps, and the
+    lower-median bits."""
     from kafka_streams_dexcom_spark.functions import dct as dx
 
     n = dx.DCTP_N * dx.DCTP_N
-    base = (
-        "CAST('0x' || substr(md5('phd:' || CAST(g AS VARCHAR) || ':' || "
-        "CAST(i // 16 AS VARCHAR)), CAST(2 * (i % 16) + 1 AS INT), 2) "
-        "AS BIGINT)"
-    )
-    dith = (
-        "CAST('0x' || substr(md5('phdn:' || CAST(g AS VARCHAR) || ':' || "
-        "CAST(i // 16 AS VARCHAR)), CAST(2 * (i % 16) + 1 AS INT), 2) "
-        "AS BIGINT)"
-    )
-    src = f"list_transform(range(0, {n}), i -> {base})"
+    dith = _md5_byte_sql("phdn", "i")
     # np.rot90: out[r][c] = in[c][15 - r]; flat i: r=i//16, c=i%16
     rot = (
         f"list_transform(range(0, {n}), i -> "
@@ -689,255 +616,109 @@ def _dctp_duck_cte() -> str:
         f"ELSE -{mm.DCTP_DITHER} END + {mm.DCTP_BRIGHT})))"
     )
     orient_case = " ".join(
-        f"WHEN {o} THEN {dx.orient_flat_sql('c', o)}"
-        for o in range(8)
+        f"WHEN {o} THEN {dx.orient_flat_sql('c', o)}" for o in range(8)
     )
-    bands = ", ".join(
-        f"{dx.band_sql('fl', 'th', b)} AS b{b}" for b in range(4)
-    )
+    src = f"list_transform(range(0, {n}), i -> {_md5_byte_sql('phd', 'i')})"
     return f"""
-        dctp_keys AS (
-            SELECT DISTINCT doc_id // {mm.DCTP_GROUP} AS g FROM documents
-        ),
         {dx.dct_table_cte()},
-        dctp_base AS (SELECT g, {src} AS s FROM dctp_keys),
+        ph_src AS (SELECT g, k, {src} AS s FROM ph_keys),
         dctp_px AS MATERIALIZED (
-            SELECT g, 0 AS v, s AS p FROM dctp_base
-            UNION ALL SELECT g, 1, {rot} FROM dctp_base
-            UNION ALL SELECT g, 2, {redo} FROM dctp_base
+            SELECT g, k,
+                   CASE k WHEN 1 THEN {rot} WHEN 2 THEN {redo} ELSE s END AS p
+            FROM ph_src
         ),
         dctp_r AS MATERIALIZED (
-            SELECT g, v, {dx.row_pass_sql('p')} AS r
+            SELECT g, k, {dx.row_pass_sql('p')} AS r
             FROM dctp_px CROSS JOIN dct_ct
         ),
         dctp_co AS MATERIALIZED (
-            SELECT g, v, {dx.col_pass_sql('r')} AS c
+            SELECT g, k, {dx.col_pass_sql('r')} AS c
             FROM dctp_r CROSS JOIN dct_ct
         ),
         dctp_fl AS (
-            SELECT g, v, o, CASE o {orient_case} END AS fl
+            SELECT g, k, o, CASE o {orient_case} END AS fl
             FROM dctp_co, generate_series(0, 7) gs(o)
         ),
         dctp_th AS (
-            SELECT g, v, o, fl, {dx.threshold_sql('fl')} AS th
+            SELECT g, k, o, fl, {dx.threshold_sql('fl')} AS th
             FROM dctp_fl
         ),
-        dctp_fp AS MATERIALIZED (
-            SELECT g, v, o, {bands} FROM dctp_th
+        ph_fp AS MATERIALIZED (
+            SELECT g, k, o, {_bands_sql(lambda b: f"fl[{b + 1}] > th")}
+            FROM dctp_th
         )
     """
 
 
-def _dctp_oracle() -> str:
+_FP_SQL = {
+    "image": _image_fp_sql,
+    "audio": _audio_fp_sql,
+    "video": _video_fp_sql,
+    "image_dct": _image_dct_fp_sql,
+}
+
+
+def _fp_docs_sql(family: mm.MediaFamily) -> str:
+    """CTEs ending in fp_docs(doc_id, variant, orient, b0..b3): the
+    family's fingerprint replay joined back to every document."""
+    g = mm.PHASH_GROUP
+    key = (
+        f"doc_id % {g}"
+        if family.oriented
+        else f"CASE WHEN doc_id % {g} = 2 THEN 2 ELSE 0 END"
+    )
     return f"""
-        WITH {_dctp_duck_cte()}
-        SELECT d.doc_id,
-               CAST(d.doc_id % {mm.DCTP_GROUP} AS BIGINT) AS variant,
-               CAST(f.o AS BIGINT) AS orient,
-               lpad(hex(f.b3), 4, '0') || lpad(hex(f.b2), 4, '0') ||
-               lpad(hex(f.b1), 4, '0') || lpad(hex(f.b0), 4, '0')
-                   AS phash_hex
-        FROM documents d
-        JOIN dctp_fp f ON f.g = d.doc_id // {mm.DCTP_GROUP}
-                      AND f.v = d.doc_id % {mm.DCTP_GROUP}
+        ph_docs AS (
+            SELECT doc_id, doc_id // {g} AS g, {key} AS k,
+                   CAST(doc_id % {g} AS BIGINT) AS variant
+            FROM documents
+        ),
+        ph_keys AS (SELECT DISTINCT g, k FROM ph_docs),
+        {_FP_SQL[family.name]()},
+        fp_docs AS (
+            SELECT d.doc_id, d.variant, CAST(f.o AS BIGINT) AS orient,
+                   f.b0, f.b1, f.b2, f.b3
+            FROM ph_docs d JOIN ph_fp f ON f.g = d.g AND f.k = d.k
+        )
     """
 
 
-def _dctp_dedup_oracle() -> str:
-    """Oriented banded-pair replay: L = orientation-0 rows, R = all 8,
-    band collide, hot-bucket cap on the R side, min XOR-popcount over
-    matched orientations per unordered pair."""
+def _fp_oracle(family: mm.MediaFamily) -> str:
+    orient = "orient, " if family.oriented else ""
+    return f"""
+        WITH {_fp_docs_sql(family)}
+        SELECT doc_id, variant, {orient}
+               lpad(hex(b3), 4, '0') || lpad(hex(b2), 4, '0') ||
+               lpad(hex(b1), 4, '0') || lpad(hex(b0), 4, '0')
+                   AS phash_hex
+        FROM fp_docs
+    """
+
+
+def _fp_dedup_oracle(family: mm.MediaFamily) -> str:
+    """The banded-pair replay (queries/dedup.banded_pairs_sql) over the
+    family's fingerprints: plain, or min-over-orientations for DCT."""
     from kafka_streams_dexcom_spark.operators.dedup import (
         SIMHASH_MAX_BUCKET,
     )
+    from kafka_streams_dexcom_spark.queries.dedup import banded_pairs_sql
 
-    return f"""
-        WITH {_dctp_duck_cte()},
-        fp_docs AS (
-            SELECT d.doc_id, f.o AS orient, f.b0, f.b1, f.b2, f.b3
-            FROM documents d
-            JOIN dctp_fp f ON f.g = d.doc_id // {mm.DCTP_GROUP}
-                          AND f.v = d.doc_id % {mm.DCTP_GROUP}
-        ),
-        l_bands AS (
-            SELECT doc_id, b0, b1, b2, b3, bi AS band_idx,
-                   CASE bi WHEN 0 THEN b0 WHEN 1 THEN b1
-                        WHEN 2 THEN b2 ELSE b3 END AS band_val
-            FROM fp_docs, generate_series(0, 3) gs(bi)
-            WHERE orient = 0
-        ),
-        r_bands AS (
-            SELECT doc_id, b0, b1, b2, b3, bi AS band_idx,
-                   CASE bi WHEN 0 THEN b0 WHEN 1 THEN b1
-                        WHEN 2 THEN b2 ELSE b3 END AS band_val
-            FROM fp_docs, generate_series(0, 3) gs(bi)
-        ),
-        bsz AS (
-            SELECT band_idx, band_val, count(*) AS c
-            FROM r_bands GROUP BY 1, 2
-        ),
-        cand AS (
-            SELECT least(l.doc_id, r.doc_id) AS id_a,
-                   greatest(l.doc_id, r.doc_id) AS id_b,
-                   CAST(bit_count(xor(l.b0, r.b0))
-                        + bit_count(xor(l.b1, r.b1))
-                        + bit_count(xor(l.b2, r.b2))
-                        + bit_count(xor(l.b3, r.b3)) AS BIGINT) AS h
-            FROM l_bands l JOIN r_bands r
-              ON l.band_idx = r.band_idx AND l.band_val = r.band_val
-             AND l.doc_id <> r.doc_id
-            JOIN bsz s
-              ON s.band_idx = l.band_idx AND s.band_val = l.band_val
-            WHERE s.c <= {SIMHASH_MAX_BUCKET}
-        )
-        SELECT id_a, id_b, min(h) AS hamming
-        FROM cand GROUP BY id_a, id_b
-        HAVING min(h) <= {PHASH_MAX_HAMMING}
-    """
-
-
-def _aph_duck_cte() -> str:
-    """DuckDB replay of the planted audio sample rule + energy contour,
-    per (group, perturbed) key: byte i of md5('aph:<g>:<i//16>'),
-    sample = (byte−128)·256, frame energy = 16·Σ|byte−128| (exact:
-    256/APH_FRAME), bit k = e[k+1] > e[k]."""
-    n_frames, frame = mm.APH_FRAMES, mm.APH_FRAME
-    base_j = (
-        "CAST('0x' || substr(md5('aph:' || CAST(g AS VARCHAR) || ':' || "
-        "CAST((f * 16 + j) // 16 AS VARCHAR)), "
-        "CAST(2 * ((f * 16 + j) % 16) + 1 AS INT), 2) AS INT)"
+    pairs = banded_pairs_sql(
+        "fp_docs",
+        words=mm.PHASH_WORDS,
+        bands=mm.PHASH_WORDS,
+        max_hamming=PHASH_MAX_HAMMING,
+        max_bucket=SIMHASH_MAX_BUCKET,
+        oriented=family.oriented,
     )
-    byte_j = (
-        f"CASE WHEN pert = 1 AND f * {frame} + j = 0 "
-        f"THEN ({base_j} + {mm.APH_PERTURB}) % 256 ELSE {base_j} END"
-    )
-    e = (
-        f"list_transform(range(0, {n_frames}), f -> "
-        f"CAST(list_sum(list_transform(range(0, {frame}), "
-        f"j -> abs({byte_j} - 128))) * {256 // frame} AS BIGINT))"
-    )
-    band_exprs = []
-    for b in range(4):
-        terms = []
-        for t in range(16):
-            k = 16 * b + t
-            terms.append(
-                f"CASE WHEN e[{k + 2}] > e[{k + 1}] "
-                f"THEN {1 << t} ELSE 0 END"
-            )
-        band_exprs.append("(" + " + ".join(terms) + f") AS b{b}")
     return f"""
-        ph_docs AS (
-            SELECT doc_id, doc_id // {mm.PHASH_GROUP} AS g,
-                   CASE WHEN doc_id % {mm.PHASH_GROUP} = 2
-                        THEN 1 ELSE 0 END AS pert,
-                   CAST(doc_id % {mm.PHASH_GROUP} AS BIGINT) AS variant
-            FROM documents
-        ),
-        ph_keys AS (SELECT DISTINCT g, pert FROM ph_docs),
-        ph_e AS (SELECT g, pert, {e} AS e FROM ph_keys),
-        ph_fp AS (
-            SELECT g, pert, {", ".join(band_exprs)} FROM ph_e
-        )
-    """
-
-
-def _audio_phash_oracle() -> str:
-    return f"""
-        WITH {_aph_duck_cte()}
-        SELECT pd.doc_id, pd.variant,
-               lpad(hex(f.b3), 4, '0') || lpad(hex(f.b2), 4, '0') ||
-               lpad(hex(f.b1), 4, '0') || lpad(hex(f.b0), 4, '0')
-                   AS phash_hex
-        FROM ph_docs pd
-        JOIN ph_fp f ON f.g = pd.g AND f.pert = pd.pert
-    """
-
-
-def _audio_phash_dedup_oracle() -> str:
-    return f"""
-        WITH {_aph_duck_cte()},
-        fp_docs AS (
-            SELECT pd.doc_id, f.b0, f.b1, f.b2, f.b3
-            FROM ph_docs pd
-            JOIN ph_fp f ON f.g = pd.g AND f.pert = pd.pert
-        ),
-        {_banded_pairs_duck()}
-    """
-
-
-def _vph_duck_cte() -> str:
-    """DuckDB replay of the planted video frame rule + brightness
-    contour, per (group, perturbed) key: pixel j of frame f is byte j
-    of md5('vph:<g>:<f>'), frame energy = Σpixels // 16 (the 4x4
-    area — the SAME integer the 8x8 upscale floor-means to), bit k =
-    e[k+1] > e[k]."""
-    n_frames, area = mm.VPH_FRAMES, mm.VPH_W * mm.VPH_H
-    base_j = (
-        "CAST('0x' || substr(md5('vph:' || CAST(g AS VARCHAR) || ':' || "
-        "CAST(f AS VARCHAR)), CAST(2 * j + 1 AS INT), 2) AS INT)"
-    )
-    byte_j = (
-        f"CASE WHEN pert = 1 AND f * {area} + j = 0 "
-        f"THEN ({base_j} + {mm.VPH_PERTURB}) % 256 ELSE {base_j} END"
-    )
-    e = (
-        f"list_transform(range(0, {n_frames}), f -> "
-        f"CAST(list_sum(list_transform(range(0, {area}), "
-        f"j -> {byte_j})) // {area} AS BIGINT))"
-    )
-    band_exprs = []
-    for b in range(4):
-        terms = []
-        for t in range(16):
-            k = 16 * b + t
-            terms.append(
-                f"CASE WHEN e[{k + 2}] > e[{k + 1}] "
-                f"THEN {1 << t} ELSE 0 END"
-            )
-        band_exprs.append("(" + " + ".join(terms) + f") AS b{b}")
-    return f"""
-        ph_docs AS (
-            SELECT doc_id, doc_id // {mm.PHASH_GROUP} AS g,
-                   CASE WHEN doc_id % {mm.PHASH_GROUP} = 2
-                        THEN 1 ELSE 0 END AS pert,
-                   CAST(doc_id % {mm.PHASH_GROUP} AS BIGINT) AS variant
-            FROM documents
-        ),
-        ph_keys AS (SELECT DISTINCT g, pert FROM ph_docs),
-        ph_e AS (SELECT g, pert, {e} AS e FROM ph_keys),
-        ph_fp AS (
-            SELECT g, pert, {", ".join(band_exprs)} FROM ph_e
-        )
-    """
-
-
-def _video_phash_oracle() -> str:
-    return f"""
-        WITH {_vph_duck_cte()}
-        SELECT pd.doc_id, pd.variant,
-               lpad(hex(f.b3), 4, '0') || lpad(hex(f.b2), 4, '0') ||
-               lpad(hex(f.b1), 4, '0') || lpad(hex(f.b0), 4, '0')
-                   AS phash_hex
-        FROM ph_docs pd
-        JOIN ph_fp f ON f.g = pd.g AND f.pert = pd.pert
-    """
-
-
-def _video_phash_dedup_oracle() -> str:
-    return f"""
-        WITH {_vph_duck_cte()},
-        fp_docs AS (
-            SELECT pd.doc_id, f.b0, f.b1, f.b2, f.b3
-            FROM ph_docs pd
-            JOIN ph_fp f ON f.g = pd.g AND f.pert = pd.pert
-        ),
-        {_banded_pairs_duck()}
+        WITH {_fp_docs_sql(family)}, {pairs}
+        SELECT id_a, id_b, hamming FROM pairs
     """
 
 
 def _phash_survivors_oracle() -> str:
-    """Composes the three modality pair oracles zero-glue (each full
+    """Composes the four modality pair oracles zero-glue (each full
     pair query nests as a derived-table CTE, so their internal CTE
     names never collide), then runs the pointer-doubling CC chain once
     per modality. rounds=16 covers min-label paths of 2^16 hops — far
@@ -947,18 +728,13 @@ def _phash_survivors_oracle() -> str:
     silently labeling singletons."""
     from kafka_streams_dexcom_spark.queries.dedup import cc_doubling_sql
 
-    legs = {
-        "img": _phash_dedup_oracle(),
-        "aud": _audio_phash_dedup_oracle(),
-        "vid": _video_phash_dedup_oracle(),
-        "dct": _dctp_dedup_oracle(),
-    }
-    parts = []
-    for tag, pair_q in legs.items():
+    parts, leg_selects = [], []
+    for tag, family in mm.MEDIA_FAMILIES.items():
         # MATERIALIZED is load-bearing: DuckDB inlines plain CTEs, and
         # every CC layer references the edge list twice — inlined, the
         # 16 layers would re-run the whole pair oracle ~32x per leg
         # (measured 274s -> the materialized form is seconds)
+        pair_q = _fp_dedup_oracle(family)
         parts.append(f"{tag}_pairs AS MATERIALIZED ({pair_q})")
         parts.append(
             f"""{tag}_edges AS MATERIALIZED (
@@ -975,20 +751,15 @@ def _phash_survivors_oracle() -> str:
                 FROM comp
             )"""
         )
-    leg_selects = []
-    for tag, modality in (
-        ("img", "image"), ("aud", "audio"), ("vid", "video"),
-        ("dct", "image_dct"),
-    ):
         leg_selects.append(
-            f"""SELECT '{modality}' AS modality, d.doc_id,
+            f"""SELECT '{tag}' AS modality, d.doc_id,
                    COALESCE(c.component, d.doc_id) AS canonical_id
             FROM documents d
             LEFT JOIN {tag}_comp c ON c.node = d.doc_id"""
         )
     guards = " AND ".join(
         f"(SELECT COALESCE(MAX(bad), 0) FROM {tag}_comp) = 0"
-        for tag in legs
+        for tag in mm.MEDIA_FAMILIES
     )
     return f"""
         WITH {", ".join(parts)},
@@ -1059,14 +830,14 @@ def _paired_media_audit_oracle() -> str:
 
 ORACLES = {
     "paired_media_audit": _paired_media_audit_oracle(),
-    "multimodal_phash": _phash_oracle(),
-    "multimodal_phash_dedup": _phash_dedup_oracle(),
-    "multimodal_phash_dct": _dctp_oracle(),
-    "multimodal_phash_dct_dedup": _dctp_dedup_oracle(),
-    "audio_phash": _audio_phash_oracle(),
-    "audio_phash_dedup": _audio_phash_dedup_oracle(),
-    "video_phash": _video_phash_oracle(),
-    "video_phash_dedup": _video_phash_dedup_oracle(),
+    "multimodal_phash": _fp_oracle(mm.IMAGE),
+    "multimodal_phash_dedup": _fp_dedup_oracle(mm.IMAGE),
+    "multimodal_phash_dct": _fp_oracle(mm.IMAGE_DCT),
+    "multimodal_phash_dct_dedup": _fp_dedup_oracle(mm.IMAGE_DCT),
+    "audio_phash": _fp_oracle(mm.AUDIO),
+    "audio_phash_dedup": _fp_dedup_oracle(mm.AUDIO),
+    "video_phash": _fp_oracle(mm.VIDEO),
+    "video_phash_dedup": _fp_dedup_oracle(mm.VIDEO),
     "phash_survivors": _phash_survivors_oracle(),
     "video_avi_frames": """
         WITH b AS (

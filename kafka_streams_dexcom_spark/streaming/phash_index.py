@@ -17,8 +17,10 @@ the SemClusterMaintainer shape on the Hamming geometry:
    (band_idx, band_val) bucket — the corpus pair graph is never
    revisited (a cross-batch near-dup (a earlier, b later) is found
    when b's batch probes the stored members of its bucket);
-3. verify with the exact popcount arithmetic of _banded_pairs at
-   ``max_hamming``;
+3. verify at ``max_hamming`` with the batch queries' own core
+   (operators/dedup.py): batch x batch is hamming_band_pairs, the
+   probe of the stored side joins the same band_rows and filters on
+   the same hamming expression;
 4. fold verified edges into the stored labeling with
    cc_incremental_delta — only created/changed label rows are written
    (the changelog shape of cluster_map_stream);
@@ -52,8 +54,11 @@ from pyspark.sql import functions as F
 
 from kafka_streams_dexcom_spark.operators.dedup import (
     SIMHASH_MAX_BUCKET,
-    pairs_within_buckets,
+    band_rows,
+    hamming,
+    hamming_band_pairs,
 )
+from kafka_streams_dexcom_spark.operators.multimodal import PHASH_WORDS
 from kafka_streams_dexcom_spark.streaming.cluster_map_stream import (
     LabelChangelogMaintainer,
 )
@@ -61,27 +66,6 @@ from kafka_streams_dexcom_spark.streaming.cluster_map_stream import (
 _FP_SCHEMA = (
     "doc_id long, b0 long, b1 long, b2 long, b3 long"
 )
-
-_HAM_TPL = (
-    "CAST(bit_count({a}0 ^ {b}0) + bit_count({a}1 ^ {b}1)"
-    " + bit_count({a}2 ^ {b}2) + bit_count({a}3 ^ {b}3) AS BIGINT)"
-)
-
-
-def _bands(fp: DataFrame, prefix: str) -> DataFrame:
-    """(doc_id, b0..b3) -> one row per (band_idx, band_val), fingerprint
-    columns renamed to <prefix>0..3 so the two sides of the probe join
-    stay unambiguous."""
-    return fp.select(
-        F.col("doc_id"),
-        F.col("b0").alias(f"{prefix}0"),
-        F.col("b1").alias(f"{prefix}1"),
-        F.col("b2").alias(f"{prefix}2"),
-        F.col("b3").alias(f"{prefix}3"),
-        F.posexplode(
-            F.array(F.col("b0"), F.col("b1"), F.col("b2"), F.col("b3"))
-        ).alias("band_idx", "band_val"),
-    )
 
 
 class PhashIndexMaintainer(LabelChangelogMaintainer):
@@ -142,13 +126,11 @@ class PhashIndexMaintainer(LabelChangelogMaintainer):
     def _prepare(self, batch_df: DataFrame) -> DataFrame:
         # the batch artifact depends only on the batch: materialized
         # once, reused by every rebase
-        return batch_df.select(
-            "doc_id", "b0", "b1", "b2", "b3"
-        ).localCheckpoint()
+        return batch_df.select("doc_id", *PHASH_WORDS).localCheckpoint()
 
     def _stage(self, bn: DataFrame, base: int) -> tuple:
-        batch_bands = _bands(bn, "ba_b")
-        stored_bands = _bands(self.fingerprints(base), "bb_b")
+        words = PHASH_WORDS
+        stored = band_rows(self.fingerprints(base), words, words, "b_")
         if self.max_bucket_probe is not None:
             # hot-bucket bound: probe only the cap-many lowest-doc_id
             # stored members per (band_idx, band_val) — stable
@@ -156,59 +138,30 @@ class PhashIndexMaintainer(LabelChangelogMaintainer):
             # docstring). row_number rides the same key the probe join
             # shuffles on.
             rep_win = Window.partitionBy("band_idx", "band_val").orderBy(
-                F.col("doc_id").asc()
+                F.col("b_doc_id").asc()
             )
-            stored_bands = (
-                stored_bands.withColumn(
-                    "_rep", F.row_number().over(rep_win)
-                )
+            stored = (
+                stored.withColumn("_rep", F.row_number().over(rep_win))
                 .filter(F.col("_rep") <= self.max_bucket_probe)
                 .drop("_rep")
             )
-        ham_cross = F.expr(_HAM_TPL.format(a="ba_b", b="bb_b"))
         cross = (
-            batch_bands.select(
-                F.col("doc_id").alias("id_a"),
-                "ba_b0", "ba_b1", "ba_b2", "ba_b3",
-                "band_idx", "band_val",
-            )
-            .join(
-                stored_bands.select(
-                    F.col("doc_id").alias("id_b"),
-                    "bb_b0", "bb_b1", "bb_b2", "bb_b3",
-                    "band_idx", "band_val",
-                ),
-                ["band_idx", "band_val"],
-            )
-            .filter(F.col("id_a") != F.col("id_b"))
-            .withColumn("hamming", ham_cross)
-            .filter(F.col("hamming") <= self.max_hamming)
-            .select("id_a", "id_b")
-            .distinct()
-        )
-        within_pairs = pairs_within_buckets(
-            _bands(bn, "b"),
-            ["band_idx", "band_val"],
-            F.struct(
-                F.col("doc_id").alias("id"), "b0", "b1", "b2", "b3"
-            ),
-            max_bucket=self.max_bucket_probe,
-        )
-        ham_within = F.expr(
-            "CAST(bit_count(pair_a.b0 ^ pair_b.b0)"
-            " + bit_count(pair_a.b1 ^ pair_b.b1)"
-            " + bit_count(pair_a.b2 ^ pair_b.b2)"
-            " + bit_count(pair_a.b3 ^ pair_b.b3) AS BIGINT)"
-        )
-        within = (
-            within_pairs.withColumn("hamming", ham_within)
-            .filter(F.col("hamming") <= self.max_hamming)
+            band_rows(bn, words, words, "a_")
+            .join(stored, ["band_idx", "band_val"])
+            .filter(F.col("a_doc_id") != F.col("b_doc_id"))
+            .filter(hamming("a_", "b_", words) <= self.max_hamming)
             .select(
-                F.col("pair_a.id").alias("id_a"),
-                F.col("pair_b.id").alias("id_b"),
+                F.col("a_doc_id").alias("id_a"), F.col("b_doc_id").alias("id_b")
             )
             .distinct()
         )
+        within = hamming_band_pairs(
+            bn,
+            words=words,
+            bands=words,
+            max_hamming=self.max_hamming,
+            max_bucket=self.max_bucket_probe,
+        ).select("id_a", "id_b")
         edges = cross.union(within).select(
             F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
         )

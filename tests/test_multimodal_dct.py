@@ -17,7 +17,7 @@ N_GROUPS = 60  # deterministic md5 corpus; enough to pin distributions
 
 
 def _square_dhash_bits(img: np.ndarray) -> np.ndarray:
-    """dhash_bands' square-raster form (same 2x2 integer box + strict
+    """dhash_bits' square-raster form (same 2x2 integer box + strict
     > discipline; the production 8x9 grid needs a 16x18 raster, which
     a rotation would turn 18x16 and crash on — itself a statement
     about orientation-bound hashes): 8x8 downsample, horizontal
@@ -114,7 +114,7 @@ def test_payload_bytes_pairwise_distinct(spark):
     groups, so every pair the DCT dedup finds is invisible to
     multimodal_dedup."""
     docs = spark.range(0, 90).select(F.col("id").alias("doc_id"))
-    media = mm.attach_dct_phash_payload(docs)
+    media = mm.media_payload(mm.IMAGE_DCT, docs)
     n_dup = (
         media.groupBy(F.md5("payload"))
         .count()
@@ -134,7 +134,9 @@ def test_dedup_query_finds_planted_pairs(spark):
     )
 
     docs = spark.range(0, 90).select(F.col("id").alias("doc_id"))
-    fp = mm.dct_phash_features(mm.attach_dct_phash_payload(docs))
+    fp = mm.media_fingerprints(
+        mm.IMAGE_DCT, mm.media_payload(mm.IMAGE_DCT, docs)
+    )
     pairs = {
         (r.id_a, r.id_b): r.hamming
         for r in _banded_pairs_oriented(fp).collect()

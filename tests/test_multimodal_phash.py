@@ -16,7 +16,7 @@ def _media(spark, n_docs=12):
     docs = spark.createDataFrame(
         [(i,) for i in range(n_docs)], "doc_id long"
     )
-    return mm.attach_phash_payload(docs)
+    return mm.media_payload(mm.IMAGE, docs)
 
 
 def test_payloads_are_real_distinct_pngs(spark):
@@ -43,7 +43,7 @@ def test_payloads_are_real_distinct_pngs(spark):
 def test_reencoded_variants_fingerprint_identically(spark):
     fp = {
         r["doc_id"]: r
-        for r in mm.phash_features(_media(spark)).collect()
+        for r in mm.media_fingerprints(mm.IMAGE, _media(spark)).collect()
     }
     for g in range(3):
         gray, rgb, pert = fp[3 * g], fp[3 * g + 1], fp[3 * g + 2]
@@ -80,7 +80,7 @@ def test_byte_dedup_blind_phash_sees(spark, sf_dir):
     from kafka_streams_dexcom_spark.sources.files import load_table
 
     docs = load_table(spark, sf_dir, "documents").limit(60)
-    media = mm.attach_phash_payload(docs)
+    media = mm.media_payload(mm.IMAGE, docs)
     byte_groups = (
         media.groupBy(F.md5("payload"))
         .agg(F.count(F.lit(1)).alias("n"))
@@ -109,7 +109,7 @@ def test_audio_reencode_fingerprints_identically(spark):
     from kafka_streams_dexcom_spark.functions.wav import wav_decode
 
     docs = spark.createDataFrame([(i,) for i in range(9)], "doc_id long")
-    media = mm.attach_audio_phash_payload(docs)
+    media = mm.media_payload(mm.AUDIO, docs)
     payloads = {r["doc_id"]: bytes(r["payload"]) for r in media.collect()}
     # genuinely different encodings of the same samples
     assert payloads[0] != payloads[1]
@@ -117,7 +117,7 @@ def test_audio_reencode_fingerprints_identically(spark):
     assert wav_decode(payloads[1])[1] == 2  # stereo
     fp = {
         r["doc_id"]: r
-        for r in mm.audio_phash_features(media).collect()
+        for r in mm.media_fingerprints(mm.AUDIO, media).collect()
     }
     for g in range(3):
         mono, stereo, pert = fp[3 * g], fp[3 * g + 1], fp[3 * g + 2]
@@ -138,9 +138,9 @@ def test_contour_bands_bit_order():
     import numpy as np
 
     inc = np.arange(mm.APH_FRAMES, dtype=np.int64)
-    assert mm.contour_bands(inc) == (0xFFFF,) * 4
+    assert mm.pack_bands(mm.contour_bits(inc)) == (0xFFFF,) * 4
     dec = inc[::-1].copy()
-    assert mm.contour_bands(dec) == (0, 0, 0, 0)
+    assert mm.pack_bands(mm.contour_bits(dec)) == (0, 0, 0, 0)
 
 
 def test_dhash_bands_bit_order():
@@ -150,10 +150,10 @@ def test_dhash_bands_bit_order():
 
     # gradient rows: every left pixel < right pixel -> all bits 0
     inc = np.tile(np.arange(0, 36, 2, dtype=np.int64), (16, 1))
-    assert mm.dhash_bands(inc) == (0, 0, 0, 0)
+    assert mm.pack_bands(mm.dhash_bits(inc)) == (0, 0, 0, 0)
     # reversed gradient -> every comparison true -> all 64 bits set
     dec = inc[:, ::-1].copy()
-    assert mm.dhash_bands(dec) == (0xFFFF,) * 4
+    assert mm.pack_bands(mm.dhash_bits(dec)) == (0xFFFF,) * 4
 
 
 def test_video_upscale_fingerprints_identically(spark):
@@ -164,7 +164,7 @@ def test_video_upscale_fingerprints_identically(spark):
     from kafka_streams_dexcom_spark.functions.avi import avi_decode
 
     docs = spark.createDataFrame([(i,) for i in range(9)], "doc_id long")
-    media = mm.attach_video_phash_payload(docs)
+    media = mm.media_payload(mm.VIDEO, docs)
     payloads = {r["doc_id"]: bytes(r["payload"]) for r in media.collect()}
     assert payloads[0] != payloads[1]
     w0, h0, f0 = avi_decode(payloads[0])
@@ -175,7 +175,7 @@ def test_video_upscale_fingerprints_identically(spark):
     assert (f1[0][::2, ::2] == f0[0]).all()
     fp = {
         r["doc_id"]: r
-        for r in mm.video_phash_features(media).collect()
+        for r in mm.media_fingerprints(mm.VIDEO, media).collect()
     }
     for g in range(3):
         base, up, pert = fp[3 * g], fp[3 * g + 1], fp[3 * g + 2]
@@ -201,7 +201,7 @@ def test_video_byte_dedup_blind_phash_sees(spark, sf_dir):
     from kafka_streams_dexcom_spark.sources.files import load_table
 
     docs = load_table(spark, sf_dir, "documents").limit(60)
-    media = mm.attach_video_phash_payload(docs)
+    media = mm.media_payload(mm.VIDEO, docs)
     byte_groups = (
         media.groupBy(F.md5("payload"))
         .agg(F.count(F.lit(1)).alias("n"))
@@ -236,7 +236,7 @@ def test_video_phash_short_clip_raises(spark):
         "doc_id long, variant long, payload binary",
     )
     with pytest.raises(Exception, match="65 frames"):
-        mm.video_phash_features(media).collect()
+        mm.media_fingerprints(mm.VIDEO, media).collect()
 
 
 def test_phash_survivors_policy(spark, sf_dir):
@@ -287,3 +287,79 @@ def test_phash_survivors_policy(spark, sf_dir):
         merged_redo,
         full_groups,
     )
+
+
+def test_one_hamming_builder_per_engine():
+    """The XOR popcount is written once per engine: ``bit_count(``
+    appears in exactly one Spark-side function (operators/dedup.hamming)
+    and one DuckDB-side function (queries/dedup.hamming_sql). And no
+    oracle reaches the Spark-side band builders: an oracle that shares
+    the engine's code cannot catch the engine's bug."""
+    import ast
+    import pathlib
+
+    import kafka_streams_dexcom_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    holders = set()
+    for f in sorted(root.rglob("*.py")):
+        src = f.read_text()
+        if "bit_count(" not in src:
+            continue
+        funcs = [
+            n
+            for n in ast.walk(ast.parse(src))
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+        ]
+        for lineno, line in enumerate(src.splitlines(), 1):
+            if "bit_count(" in line:
+                inside = [
+                    n for n in funcs if n.lineno <= lineno <= n.end_lineno
+                ]
+                name = (
+                    max(inside, key=lambda n: n.lineno).name
+                    if inside
+                    else "<module>"
+                )
+                holders.add(f"{f.relative_to(root).as_posix()}::{name}")
+    assert holders == {
+        "operators/dedup.py::hamming",
+        "queries/dedup.py::hamming_sql",
+    }, holders
+
+    # every module-level definition under queries/ an ORACLES table
+    # reaches, by name, must not name a Spark-side band builder
+    spark_builders = {"hamming", "hamming_band_pairs", "band_rows"}
+    defs, tables = {}, []
+    for f in sorted((root / "queries").glob("*.py")):
+        for node in ast.parse(f.read_text()).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                defs.setdefault(node.name, []).append(node)
+            elif isinstance(node, ast.Assign):
+                for t in node.targets:
+                    if isinstance(t, ast.Name):
+                        defs.setdefault(t.id, []).append(node)
+                        if t.id == "ORACLES":
+                            tables.append(node)
+    assert tables
+
+    def names(node):
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name):
+                yield n.id
+            elif isinstance(n, ast.Attribute):
+                yield n.attr
+            elif isinstance(n, ast.alias):
+                yield n.asname or n.name
+
+    seen, todo, offenders = set(), list(tables), []
+    while todo:
+        node = todo.pop()
+        for name in names(node):
+            if name in spark_builders:
+                offenders.append((getattr(node, "name", "ORACLES"), name))
+            if name in defs and name not in seen:
+                seen.add(name)
+                todo.extend(defs[name])
+    assert "banded_pairs_sql" in seen and "hamming_sql" in seen
+    assert offenders == []

@@ -9,6 +9,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from kafka_streams_dexcom_spark.operators import multimodal as mm
 from kafka_streams_dexcom_spark.streaming.phash_index import (
     PhashIndexMaintainer,
 )
@@ -130,16 +131,20 @@ def test_compact_preserves_view(spark, tmp_path):
     assert _survivors(m) == before
 
 
-def test_real_audio_fingerprints(spark, sf_dir, tmp_path):
-    """Integration: stream the REAL audio fingerprint artifact (WAV
-    decode -> energy contour) in two batches and match the registered
-    q_phash_survivors audio leg."""
+@pytest.mark.parametrize(
+    "modality",
+    [n for n, f in mm.MEDIA_FAMILIES.items() if not f.oriented],
+)
+def test_real_fingerprints(spark, sf_dir, tmp_path, modality):
+    """Integration: stream a family's REAL fingerprint artifact (codec
+    decode -> dHash or contour) in two batches and match the registered
+    q_phash_survivors leg of that modality."""
     from kafka_streams_dexcom_spark.queries.multimodal import (
         _fp_artifact,
         q_phash_survivors,
     )
 
-    fp = _fp_artifact(spark, sf_dir, "audio").select(
+    fp = _fp_artifact(spark, sf_dir, modality).select(
         "doc_id", "b0", "b1", "b2", "b3"
     )
     m = PhashIndexMaintainer(spark, str(tmp_path / "idx"), lineage_id="q1")
@@ -148,7 +153,7 @@ def test_real_audio_fingerprints(spark, sf_dir, tmp_path):
     want = {
         r["doc_id"]: (r["canonical_id"], r["is_survivor"])
         for r in q_phash_survivors(spark, sf_dir)
-        .filter(F.col("modality") == "audio")
+        .filter(F.col("modality") == modality)
         .collect()
     }
     assert got == want
