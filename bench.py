@@ -234,8 +234,10 @@ def emit(result: dict, per_key: str) -> None:
     one). Only the --full suite owns BENCH_FULL_latest.json — a
     headline or artifacts run must not clobber the every-query record
     BASELINE.md points at (it did once; the file held a 107-query
-    headline map under the full-record name)."""
-    if result.get("metric") == "all_queries_total":
+    headline map under the full-record name) — and only the run that
+    wrote it points the tail line at it."""
+    wrote_full = result.get("metric") == "all_queries_total"
+    if wrote_full:
         with open(FULL_OUT, "w") as f:
             json.dump(result, f, indent=1)
     print(json.dumps(result))
@@ -246,7 +248,8 @@ def emit(result: dict, per_key: str) -> None:
     kept: dict[str, float] = {}
     compact[per_key] = kept
     compact["elided"] = len(entries)
-    compact["full"] = os.path.basename(FULL_OUT)
+    if wrote_full:
+        compact["full"] = os.path.basename(FULL_OUT)
     for name, sec in entries:
         kept[name] = sec
         compact["elided"] = len(entries) - len(kept)

@@ -68,8 +68,9 @@ def _topk(
     (and compiles the empty-partition case to TakeOrderedAndProject), so
     no reducer materializes the full candidate list. The handwritten
     spark_partition_id() local-prune pass this replaces (round 13) paid
-    an extra hash exchange + two sorts per top-k for the same pruning —
-    verified in plans/r13/sim_search_*_{before,after}.txt. Requires
+    an extra hash exchange + two sorts per top-k for the same pruning;
+    the sim_search_* rows of PLAN_SHAPES.json pin the WindowGroupLimit
+    node each top-k plans (checked by tests/test_plans.py). Requires
     k <= spark.sql.optimizer.windowGroupLimitThreshold (default 1000;
     every caller's k is <= 1000)."""
     global_w = Window.partitionBy(*part_cols).orderBy(*order)

@@ -10,9 +10,31 @@ cluster bill.
 
 from __future__ import annotations
 
+import collections
 import re
 
 from pyspark.sql import DataFrame
+
+# The physical nodes a plan shape counts: shuffles, every join strategy,
+# aggregates, windows and their top-k pruning, generators, and (as one
+# ``python`` count) the Python exec nodes that hop to a worker process.
+SHAPE_NODES = (
+    "Exchange",
+    "SortMergeJoin",
+    "ShuffledHashJoin",
+    "BroadcastHashJoin",
+    "BroadcastNestedLoopJoin",
+    "CartesianProduct",
+    "HashAggregate",
+    "Window",
+    "WindowGroupLimit",
+    "TakeOrderedAndProject",
+    "Generate",
+    "Expand",
+)
+# MapInPandas, BatchEvalPythonUDTF, ArrowEvalPython, FlatMapGroupsInPandas,
+# MapInArrow, ...: every exec node that runs Python names one of these
+_PYTHON_NODE = re.compile(r"Python|Pandas|Arrow")
 
 
 def explain_str(df: DataFrame, mode: str = "formatted") -> str:
@@ -20,6 +42,21 @@ def explain_str(df: DataFrame, mode: str = "formatted") -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
         df._jdf.queryExecution(), mode
     )
+
+
+def plan_shape(df: DataFrame) -> dict[str, int]:
+    """Node census of the pre-execution plan: one count per numbered
+    detail block of the formatted explain for each of ``SHAPE_NODES``,
+    plus ``python``, the number of Python exec nodes. Under AQE the
+    initial plan is fixed before any stage runs, so the census is a
+    deterministic, machine-checkable summary of what the query will do
+    (PLAN_SHAPES.json holds it for every registered query)."""
+    seen = collections.Counter(
+        re.findall(r"^\(\d+\) (\w+)", explain_str(df), re.M)
+    )
+    shape = {n: seen[n] for n in SHAPE_NODES}
+    shape["python"] = sum(c for n, c in seen.items() if _PYTHON_NODE.search(n))
+    return shape
 
 
 def plan_has(df: DataFrame, *needles: str, mode: str = "formatted") -> bool:

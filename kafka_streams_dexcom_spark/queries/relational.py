@@ -721,7 +721,8 @@ def q_sole_late_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("late"),
         )
         # eager=False: the cut materializes on first ACTION, so plan
-        # construction (dump_plans, lint, bench build) stays free
+        # construction (plan_shapes.py, the plan-shape test, bench
+        # build) stays free
         .localCheckpoint(eager=False)
     )
     base = lo.filter(F.col("late")).select("l_orderkey", "l_suppkey")

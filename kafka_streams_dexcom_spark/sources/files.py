@@ -2,8 +2,8 @@
 
 Columnar parquet scans are the batch stand-in for the reference's Kafka
 topic sources; Catalyst pushes filters and prunes columns into the scan,
-which is the property the 100 TB design depends on (verify with
-plans.assert_pushed_filters).
+which is the property the 100 TB design depends on (tests/test_plans.py
+asserts it with plans.explain_str and plans.scan_read_schema).
 """
 
 from __future__ import annotations

@@ -14,9 +14,24 @@ from kafka_streams_dexcom_spark.session import get_spark  # noqa: E402
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
+def pinned_session(app_name: str):
+    """The tests' session, in which plan_shapes.py also writes
+    PLAN_SHAPES.json. fan_out_small, file-split sizing and AQE's
+    partition coalescing read the default parallelism, which local[N]
+    sets to N, so unpinned a 2-core and a 4-core session plan different
+    exchanges for the same query. It is pinned at 4, not at the 8
+    shuffle partitions: on the tiny test inputs more tasks are only more
+    scheduling overhead, and 4 is what a 4-core session had."""
+    return get_spark(
+        app_name=app_name,
+        shuffle_partitions=8,
+        extra_conf={"spark.default.parallelism": "4"},
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="tests", shuffle_partitions=8)
+    s = pinned_session("tests")
     yield s
 
 

@@ -2,7 +2,8 @@
 only the tail of stdout and json-parses the LAST line, so ``bench.emit``
 must end with a compact line within ``TAIL_BUDGET`` that keeps the
 slowest queries and counts the rest; only the full suite may write the
-``FULL_OUT`` record; and every record carries the load stamp."""
+``FULL_OUT`` record, and only its tail line points at it; and every
+record carries the load stamp."""
 
 from __future__ import annotations
 
@@ -40,9 +41,15 @@ def test_tail_line_fits_budget_and_keeps_slowest(capsys, tmp_path,
     assert len(kept) + compact["elided"] == 207
     slowest = sorted(result["queries"].items(), key=lambda kv: -kv[1])
     assert list(kept.items()) == slowest[:len(kept)]
-    assert compact["full"] == "full.json"
+    # the pointer names the record only the full suite writes
+    assert "full" not in compact
     for key in ("metric", "value", "sf", "load1_start", "cpu_steal_share"):
         assert compact[key] == result[key]
+    full = _result("all_queries_total")
+    bench.emit(full, "queries")
+    compact = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert compact["full"] == "full.json"
+    assert len(compact["queries"]) + compact["elided"] == 207
 
 
 def test_only_the_full_suite_writes_full_out(capsys, tmp_path, monkeypatch):
