@@ -7,6 +7,8 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from kafka_streams_dexcom_spark.plans import plan_shape  # noqa: E402
+from kafka_streams_dexcom_spark.queries import all_queries  # noqa: E402
 from kafka_streams_dexcom_spark.session import get_spark  # noqa: E402
 
 # Small SF for fast unit tests; parity vs the driver's sf0.01 is exercised
@@ -38,3 +40,18 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def query_shape(spark, sf_dir):
+    """``plan_shape`` of a registered query by name, each query built at
+    most once per session: the plan lint, the golden-shape test and the
+    per-query plan audits read the same census."""
+    shapes: dict[str, dict[str, int]] = {}
+
+    def shape(name: str) -> dict[str, int]:
+        if name not in shapes:
+            shapes[name] = plan_shape(all_queries()[name](spark, sf_dir))
+        return shapes[name]
+
+    return shape

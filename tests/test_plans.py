@@ -6,10 +6,12 @@ regression here wouldn't change results, only the cluster bill.
 Node counts (exchanges, joins by strategy, aggregates, windows, top-k
 nodes, generators, Python stages) of every registered query are pinned
 once, in PLAN_SHAPES.json, by ``test_plan_shape``; regenerate it with
-``python plan_shapes.py`` and review the diff. The other tests here
-check what a node count cannot see: pushed filters, pruned read
-schemas, join types, column names, and plans of DataFrames that are not
-registered queries."""
+``python plan_shapes.py`` and review the diff. The named shape tests
+below state, as bounds on the same census, the invariants a regenerated
+golden file must never lose (no join, broadcast only, one tokenizing
+pass, ...). The other tests here check what a node count cannot see:
+pushed filters, pruned read schemas, join types, column names, and plans
+of DataFrames that are not registered queries."""
 
 from __future__ import annotations
 
@@ -36,18 +38,192 @@ with open(GOLDEN) as f:
 
 
 @pytest.mark.parametrize("name", sorted(all_queries()))
-def test_plan_shape(spark, sf_dir, name):
+def test_plan_shape(query_shape, name):
     """Every registered query, built at sf0.001 (eager lineage cuts and
     artifact builds included, so no query escapes), plans exactly the
-    golden shape, and never a CartesianProduct: two non-broadcast sides
-    pair-expanding is a scale-killer whatever the golden file says."""
-    shape = plan_shape(all_queries()[name](spark, sf_dir))
-    assert shape["CartesianProduct"] == 0, shape
-    assert shape == SHAPES.get(name)
+    golden shape (that none plans a CartesianProduct, whatever the
+    golden file says, is ``test_plan_lint``)."""
+    assert query_shape(name) == SHAPES.get(name)
 
 
 def test_plan_shapes_cover_the_registry():
     assert set(SHAPES) == set(all_queries())
+
+
+_JOINS = (
+    "SortMergeJoin",
+    "ShuffledHashJoin",
+    "BroadcastHashJoin",
+    "BroadcastNestedLoopJoin",
+    "CartesianProduct",
+)
+
+
+def _joins(shape: dict[str, int]) -> int:
+    return sum(shape[j] for j in _JOINS)
+
+
+def test_flagship_interval_lookup_is_shuffle_free(query_shape):
+    # scan-side inlined dimension: no join, no exchange anywhere
+    shape = query_shape("interval_join_categorize")
+    assert _joins(shape) == 0 and shape["Exchange"] == 0, shape
+
+
+def test_top_customers_broadcasts_dimension(query_shape):
+    shape = query_shape("top_customers")
+    assert shape["BroadcastHashJoin"] >= 1, shape
+    # top-k compiles to TakeOrdered, not a global Sort + Limit
+    assert shape["TakeOrderedAndProject"] >= 1, shape
+
+
+def test_tfidf_tokenizes_once(query_shape):
+    # df-via-window formulation: ONE explode of the token stream. A
+    # groupBy-then-join df would plan two Generate subtrees (Catalyst
+    # prunes the unused tf count, defeating exchange reuse) — the whole
+    # token volume shuffled twice at 100 TB.
+    shape = query_shape("tfidf_top_terms")
+    assert shape["Generate"] == 1, shape
+
+
+def test_bigram_lm_takeordered_single_generate(query_shape):
+    shape = query_shape("bigram_lm")
+    assert shape["Generate"] == 1, shape
+    assert shape["TakeOrderedAndProject"] >= 1, shape
+
+
+def test_doc_chunks_shuffle_free(query_shape):
+    # narrow map + explode only; the single Exchange allowed is the
+    # fan_out_small small-input repartition (a no-op at real scale)
+    shape = query_shape("doc_chunks")
+    assert _joins(shape) == 0, shape
+    assert shape["Exchange"] <= 1, shape
+
+
+def test_multiprobe_candidates_never_shuffle_for_join(query_shape):
+    # probe set must broadcast; a shuffle join here would move the whole
+    # exploded candidate table at 100 TB
+    shape = query_shape("sim_search_multiprobe")
+    assert shape["BroadcastHashJoin"] >= 1, shape
+    assert shape["SortMergeJoin"] == 0, shape
+
+
+def test_bm25_freetext_query_side_is_broadcast(query_shape):
+    """The index scan is the only wide work: every query-side join
+    (terms, query table, dfreq, stats) must broadcast — a SortMergeJoin
+    on the postings would shuffle the corpus-scale index per query
+    batch. No cartesian product anywhere."""
+    shape = query_shape("bm25_freetext")
+    assert shape["CartesianProduct"] == 0, shape
+    assert shape["SortMergeJoin"] == 0, shape
+    assert shape["ShuffledHashJoin"] == 0, shape
+
+
+def test_doc_perplexity_has_no_join(query_shape):
+    """Round-3 rework contract: the bigram LM attaches via windows over
+    a single w1 repartition — any join means the token-scale vocabulary
+    join crept back in."""
+    shape = query_shape("doc_perplexity")
+    assert _joins(shape) == 0, shape
+    assert shape["Window"] >= 1, shape
+    # at most 4 exchanges: fan-out, (doc,bigram) agg, w1 repartition,
+    # final doc agg; anything more is a regression
+    assert shape["Exchange"] <= 4, shape
+
+
+def test_dup_span_fraction_has_no_join(query_shape):
+    shape = query_shape("dup_span_fraction")
+    assert _joins(shape) == 0, shape
+    assert shape["Exchange"] <= 4, shape
+
+
+def test_customer_order_distribution_single_probe_exchange(query_shape):
+    """Q13 shape: the left join and the per-customer groupBy share the
+    custkey partitioning — counting exchanges guards the reuse."""
+    # exchanges: probe-side hash (or a broadcast at tiny SF) + custkey
+    # agg + final distribution agg; more means the shared partitioning
+    # between the join and the groupBy broke
+    shape = query_shape("customer_order_distribution")
+    assert shape["Exchange"] <= 4, shape
+
+
+def test_interval_join_bucketized_is_equi_join(query_shape):
+    """The scale-path variant must plan as a hash equi-join on the
+    bucket key — a BroadcastNestedLoopJoin means the bucketization
+    failed and every probe scans the whole dimension again."""
+    shape = query_shape("interval_join_bucketized")
+    assert shape["BroadcastNestedLoopJoin"] == 0, shape
+    assert shape["CartesianProduct"] == 0, shape
+    assert shape["BroadcastHashJoin"] + shape["SortMergeJoin"] >= 1, shape
+
+
+def test_embedding_outliers_broadcasts_centroids(query_shape):
+    """Centroid table (|labels| rows) broadcasts back onto the vector
+    scan; the ranking window partitions by label — never a global sort."""
+    shape = query_shape("embedding_outliers")
+    assert shape["BroadcastHashJoin"] >= 1, shape
+    assert shape["SortMergeJoin"] == 0, shape
+    assert shape["CartesianProduct"] == 0, shape
+
+
+def test_audio_video_pipelines_are_shuffle_free(query_shape):
+    """Synthesize + decode are two chained Arrow stages over the same
+    scan — zero shuffles end to end (the fan_out_small repartition of
+    the small test input is the only allowed Exchange)."""
+    for name in ("audio_wav_stats", "video_avi_frames"):
+        shape = query_shape(name)
+        assert shape["python"] >= 2, (name, shape)
+        assert _joins(shape) == 0, (name, shape)
+        assert shape["Exchange"] <= 1, (name, shape)
+
+
+def test_metrics_unpivot_aggregates_before_melt(query_shape):
+    """Round-12 rework: the per-metric profile is 16 independent column
+    aggregates computed in ONE keyless pass over the wide fact; the
+    melt (Generate) runs over the single profiled row. The old form
+    Expanded every fact row x4 BEFORE the partial aggregation — if an
+    Expand reappears below the aggregate, the multiplier is back."""
+    shape = query_shape("metrics_unpivot")
+    assert shape["Expand"] == 0, shape
+    assert shape["Generate"] >= 1, shape  # the 1-row melt
+    # map-side combine still fires: partial + final HashAggregate
+    assert shape["HashAggregate"] >= 2, shape
+
+
+def test_topk_rank_windows_prune_below_the_window(query_shape):
+    """Spark 4 prunes both top-k rank windows before they sort every
+    row, and the two take different nodes. sim_search_lsh's per-query
+    window (k <= spark.sql.optimizer.windowGroupLimitThreshold) carries
+    WindowGroupLimit. zipf_slope's unpartitioned k = 1000 window, exactly
+    at that threshold, becomes a TakeOrderedAndProject and no
+    WindowGroupLimit. Lowering the threshold below either k removes the
+    pruning node."""
+    lsh = query_shape("sim_search_lsh")
+    assert lsh["WindowGroupLimit"] >= 1, lsh
+    zipf = query_shape("zipf_slope")
+    assert zipf["TakeOrderedAndProject"] >= 1, zipf
+    assert zipf["WindowGroupLimit"] == 0, zipf
+
+
+def test_fingerprint_family_plan_shapes(query_shape):
+    """The image, audio and video perceptual-hash queries run one
+    banded-Hamming core over one media-family table, so each stage
+    plans the same shape in every family: a family that drifts from
+    the others (its own exchange, join or Python stage) has forked the
+    core. The exact counts are golden, in PLAN_SHAPES.json."""
+    for suffix in ("", "_dedup"):
+        shapes = {
+            name: query_shape(name)
+            for name in (
+                f"multimodal_phash{suffix}",
+                f"audio_phash{suffix}",
+                f"video_phash{suffix}",
+            )
+        }
+        assert len({tuple(s.items()) for s in shapes.values()}) == 1, shapes
+    for name in ("multimodal_phash", "audio_phash", "video_phash"):
+        # synth + decode: two Python stages, no join, no aggregate
+        shape = query_shape(name)
+        assert shape["python"] == 2 and _joins(shape) == 0, (name, shape)
 
 
 def test_filter_pushed_to_parquet_scan(spark, sf_dir):
@@ -232,7 +408,7 @@ def test_scan_read_schema_handles_parametric_types(spark, tmp_path):
 def test_value_drift_psi_scan_pruned_and_no_cartesian(spark, sf_dir):
     """PSI reads only (ts, value) from the 6-column events table (its
     CartesianProduct count is checked with every query's, in
-    ``test_plan_shape``)."""
+    ``test_plan_lint``)."""
     from kafka_streams_dexcom_spark.queries.temporal import (
         q_value_drift_psi,
     )
