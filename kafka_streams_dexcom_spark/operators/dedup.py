@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 from kafka_streams_dexcom_spark.functions.hashing import MERSENNE_P, PERM_COEFFS
 from kafka_streams_dexcom_spark.functions.rounding import trunc6
-from kafka_streams_dexcom_spark.sources.files import fan_out_small, materialize
+from kafka_streams_dexcom_spark.sources.files import fan_out_small
 
 NUM_PERM = 16
 NUM_BANDS = 4
@@ -82,41 +82,6 @@ def tokenize(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.withColumn(
         "tokens",
         F.expr(f"filter(split({text_col}, '\\\\s+'), t -> t != '')"),
-    )
-
-
-def shingle_sets(
-    df: DataFrame, text_col: str = "text", n: int = 3
-) -> DataFrame:
-    """Distinct word n-gram shingle set per document; documents shorter
-    than n tokens are dropped (no shingle → nothing to compare)."""
-    t = tokenize(fan_out_small(df), text_col)
-    out = t.filter(F.size("tokens") >= n).withColumn(
-        "shingles", F.expr(_shingle_expr("tokens", n))
-    ).drop("tokens")
-    # barrier: shingle arrays are consumed by explodes / multi-expression
-    # signatures downstream — materialize once (see sources.files.materialize)
-    return materialize(out)
-
-
-def shingle_hashes(df: DataFrame) -> DataFrame:
-    """Hash each shingle to its 60-bit fingerprint.
-
-    FULL 60 bits, not % MERSENNE_P (round-12 fix): reducing the shingle
-    universe to 31 bits puts ~1,700 real collisions in a 2.7M-shingle
-    corpus (sf10) — measured as 76 flipped argmax rows in
-    contamination_check — while 60 bits keeps the collision expectation
-    at ~3e-6 corpus-wide. MinHash permutations still need [0, P)
-    inputs; the reduction now happens INSIDE minhash_signature
-    ((v % P) * a + b), which reproduces the previous signatures
-    bit-for-bit."""
-    return materialize(
-        df.withColumn(
-            "sh_hashes",
-            F.expr(
-                f"transform(shingles, x -> {HASH60_TPL.format(x='x')})"
-            ),
-        )
     )
 
 
@@ -351,15 +316,15 @@ def hashed_shingle_corpus(
     then cuts lineage with an eager localCheckpoint because every caller
     (prefix index, signature chain, verify sides) consumes it from
     multiple plan branches that BroadcastExchange would otherwise force
-    to recompute. One exchange + one store pass, instead of the three
-    stacked materialize() barriers the layered builders pay."""
+    to recompute: one exchange + one store pass."""
     t = tokenize(fan_out_small(docs.select(id_col, text_col)), text_col)
     t = t.filter(F.size("tokens") >= n)  # == "has at least one shingle"
     hashed = t.select(
         id_col,
-        # full 60-bit fingerprints (see shingle_hashes: 31-bit reduction
-        # put real collisions in the sf10 corpus); minhash reduces to
-        # [0, P) inside the permutation
+        # full 60-bit fingerprints: reducing to 31 bits put ~1,700 real
+        # collisions in the sf10 corpus's 2.7M shingles (76 flipped
+        # contamination_check rows); minhash reduces to [0, P) inside
+        # the permutation
         F.expr(
             f"transform({_shingle_expr('tokens', n)}, "
             f"x -> {HASH60_TPL.format(x='x')})"

@@ -79,6 +79,12 @@ def _hard_cut(df: DataFrame, rnd: int) -> tuple[DataFrame, str | None]:
 # graph cost 11.4s in rounds, <1s as one task).
 CC_SINGLE_TASK_EDGES = 2_000_000
 
+# Every HARD_CUT_EVERY rounds the iterative loop's label table is fully
+# re-materialized by _hard_cut instead of chained onto the previous
+# round's localCheckpoint (see connected_components for the measured
+# per-round degradation this resets).
+HARD_CUT_EVERY = 8
+
 
 def _cc_single_task(edges: DataFrame) -> DataFrame:
     """Exact CC of a small edge set as one executor task: repartition(1)
@@ -131,7 +137,6 @@ def connected_components(
     a_col: str = "doc_a",
     b_col: str = "doc_b",
     max_rounds: int = 50,
-    hard_cut_every: int | None = 8,
     single_task_edges: int | None = CC_SINGLE_TASK_EDGES,
 ) -> DataFrame:
     """(node, component) for every node appearing in ``pairs``; exact
@@ -143,11 +148,10 @@ def connected_components(
     Runs until a round changes nothing; raises if ``max_rounds`` is hit
     without converging (a silent cap would return wrong labels).
 
-    ``hard_cut_every``: every K rounds the label table is FULLY
+    Every ``HARD_CUT_EVERY`` rounds the label table is FULLY
     re-materialized (reliable checkpoint when the session has a
     checkpoint dir, else a parquet round-trip through a process-local
-    temp dir in local mode; ``0``/``None`` disables, restoring the pure
-    localCheckpoint chain). Superseded cut files are deleted as the loop
+    temp dir in local mode). Superseded cut files are deleted as the loop
     advances, so at most one on-disk label copy is live per invocation.
     Measured on Spark 4.1 local mode: per-round cost with
     chained localCheckpoints is flat for ~16 rounds and then grows
@@ -173,6 +177,8 @@ def connected_components(
     # scale for graphs of a few thousand edges). 2·|pairs| bounds the
     # mirrored-distinct count the threshold was calibrated against.
     if single_task_edges and 2 * p0.count() <= single_task_edges:
+        # cut: callers join the labels back from several branches, and
+        # each would otherwise rerun the one-task union-find
         return _cc_single_task(p0).localCheckpoint()
     edges = p0.union(
         p0.select(F.col("v").alias("u"), F.col("u").alias("v"))
@@ -258,7 +264,7 @@ def connected_components(
                         ).alias("label"),
                     )
                 )
-        if hard_cut_every and (rnd + 1) % hard_cut_every == 0:
+        if (rnd + 1) % HARD_CUT_EVERY == 0:
             updated, cut_path = _hard_cut(updated, rnd)
             if prev_cut_path is not None:
                 shutil.rmtree(prev_cut_path, ignore_errors=True)
@@ -283,18 +289,14 @@ def connected_components(
     )
 
 
-def cc_incremental(
-    new_edges: DataFrame,
-    old_labels: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-) -> DataFrame:
-    """Incremental connected components for the daily-ingest path: given
-    the EXISTING corpus labeling ``old_labels`` (node, component — the
-    published cluster_map artifact) and ``new_edges`` (every near-dup
-    pair that touches the new batch: new–new and new–corpus), return the
-    exact labeling of the union graph — WITHOUT re-running CC over the
-    corpus.
+def _contract_batch(
+    new_edges: DataFrame, old_labels: DataFrame, a_col: str, b_col: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The batch-bounded core of incremental CC: ``(lab, remap,
+    new_nodes)``, where ``lab`` is the (node, component) label table,
+    ``remap`` maps each old component id the batch merges into a lower
+    label (node = old id, component = new label), and ``new_nodes`` is
+    the (node, component) labeling of nodes absent from ``old_labels``.
 
     Why it's exact: an existing component can be CONTRACTED to its label
     (the min id of its members, by construction of min-label CC). New
@@ -303,15 +305,7 @@ def cc_incremental(
     running CC on that contracted graph yields, per contracted node, the
     min id over every member of every merged component — exactly the
     label full CC would assign. Old components untouched by any new edge
-    keep their labels verbatim.
-
-    Cost ∝ batch, not corpus: the contracted CC runs over ≤ |new_edges|
-    edges; the only corpus-scale operation is ONE scan of the label
-    table joined (broadcast — the delta is batch-bounded) against the
-    relabel map. No corpus text is re-shingled, no corpus edges are
-    revisited."""
-    # no checkpoint here: `mapped` (this frame's only consumer) is
-    # checkpointed right below, so the batch edges materialize once
+    keep their labels verbatim."""
     e = new_edges.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
     lab = old_labels.select("node", "component")
     # contract endpoints: corpus node → its old component label;
@@ -340,41 +334,73 @@ def cc_incremental(
     # the old component ids touched by this batch — batch-bounded, so
     # the new-node test below never joins against the corpus label table
     involved_old = (
-        mapped.select(F.col("cu").alias("cid"))
-        .union(mapped.select(F.col("cv").alias("cid")))
-        .where(F.col("cid").isNotNull())
+        mapped.select(F.col("cu").alias("node"))
+        .union(mapped.select(F.col("cv").alias("node")))
+        .where(F.col("node").isNotNull())
         .distinct()
     )
     merged = connected_components(contracted)  # batch-sized graph
-    # corpus nodes: component label changed iff their old component id
-    # appears in the batch-bounded relabel map — ONE broadcast hash join
-    # over the label table, never a corpus shuffle
-    updated_old = lab.join(
-        F.broadcast(
-            merged.select(
-                F.col("node").alias("component"),
-                F.col("component").alias("new_component"),
-            )
-        ),
-        "component",
-        "left",
-    ).select(
-        "node",
-        F.coalesce(F.col("new_component"), F.col("component")).alias(
-            "component"
-        ),
-    )
+    # relabel map entries that actually change a label: old component
+    # ids mapped to a DIFFERENT (strictly lower — min-label CC) label
+    remap = merged.join(
+        F.broadcast(involved_old), "node", "left_semi"
+    ).filter(F.col("node") != F.col("component"))
     # new nodes (absent from old_labels): their contracted id is their
     # own node id. A contracted id is an old-component label iff it came
     # from a cu/cv hit, so the batch-bounded involved_old set separates
     # them — no corpus-sized anti-join. (New doc ids can't collide with
     # old labels: labels are old node ids and doc ids are unique.)
     new_nodes = merged.join(
-        F.broadcast(involved_old.select(F.col("cid").alias("node"))),
-        "node",
-        "left_anti",
+        F.broadcast(involved_old), "node", "left_anti"
     ).select("node", "component")
-    return updated_old.unionByName(new_nodes)
+    return lab, remap, new_nodes
+
+
+def _relabel(lab: DataFrame, remap: DataFrame, how: str) -> DataFrame:
+    """``lab``'s rows with their component moved through ``remap``: ONE
+    broadcast hash join over the label table (the relabel map is
+    batch-bounded), never a corpus shuffle. ``how="inner"`` keeps only
+    the moved rows, ``"left"`` every row."""
+    return lab.join(
+        F.broadcast(
+            remap.select(
+                F.col("node").alias("component"),
+                F.col("component").alias("new_component"),
+            )
+        ),
+        "component",
+        how,
+    ).select(
+        "node",
+        F.coalesce(F.col("new_component"), F.col("component")).alias(
+            "component"
+        ),
+    )
+
+
+def cc_incremental(
+    new_edges: DataFrame,
+    old_labels: DataFrame,
+    a_col: str = "doc_a",
+    b_col: str = "doc_b",
+) -> DataFrame:
+    """Incremental connected components for the daily-ingest path: given
+    the EXISTING corpus labeling ``old_labels`` (node, component — the
+    published cluster_map artifact) and ``new_edges`` (every near-dup
+    pair that touches the new batch: new–new and new–corpus), return the
+    exact labeling of the union graph — WITHOUT re-running CC over the
+    corpus. It is ``old_labels`` overlaid with
+    :func:`cc_incremental_delta`'s rows.
+
+    Cost ∝ batch, not corpus: the contracted CC runs over ≤ |new_edges|
+    edges; the only corpus-scale operation is ONE scan of the label
+    table joined (broadcast — the delta is batch-bounded) against the
+    relabel map. No corpus text is re-shingled, no corpus edges are
+    revisited."""
+    lab, remap, new_nodes = _contract_batch(
+        new_edges, old_labels, a_col, b_col
+    )
+    return _relabel(lab, remap, "left").unionByName(new_nodes)
 
 
 def cc_incremental_delta(
@@ -398,60 +424,10 @@ def cc_incremental_delta(
     (components only merge through new edges), so changed-old rows are
     one broadcast SEMI-style join over the label scan that emits only
     affected members; nothing corpus-sized is shuffled or written."""
-    e = new_edges.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-    lab = old_labels.select("node", "component")
-    mapped = (
-        e.join(
-            lab.select(
-                F.col("node").alias("u"), F.col("component").alias("cu")
-            ),
-            "u",
-            "left",
-        )
-        .join(
-            lab.select(
-                F.col("node").alias("v"), F.col("component").alias("cv")
-            ),
-            "v",
-            "left",
-        )
-        .localCheckpoint()
+    lab, remap, new_nodes = _contract_batch(
+        new_edges, old_labels, a_col, b_col
     )
-    contracted = mapped.select(
-        F.coalesce(F.col("cu"), F.col("u")).alias("doc_a"),
-        F.coalesce(F.col("cv"), F.col("v")).alias("doc_b"),
-    ).filter(F.col("doc_a") != F.col("doc_b"))
-    involved_old = (
-        mapped.select(F.col("cu").alias("cid"))
-        .union(mapped.select(F.col("cv").alias("cid")))
-        .where(F.col("cid").isNotNull())
-        .distinct()
-    )
-    merged = connected_components(contracted)
-    # relabel map entries that actually change a label: old component
-    # ids mapped to a DIFFERENT (strictly lower — min-label CC) label
-    remap = merged.join(
-        F.broadcast(involved_old.select(F.col("cid").alias("node"))),
-        "node",
-        "left_semi",
-    ).filter(F.col("node") != F.col("component"))
-    changed_old = lab.join(
-        F.broadcast(
-            remap.select(
-                F.col("node").alias("component"),
-                F.col("component").alias("new_component"),
-            )
-        ),
-        "component",
-    ).select(
-        "node", F.col("new_component").alias("component")
-    )
-    new_nodes = merged.join(
-        F.broadcast(involved_old.select(F.col("cid").alias("node"))),
-        "node",
-        "left_anti",
-    ).select("node", "component")
-    return changed_old.unionByName(new_nodes)
+    return _relabel(lab, remap, "inner").unionByName(new_nodes)
 
 
 def cluster_representatives(components: DataFrame) -> DataFrame:
@@ -643,7 +619,7 @@ def triangle_counts(
                 "left_anti",
             )
             .select("a", "b")
-            .localCheckpoint()
+            .localCheckpoint()  # the four branches read the capped list
         )
     paths = (
         e.alias("e1")

@@ -714,7 +714,7 @@ def _duck_shingles_cte() -> str:
             FROM toks WHERE len(t) >= 3
         ),
         hs AS (
-            -- full 60-bit fingerprints (operators/dedup.shingle_hashes
+            -- full 60-bit fingerprints (operators/dedup.hashed_shingle_corpus
             -- round-12 fix); minhash reduces to [0, P) per permutation
             SELECT doc_id, s,
                    list_transform(s, x -> {h}) AS h

@@ -3249,7 +3249,7 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.lit(0.0))
             .alias("x3"),
         )
-        .localCheckpoint()
+        .localCheckpoint()  # every gradient step below scans feats
     )
     xs = ["x0", "x1", "x2", "x3"]
 

@@ -99,27 +99,6 @@ def fan_out_small(df: DataFrame, min_partitions: int | None = None) -> DataFrame
     return df.repartition(target)
 
 
-def materialize(df: DataFrame) -> DataFrame:
-    """Expression-materialization barrier (a round-robin exchange).
-
-    Catalyst's CollapseProject inlines a projected expression into every
-    consumer: explode(expensive_array) re-evaluates the array PER OUTPUT
-    ROW, and N sibling expressions over one expensive array evaluate it N
-    times (measured 10-25x slowdowns on the shingle/minhash pipelines).
-    An exchange is a hard plan boundary: the expression is computed once,
-    its *result* crosses the shuffle, and consumers read an attribute.
-
-    Use between an expensive narrow computation (md5 transforms, shingle
-    construction) and a fan-out consumer (explode, multi-expression
-    signature). Cost: one shuffle of the computed column — at 100 TB
-    that's usually far cheaper than a 50x recompute, but reconsider per
-    pipeline (skip it when the downstream is a single cheap consumer).
-    """
-    if df.isStreaming:
-        return df
-    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-
-
 def corpus_fingerprint(path: str) -> str:
     """Cheap content fingerprint of a local table file/directory: md5
     over the sorted (relative path, size, mtime_ns) listing. Used to key

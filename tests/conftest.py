@@ -42,16 +42,48 @@ def sf_dir() -> str:
     return SF_DIR
 
 
+def _last_execution_id(spark) -> int:
+    """Id of the newest SQL execution in the status store, -1 if none.
+    The listener bus fills the store asynchronously, so it is drained
+    first; the store lists executions in id order."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+    store = spark._jsparkSession.sharedState().statusStore()  # noqa: SLF001
+    n = store.executionsCount()
+    if n == 0:
+        return -1
+    return store.executionsList(n - 1, 1).head().executionId()
+
+
 @pytest.fixture(scope="session")
-def query_shape(spark, sf_dir):
-    """``plan_shape`` of a registered query by name, each query built at
-    most once per session: the plan lint, the golden-shape test and the
-    per-query plan audits read the same census."""
-    shapes: dict[str, dict[str, int]] = {}
+def query_census(spark, sf_dir):
+    """``(plan_shape, construction_plans)`` of a registered query by
+    name, each query built at most once per session: the plan lint, the
+    golden-shape test and the per-query plan audits read the same
+    census. ``construction_plans`` holds the physical plan of every SQL
+    execution that ran while the query was being built (eager lineage
+    cuts, artifact writes, driver-side counts and collects), read from
+    the SQL status store; the returned DataFrame's own plan shows none
+    of them. A session artifact that an earlier test already built is
+    served from the cache and runs no job here."""
+    census: dict[str, tuple[dict[str, int], list[str]]] = {}
+    store = spark._jsparkSession.sharedState().statusStore()  # noqa: SLF001
 
-    def shape(name: str) -> dict[str, int]:
-        if name not in shapes:
-            shapes[name] = plan_shape(all_queries()[name](spark, sf_dir))
-        return shapes[name]
+    def build(name: str) -> tuple[dict[str, int], list[str]]:
+        if name not in census:
+            first = _last_execution_id(spark) + 1
+            df = all_queries()[name](spark, sf_dir)
+            plans = []
+            for i in range(first, _last_execution_id(spark) + 1):
+                execution = store.execution(i)
+                if execution.isDefined():
+                    plans.append(execution.get().physicalPlanDescription())
+            census[name] = (plan_shape(df), plans)
+        return census[name]
 
-    return shape
+    return build
+
+
+@pytest.fixture(scope="session")
+def query_shape(query_census):
+    """``plan_shape`` of a registered query's returned DataFrame."""
+    return lambda name: query_census(name)[0]

@@ -291,31 +291,39 @@ def test_cc_incremental_merges_two_old_components(spark):
     }
 
 
-def test_cc_deep_graph_with_hard_cuts(spark):
+def test_cc_deep_graph_with_hard_cuts(spark, monkeypatch):
     """A 600-node path (75+ pointer-jump rounds' worth of diameter if
     hook-only) must converge exactly, crossing several hard-cut
-    boundaries; labels all collapse to 0."""
-    from kafka_streams_dexcom_spark.operators.graph import (
-        connected_components,
-    )
+    boundaries; labels all collapse to 0, and of the cuts' directories
+    only the last one survives the call."""
+    import os
 
+    from kafka_streams_dexcom_spark.operators import graph
+    from kafka_streams_dexcom_spark.sources.files import session_temp_dir
+
+    monkeypatch.setattr(graph, "HARD_CUT_EVERY", 4)
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(599)], "doc_a long, doc_b long"
     )
-    out = connected_components(edges, hard_cut_every=4)
+    root = session_temp_dir("iter_cut")
+    before = set(os.listdir(root))
+    # force the iterative path (599 edges otherwise run as one task)
+    out = graph.connected_components(edges, single_task_edges=None)
     rows = out.collect()
     assert len(rows) == 600
     assert {r.component for r in rows} == {0}
+    assert len(set(os.listdir(root)) - before) == 1
 
 
-def test_cc_hard_cut_uses_checkpoint_dir_when_set(spark, tmp_path):
+def test_cc_hard_cut_uses_checkpoint_dir_when_set(
+    spark, tmp_path, monkeypatch
+):
     """With a checkpoint dir configured (the cluster path), the hard cut
     must go through df.checkpoint — files appear under the dir and the
     result is still exact."""
-    from kafka_streams_dexcom_spark.operators.graph import (
-        connected_components,
-    )
+    from kafka_streams_dexcom_spark.operators import graph
 
+    monkeypatch.setattr(graph, "HARD_CUT_EVERY", 2)
     sc = spark.sparkContext
     ckpt = str(tmp_path / "ckpt")
     sc.setCheckpointDir(ckpt)
@@ -325,9 +333,7 @@ def test_cc_hard_cut_uses_checkpoint_dir_when_set(spark, tmp_path):
         )
         # force the iterative path: the hard cut under test only
         # exists there (a 99-edge graph takes the single-task dispatch)
-        out = connected_components(
-            edges, hard_cut_every=2, single_task_edges=None
-        )
+        out = graph.connected_components(edges, single_task_edges=None)
         assert {r.component for r in out.collect()} == {0}
         import glob
 
@@ -338,31 +344,25 @@ def test_cc_hard_cut_uses_checkpoint_dir_when_set(spark, tmp_path):
         sc._jsc.sc().setCheckpointDir(None)  # noqa: SLF001
 
 
-def test_cc_hard_cut_disable_and_reclamation(spark):
-    """hard_cut_every=0/None restores the pure localCheckpoint chain
-    (still exact); with cuts enabled, superseded cut directories are
-    deleted as the loop advances — at most one on-disk label copy per
-    invocation survives the call."""
+def test_cc_hard_cut_disable_and_reclamation(spark, monkeypatch):
+    """Superseded cut directories are deleted as the loop advances:
+    exactly one on-disk label copy per invocation survives the call."""
     import os
 
-    from kafka_streams_dexcom_spark.operators.graph import (
-        connected_components,
-    )
+    from kafka_streams_dexcom_spark.operators import graph
     from kafka_streams_dexcom_spark.sources.files import session_temp_dir
 
+    monkeypatch.setattr(graph, "HARD_CUT_EVERY", 2)
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(149)], "doc_a long, doc_b long"
     )
-    for disable in (0, None):
-        out = connected_components(edges, hard_cut_every=disable)
-        assert {r.component for r in out.collect()} == {0}
-
     root = session_temp_dir("iter_cut")
     before = set(os.listdir(root))
-    out = connected_components(edges, hard_cut_every=2)
+    # force the iterative path (149 edges otherwise run as one task)
+    out = graph.connected_components(edges, single_task_edges=None)
     assert {r.component for r in out.collect()} == {0}
     new_dirs = set(os.listdir(root)) - before
-    assert len(new_dirs) <= 1, f"superseded cuts not reclaimed: {new_dirs}"
+    assert len(new_dirs) == 1, f"superseded cuts not reclaimed: {new_dirs}"
 
 
 def test_cc_single_task_matches_iterative(spark):

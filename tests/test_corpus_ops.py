@@ -304,13 +304,19 @@ def test_tokenize_ignores_leading_whitespace(spark):
     """' a b c' and 'a b c' must produce identical shingle sets — a
     phantom empty first token would shift every shingle and miss the
     near-dup (and diverge from the oracles' non-empty tokenization)."""
-    from kafka_streams_dexcom_spark.operators.dedup import shingle_sets
+    from kafka_streams_dexcom_spark.operators.dedup import (
+        hashed_shingle_corpus,
+    )
 
     df = spark.createDataFrame(
         [(1, "a b c d"), (2, "  a b c d")], "doc_id long, text string"
     )
-    out = {r["doc_id"]: set(r["shingles"]) for r in shingle_sets(df).collect()}
-    assert out[1] == out[2] == {"a b c", "b c d"}
+    out = {
+        r["doc_id"]: set(r["sh_hashes"])
+        for r in hashed_shingle_corpus(df).collect()
+    }
+    assert len(out[1]) == 2  # the shingles "a b c" and "b c d"
+    assert out[1] == out[2]
 
 
 def test_dq_rule_names_with_special_characters(spark):

@@ -39,10 +39,12 @@ with open(GOLDEN) as f:
 
 @pytest.mark.parametrize("name", sorted(all_queries()))
 def test_plan_shape(query_shape, name):
-    """Every registered query, built at sf0.001 (eager lineage cuts and
-    artifact builds included, so no query escapes), plans exactly the
-    golden shape (that none plans a CartesianProduct, whatever the
-    golden file says, is ``test_plan_lint``)."""
+    """Every registered query, built at sf0.001, plans exactly the
+    golden shape. The shape is that of the returned DataFrame only: the
+    jobs that ran while the query was built (eager lineage cuts,
+    artifact builds) are not in it, and ``test_plan_lint`` checks their
+    plans (and that none plans a CartesianProduct, whatever the golden
+    file says)."""
     assert query_shape(name) == SHAPES.get(name)
 
 
