@@ -64,6 +64,11 @@ NGRAM_MAX_BUCKET = 1_000
 
 HASH60_TPL = "CAST(conv(substr(md5({x}), 1, 15), 16, 10) AS BIGINT)"
 
+# The one whitespace tokenizer: the NON-EMPTY splits of {x}, so leading
+# or trailing whitespace adds no phantom '' token. Its DuckDB twin is
+# queries/duck.py:DUCK_TOKENS.
+TOKENS_TPL = "filter(split({x}, '\\\\s+'), t -> t != '')"
+
 
 def _shingle_expr(tok_col: str, n: int = 3) -> str:
     idx = ", ' ', ".join(f"{tok_col}[i + {j}]" for j in range(n))
@@ -79,10 +84,7 @@ def tokenize(df: DataFrame, text_col: str = "text") -> DataFrame:
     phantom '' first token that shifts every shingle and simhash vote
     (' a b c' vs 'a b c' would miss as near-dups) — and every DuckDB
     oracle already tokenizes with the same non-empty filter."""
-    return df.withColumn(
-        "tokens",
-        F.expr(f"filter(split({text_col}, '\\\\s+'), t -> t != '')"),
-    )
+    return df.withColumn("tokens", F.expr(TOKENS_TPL.format(x=text_col)))
 
 
 def minhash_signature(df: DataFrame, num_perm: int = NUM_PERM) -> DataFrame:

@@ -13,7 +13,7 @@ from typing import NamedTuple
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kafka_streams_dexcom_spark.operators.dedup import HASH60_TPL
+from kafka_streams_dexcom_spark.operators.dedup import HASH60_TPL, TOKENS_TPL
 from kafka_streams_dexcom_spark.functions.rounding import trunc6
 from kafka_streams_dexcom_spark.sources.files import fan_out_small
 
@@ -32,13 +32,92 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 BPE_ISH_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 
+# --- the token-window core: one tokenizer frame, one k-gram start
+# explode, one span-excise rebuild, shared by every n-gram operator ---
+
+
+def _tokens(df: DataFrame, text_col: str, *keep) -> DataFrame:
+    """``(*keep, tk)`` over ``fan_out_small(df)``: tk is each row's
+    TOKENS_TPL token array, bound once so every later per-token
+    expression indexes a column instead of re-splitting the text."""
+    return fan_out_small(df).select(
+        *keep, F.expr(TOKENS_TPL.format(x=text_col)).alias("tk")
+    )
+
+
+def gram_starts(toks: DataFrame, k: int, *keep: str) -> DataFrame:
+    """``(*keep, tk, i)``: one row per token k-gram of ``toks``' token
+    array ``tk``, i its 1-based start, over the rows with at least k
+    tokens. Each caller projects its own gram from tk and i:
+    ``element_at(tk, i + j)`` words, the ``slice(tk, i, k)`` string, or
+    that string's HASH60_TPL hash.
+
+    The positions are exploded first and the gram is built in
+    whole-stage codegen. A ``transform(sequence(...), i -> gram)``
+    lambda evaluates its body interpreted (HigherOrderFunction bodies
+    are CodegenFallback), once per gram; the bare position sequence
+    keeps tk streaming in the generate loop, and the same element_at /
+    slice / md5 expression compiles (round 13; the round-12
+    simhash/minhash explode-then-codegen lesson, guide §4.1)."""
+    return toks.filter(F.size("tk") >= k).select(
+        *keep,
+        "tk",
+        F.explode(F.expr(f"sequence(1, size(tk) - {k - 1})")).alias("i"),
+    )
+
+
+def excise_spans(toks: DataFrame, starts: DataFrame, k: int) -> DataFrame:
+    """Cut every token a covered k-gram spans and rebuild the text.
+    ``toks`` is (doc_id, tk) and ``starts`` the (doc_id, i) starts of
+    the covered grams; the result is (doc_id, n_tokens, n_removed,
+    clean_text) for every row of ``toks``, kept tokens in their order.
+
+    Coverage and the rebuild are ROW-based: each start expands to its k
+    (doc, position) rows, a LEFT ANTI join removes them from the
+    position-exploded token stream, and the survivors re-assemble per
+    doc — worst-case linear in tokens even for a fully covered
+    100k-token document (a scan-side ``exists`` over the per-doc start
+    list would be O(tokens × starts) per row exactly on the
+    heavy-duplication inputs the span rewrites exist for). Rows with no
+    covered gram pass through the final left join untouched."""
+    cov = starts.select(
+        "doc_id",
+        F.explode(F.expr(f"sequence(i, i + {k - 1})")).alias("p"),
+    ).distinct()
+    pos = toks.select(
+        "doc_id", F.posexplode("tk").alias("j", "tok")
+    ).select("doc_id", (F.col("j") + 1).alias("p"), "tok")
+    rebuilt = (
+        pos.join(cov, ["doc_id", "p"], "left_anti")
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_kept"),
+            F.expr(
+                "array_join(transform(array_sort("
+                "collect_list(struct(p, tok))), s -> s.tok), ' ')"
+            ).alias("txt"),
+        )
+    )
+    return (
+        toks.join(rebuilt, "doc_id", "left")
+        .select(
+            "doc_id",
+            F.size("tk").cast("bigint").alias("n_tokens"),
+            (F.size("tk") - F.coalesce("n_kept", F.lit(0)))
+            .cast("bigint")
+            .alias("n_removed"),
+            F.coalesce("txt", F.lit("")).alias("clean_text"),
+        )
+    )
+
+
 def text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Per-document surface statistics. Tokens are the NON-EMPTY
     whitespace splits (a trailing newline must not add a phantom ''
     token to the counts); a token-free document gets avg_token_len 0.0
     instead of a 0/0 NaN."""
     df = fan_out_small(df)
-    toks_sql = f"filter(split({text_col}, '\\\\s+'), t -> t != '')"
+    toks_sql = TOKENS_TPL.format(x=text_col)
     toks = F.expr(toks_sql)
     n_tokens = F.size(toks)
     tok_len_sum = F.expr(
@@ -110,7 +189,7 @@ def quality_score(
     carry sibling scan-side expressions (e.g. a token count) through
     the SAME pass instead of re-scanning and re-joining on doc_id."""
     df = fan_out_small(df)
-    toks_sql = f"filter(split({text_col}, '\\\\s+'), t -> t != '')"
+    toks_sql = TOKENS_TPL.format(x=text_col)
     toks = F.expr(toks_sql)
     n_tokens = F.size(toks).cast("double")
     stop_list = ", ".join(f"'{t}'" for t in LANG_MARKERS["en"])
@@ -176,7 +255,7 @@ def gopher_rules(
     Scale: pure scan-side projection — higher-order functions on the
     split array inside whole-stage codegen, zero shuffles, zero joins;
     the filter runs at read bandwidth on any corpus size."""
-    toks_sql = f"filter(split({text_col}, '\\\\s+'), t -> t != '')"
+    toks_sql = TOKENS_TPL.format(x=text_col)
     # bind the token array once: the stopword lambda below iterates the
     # stop set, and array_contains over an UNBOUND filter(split(...))
     # would re-tokenize per stop word (see kneser_ney_lm)
@@ -235,7 +314,7 @@ def token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     economics column set for token-budget planning."""
     df = fan_out_small(df)
     n_ws = F.expr(
-        f"size(filter(split({text_col}, '\\\\s+'), t -> t != ''))"
+        f"size({TOKENS_TPL.format(x=text_col)})"
     ).cast("bigint")
     n_bpe = F.size(
         F.regexp_extract_all(F.col(text_col), F.lit(BPE_ISH_PATTERN), 0)
@@ -312,31 +391,13 @@ def bigram_lm(
     """Corpus bigram language-model counts: top-N bigrams with their
     conditional probability p(w2 | w1) = c(w1,w2) / c(w1,·).
 
-    Bigram structs are built scan-side (transform over sequence — a
-    narrow map, no join between adjacent tokens); counting is one
-    shuffle; c(w1,·) is a window sum over the already-aggregated bigram
+    Bigrams are built scan-side from exploded start positions
+    (gram_starts — a narrow map, no join between adjacent tokens);
+    counting is one shuffle (_bigram_type_counts, shared with the KN
+    models); c(w1,·) is a window sum over the already-aggregated bigram
     table (vocabulary-sized, not token-sized); top-N is a TakeOrdered
     with a total order so the cut is deterministic."""
-    toks_expr = f"filter(split({text_col}, '\\\\s+'), t -> t != '')"
-    # explode positions first, index the bound token array in codegen —
-    # not an interpreted transform() lambda (round 13; see
-    # span_dedup_rewrite)
-    pairs = (
-        fan_out_small(df)
-        .select(F.expr(toks_expr).alias("tk"))
-        .filter(F.size("tk") >= 2)
-        .select(
-            "tk",
-            F.explode(F.expr("sequence(1, size(tk) - 1)")).alias("i"),
-        )
-        .select(
-            F.expr("element_at(tk, i)").alias("w1"),
-            F.expr("element_at(tk, i + 1)").alias("w2"),
-        )
-    )
-    counts = pairs.groupBy("w1", "w2").agg(
-        F.count(F.lit(1)).alias("n_bigram")
-    )
+    counts = _bigram_type_counts(df, text_col)
     w1_tot = Window.partitionBy("w1")
     return (
         counts.withColumn("n_w1", F.sum("n_bigram").over(w1_tot))
@@ -408,21 +469,11 @@ KN_DISCOUNT = 0.75
 
 def _bigram_type_counts(df: DataFrame, text_col: str) -> DataFrame:
     """(w1, w2, n_bigram) over the corpus — the one token-scale shuffle
-    both KN variants share. The token array is projected ONCE so
-    element_at inside the transform lambda indexes a bound column
-    rather than re-running split+filter per element (a 2.67x -> ~1x
-    x10-probe difference at bigram volume)."""
-    toks_expr = f"filter(split({text_col}, '\\\\s+'), t -> t != '')"
-    # explode positions first, index in codegen (round 13; see
-    # span_dedup_rewrite)
+    bigram_lm and both KN variants share. Both words index the bound
+    token array (gram_starts) rather than re-running split+filter per
+    element (a 2.67x -> ~1x x10-probe difference at bigram volume)."""
     return (
-        fan_out_small(df)
-        .select(F.expr(toks_expr).alias("tk"))
-        .filter(F.size("tk") >= 2)
-        .select(
-            "tk",
-            F.explode(F.expr("sequence(1, size(tk) - 1)")).alias("i"),
-        )
+        gram_starts(_tokens(df, text_col), 2)
         .select(
             F.expr("element_at(tk, i)").alias("w1"),
             F.expr("element_at(tk, i + 1)").alias("w2"),
@@ -607,17 +658,8 @@ def kneser_ney_trigram(df: DataFrame, text_col: str = "text") -> DataFrame:
     continuation count, then one exchange each for the (w1,w2), (w2)
     and (w3) windows; the global type total joins as a broadcast 1-row
     aggregate (never a single-partition global window)."""
-    toks_expr = f"filter(split({text_col}, '\\\\s+'), t -> t != '')"
-    # explode positions first, index in codegen (round 13; see
-    # span_dedup_rewrite)
     counts = (
-        fan_out_small(df)
-        .select(F.expr(toks_expr).alias("tk"))
-        .filter(F.size("tk") >= 3)
-        .select(
-            "tk",
-            F.explode(F.expr("sequence(1, size(tk) - 2)")).alias("i"),
-        )
+        gram_starts(_tokens(df, text_col), 3)
         .select(
             F.expr("element_at(tk, i)").alias("w1"),
             F.expr("element_at(tk, i + 1)").alias("w2"),
@@ -707,19 +749,8 @@ def doc_cross_entropy(df: DataFrame, text_col: str = "text") -> DataFrame:
     bit-identical cross-engine); the per-doc sum weights each distinct
     bigram's unit by its integer occurrence count — partition-order
     independent and exactly replayable in SQL."""
-    toks_expr = f"filter(split({text_col}, '\\\\s+'), t -> t != '')"
-    # explode positions first, index the bound token array in codegen —
-    # not an interpreted transform() lambda (round 13; see
-    # span_dedup_rewrite)
     doc_counts = (
-        fan_out_small(df)
-        .select("doc_id", F.expr(toks_expr).alias("tk"))
-        .filter(F.size("tk") >= 2)
-        .select(
-            "doc_id",
-            "tk",
-            F.explode(F.expr("sequence(1, size(tk) - 1)")).alias("i"),
-        )
+        gram_starts(_tokens(df, text_col, "doc_id"), 2, "doc_id")
         .select(
             "doc_id",
             F.expr("element_at(tk, i)").alias("w1"),
@@ -855,14 +886,11 @@ def repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     instead of two explode+agg subtrees), a (doc, n, gram) count, then a
     doc-level conditional aggregation — token-volume data crosses the
     wire exactly once."""
-    toks = f"filter(split({text_col}, '\\\\s+'), t -> t != '')"
     # explode (position, gram order) pairs and build the gram string in
-    # codegen — not interpreted transform() lambdas (round 13; see
-    # span_dedup_rewrite). Same single shuffle carrying both gram
-    # orders; row set identical to the concat-of-transforms form.
+    # codegen (gram_starts' reasoning; it serves one gram order, this
+    # explode carries two). Same single shuffle for both orders.
     g = (
-        fan_out_small(df)
-        .select("doc_id", F.expr(toks).alias("tk"))
+        _tokens(df, text_col, "doc_id")
         # need at least one trigram so every output column is non-null
         .filter(F.size("tk") >= 3)
         .select(
@@ -959,25 +987,11 @@ def pmi_pairs(
     window sums over the aggregated pair table (vocabulary-sized), not a
     second token-volume shuffle. Corpus total joins in as a broadcast
     single-row aggregate."""
-    toks_expr = f"filter(split({text_col}, '\\\\s+'), t -> t != '')"
-    # explode positions first, order-normalize in codegen — not an
-    # interpreted transform() lambda (round 13; see span_dedup_rewrite)
-    pairs = (
-        fan_out_small(df)
-        .select(F.expr(toks_expr).alias("tk"))
-        .filter(F.size("tk") >= 2)
-        .select(
-            "tk",
-            F.explode(F.expr("sequence(1, size(tk) - 1)")).alias("i"),
-        )
-        .select(
-            F.expr(
-                "least(element_at(tk, i), element_at(tk, i + 1))"
-            ).alias("w_a"),
-            F.expr(
-                "greatest(element_at(tk, i), element_at(tk, i + 1))"
-            ).alias("w_b"),
-        )
+    pairs = gram_starts(_tokens(df, text_col), 2).select(
+        F.expr("least(element_at(tk, i), element_at(tk, i + 1))").alias("w_a"),
+        F.expr("greatest(element_at(tk, i), element_at(tk, i + 1))").alias(
+            "w_b"
+        ),
     )
     # the pair-count table feeds FOUR plan branches (both marginal sides,
     # the corpus total, and the scored join); the total goes through a
@@ -1049,7 +1063,7 @@ def doc_chunks(
     and each chunk is a slice of the token array, so the op is a narrow
     map + explode with no shuffle at any scale; chunk_idx derives from
     the start offset, not an order-dependent counter."""
-    toks = f"filter(split({text_col}, '\\\\s+'), t -> t != '')"
+    toks = TOKENS_TPL.format(x=text_col)
     # slice a bound column — per-chunk re-tokenization inside the
     # lambda is quadratic in tokens (see kneser_ney_lm)
     chunks = F.expr(
@@ -1181,7 +1195,7 @@ def bm25_search(
         stats = stats.crossJoin(F.broadcast(dfreqs))
         scored = base.join(F.broadcast(stats), how="cross")
     else:
-        toks = f"filter(split({text_col}, '\\\\s+'), t -> t != '')"
+        toks = TOKENS_TPL.format(x=text_col)
         safe = [t.replace("'", "''") for t in query_terms]
         base = fan_out_small(df).select(
             "doc_id",
@@ -1247,7 +1261,7 @@ def build_inverted_index(
     (bucketed by term) and reuses for every query batch; the document
     length is denormalized into the postings (the classic stored-norm
     trick) so query-time scoring never joins back to the corpus."""
-    toks = f"filter(split({text_col}, '\\\\s+'), t -> t != '')"
+    toks = TOKENS_TPL.format(x=text_col)
     base = (
         fan_out_small(df)
         .select("doc_id", F.expr(toks).alias("__toks"))
@@ -1457,22 +1471,9 @@ def dup_span_fraction(
 
     Determinism: counts are exact integers; the fraction is truncated to
     6 decimals on both engines."""
-    toks_expr = f"filter(split({text_col}, '\\\\s+'), t -> t != '')"
-    # explode positions first, build the gram string in codegen — not an
-    # interpreted transform() lambda (round 13; see span_dedup_rewrite).
-    # Gram identity stays the STRING (the oracle groups on it), only the
-    # construction moved out of the HOF.
+    # gram identity is the STRING (the oracle groups on it)
     occ = (
-        fan_out_small(df)
-        .select("doc_id", F.expr(toks_expr).alias("tk"))
-        .filter(F.size("tk") >= k)
-        .select(
-            "doc_id",
-            "tk",
-            F.explode(
-                F.expr(f"sequence(1, size(tk) - {k - 1})")
-            ).alias("i"),
-        )
+        gram_starts(_tokens(df, text_col, "doc_id"), k, "doc_id")
         .select(
             "doc_id",
             F.expr(f"array_join(slice(tk, i, {k}), ' ')").alias("gram"),
@@ -1599,7 +1600,7 @@ WORDPIECE = MergeFamily(
 def _word_counts(df: DataFrame, text_col: str) -> DataFrame:
     """Distinct-word counts (w, wc) — the single token-scale shuffle
     every tokenizer trainer and apply map amortizes."""
-    toks_expr = f"filter(split({text_col}, '\\\\s+'), t -> t != '')"
+    toks_expr = TOKENS_TPL.format(x=text_col)
     return (
         fan_out_small(df)
         .select(F.explode(F.expr(toks_expr)).alias("w"))
@@ -1822,7 +1823,7 @@ def bytebpe_apply_merges(
         )
     else:
         per_word = seed
-    toks = f"filter(split({text_col}, '\\\\s+'), t -> t != '')"
+    toks = TOKENS_TPL.format(x=text_col)
     return df.select(
         F.col(id_col),
         F.expr(f"size({toks})").cast("bigint").alias("n_words"),
@@ -1847,7 +1848,7 @@ def vocab_sums(
     for each keyword in ``sums`` (e.g. ``n_chars="wlen"``). Words
     missing from ``enc`` drop out of the inner join; keys with no
     words produce no row."""
-    toks_expr = f"filter(split({text_col}, '\\\\s+'), t -> t != '')"
+    toks_expr = TOKENS_TPL.format(x=text_col)
     wc = (
         df.select(F.col(key), F.explode(F.expr(toks_expr)).alias("w"))
         .groupBy(key, "w")
@@ -1982,7 +1983,7 @@ def bm25_rerank_proximity(
     # rank per query), so no distinct pass (and its exchange) is needed
     # to use it as a join key set (round 13).
     cdocs = cand.select("query_id", "doc_id")
-    toks_expr = f"filter(split({text_col}, '\\\\s+'), t -> t != '')"
+    toks_expr = TOKENS_TPL.format(x=text_col)
     # No fan_out_small here: the broadcast semi join keeps <= k·|queries|
     # docs, so repartitioning the FULL corpus (a round-robin exchange of
     # every text payload) to parallelize 60 rows of tokenize work was
@@ -2064,42 +2065,33 @@ def span_dedup_rewrite(
     one token-scale shuffle reduces occurrences to per-(doc, gram)
     position lists, then a repartition on the gram key makes
     doc-frequency + canonical-owner a sort-only window pass — the
-    dup_span_fraction plan. Coverage and the rebuild are ROW-based:
-    duplicated starts expand to (doc, position) rows (≤ k per start), a
-    LEFT ANTI join removes them from the position-exploded token
-    stream, and the survivors re-assemble per doc — worst-case linear
-    in tokens even for a fully-duplicated 100k-token document (a
-    scan-side `exists` over the per-doc start list would be
-    O(tokens × starts) per row exactly on the heavy-duplication inputs
-    this operator exists for). Rows whose documents contain no
-    duplicated span pass through the final left join untouched.
+    dup_span_fraction plan. The cut and the rebuild are
+    :func:`excise_spans`; this operator only picks the covered starts.
     """
-    toks_expr = f"filter(split({text_col}, '\\\\s+'), t -> t != '')"
-    toks = fan_out_small(df).select(
-        "doc_id", F.expr(toks_expr).alias("tk")
+    toks = _tokens(df, text_col, "doc_id")
+    # cover every duplicated gram except in its min-doc_id owner
+    starts = (
+        _gram_doc_positions(toks, k)
+        .filter((F.col("nd") >= 2) & (F.col("doc_id") != F.col("mind")))
+        .select("doc_id", F.explode("pos").alias("i"))
     )
+    return excise_spans(toks, starts, k)
+
+
+def _gram_doc_positions(toks: DataFrame, k: int) -> DataFrame:
+    """(doc_id, pos, nd, mind), one row per (document, k-gram) of the
+    (doc_id, tk) frame ``toks``: pos lists the gram's starts in the
+    document, nd counts the documents holding the gram and mind is the
+    smallest of them. Grams travel as 60-bit hashes; one token-scale
+    shuffle reduces occurrences to the position lists, then a
+    repartition on the gram key makes nd and mind a sort-only window
+    pass. The span rewrites filter this frame by their cover policy."""
     gram_hash = HASH60_TPL.format(x=f"array_join(slice(tk, i, {k}), ' ')")
-    # Explode the start positions FIRST, then hash in whole-stage
-    # codegen: the previous transform(sequence(...), i -> struct(...))
-    # lambda evaluated the md5 chain interpreted (HigherOrderFunction
-    # bodies are CodegenFallback) once per gram; exploding the bare
-    # position sequence keeps tk streaming in the generate loop and the
-    # identical slice/array_join/md5 expression compiles (round 13; the
-    # round-12 simhash/minhash explode-then-codegen lesson, guide §4.1).
-    grams = (
-        toks.filter(F.expr(f"size(tk) >= {k}"))
-        .select(
-            "doc_id",
-            "tk",
-            F.explode(
-                F.expr(f"sequence(1, size(tk) - {k - 1})")
-            ).alias("i"),
-        )
-        .select("doc_id", "i", F.expr(gram_hash).alias("gk"))
-    )
     w = Window.partitionBy("gk")
-    occ = (
-        grams.groupBy("doc_id", "gk")
+    return (
+        gram_starts(toks, k, "doc_id")
+        .select("doc_id", "i", F.expr(gram_hash).alias("gk"))
+        .groupBy("doc_id", "gk")
         .agg(F.collect_list("i").alias("pos"))
         .repartition("gk")
         .select(
@@ -2107,40 +2099,6 @@ def span_dedup_rewrite(
             "pos",
             F.count(F.lit(1)).over(w).alias("nd"),
             F.min("doc_id").over(w).alias("mind"),
-        )
-    )
-    cov = (
-        occ.filter((F.col("nd") >= 2) & (F.col("doc_id") != F.col("mind")))
-        .select("doc_id", F.explode("pos").alias("i"))
-        .select(
-            "doc_id",
-            F.explode(F.expr(f"sequence(i, i + {k - 1})")).alias("p"),
-        )
-        .distinct()
-    )
-    pos = toks.select(
-        "doc_id", F.posexplode("tk").alias("j", "tok")
-    ).select("doc_id", (F.col("j") + 1).alias("p"), "tok")
-    rebuilt = (
-        pos.join(cov, ["doc_id", "p"], "left_anti")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_kept"),
-            F.expr(
-                "array_join(transform(array_sort("
-                "collect_list(struct(p, tok))), s -> s.tok), ' ')"
-            ).alias("txt"),
-        )
-    )
-    return (
-        toks.join(rebuilt, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.size("tk").cast("bigint").alias("n_tokens"),
-            (F.size("tk") - F.coalesce("n_kept", F.lit(0)))
-            .cast("bigint")
-            .alias("n_removed"),
-            F.coalesce("txt", F.lit("")).alias("clean_text"),
         )
     )
 
@@ -2196,21 +2154,9 @@ def maximal_dup_spans(
     occurrences on the SAME gram partitioning; the islands pass is one
     pair-scale shuffle on (doc_a, doc_b, diagonal). Nothing is ever
     all-pairs across documents."""
-    toks_expr = f"filter(split({text_col}, '\\\\s+'), t -> t != '')"
     gram_hash = HASH60_TPL.format(x=f"array_join(slice(tk, i, {k}), ' ')")
-    # explode positions first, hash in codegen — not an interpreted
-    # transform() lambda (round 13; see span_dedup_rewrite)
     occ = (
-        fan_out_small(df)
-        .select("doc_id", F.expr(toks_expr).alias("tk"))
-        .filter(F.expr(f"size(tk) >= {k}"))
-        .select(
-            "doc_id",
-            "tk",
-            F.explode(
-                F.expr(f"sequence(1, size(tk) - {k - 1})")
-            ).alias("i"),
-        )
+        gram_starts(_tokens(df, text_col, "doc_id"), k, "doc_id")
         .select("doc_id", "i", F.expr(gram_hash).alias("gk"))
         .repartition("gk")
     )
@@ -2285,7 +2231,7 @@ def heavy_hitters(
     alternative — full groupBy then HAVING — shuffles the entire
     vocabulary.
     """
-    toks_expr = f"filter(split({text_col}, '\\\\s+'), t -> t != '')"
+    toks_expr = TOKENS_TPL.format(x=text_col)
     toks = fan_out_small(df).select(
         F.explode(F.expr(toks_expr)).alias("term")
     )
@@ -2361,7 +2307,7 @@ def source_divergence(df: DataFrame, text_col: str = "text") -> DataFrame:
     (sort-only after a repartition), per-source totals and the corpus
     grand total are tiny broadcast aggregates.
     """
-    toks_expr = f"filter(split({text_col}, '\\\\s+'), t -> t != '')"
+    toks_expr = TOKENS_TPL.format(x=text_col)
     toks = fan_out_small(df).select(
         "source", F.explode(F.expr(toks_expr)).alias("term")
     )
@@ -2867,71 +2813,17 @@ def boilerplate_ngram_rewrite(
     Scale shape: identical to span_dedup_rewrite — 60-bit gram hashes,
     one token-scale shuffle to per-(doc, gram) position lists, a
     sort-only window pass on the gram key for document frequency, then
-    the row-based coverage expansion + LEFT ANTI rebuild (worst-case
-    linear in tokens even for an all-boilerplate document)."""
-    toks_expr = f"filter(split({text_col}, '\\\\s+'), t -> t != '')"
-    toks = fan_out_small(df).select(
-        "doc_id", F.expr(toks_expr).alias("tk")
-    )
-    gram_hash = HASH60_TPL.format(x=f"array_join(slice(tk, i, {k}), ' ')")
-    # explode positions first, hash in codegen — not an interpreted
-    # transform() lambda (round 13; see span_dedup_rewrite)
-    grams = (
-        toks.filter(F.expr(f"size(tk) >= {k}"))
-        .select(
-            "doc_id",
-            "tk",
-            F.explode(
-                F.expr(f"sequence(1, size(tk) - {k - 1})")
-            ).alias("i"),
-        )
-        .select("doc_id", "i", F.expr(gram_hash).alias("gk"))
-    )
-    w = Window.partitionBy("gk")
-    occ = (
-        grams.groupBy("doc_id", "gk")
-        .agg(F.collect_list("i").alias("pos"))
-        .repartition("gk")
-        .select(
-            "doc_id",
-            "pos",
-            F.count(F.lit(1)).over(w).alias("nd"),
-        )
-    )
-    cov = (
-        occ.filter(F.col("nd") >= min_docs)
+    the row-based :func:`excise_spans` rebuild (worst-case linear in
+    tokens even for an all-boilerplate document)."""
+    toks = _tokens(df, text_col, "doc_id")
+    # cover every gram present in >= min_docs documents, in all of them
+    starts = (
+        _gram_doc_positions(toks, k)
+        .filter(F.col("nd") >= min_docs)
         .select("doc_id", F.explode("pos").alias("i"))
-        .select(
-            "doc_id",
-            F.explode(F.expr(f"sequence(i, i + {k - 1})")).alias("p"),
-        )
-        .distinct()
     )
-    pos = toks.select(
-        "doc_id", F.posexplode("tk").alias("j", "tok")
-    ).select("doc_id", (F.col("j") + 1).alias("p"), "tok")
-    rebuilt = (
-        pos.join(cov, ["doc_id", "p"], "left_anti")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_kept"),
-            F.expr(
-                "array_join(transform(array_sort("
-                "collect_list(struct(p, tok))), s -> s.tok), ' ')"
-            ).alias("txt"),
-        )
-    )
-    return (
-        toks.join(rebuilt, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.size("tk").cast("bigint").alias("n_tokens"),
-            (F.size("tk") - F.coalesce("n_kept", F.lit(0)))
-            .cast("bigint")
-            .alias("n_removed"),
-            F.coalesce("txt", F.lit("")).alias("clean_text"),
-        )
-    )
+    return excise_spans(toks, starts, k)
+
 
 LINE_WORDS = 8
 HOST_LINE_MIN_DOCS = 2
@@ -2947,18 +2839,13 @@ def host_lines(
     per-domain line pass — one definition shared by the batch operator
     (:func:`host_line_dedup`) and the streaming census maintainer
     (streaming/line_census.py), so batch and stream count identical
-    lines by construction. Entirely scan-side: tokenization + one
-    transform over ``line_words``-token windows + explode."""
-    toks_expr = f"filter(split({text_col}, '\\\\s+'), t -> t != '')"
-    base = fan_out_small(df).select(
-        "doc_id", F.col(host_col).alias("host"), F.expr(toks_expr).alias("tk")
-    )
-    # explode the line indexes first, build the line + its hash in
-    # codegen — not an interpreted transform() lambda (round 13; see
-    # span_dedup_rewrite). Identical (ln, lh, line) rows; the streaming
-    # census twin shares this construction unchanged.
+    lines by construction. Entirely scan-side: tokenization, an
+    explode of the line indexes, then the ``line_words``-token line and
+    its hash built in codegen (gram_starts' reasoning, with windows
+    aligned at ``line_words`` boundaries instead of every start)."""
     return (
-        base.filter(F.size("tk") >= 1)
+        _tokens(df, text_col, "doc_id", F.col(host_col).alias("host"))
+        .filter(F.size("tk") >= 1)
         .select(
             "doc_id",
             "host",
@@ -3011,8 +2898,9 @@ def host_line_dedup(
     gen_testdata), so both engines re-derive identical line boundaries
     from the text alone.
 
-    Scale shape: line construction is scan-side (one transform over
-    the token array); the repeated-line census groups 8-byte 60-bit
+    Scale shape: line construction is scan-side (:func:`host_lines`:
+    an explode of the line indexes over the token array); the
+    repeated-line census groups 8-byte 60-bit
     line hashes KEYED BY HOST — at 100 TB that shuffle carries
     (host, hash) pairs, never line text, and the per-host key prefix
     keeps each domain's census co-located so no single reducer sees
@@ -3086,57 +2974,18 @@ def eval_span_scrub(
     LEFT ANTI rebuild, no train-side gram shuffle at all. At 100 TB
     that difference is the whole point: eval suites are thousands of
     documents, ingest is unbounded."""
-    toks_expr = f"filter(split({text_col}, '\\\\s+'), t -> t != '')"
     gram_hash = HASH60_TPL.format(x=f"array_join(slice(tk, i, {k}), ' ')")
-    # explode positions first, hash in codegen — not an interpreted
-    # transform() lambda (round 13; see span_dedup_rewrite)
-    seq_tpl = f"sequence(1, size(tk) - {k - 1})"
     eval_grams = (
-        fan_out_small(eval_docs)
-        .select(F.expr(toks_expr).alias("tk"))
-        .filter(F.expr(f"size(tk) >= {k}"))
-        .select("tk", F.explode(F.expr(seq_tpl)).alias("i"))
+        gram_starts(_tokens(eval_docs, text_col), k)
         .select(F.expr(gram_hash).alias("gk"))
         .distinct()
     )
-    toks = fan_out_small(train).select(
-        "doc_id", F.expr(toks_expr).alias("tk")
-    )
-    grams = (
-        toks.filter(F.expr(f"size(tk) >= {k}"))
-        .select("doc_id", "tk", F.explode(F.expr(seq_tpl)).alias("i"))
+    toks = _tokens(train, text_col, "doc_id")
+    # cover every train gram the broadcast eval gram set holds
+    starts = (
+        gram_starts(toks, k, "doc_id")
         .select("doc_id", "i", F.expr(gram_hash).alias("gk"))
+        .join(F.broadcast(eval_grams), "gk")
+        .select("doc_id", "i")
     )
-    cov = (
-        grams.join(F.broadcast(eval_grams), "gk")
-        .select(
-            "doc_id",
-            F.explode(F.expr(f"sequence(i, i + {k - 1})")).alias("p"),
-        )
-        .distinct()
-    )
-    pos = toks.select(
-        "doc_id", F.posexplode("tk").alias("j", "tok")
-    ).select("doc_id", (F.col("j") + 1).alias("p"), "tok")
-    rebuilt = (
-        pos.join(cov, ["doc_id", "p"], "left_anti")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_kept"),
-            F.expr(
-                "array_join(transform(array_sort("
-                "collect_list(struct(p, tok))), s -> s.tok), ' ')"
-            ).alias("txt"),
-        )
-    )
-    return (
-        toks.join(rebuilt, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.size("tk").cast("bigint").alias("n_tokens"),
-            (F.size("tk") - F.coalesce("n_kept", F.lit(0)))
-            .cast("bigint")
-            .alias("n_removed"),
-            F.coalesce("txt", F.lit("")).alias("clean_text"),
-        )
-    )
+    return excise_spans(toks, starts, k)

@@ -27,6 +27,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kafka_streams_dexcom_spark.functions import html as hx
+from kafka_streams_dexcom_spark.operators.dedup import TOKENS_TPL
+from kafka_streams_dexcom_spark.queries.duck import DUCK_TOKENS
 from kafka_streams_dexcom_spark.sources import corpus as cs
 from kafka_streams_dexcom_spark.sources.files import (
     corpus_fingerprint,
@@ -723,7 +725,7 @@ def _compliance_report_oracle() -> str:
 
 def _tok_spark(c: str):
     return F.expr(
-        f"size(filter(split({c}, '\\\\s+'), t -> t != ''))"
+        f"size({TOKENS_TPL.format(x=c)})"
     ).cast("bigint")
 
 
@@ -905,23 +907,17 @@ def _crawl_manifest_oracle() -> str:
     from kafka_streams_dexcom_spark.operators.robots import (
         robots_rules_duck_sql,
     )
-    from kafka_streams_dexcom_spark.operators.text import (
-        HOST_LINE_MIN_DOCS,
-        LINE_WORDS,
-    )
+    from kafka_streams_dexcom_spark.operators.text import HOST_LINE_MIN_DOCS
     from kafka_streams_dexcom_spark.queries.dedup import (
-        DUCK_HASH60,
         _ngram_jaccard_oracle,
         _robots_docs_duck,
         cc_doubling_sql,
+        host_lines_sql,
     )
     from kafka_streams_dexcom_spark.queries.text import gopher_duck_sql
 
     def tokd(c: str) -> str:
-        return (
-            f"CAST(len(list_filter(string_split_regex({c}, '\\s+'), "
-            "t -> t != '')) AS BIGINT)"
-        )
+        return f"CAST(len({DUCK_TOKENS.format(x=c)}) AS BIGINT)"
 
     dd_ = hx.extract_cols_duck("html")
     bodies = (
@@ -930,11 +926,6 @@ def _crawl_manifest_oracle() -> str:
         "FROM (SELECT DISTINCT host FROM d)"
     )
     canon = ux.canonical_url_sql(ux.messy_url_sql(duck=True), duck=True)
-    line = (
-        f"array_to_string(list_slice(tk, i * {LINE_WORDS} + 1, "
-        f"i * {LINE_WORDS} + {LINE_WORDS}), ' ')"
-    )
-    lh = DUCK_HASH60.format(x=line)
     return f"""
         WITH {_robots_docs_duck()},
         {robots_rules_duck_sql(bodies)},
@@ -990,17 +981,10 @@ def _crawl_manifest_oracle() -> str:
         ),
         ptk AS MATERIALIZED (
             SELECT doc_id, host, tk_soup, tk_clean,
-                   list_filter(string_split_regex(page, '\\s+'),
-                               t -> t != '') AS tk
+                   {DUCK_TOKENS.format(x='page')} AS tk
             FROM a2
         ),
-        pl AS MATERIALIZED (
-            SELECT doc_id, host, CAST(i AS BIGINT) AS ln,
-                   {lh} AS lh, {line} AS line
-            FROM ptk, UNNEST(range(0,
-                CAST(ceil(len(tk) / {LINE_WORDS}.0) AS BIGINT))) r(i)
-            WHERE len(tk) >= 1
-        ),
+        pl AS MATERIALIZED ({host_lines_sql("ptk")}),
         pb AS (
             SELECT host, lh FROM pl
             GROUP BY host, lh

@@ -13,18 +13,13 @@ from pyspark.sql import functions as F
 
 from kafka_streams_dexcom_spark.functions.hashing import MERSENNE_P, PERM_COEFFS
 from kafka_streams_dexcom_spark.operators import dedup as dd
+from kafka_streams_dexcom_spark.queries.duck import DUCK_HASH60, DUCK_TOKENS
 from kafka_streams_dexcom_spark.sources.files import load_table
 
 JACCARD_THRESHOLD = 0.2
 NGRAM_THRESHOLD = 0.3
 COSINE_THRESHOLD = 0.3
 MAX_HAMMING = 8
-
-from kafka_streams_dexcom_spark.functions.hashing import hash60_sql
-
-# the canonical portable-hash template (single definition in
-# functions/hashing.py, Spark twin HASH60_TPL in operators/dedup.py)
-DUCK_HASH60 = hash60_sql("{x}")
 
 
 def q_dedup_url(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -703,8 +698,7 @@ def _duck_shingles_cte() -> str:
             -- non-empty tokens, matching operators/dedup.py:tokenize
             -- (leading whitespace must not shift shingles/votes)
             SELECT doc_id,
-                   list_filter(string_split_regex(text, '\\s+'),
-                               x -> x != '') AS t
+                   {DUCK_TOKENS.format(x='text')} AS t
             FROM documents
         ),
         sh AS (
@@ -836,8 +830,7 @@ def _simhash_expr_duck() -> str:
             -- non-empty tokens, matching operators/dedup.py:tokenize
             -- (leading whitespace must not shift shingles/votes)
             SELECT doc_id,
-                   list_filter(string_split_regex(text, '\\s+'),
-                               x -> x != '') AS t
+                   {DUCK_TOKENS.format(x='text')} AS t
             FROM documents
         ),
         th_cte AS (
@@ -1851,8 +1844,7 @@ ORACLES["survivor_token_savings"] = f"""
     ),
     tok AS (
         SELECT doc_id, source,
-               CAST(len(list_filter(string_split_regex(text, '\\s+'),
-                                    t -> t != '')) AS BIGINT) AS n_tokens
+               CAST(len({DUCK_TOKENS.format(x='text')}) AS BIGINT) AS n_tokens
         FROM documents
     ),
     agg AS (
@@ -2404,7 +2396,7 @@ def q_curation_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source",
             "lang",
             F.expr(
-                "size(filter(split(text, '\\\\s+'), t -> t != ''))"
+                f"size({dd.TOKENS_TPL.format(x='text')})"
             ).cast("bigint").alias("n_tokens"),
         )
         # provenance: the CANONICAL address (functions/url.py — the
@@ -2436,8 +2428,8 @@ def _curation_manifest_oracle() -> str:
         member AS (
             SELECT d.doc_id, d.source, d.lang,
                    {canon} AS url,
-                   CAST(len(list_filter(string_split_regex(d.text, '\\s+'),
-                        t -> t <> '')) AS BIGINT) AS n_tokens,
+                   CAST(len({DUCK_TOKENS.format(x='d.text')}) AS BIGINT)
+                       AS n_tokens,
                    coalesce(c.component, d.doc_id) AS cluster
             FROM documents d LEFT JOIN comp c ON d.doc_id = c.node
         )
@@ -2641,37 +2633,39 @@ def q_host_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return host_line_dedup(d, host_col="host", text_col="page")
 
 
+def host_lines_sql(toks: str) -> str:
+    """The (doc_id, host, ln, lh, line) rows of the (doc_id, host, tk)
+    relation ``toks``: the oracle twin of operators/text.py:host_lines,
+    shared by every host-line census oracle."""
+    from kafka_streams_dexcom_spark.operators.text import LINE_WORDS
+
+    line = (
+        f"array_to_string(list_slice(tk, i * {LINE_WORDS} + 1, "
+        f"i * {LINE_WORDS} + {LINE_WORDS}), ' ')"
+    )
+    return f"""
+        SELECT doc_id, host, CAST(i AS BIGINT) AS ln,
+               {DUCK_HASH60.format(x=line)} AS lh, {line} AS line
+        FROM {toks}, UNNEST(range(0,
+            CAST(ceil(len(tk) / {LINE_WORDS}.0) AS BIGINT))) r(i)
+        WHERE len(tk) >= 1"""
+
+
 def _host_line_dedup_oracle() -> str:
     from kafka_streams_dexcom_spark.functions import url as ux
-    from kafka_streams_dexcom_spark.operators.text import (
-        HOST_LINE_MIN_DOCS,
-        LINE_WORDS,
-    )
+    from kafka_streams_dexcom_spark.operators.text import HOST_LINE_MIN_DOCS
 
     host = ux.host_sql(
         ux.canonical_url_sql(ux.messy_url_sql(duck=True), duck=True),
         duck=True,
     )
-    line = (
-        f"array_to_string(list_slice(tk, i * {LINE_WORDS} + 1, "
-        f"i * {LINE_WORDS} + {LINE_WORDS}), ' ')"
-    )
-    lh = DUCK_HASH60.format(x=line)
     return f"""
         WITH d AS MATERIALIZED (
             SELECT doc_id, {host} AS host,
-                   list_filter(string_split_regex(
-                       {ux.page_text_sql(duck=True)}, '\\s+'),
-                       t -> t != '') AS tk
+                   {DUCK_TOKENS.format(x=ux.page_text_sql(duck=True))} AS tk
             FROM documents
         ),
-        l AS MATERIALIZED (
-            SELECT doc_id, host, CAST(i AS BIGINT) AS ln,
-                   {lh} AS lh, {line} AS line
-            FROM d, UNNEST(range(0,
-                CAST(ceil(len(tk) / {LINE_WORDS}.0) AS BIGINT))) r(i)
-            WHERE len(tk) >= 1
-        ),
+        l AS MATERIALIZED ({host_lines_sql("d")}),
         b AS MATERIALIZED (
             SELECT host, lh FROM l
             GROUP BY host, lh
@@ -2812,7 +2806,7 @@ def q_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             F.expr(
-                "size(filter(split(text, '\\\\s+'), t -> t != ''))"
+                f"size({dd.TOKENS_TPL.format(x='text')})"
             ).alias("n_toks"),
         )
         .join(url_map(spark, sf_dir).select("doc_id", "host"), "doc_id")
@@ -2835,8 +2829,7 @@ def _domain_mix_oracle() -> str:
     return f"""
         WITH d AS (
             SELECT {host} AS host,
-                   len(list_filter(string_split_regex(text, '\\s+'),
-                       t -> t != '')) AS n_toks
+                   len({DUCK_TOKENS.format(x='text')}) AS n_toks
             FROM documents
         ),
         per_host AS (

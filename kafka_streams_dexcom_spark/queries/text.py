@@ -5,14 +5,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kafka_streams_dexcom_spark.operators import text as tx
-from kafka_streams_dexcom_spark.sources.files import load_table
-
 from kafka_streams_dexcom_spark.functions.hashing import hash60_sql
-
-# the canonical portable-hash template (single definition in
-# functions/hashing.py, Spark twin HASH60_TPL in operators/dedup.py)
-DUCK_HASH60 = hash60_sql("{x}")
+from kafka_streams_dexcom_spark.operators import text as tx
+from kafka_streams_dexcom_spark.operators.dedup import HASH60_TPL, TOKENS_TPL
+from kafka_streams_dexcom_spark.queries.duck import DUCK_HASH60, DUCK_TOKENS
+from kafka_streams_dexcom_spark.sources.files import load_table
 
 
 BM25_QUERY_TERMS = ("join", "hash", "vector")
@@ -190,8 +187,7 @@ def _bm25_rerank_oracle() -> str:
         ),
         ctoks AS (
             SELECT doc_id,
-                   list_filter(string_split_regex(text, '\\s+'),
-                       t -> t != '') AS tk
+                   {DUCK_TOKENS.format(x='text')} AS tk
             FROM documents
             WHERE doc_id IN (SELECT doc_id FROM cand)
         ),
@@ -275,7 +271,7 @@ def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     d = load_table(spark, sf_dir, "documents")
-    toks = "size(filter(split(text, '\\\\s+'), t -> t != ''))"
+    toks = f"size({TOKENS_TPL.format(x='text')})"
     base = d.select(
         "doc_id", "lang", F.expr(toks).cast("bigint").alias("n_tokens")
     )
@@ -393,7 +389,6 @@ def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the last ulp across engines), ties break on doc_id."""
     from pyspark.sql import Window
     from kafka_streams_dexcom_spark.functions.rounding import trunc6
-    from kafka_streams_dexcom_spark.operators.dedup import HASH60_TPL
 
     d = load_table(spark, sf_dir, "documents")
     h = F.expr(HASH60_TPL.format(x="concat('ws|', CAST(doc_id AS STRING))"))
@@ -432,7 +427,7 @@ def q_source_lorenz(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_streams_dexcom_spark.functions.rounding import trunc6
 
     d = load_table(spark, sf_dir, "documents")
-    toks = "size(filter(split(text, '\\\\s+'), t -> t != ''))"
+    toks = f"size({TOKENS_TPL.format(x='text')})"
     per_source = (
         d.select("source", F.expr(toks).cast("bigint").alias("n"))
         .groupBy("source")
@@ -791,7 +786,6 @@ def q_training_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-eligible at this dimensionality and AQE-planned at scale.
     """
     d = load_table(spark, sf_dir, "documents")
-    from kafka_streams_dexcom_spark.operators.dedup import HASH60_TPL
 
     survivors = (
         d.withColumn("text_hash", F.expr(HASH60_TPL.format(x="text")))
@@ -853,8 +847,7 @@ def gopher_duck_sql(src: str = "documents") -> str:
     return f"""
         WITH t AS (
             SELECT doc_id, text,
-                   list_filter(string_split_regex(text, '\\s+'),
-                       x -> x != '') AS toks
+                   {DUCK_TOKENS.format(x='text')} AS toks
             FROM {src}
         ),
         c AS (
@@ -927,8 +920,7 @@ def quality_score_sql() -> str:
                        AS DOUBLE) AS na
             FROM (
                 SELECT doc_id,
-                       list_filter(string_split_regex(text, '\\s+'),
-                                   t -> t != '') AS tk
+                       {DUCK_TOKENS.format(x='text')} AS tk
                 FROM documents
             )
         )
@@ -1051,8 +1043,7 @@ def _bpe_train_oracle(
             FROM (
                 SELECT t AS w, count(*) AS wc
                 FROM documents,
-                     UNNEST(list_filter(string_split_regex(text, '\\s+'),
-                                        t -> t <> '')) AS u(t)
+                     UNNEST({DUCK_TOKENS.format(x='text')}) AS u(t)
                 GROUP BY t
             )
         )"""]
@@ -1127,8 +1118,7 @@ def _bpe_enc_head(
             FROM (
                 SELECT t AS w, count(*) AS wc
                 FROM documents,
-                     UNNEST(list_filter(string_split_regex(text, '\\s+'),
-                                        t -> t <> '')) AS u(t)
+                     UNNEST({DUCK_TOKENS.format(x='text')}) AS u(t)
                 GROUP BY t
             )
         )"""]
@@ -1181,8 +1171,7 @@ def _bpe_encode_oracle(
         wcnt AS (
             SELECT doc_id, t AS w, count(*) AS n
             FROM documents,
-                 UNNEST(list_filter(string_split_regex(text, '\\s+'),
-                                    t -> t <> '')) AS u(t)
+                 UNNEST({DUCK_TOKENS.format(x='text')}) AS u(t)
             GROUP BY doc_id, t
         ),
         per AS (
@@ -1290,12 +1279,11 @@ def _bytebpe_fertility_oracle(n_merges: int = BPE_MERGES) -> str:
         _bpe_enc_head(
             n_merges, _BYTE_SYMS_DUCK, "octet_length(encode(w))"
         )
-        + """,
+        + f""",
         wcnt AS (
             SELECT lang, t AS w, count(*) AS n
             FROM documents,
-                 UNNEST(list_filter(string_split_regex(text, '\\s+'),
-                                    t -> t <> '')) AS u(t)
+                 UNNEST({DUCK_TOKENS.format(x='text')}) AS u(t)
             GROUP BY lang, t
         )
         SELECT lang,
@@ -1446,8 +1434,7 @@ def _unigram_cte_chain(n_rounds: int = UNIGRAM_ROUNDS) -> str:
         words AS MATERIALIZED (
             SELECT t AS w, count(*) AS wc, length(t) AS L
             FROM documents,
-                 UNNEST(list_filter(string_split_regex(text, '\\s+'),
-                                    t -> t <> '')) AS u(t)
+                 UNNEST({DUCK_TOKENS.format(x='text')}) AS u(t)
             GROUP BY t
         ),
         short_words AS MATERIALIZED (
@@ -1539,12 +1526,11 @@ def _unigram_encode_oracle(n_rounds: int = UNIGRAM_ROUNDS) -> str:
     """Replay of unigram_encode_counts (see _unigram_enc_head), then the
     per-doc (doc, word)-keyed aggregation — bpe_encode's oracle shape."""
     return (
-        _unigram_enc_head(n_rounds) + """,
+        _unigram_enc_head(n_rounds) + f""",
         wcnt AS (
             SELECT doc_id, t AS w, count(*) AS n
             FROM documents,
-                 UNNEST(list_filter(string_split_regex(text, '\\s+'),
-                                    t -> t <> '')) AS u(t)
+                 UNNEST({DUCK_TOKENS.format(x='text')}) AS u(t)
             GROUP BY doc_id, t
         ),
         per AS (
@@ -1618,10 +1604,9 @@ QUERIES = {
 # cross-entropy (single definition so doc_perplexity and its CCNet
 # bucketing consumer can never diverge). Ends at `g` =
 # (doc_id, n_bigrams, units).
-_DOC_PPL_CTES = """t AS (
+_DOC_PPL_CTES = f"""t AS (
             SELECT doc_id,
-                   list_filter(string_split_regex(text, '\\s+'),
-                       x -> x != '') AS toks
+                   {DUCK_TOKENS.format(x='text')} AS toks
             FROM documents
         ),
         bg AS (
@@ -1680,8 +1665,7 @@ def _mkn_oracle() -> str:
     return f"""
         WITH t AS (
             SELECT doc_id,
-                   list_filter(string_split_regex(text, '\\s+'),
-                       x -> x != '') AS toks
+                   {DUCK_TOKENS.format(x='text')} AS toks
             FROM documents
         ),
         bg AS (
@@ -1756,8 +1740,7 @@ def _bm25_freetext_oracle() -> str:
         ),
         toks AS (
             SELECT doc_id,
-                   list_filter(string_split_regex(text, '\\s+'),
-                       t -> t != '') AS tk
+                   {DUCK_TOKENS.format(x='text')} AS tk
             FROM documents
         ),
         post AS (
@@ -1821,12 +1804,11 @@ ORACLES = {
     "bytebpe_fertility": _bytebpe_fertility_oracle(BPE_MERGES),
     "unigram_train": _unigram_train_oracle(UNIGRAM_ROUNDS),
     "unigram_encode": _unigram_encode_oracle(UNIGRAM_ROUNDS),
-    "bpe_pair_stats": """
+    "bpe_pair_stats": f"""
         WITH words AS (
             SELECT t AS w, count(*) AS wc
             FROM documents,
-                 UNNEST(list_filter(string_split_regex(text, '\\s+'),
-                                    t -> t <> '')) AS u(t)
+                 UNNEST({DUCK_TOKENS.format(x='text')}) AS u(t)
             GROUP BY t
         ),
         prs AS (
@@ -1839,11 +1821,10 @@ ORACLES = {
         ORDER BY n_occurrences DESC, pair ASC
         LIMIT 50
     """,
-    "dup_span_fraction": """
+    "dup_span_fraction": f"""
         WITH toks AS (
             SELECT doc_id,
-                   list_filter(string_split_regex(text, '\\s+'),
-                               t -> t <> '') AS ts
+                   {DUCK_TOKENS.format(x='text')} AS ts
             FROM documents
         ),
         grams AS (
@@ -1869,11 +1850,10 @@ ORACLES = {
         FROM occ o JOIN nd USING (gram)
         GROUP BY o.doc_id
     """,
-    "source_lorenz": """
+    "source_lorenz": f"""
         WITH ps AS (
             SELECT source,
-                   sum(len(list_filter(string_split_regex(text, '\\s+'),
-                       t -> t != ''))) AS n_tokens
+                   sum(len({DUCK_TOKENS.format(x='text')})) AS n_tokens
             FROM documents GROUP BY source
         )
         SELECT CAST(row_number() OVER (
@@ -1905,10 +1885,10 @@ ORACLES = {
             FROM b
         ) WHERE rank <= 100
     """,
-    "source_overlap": """
+    "source_overlap": f"""
         WITH st AS (
             SELECT DISTINCT source,
-                   unnest(string_split_regex(text, '\\s+')) AS term
+                   unnest({DUCK_TOKENS.format(x='text')}) AS term
             FROM documents
         ),
         stf AS (SELECT source, term FROM st WHERE term != ''),
@@ -1930,11 +1910,10 @@ ORACLES = {
         JOIN vocab va ON va.source = src_a
         JOIN vocab vb ON vb.source = src_b
     """,
-    "sequence_packing": """
+    "sequence_packing": f"""
         WITH base AS (
             SELECT doc_id, lang,
-                   len(list_filter(string_split_regex(text, '\\s+'),
-                       t -> t != '')) AS n_tokens
+                   len({DUCK_TOKENS.format(x='text')}) AS n_tokens
             FROM documents
         ),
         c AS (
@@ -1952,10 +1931,10 @@ ORACLES = {
     """,
     # Mirrors operators/text.py:zipf_slope: trunc6'd ln terms summed as
     # DECIMAL (exact), one double division at the end.
-    "zipf_slope": """
+    "zipf_slope": f"""
         WITH toks AS (
             SELECT term FROM (
-                SELECT unnest(string_split_regex(text, '\\s+')) AS term
+                SELECT unnest({DUCK_TOKENS.format(x='text')}) AS term
                 FROM documents
             ) WHERE term != ''
         ),
@@ -2041,16 +2020,15 @@ ORACLES = {
     # Mirrors operators/text.py:bm25_search exactly: same tokenization,
     # same RSJ idf, same fixed term-order summation, same 6-decimal
     # truncation before ranking. k1=1.2, b=0.75.
-    "bm25_search": """
+    "bm25_search": f"""
         WITH base AS (
             SELECT doc_id,
-                   len(list_filter(string_split_regex(text, '\\s+'),
-                       t -> t != '')) AS dl,
-                   len(list_filter(string_split_regex(text, '\\s+'),
+                   len({DUCK_TOKENS.format(x='text')}) AS dl,
+                   len(list_filter({DUCK_TOKENS.format(x='text')},
                        t -> t = 'join')) AS tf_0,
-                   len(list_filter(string_split_regex(text, '\\s+'),
+                   len(list_filter({DUCK_TOKENS.format(x='text')},
                        t -> t = 'hash')) AS tf_1,
-                   len(list_filter(string_split_regex(text, '\\s+'),
+                   len(list_filter({DUCK_TOKENS.format(x='text')},
                        t -> t = 'vector')) AS tf_2
             FROM documents
         ),
@@ -2093,11 +2071,11 @@ ORACLES = {
             FROM scored WHERE score > 0
         ) WHERE rank <= 20
     """,
-    "tfidf_top_terms": """
+    "tfidf_top_terms": f"""
         WITH toks AS (
             SELECT doc_id, term FROM (
                 SELECT doc_id,
-                       unnest(string_split_regex(text, '\\s+')) AS term
+                       unnest({DUCK_TOKENS.format(x='text')}) AS term
                 FROM documents
             ) WHERE term != ''
         ),
@@ -2122,10 +2100,9 @@ ORACLES = {
             FROM scored
         ) WHERE rnk <= 3
     """,
-    "bigram_lm": """
+    "bigram_lm": f"""
         WITH t AS (
-            SELECT list_filter(string_split_regex(text, '\\s+'),
-                x -> x != '') AS toks
+            SELECT {DUCK_TOKENS.format(x='text')} AS toks
             FROM documents
         ),
         bg AS (
@@ -2176,10 +2153,9 @@ ORACLES = {
         WHERE {DUCK_HASH60.format(x='CAST(doc_id AS VARCHAR)')} % 10000
               < coalesce(r.rate_bp, 10000)
     """,
-    "pmi_pairs": """
+    "pmi_pairs": f"""
         WITH t AS (
-            SELECT list_filter(string_split_regex(text, '\\s+'),
-                x -> x != '') AS toks
+            SELECT {DUCK_TOKENS.format(x='text')} AS toks
             FROM documents
         ),
         pr AS (
@@ -2228,11 +2204,10 @@ ORACLES = {
                max(quality_score) AS max_score
         FROM s GROUP BY lang, decile
     """,
-    "repetition_stats": """
+    "repetition_stats": f"""
         WITH t AS (
             SELECT doc_id,
-                   list_filter(string_split_regex(text, '\\s+'),
-                       x -> x != '') AS toks
+                   {DUCK_TOKENS.format(x='text')} AS toks
             FROM documents
         ),
         g AS (
@@ -2305,8 +2280,7 @@ ORACLES = {
     "kneser_ney_lm": f"""
         WITH t AS (
             SELECT doc_id,
-                   list_filter(string_split_regex(text, '\\s+'),
-                       x -> x != '') AS toks
+                   {DUCK_TOKENS.format(x='text')} AS toks
             FROM documents
         ),
         bg AS (
@@ -2344,8 +2318,7 @@ ORACLES = {
     "kneser_ney_trigram": f"""
         WITH t AS (
             SELECT doc_id,
-                   list_filter(string_split_regex(text, '\\s+'),
-                       x -> x != '') AS toks
+                   {DUCK_TOKENS.format(x='text')} AS toks
             FROM documents
         ),
         tg AS (
@@ -2500,11 +2473,10 @@ ORACLES = {
                    '<IP>', 'g') AS redacted
         FROM s2
     """,
-    "doc_chunks": """
+    "doc_chunks": f"""
         WITH t AS (
             SELECT doc_id,
-                   list_filter(string_split_regex(text, '\\s+'),
-                       x -> x != '') AS toks
+                   {DUCK_TOKENS.format(x='text')} AS toks
             FROM documents
         ),
         ch AS (
@@ -2521,11 +2493,10 @@ ORACLES = {
                array_to_string(c.ctoks, ' ') AS chunk_text
         FROM ch
     """,
-    "text_stats": """
+    "text_stats": f"""
         WITH t AS (
             SELECT doc_id, length(text) AS n_chars_calc,
-                   list_filter(string_split_regex(text, '\\s+'),
-                               x -> x != '') AS tk
+                   {DUCK_TOKENS.format(x='text')} AS tk
             FROM documents
         )
         SELECT doc_id, n_chars_calc,
@@ -2544,7 +2515,7 @@ ORACLES = {
     "lang_confusion": f"""
         WITH {_markers_values()},
         toks AS (
-            SELECT doc_id, unnest(string_split_regex(text, '\\s+')) AS tok
+            SELECT doc_id, unnest({DUCK_TOKENS.format(x='text')}) AS tok
             FROM documents
         ),
         hits AS (
@@ -2566,7 +2537,7 @@ ORACLES = {
     "lang_id": f"""
         WITH {_markers_values()},
         toks AS (
-            SELECT doc_id, unnest(string_split_regex(text, '\\s+')) AS tok
+            SELECT doc_id, unnest({DUCK_TOKENS.format(x='text')}) AS tok
             FROM documents
         ),
         hits AS (
@@ -2588,8 +2559,7 @@ ORACLES = {
     "quality_score": f"""
         WITH t AS (
             SELECT doc_id,
-                   list_filter(string_split_regex(text, '\\s+'),
-                               x -> x != '') AS toks
+                   {DUCK_TOKENS.format(x='text')} AS toks
             FROM documents
         ),
         c AS (
@@ -2623,8 +2593,7 @@ ORACLES = {
     """,
     "token_count": f"""
         SELECT doc_id,
-               CAST(len(list_filter(string_split_regex(text, '\\s+'),
-                   t -> t != '')) AS BIGINT)
+               CAST(len({DUCK_TOKENS.format(x='text')}) AS BIGINT)
                    AS n_ws_tokens,
                CAST(len(regexp_extract_all(text, '{tx.BPE_ISH_PATTERN}'))
                    AS BIGINT) AS n_bpe_tokens,
@@ -2782,29 +2751,33 @@ _SPAN_GK = DUCK_HASH60.format(
     x=f"array_to_string(tk[i:i+{SPAN_K - 1}], ' ')"
 )
 
-ORACLES["span_dedup_rewrite"] = f"""
-    WITH toks AS MATERIALIZED (
-        SELECT doc_id,
-               list_filter(string_split_regex(text, '\\s+'),
-                           t -> t != '') AS tk
-        FROM documents
-    ),
-    g AS MATERIALIZED (
+
+def _span_toks(where: str = "") -> str:
+    """(doc_id, tk) rows: the tokens of every document ``where`` keeps."""
+    return f"""
+        SELECT doc_id, {DUCK_TOKENS.format(x='text')} AS tk
+        FROM documents {where}"""
+
+
+def _span_grams(toks: str) -> str:
+    """(doc_id, i, gk) rows: every SPAN_K-gram start i of the token
+    relation ``toks``, gk the gram's 60-bit hash."""
+    return f"""
         SELECT doc_id, i, {_SPAN_GK} AS gk
-        FROM toks, UNNEST(range(1, len(tk) - {SPAN_K - 2})) r(i)
-        WHERE len(tk) >= {SPAN_K}
-    ),
-    st AS MATERIALIZED (
-        SELECT gk, min(doc_id) AS mind, count(DISTINCT doc_id) AS nd
-        FROM g GROUP BY gk
-    ),
-    dst AS MATERIALIZED (
-        SELECT g.doc_id, g.i FROM g JOIN st USING (gk)
-        WHERE st.nd >= 2 AND g.doc_id <> st.mind
-    ),
+        FROM {toks}, UNNEST(range(1, len(tk) - {SPAN_K - 2})) r(i)
+        WHERE len(tk) >= {SPAN_K}"""
+
+
+def _span_excise(starts: str) -> str:
+    """The shared tail of the span-REMOVAL oracles, after a ``toks``
+    CTE and a CTE ``starts`` of covered (doc_id, i) gram starts: cut
+    every token a covered gram spans, rebuild each document from its
+    kept tokens in order, and report (doc_id, n_tokens, n_removed,
+    clean_text) for every document of ``toks``."""
+    return f"""
     cov AS MATERIALIZED (
         SELECT DISTINCT doc_id, i + d AS p
-        FROM dst, UNNEST(range(0, {SPAN_K})) r(d)
+        FROM {starts}, UNNEST(range(0, {SPAN_K})) r(d)
     ),
     pos AS MATERIALIZED (
         SELECT t.doc_id, CAST(j AS BIGINT) AS p, tk[j] AS tok
@@ -2829,18 +2802,22 @@ ORACLES["span_dedup_rewrite"] = f"""
     FROM toks LEFT JOIN kc USING (doc_id)
 """
 
+
+ORACLES["span_dedup_rewrite"] = f"""
+    WITH toks AS MATERIALIZED ({_span_toks()}),
+    g AS MATERIALIZED ({_span_grams("toks")}),
+    st AS MATERIALIZED (
+        SELECT gk, min(doc_id) AS mind, count(DISTINCT doc_id) AS nd
+        FROM g GROUP BY gk
+    ),
+    dst AS MATERIALIZED (
+        SELECT g.doc_id, g.i FROM g JOIN st USING (gk)
+        WHERE st.nd >= 2 AND g.doc_id <> st.mind
+    ),{_span_excise("dst")}"""
+
 ORACLES["span_dedup_maximal"] = f"""
-    WITH toks AS MATERIALIZED (
-        SELECT doc_id,
-               list_filter(string_split_regex(text, '\\s+'),
-                           t -> t != '') AS tk
-        FROM documents
-    ),
-    g AS MATERIALIZED (
-        SELECT doc_id, i, {_SPAN_GK} AS gk
-        FROM toks, UNNEST(range(1, len(tk) - {SPAN_K - 2})) r(i)
-        WHERE len(tk) >= {SPAN_K}
-    ),
+    WITH toks AS MATERIALIZED ({_span_toks()}),
+    g AS MATERIALIZED ({_span_grams("toks")}),
     cnt AS MATERIALIZED (SELECT gk, count(*) AS m FROM g GROUP BY gk),
     seeds AS MATERIALIZED (
         SELECT g.doc_id, g.i, g.gk FROM g JOIN cnt USING (gk)
@@ -2871,8 +2848,7 @@ ORACLES["span_dedup_maximal"] = f"""
 ORACLES["heavy_hitters"] = f"""
     WITH tok AS (
         SELECT t AS term FROM documents,
-             UNNEST(list_filter(string_split_regex(text, '\\s+'),
-                                t -> t != '')) u(t)
+             UNNEST({DUCK_TOKENS.format(x='text')}) u(t)
     ),
     tot AS (SELECT count(*) AS n_total FROM tok),
     c AS (SELECT term, count(*) AS n_occurrences FROM tok GROUP BY term)
@@ -2885,11 +2861,10 @@ ORACLES["heavy_hitters"] = f"""
     WHERE n_occurrences * {HH_M} > n_total
 """
 
-ORACLES["source_divergence"] = """
+ORACLES["source_divergence"] = f"""
     WITH tok AS (
         SELECT source, t AS term FROM documents,
-             UNNEST(list_filter(string_split_regex(text, '\\s+'),
-                                t -> t != '')) u(t)
+             UNNEST({DUCK_TOKENS.format(x='text')}) u(t)
     ),
     cst AS (
         SELECT source, term, count(*) AS cst FROM tok
@@ -2959,7 +2934,7 @@ def q_token_budget_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers (round of the 6-decimal score), so ordering and sums are
     engine-portable."""
     d = load_table(spark, sf_dir, "documents")
-    toks_expr = "size(filter(split(text, '\\\\s+'), t -> t != ''))"
+    toks_expr = f"size({TOKENS_TPL.format(x='text')})"
     ntok = F.expr(toks_expr).cast("bigint").alias("n_tokens")
     base = (
         tx.quality_score(d, extra_cols=(ntok,))
@@ -3013,8 +2988,7 @@ ORACLES["token_budget_pack"] = f"""
     WITH q AS ({{qsql}}),
     toks AS (
         SELECT doc_id,
-               CAST(len(list_filter(string_split_regex(text, '\\s+'),
-                        t -> t != '')) AS BIGINT) AS n_tokens
+               CAST(len({DUCK_TOKENS.format(x='text')}) AS BIGINT) AS n_tokens
         FROM documents
     ),
     base AS (
@@ -3064,11 +3038,10 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratio of exact integers fixed-pointed to 1e-9 BEFORE the subtract
     (doc_cross_entropy discipline); the final weight is a double ratio
     of exact bigints."""
-    from kafka_streams_dexcom_spark.operators.dedup import HASH60_TPL
     from kafka_streams_dexcom_spark.sources.files import fan_out_small
 
     d = load_table(spark, sf_dir, "documents")
-    toks = "filter(split(text, '\\\\s+'), t -> t != '')"
+    toks = TOKENS_TPL.format(x="text")
     feats = (
         f"transform({toks}, t -> "
         f"{HASH60_TPL.format(x='t')} % {DSIR_BUCKETS})"
@@ -3138,8 +3111,7 @@ QUERIES["dsir_weights"] = q_dsir_weights
 ORACLES["dsir_weights"] = f"""
     WITH t AS (
         SELECT doc_id, (lang = '{DSIR_TARGET_LANG}') AS is_t,
-               list_filter(string_split_regex(text, '\\s+'),
-                           x -> x <> '') AS toks
+               {DUCK_TOKENS.format(x='text')} AS toks
         FROM documents
     ),
     tot AS (
@@ -3217,7 +3189,7 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_streams_dexcom_spark.sources.files import fan_out_small
 
     d = load_table(spark, sf_dir, "documents")
-    toks = "filter(split(text, '\\\\s+'), t -> t != '')"
+    toks = TOKENS_TPL.format(x="text")
     feats = (
         fan_out_small(d)
         .select(
@@ -3304,12 +3276,10 @@ def _quality_classifier_oracle() -> str:
                    CAST(length(regexp_replace(text, '[^.,;:!?]', '',
                         'g')) AS DOUBLE) / CAST(n_chars AS DOUBLE)
                ELSE 0.0 END AS x2,
-               CASE WHEN len(list_filter(string_split_regex(text,
-                        '\\s+'), t -> t <> '')) > 0 THEN
-                   CAST(len(list_filter(string_split_regex(text,
-                        '\\s+'), t -> t IN ('a', 'the'))) AS DOUBLE)
-                   / CAST(len(list_filter(string_split_regex(text,
-                         '\\s+'), t -> t <> '')) AS DOUBLE)
+               CASE WHEN len({DUCK_TOKENS.format(x='text')}) > 0 THEN
+                   CAST(len(list_filter({DUCK_TOKENS.format(x='text')},
+                        t -> t IN ('a', 'the'))) AS DOUBLE)
+                   / CAST(len({DUCK_TOKENS.format(x='text')}) AS DOUBLE)
                ELSE 0.0 END AS x3
         FROM documents
     )"""
@@ -3543,12 +3513,11 @@ def _bpe_fertility_oracle(n_merges: int = 5) -> str:
     per language."""
     return (
         _bpe_enc_head(n_merges)
-        + """,
+        + f""",
         wcnt AS (
             SELECT lang, t AS w, count(*) AS n
             FROM documents,
-                 UNNEST(list_filter(string_split_regex(text, '\\s+'),
-                                    t -> t <> '')) AS u(t)
+                 UNNEST({DUCK_TOKENS.format(x='text')}) AS u(t)
             GROUP BY lang, t
         )
         SELECT lang,
@@ -3605,12 +3574,11 @@ def _unigram_fertility_oracle(n_rounds: int = UNIGRAM_ROUNDS) -> str:
     (_unigram_enc_head), aggregated per language."""
     return (
         _unigram_enc_head(n_rounds)
-        + """,
+        + f""",
         wcnt AS (
             SELECT lang, t AS w, count(*) AS n
             FROM documents,
-                 UNNEST(list_filter(string_split_regex(text, '\\s+'),
-                                    t -> t <> '')) AS u(t)
+                 UNNEST({DUCK_TOKENS.format(x='text')}) AS u(t)
             GROUP BY lang, t
         )
         SELECT lang,
@@ -3691,7 +3659,7 @@ def _wordpiece_cte_chain(n_merges: int = WORDPIECE_MERGES) -> str:
     re-evaluates the word table 3^rounds times — measured as a 20 GB
     DuckDB spill and an out-of-disk abort at sf10 (the unigram DP's
     sf1 Lloyd-replay lesson, third occurrence)."""
-    parts = ["""
+    parts = [f"""
         v0 AS MATERIALIZED (
             SELECT w, wc,
                    list_transform(range(1, length(w) + 1),
@@ -3700,8 +3668,7 @@ def _wordpiece_cte_chain(n_merges: int = WORDPIECE_MERGES) -> str:
             FROM (
                 SELECT t AS w, count(*) AS wc
                 FROM documents,
-                     UNNEST(list_filter(string_split_regex(text, '\\s+'),
-                                        t -> t <> '')) AS u(t)
+                     UNNEST({DUCK_TOKENS.format(x='text')}) AS u(t)
                 GROUP BY t
             )
         )"""]
@@ -3784,8 +3751,7 @@ def _wordpiece_enc_head(n_merges: int = WORDPIECE_MERGES) -> str:
         words AS MATERIALIZED (
             SELECT t AS w, length(t) AS L
             FROM documents,
-                 UNNEST(list_filter(string_split_regex(text, '\\s+'),
-                                    t -> t <> '')) AS u(t)
+                 UNNEST({DUCK_TOKENS.format(x='text')}) AS u(t)
             GROUP BY t
         ),
         wp_short AS (SELECT w, L FROM words WHERE L <= {mw}),
@@ -3838,12 +3804,11 @@ def _wordpiece_encode_oracle(n_merges: int = WORDPIECE_MERGES) -> str:
     """Replay of wordpiece_encode_counts: the shared greedy-walk head,
     then the per-doc word join and exact integer count aggregation."""
     return (
-        _wordpiece_enc_head(n_merges) + """,
+        _wordpiece_enc_head(n_merges) + f""",
         wcnt AS (
             SELECT doc_id, t AS w, count(*) AS n
             FROM documents,
-                 UNNEST(list_filter(string_split_regex(text, '\\s+'),
-                                    t -> t <> '')) AS u(t)
+                 UNNEST({DUCK_TOKENS.format(x='text')}) AS u(t)
             GROUP BY doc_id, t
         ),
         per AS (
@@ -3916,12 +3881,11 @@ def _wordpiece_fertility_oracle(n_merges: int = WORDPIECE_MERGES) -> str:
     aggregated per language."""
     return (
         _wordpiece_enc_head(n_merges)
-        + """,
+        + f""",
         wcnt AS (
             SELECT lang, t AS w, count(*) AS n
             FROM documents,
-                 UNNEST(list_filter(string_split_regex(text, '\\s+'),
-                                    t -> t <> '')) AS u(t)
+                 UNNEST({DUCK_TOKENS.format(x='text')}) AS u(t)
             GROUP BY lang, t
         )
         SELECT lang,
@@ -3960,17 +3924,8 @@ def q_boilerplate_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 QUERIES["boilerplate_rewrite"] = q_boilerplate_rewrite
 ORACLES["boilerplate_rewrite"] = f"""
-    WITH toks AS MATERIALIZED (
-        SELECT doc_id,
-               list_filter(string_split_regex(text, '\\s+'),
-                           t -> t != '') AS tk
-        FROM documents
-    ),
-    g AS MATERIALIZED (
-        SELECT doc_id, i, {_SPAN_GK} AS gk
-        FROM toks, UNNEST(range(1, len(tk) - {SPAN_K - 2})) r(i)
-        WHERE len(tk) >= {SPAN_K}
-    ),
+    WITH toks AS MATERIALIZED ({_span_toks()}),
+    g AS MATERIALIZED ({_span_grams("toks")}),
     st AS MATERIALIZED (
         SELECT gk, count(DISTINCT doc_id) AS nd
         FROM g GROUP BY gk
@@ -3978,33 +3933,7 @@ ORACLES["boilerplate_rewrite"] = f"""
     dst AS MATERIALIZED (
         SELECT g.doc_id, g.i FROM g JOIN st USING (gk)
         WHERE st.nd >= {tx.BOILERPLATE_MIN_DOCS}
-    ),
-    cov AS MATERIALIZED (
-        SELECT DISTINCT doc_id, i + d AS p
-        FROM dst, UNNEST(range(0, {SPAN_K})) r(d)
-    ),
-    pos AS MATERIALIZED (
-        SELECT t.doc_id, CAST(j AS BIGINT) AS p, tk[j] AS tok
-        FROM toks t, UNNEST(range(1, len(tk) + 1)) r(j)
-    ),
-    kept AS MATERIALIZED (
-        SELECT pos.doc_id, pos.p, pos.tok
-        FROM pos LEFT JOIN cov
-          ON pos.doc_id = cov.doc_id AND pos.p = cov.p
-        WHERE cov.p IS NULL
-    ),
-    kc AS MATERIALIZED (
-        SELECT doc_id, count(*) AS cnt,
-               string_agg(tok, ' ' ORDER BY p) AS txt
-        FROM kept GROUP BY doc_id
-    )
-    SELECT toks.doc_id,
-           CAST(len(toks.tk) AS BIGINT) AS n_tokens,
-           CAST(len(toks.tk) - coalesce(kc.cnt, 0) AS BIGINT)
-               AS n_removed,
-           coalesce(kc.txt, '') AS clean_text
-    FROM toks LEFT JOIN kc USING (doc_id)
-"""
+    ),{_span_excise("dst")}"""
 
 
 # ------------------------------------------------ training-order shuffle
@@ -4032,7 +3961,6 @@ def q_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     key derivation makes any shard count reproducible. Matches how
     real loaders (tf.data / torchdata shard-shuffle) consume corpora:
     shard-parallel, seed-deterministic."""
-    from kafka_streams_dexcom_spark.operators.dedup import HASH60_TPL
 
     d = load_table(spark, sf_dir, "documents").select("doc_id")
     key = HASH60_TPL.format(
@@ -4119,53 +4047,12 @@ def q_eval_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLES["eval_span_scrub"] = f"""
     WITH toks AS MATERIALIZED (
-        SELECT doc_id,
-               list_filter(string_split_regex(text, '\\s+'),
-                           t -> t != '') AS tk
-        FROM documents
-        WHERE source != '{SCRUB_EVAL_SOURCE}'
-    ),
+        {_span_toks(f"WHERE source != '{SCRUB_EVAL_SOURCE}'")}),
     etoks AS MATERIALIZED (
-        SELECT list_filter(string_split_regex(text, '\\s+'),
-                           t -> t != '') AS tk
-        FROM documents
-        WHERE source = '{SCRUB_EVAL_SOURCE}'
-    ),
-    eg AS MATERIALIZED (
-        SELECT DISTINCT {_SPAN_GK} AS gk
-        FROM etoks, UNNEST(range(1, len(tk) - {SPAN_K - 2})) r(i)
-        WHERE len(tk) >= {SPAN_K}
-    ),
-    g AS MATERIALIZED (
-        SELECT doc_id, i, {_SPAN_GK} AS gk
-        FROM toks, UNNEST(range(1, len(tk) - {SPAN_K - 2})) r(i)
-        WHERE len(tk) >= {SPAN_K}
-    ),
-    cov AS MATERIALIZED (
-        SELECT DISTINCT doc_id, i + d AS p
-        FROM (SELECT g.doc_id, g.i FROM g JOIN eg USING (gk)),
-             UNNEST(range(0, {SPAN_K})) r(d)
-    ),
-    pos AS MATERIALIZED (
-        SELECT t.doc_id, CAST(j AS BIGINT) AS p, tk[j] AS tok
-        FROM toks t, UNNEST(range(1, len(tk) + 1)) r(j)
-    ),
-    kept AS MATERIALIZED (
-        SELECT pos.doc_id, pos.p, pos.tok
-        FROM pos LEFT JOIN cov
-          ON pos.doc_id = cov.doc_id AND pos.p = cov.p
-        WHERE cov.p IS NULL
-    ),
-    kc AS MATERIALIZED (
-        SELECT doc_id, count(*) AS cnt,
-               string_agg(tok, ' ' ORDER BY p) AS txt
-        FROM kept GROUP BY doc_id
-    )
-    SELECT toks.doc_id,
-           CAST(len(toks.tk) AS BIGINT) AS n_tokens,
-           CAST(len(toks.tk) - coalesce(kc.cnt, 0) AS BIGINT)
-               AS n_removed,
-           coalesce(kc.txt, '') AS clean_text
-    FROM toks LEFT JOIN kc USING (doc_id)
-"""
+        {_span_toks(f"WHERE source = '{SCRUB_EVAL_SOURCE}'")}),
+    eg AS MATERIALIZED (SELECT DISTINCT gk FROM ({_span_grams("etoks")})),
+    g AS MATERIALIZED ({_span_grams("toks")}),
+    dst AS MATERIALIZED (
+        SELECT g.doc_id, g.i FROM g JOIN eg USING (gk)
+    ),{_span_excise("dst")}"""
 QUERIES["eval_span_scrub"] = q_eval_span_scrub

@@ -56,7 +56,7 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 _FAN_OUT_MAX_BYTES = 256 * 1024 * 1024
 
 
-def fan_out_small(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def fan_out_small(df: DataFrame) -> DataFrame:
     """Repartition a *small* input before a compute-heavy stage.
 
     Small parquet files arrive as one partition, which serializes
@@ -68,7 +68,7 @@ def fan_out_small(df: DataFrame, min_partitions: int | None = None) -> DataFrame
     """
     if df.isStreaming:  # partitioning is the source's business in streaming
         return df
-    target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     # File heuristic instead of df.rdd.getNumPartitions(): building the
     # RDD materializes the physical plan driver-side on every call, while
     # inputFiles() only consults the already-cached file index. Fan out

@@ -61,6 +61,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_streams_dexcom_spark.operators.dedup import (
+    TOKENS_TPL,
     contamination_flags,
     eval_fingerprints,
 )
@@ -93,7 +94,7 @@ def text_feature_vector(
     expression (no UDF), byte-stable across engines and runs, nonzero
     for any non-empty text — so streamed assignments can be asserted
     EXACTLY equal to one-shot ones."""
-    toks = f"filter(split({text_col}, '\\\\s+'), t -> t != '')"
+    toks = TOKENS_TPL.format(x=text_col)
     vec = (
         f"transform(sequence(0, {dim - 1}), "
         f"j -> CAST(aggregate({toks}, 0L, "

@@ -1090,3 +1090,101 @@ def test_boilerplate_rewrite_vs_pairwise_policy(spark):
     assert got[4]["n_removed"] == 0 and pair in got[4]["clean_text"]
     assert got[5]["n_removed"] == 0
     assert got[6]["n_removed"] == 0
+
+
+def test_one_token_core_per_engine():
+    """The text n-gram family has one token-window core per engine. The
+    whitespace tokenizer is written once per engine
+    (operators/dedup.TOKENS_TPL, queries/duck.DUCK_TOKENS), the k-gram
+    start explode once on the Spark side (operators/text.gram_starts;
+    repetition_stats' two-order explode is its own). The span
+    rewrites' LEFT ANTI over a posexplode rebuild is written once on the
+    Spark side (operators/text.excise_spans) and their ``LEFT JOIN cov``
+    once on the DuckDB side (queries/text._span_excise). And no oracle
+    reaches a Spark-side token builder: an oracle that shares the
+    engine's code cannot catch the engine's bug."""
+    import ast
+    import pathlib
+
+    import kafka_streams_dexcom_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    package = sorted(root.rglob("*.py"))
+    queries = sorted((root / "queries").glob("*.py"))
+
+    def holders(files, needles, same_line):
+        """'path::definition' of each top-level statement whose source
+        holds every needle (on one line, if ``same_line``)."""
+        out = set()
+        for f in files:
+            src = f.read_text()
+            for node in ast.parse(src).body:
+                seg = ast.get_source_segment(src, node)
+                chunks = seg.splitlines() if same_line else [seg]
+                if not any(all(n in c for n in needles) for c in chunks):
+                    continue
+                if isinstance(node, ast.Assign):
+                    name = ast.unparse(node.targets[0])
+                else:
+                    name = getattr(node, "name", f"<line {node.lineno}>")
+                out.add(f"{f.relative_to(root).as_posix()}::{name}")
+        return out
+
+    assert holders(package, ["split(", r"'\\\\s+'"], True) == {
+        "operators/dedup.py::TOKENS_TPL"
+    }
+    assert holders(queries, ["string_split_regex("], True) == {
+        "queries/duck.py::DUCK_TOKENS"
+    }
+    assert holders(package, ["sequence(1, size(tk) - {"], True) == {
+        "operators/text.py::gram_starts"
+    }
+    assert holders(package, ['"left_anti"', "posexplode("], False) == {
+        "operators/text.py::excise_spans"
+    }
+    assert holders(queries, ["LEFT JOIN cov"], True) == {
+        "queries/text.py::_span_excise"
+    }
+
+    # every module-level definition under queries/ an ORACLES entry
+    # reaches, by name, must not name a Spark-side token builder
+    spark_builders = {
+        "TOKENS_TPL", "tokenize", "_tokens", "gram_starts", "excise_spans",
+        "host_lines",
+    }
+    defs, tables = {}, []
+    for f in queries:
+        for node in ast.parse(f.read_text()).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                defs.setdefault(node.name, []).append(node)
+            elif isinstance(node, ast.Assign):
+                for t in node.targets:
+                    if isinstance(t, ast.Name):
+                        defs.setdefault(t.id, []).append(node)
+                    if "ORACLES" in {
+                        n.id for n in ast.walk(t) if isinstance(n, ast.Name)
+                    }:
+                        tables.append(node)
+    assert tables
+
+    def names(node):
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name):
+                yield n.id
+            elif isinstance(n, ast.Attribute):
+                yield n.attr
+            elif isinstance(n, ast.alias):
+                yield n.asname or n.name
+
+    seen, todo, offenders = set(), list(tables), []
+    while todo:
+        node = todo.pop()
+        for name in names(node):
+            if name in spark_builders:
+                offenders.append((getattr(node, "name", "ORACLES"), name))
+            if name in defs and name not in seen:
+                seen.add(name)
+                todo.extend(defs[name])
+    assert {"DUCK_TOKENS", "_span_grams", "_span_excise"} <= seen
+    assert "host_lines_sql" in seen
+    assert offenders == []
