@@ -87,3 +87,51 @@ def query_census(spark, sf_dir):
 def query_shape(query_census):
     """``plan_shape`` of a registered query's returned DataFrame."""
     return lambda name: query_census(name)[0]
+
+
+def oracle_reach(builders: set[str]) -> tuple[set[str], list[tuple[str, str]]]:
+    """Walk every module-level definition under queries/ that an ORACLES
+    entry (the dict literal or an ``ORACLES[...] =`` assignment)
+    reaches by name. Returns the names reached and the (definition,
+    name) pairs where a reached definition names one of ``builders``,
+    the Spark-side builders no oracle may share: an oracle that shares
+    the engine's code cannot catch the engine's bug."""
+    import ast
+    import pathlib
+
+    import kafka_streams_dexcom_spark as pkg
+
+    defs, tables = {}, []
+    for f in sorted((pathlib.Path(pkg.__file__).parent / "queries").glob("*.py")):
+        for node in ast.parse(f.read_text()).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                defs.setdefault(node.name, []).append(node)
+            elif isinstance(node, ast.Assign):
+                for t in node.targets:
+                    if isinstance(t, ast.Name):
+                        defs.setdefault(t.id, []).append(node)
+                    if "ORACLES" in {
+                        n.id for n in ast.walk(t) if isinstance(n, ast.Name)
+                    }:
+                        tables.append(node)
+    assert tables
+
+    def names(node):
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name):
+                yield n.id
+            elif isinstance(n, ast.Attribute):
+                yield n.attr
+            elif isinstance(n, ast.alias):
+                yield n.asname or n.name
+
+    seen, todo, offenders = set(), list(tables), []
+    while todo:
+        node = todo.pop()
+        for name in names(node):
+            if name in builders:
+                offenders.append((getattr(node, "name", "ORACLES"), name))
+            if name in defs and name not in seen:
+                seen.add(name)
+                todo.extend(defs[name])
+    return seen, offenders

@@ -18,6 +18,7 @@ from kafka_streams_dexcom_spark.operators.text import (
     source_divergence,
     span_dedup_rewrite,
 )
+from tests.conftest import oracle_reach
 
 
 def _rows(df):
@@ -1146,45 +1147,10 @@ def test_one_token_core_per_engine():
         "queries/text.py::_span_excise"
     }
 
-    # every module-level definition under queries/ an ORACLES entry
-    # reaches, by name, must not name a Spark-side token builder
-    spark_builders = {
+    seen, offenders = oracle_reach({
         "TOKENS_TPL", "tokenize", "_tokens", "gram_starts", "excise_spans",
         "host_lines",
-    }
-    defs, tables = {}, []
-    for f in queries:
-        for node in ast.parse(f.read_text()).body:
-            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                defs.setdefault(node.name, []).append(node)
-            elif isinstance(node, ast.Assign):
-                for t in node.targets:
-                    if isinstance(t, ast.Name):
-                        defs.setdefault(t.id, []).append(node)
-                    if "ORACLES" in {
-                        n.id for n in ast.walk(t) if isinstance(n, ast.Name)
-                    }:
-                        tables.append(node)
-    assert tables
-
-    def names(node):
-        for n in ast.walk(node):
-            if isinstance(n, ast.Name):
-                yield n.id
-            elif isinstance(n, ast.Attribute):
-                yield n.attr
-            elif isinstance(n, ast.alias):
-                yield n.asname or n.name
-
-    seen, todo, offenders = set(), list(tables), []
-    while todo:
-        node = todo.pop()
-        for name in names(node):
-            if name in spark_builders:
-                offenders.append((getattr(node, "name", "ORACLES"), name))
-            if name in defs and name not in seen:
-                seen.add(name)
-                todo.extend(defs[name])
+    })
     assert {"DUCK_TOKENS", "_span_grams", "_span_excise"} <= seen
     assert "host_lines_sql" in seen
     assert offenders == []

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from kafka_streams_dexcom_spark.operators import multimodal as mm
+from tests.conftest import oracle_reach
 
 
 def _media(spark, n_docs=12):
@@ -327,39 +328,8 @@ def test_one_hamming_builder_per_engine():
         "queries/dedup.py::hamming_sql",
     }, holders
 
-    # every module-level definition under queries/ an ORACLES table
-    # reaches, by name, must not name a Spark-side band builder
-    spark_builders = {"hamming", "hamming_band_pairs", "band_rows"}
-    defs, tables = {}, []
-    for f in sorted((root / "queries").glob("*.py")):
-        for node in ast.parse(f.read_text()).body:
-            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                defs.setdefault(node.name, []).append(node)
-            elif isinstance(node, ast.Assign):
-                for t in node.targets:
-                    if isinstance(t, ast.Name):
-                        defs.setdefault(t.id, []).append(node)
-                        if t.id == "ORACLES":
-                            tables.append(node)
-    assert tables
-
-    def names(node):
-        for n in ast.walk(node):
-            if isinstance(n, ast.Name):
-                yield n.id
-            elif isinstance(n, ast.Attribute):
-                yield n.attr
-            elif isinstance(n, ast.alias):
-                yield n.asname or n.name
-
-    seen, todo, offenders = set(), list(tables), []
-    while todo:
-        node = todo.pop()
-        for name in names(node):
-            if name in spark_builders:
-                offenders.append((getattr(node, "name", "ORACLES"), name))
-            if name in defs and name not in seen:
-                seen.add(name)
-                todo.extend(defs[name])
+    seen, offenders = oracle_reach(
+        {"hamming", "hamming_band_pairs", "band_rows"}
+    )
     assert "banded_pairs_sql" in seen and "hamming_sql" in seen
     assert offenders == []
