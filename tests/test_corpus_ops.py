@@ -954,7 +954,7 @@ def test_wordpiece_encode_greedy_and_unk_legs(spark):
     assert got[10]["compression"] is None
 
 
-@pytest.mark.parametrize("family", ["bpe", "wordpiece"])
+@pytest.mark.parametrize("family", ["bpe", "bytebpe", "wordpiece"])
 def test_exhausted_merge_round_keeps_vocabulary(spark, family):
     """Once every word is a single symbol there is no pair left to
     merge: later rounds add no merge row and leave the vocabulary as it
@@ -968,14 +968,23 @@ def test_exhausted_merge_round_keeps_vocabulary(spark, family):
 
     rows = [(1, "ab ab"), (2, "ab")]
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    fam = {"bpe": tx.BPE, "wordpiece": tx.WORDPIECE}[family]
-    merges, vocab = tx._merge_loop(df, "text", 3, fam)
+    fam = {"bpe": tx.BPE, "bytebpe": tx.BYTEBPE, "wordpiece": tx.WORDPIECE}
+    merges, vocab = tx._merge_loop(df, "text", 3, fam[family])
     assert merges.count() == 1
-    assert {r["w"]: r["syms"] for r in vocab.collect()} == {"ab": ["ab"]}
+    # 'a', 'b' are the UTF-8 bytes 0x61, 0x62 in the byte family
+    merged = "6162" if family == "bytebpe" else "ab"
+    assert {r["w"]: r["syms"] for r in vocab.collect()} == {"ab": [merged]}
     if family == "bpe":
         enc = tx.bpe_encode_counts(df, n_merges=3)
         oracle = qt._bpe_encode_oracle(3)
         cols = ["n_words", "n_tokens", "n_chars", "compression"]
+        want = {1: (2, 2, 4, 2.0), 2: (1, 1, 2, 2.0)}
+    elif family == "bytebpe":
+        enc = tx.bytebpe_encode_counts(df, vocab)
+        oracle = qt._bpe_encode_oracle(
+            3, qt._BYTE_SYMS_DUCK, "octet_length(encode(w))", "n_bytes"
+        )
+        cols = ["n_words", "n_tokens", "n_bytes", "compression"]
         want = {1: (2, 2, 4, 2.0), 2: (1, 1, 2, 2.0)}
     else:
         enc = tx.wordpiece_encode_counts(df, n_merges=3)

@@ -10,6 +10,8 @@ session artifacts, so the suite pays one cluster-map build total."""
 
 from __future__ import annotations
 
+import pytest
+
 from tests.conftest import SF_DIR
 
 
@@ -94,24 +96,24 @@ def test_cluster_stats_density_is_consistent(spark):
         assert 0.0 < r.density <= 1.0, r
 
 
-def test_bpe_encode_totals_agree_with_fertility(spark):
-    """bpe_fertility is the per-language rollup of bpe_encode's per-doc
-    counts — grand totals must match exactly (both fold the same merged
-    vocabulary)."""
-    enc = _rows(spark, "bpe_encode")
-    fert = _rows(spark, "bpe_fertility")
-    assert sum(r.n_words for r in enc) == sum(r.n_words for r in fert)
-    assert sum(r.n_tokens for r in enc) == sum(r.n_tokens for r in fert)
+# every sum column a family's *_encode and *_fertility share
+_SHARED_SUMS = {
+    "bpe": ("n_words", "n_tokens"),
+    "bytebpe": ("n_words", "n_tokens", "n_bytes"),
+    "unigram": ("n_words", "n_tokens"),
+    "wordpiece": ("n_words", "n_tokens", "n_unk_words"),
+}
 
 
-def test_unigram_encode_totals_agree_with_fertility(spark):
-    """unigram_fertility is the per-language rollup of unigram_encode's
-    per-doc counts — grand totals must match exactly (both apply the
-    same frozen Viterbi segmentation)."""
-    enc = _rows(spark, "unigram_encode")
-    fert = _rows(spark, "unigram_fertility")
-    assert sum(r.n_words for r in enc) == sum(r.n_words for r in fert)
-    assert sum(r.n_tokens for r in enc) == sum(r.n_tokens for r in fert)
+@pytest.mark.parametrize("family", sorted(_SHARED_SUMS))
+def test_encode_totals_agree_with_fertility(spark, family):
+    """<family>_fertility is the per-language rollup of
+    <family>_encode's per-doc counts: both apply the same frozen
+    tokenizer, so every sum column they share has equal grand totals."""
+    enc = _rows(spark, f"{family}_encode")
+    fert = _rows(spark, f"{family}_fertility")
+    for col in _SHARED_SUMS[family]:
+        assert sum(r[col] for r in enc) == sum(r[col] for r in fert), col
 
 
 def test_unigram_never_beats_chars_and_bpe_sanity(spark):
