@@ -1,11 +1,6 @@
 """Scalar/column helper functions (all JVM-side Catalyst expressions)."""
 
-from kafka_streams_dexcom_spark.functions.hashing import (  # noqa: F401
-    hash60,
-    hash60_sql,
-    minhash_perm,
-    minhash_perm_sql,
-)
+from kafka_streams_dexcom_spark.functions.hashing import hash60_sql  # noqa: F401
 from kafka_streams_dexcom_spark.functions.json import (  # noqa: F401
     json_int,
     json_int_or_zero,

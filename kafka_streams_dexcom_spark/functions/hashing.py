@@ -20,9 +20,6 @@ These run as Catalyst expressions (whole-stage codegen) — no Python UDFs.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 # Mersenne prime 2^31 - 1: big enough for hash dispersion, small enough
 # that (a*x + b) with a,b,x < p fits comfortably in a signed 64-bit int.
 MERSENNE_P = 2_147_483_647
@@ -48,27 +45,13 @@ def _perm_coeffs(n: int, seed: int = 42) -> list[tuple[int, int]]:
 PERM_COEFFS = _perm_coeffs(64)
 
 
-def hash60(col: Column | str) -> Column:
-    """60-bit non-negative integer hash of a string column (Spark side)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("bigint")
+# the Spark spelling, a Spark SQL template over {x}
+HASH60_TPL = "CAST(conv(substr(md5({x}), 1, 15), 16, 10) AS BIGINT)"
 
 
 def hash60_sql(expr: str) -> str:
-    """Same hash as :func:`hash60`, as DuckDB SQL over ``expr``."""
+    """The DuckDB spelling of the same hash, as SQL over ``expr``."""
     return f"CAST('0x' || substr(md5({expr}), 1, 15) AS BIGINT)"
-
-
-def minhash_perm(hash_col: Column, i: int) -> Column:
-    """i-th MinHash permutation of an already-hashed value (Spark side)."""
-    a, b = PERM_COEFFS[i]
-    return (hash_col % MERSENNE_P * F.lit(a) + F.lit(b)) % MERSENNE_P
-
-
-def minhash_perm_sql(expr: str, i: int) -> str:
-    """Same permutation as :func:`minhash_perm`, as DuckDB SQL."""
-    a, b = PERM_COEFFS[i]
-    return f"(({expr}) % {MERSENNE_P} * {a} + {b}) % {MERSENNE_P}"
 
 
 def pack_bands(bits) -> tuple[int, int, int, int]:

@@ -35,7 +35,11 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from kafka_streams_dexcom_spark.functions.hashing import MERSENNE_P, PERM_COEFFS
+from kafka_streams_dexcom_spark.functions.hashing import (
+    HASH60_TPL,
+    MERSENNE_P,
+    PERM_COEFFS,
+)
 from kafka_streams_dexcom_spark.functions.rounding import trunc6
 from kafka_streams_dexcom_spark.sources.files import fan_out_small
 
@@ -61,8 +65,6 @@ SIMHASH_MAX_BUCKET = 2_000
 NGRAM_MAX_BUCKET = 1_000
 
 # --- shared expression builders (Spark SQL fragments) ---------------------
-
-HASH60_TPL = "CAST(conv(substr(md5({x}), 1, 15), 16, 10) AS BIGINT)"
 
 # The one whitespace tokenizer: the NON-EMPTY splits of {x}, so leading
 # or trailing whitespace adds no phantom '' token. Its DuckDB twin is

@@ -1566,6 +1566,21 @@ BYTEBPE_SYMS_TPL = (
 )
 
 
+# The greedy left-to-right merge of one pair ({s1}, {s2}) over the
+# symbol array {syms}: a left fold that glues s onto the last
+# accumulated symbol when the two form the pair, writing the merged
+# symbol as concat({s1}, {right}). Used by _merge_loop's rounds and by
+# bytebpe_apply_merges' replay of a frozen merge table.
+MERGE_FOLD_TPL = (
+    "CASE WHEN size({syms}) <= 1 THEN {syms} ELSE "
+    "aggregate({syms}, CAST(array() AS array<string>), (acc, s) -> "
+    "IF(size(acc) > 0 AND element_at(acc, -1) = {s1} AND s = {s2}, "
+    "concat(slice(acc, 1, size(acc) - 1), "
+    "array(concat({s1}, {right}))), "
+    "concat(acc, array(s)))) END"
+)
+
+
 class MergeFamily(NamedTuple):
     """What a merge-trained tokenizer family varies in :func:`_merge_loop`.
 
@@ -1648,12 +1663,7 @@ def _merge_loop(
         else "bp2"
     )
     merge_fold = F.expr(
-        "CASE WHEN size(syms) <= 1 THEN syms ELSE "
-        "aggregate(syms, CAST(array() AS array<string>), (acc, s) -> "
-        "IF(size(acc) > 0 AND element_at(acc, -1) = bp1 AND s = bp2, "
-        "concat(slice(acc, 1, size(acc) - 1), "
-        f"array(concat(bp1, {right}))), "
-        "concat(acc, array(s)))) END"
+        MERGE_FOLD_TPL.format(syms="syms", s1="bp1", s2="bp2", right=right)
     )
     merges = None
     for rnd in range(1, n_merges + 1):
@@ -1812,15 +1822,10 @@ def bytebpe_apply_merges(
             f"named_struct('s1', '{s1}', 's2', '{s2}')"
             for _rnd, s1, s2 in rows
         )
-        per_word = (
-            f"aggregate(array({lits}), {seed}, (sy, m) -> "
-            "CASE WHEN size(sy) <= 1 THEN sy ELSE "
-            "aggregate(sy, CAST(array() AS array<string>), (acc, s) -> "
-            "IF(size(acc) > 0 AND element_at(acc, -1) = m.s1 "
-            "AND s = m.s2, "
-            "concat(slice(acc, 1, size(acc) - 1), "
-            "array(concat(m.s1, m.s2))), concat(acc, array(s)))) END)"
+        fold = MERGE_FOLD_TPL.format(
+            syms="sy", s1="m.s1", s2="m.s2", right="m.s2"
         )
+        per_word = f"aggregate(array({lits}), {seed}, (sy, m) -> {fold})"
     else:
         per_word = seed
     toks = TOKENS_TPL.format(x=text_col)
@@ -1865,6 +1870,24 @@ def vocab_sums(
                 for name, col in sums.items()
             ),
         )
+    )
+
+
+def lang_fertility(df: DataFrame, enc: DataFrame, **sums: str) -> DataFrame:
+    """Per-language tokenizer fertility: :func:`vocab_sums` keyed by
+    ``lang`` (lang, n_words, n_tokens, then one column per keyword in
+    ``sums``) plus tokens per word, floor-truncated to 6 decimals."""
+    return vocab_sums(df, enc, "lang", **sums).select(
+        "lang",
+        "n_words",
+        "n_tokens",
+        *sums,
+        (
+            F.floor(
+                F.col("n_tokens") * F.lit(1_000_000.0) / F.col("n_words")
+            )
+            / F.lit(1_000_000.0)
+        ).alias("fertility"),
     )
 
 

@@ -1016,72 +1016,6 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     return merges
 
 
-# DuckDB twins of the two base alphabets (operators/text.py:BPE and
-# BYTEBPE seeds): per-character (classic BPE) and per-UTF-8-byte uppercase
-# hex pairs (byte-level / GPT-2 — hex() casing agrees across engines)
-_CHAR_SYMS_DUCK = (
-    "list_transform(range(1, length(w) + 1), i -> w[i:i])"
-)
-_BYTE_SYMS_DUCK = (
-    "list_transform(range(1, octet_length(encode(w)) + 1), "
-    "i -> hex(encode(w))[2*i - 1:2*i])"
-)
-
-
-def _bpe_train_oracle(
-    n_merges: int = 5, syms_duck: str = _CHAR_SYMS_DUCK
-) -> str:
-    """Unrolled replay of bpe_train: per round, the argmax pair CTE and
-    the greedy left-to-right merge fold (list_reduce over singleton
-    lists — the same fold shape as Spark's aggregate). ``syms_duck``
-    picks the base alphabet (char or byte), mirroring _merge_loop's
-    BPE/BYTEBPE families."""
-    parts = [f"""
-        v0 AS (
-            SELECT wc,
-                   {syms_duck} AS syms
-            FROM (
-                SELECT t AS w, count(*) AS wc
-                FROM documents,
-                     UNNEST({DUCK_TOKENS.format(x='text')}) AS u(t)
-                GROUP BY t
-            )
-        )"""]
-    for r in range(1, n_merges + 1):
-        parts.append(f"""
-        p{r} AS (
-            SELECT syms[i] AS s1, syms[i + 1] AS s2,
-                   CAST(sum(wc) AS BIGINT) AS n
-            FROM v{r - 1}, UNNEST(range(1, len(syms))) AS rr(i)
-            WHERE len(syms) >= 2
-            GROUP BY 1, 2
-        ),
-        b{r} AS (
-            SELECT s1 AS bp1, s2 AS bp2, n
-            FROM p{r} ORDER BY n DESC, s1 ASC, s2 ASC LIMIT 1
-        )""")
-        if r < n_merges:
-            parts.append(f"""
-        v{r} AS (
-            SELECT wc,
-                   CASE WHEN len(syms) <= 1 THEN syms ELSE
-                     list_reduce(list_transform(syms, x -> [x]),
-                       (acc, el) ->
-                         CASE WHEN acc[-1] = bp1 AND el[1] = bp2
-                              THEN list_concat(acc[1:len(acc) - 1],
-                                               [bp1 || bp2])
-                              ELSE list_concat(acc, el) END)
-                   END AS syms
-            FROM v{r - 1} LEFT JOIN b{r} ON true
-        )""")
-    selects = [
-        f"SELECT CAST({r} AS INTEGER) AS round, bp1 || '+' || bp2 AS pair,"
-        f" n AS n_occurrences FROM b{r}"
-        for r in range(1, n_merges + 1)
-    ]
-    return "WITH " + ",".join(parts) + "\n" + "\nUNION ALL\n".join(selects)
-
-
 def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus tokenization under the learned BPE vocabulary
     (operators/text.py:bpe_encode_counts): per-doc word/token/char
@@ -1097,103 +1031,202 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bpe_enc_head(
-    n_merges: int,
-    syms_duck: str = _CHAR_SYMS_DUCK,
-    wlen_duck: str = "length(w)",
-) -> str:
-    """Shared oracle head for the BPE apply family: the unrolled merge
-    rounds carrying the word key, ending at ``enc`` (w, wtok, wlen) —
-    the word → token-length map. _bpe_encode_oracle and
-    _bpe_fertility_oracle append their own word-count tail (per-doc vs
-    per-language) to this one chain instead of string-splitting each
-    other's SQL (ADVICE r8: the splice broke silently on whitespace
-    edits). ``syms_duck``/``wlen_duck`` pick the base alphabet and the
-    unit-length measure (chars for classic BPE, UTF-8 bytes for the
-    byte-level family)."""
-    parts = [f"""
-        v0 AS (
-            SELECT w, wc,
-                   {syms_duck} AS syms
-            FROM (
+# DuckDB twins of operators/text.py's merge families, one row each with
+# MergeFamily's three fields: (seed SQL giving the word w's symbols,
+# scored, strip_cont)
+_MERGE_FAMILIES_DUCK = {
+    # one symbol per character
+    "bpe": (
+        "list_transform(range(1, length(w) + 1), i -> w[i:i])",
+        False,
+        False,
+    ),
+    # one per UTF-8 byte, as uppercase hex pairs (hex() casing agrees
+    # across engines)
+    "bytebpe": (
+        "list_transform(range(1, octet_length(encode(w)) + 1), "
+        "i -> hex(encode(w))[2*i - 1:2*i])",
+        False,
+        False,
+    ),
+    # first char bare, every continuation char '##'-prefixed
+    "wordpiece": (
+        "list_transform(range(1, length(w) + 1), "
+        "i -> CASE WHEN i = 1 THEN w[i:i] ELSE '##' || w[i:i] END)",
+        True,
+        True,
+    ),
+}
+
+# distinct-word counts (w, wc): the twin of operators/text.py:_word_counts
+_WORDS_DUCK = f"""
                 SELECT t AS w, count(*) AS wc
                 FROM documents,
                      UNNEST({DUCK_TOKENS.format(x='text')}) AS u(t)
-                GROUP BY t
+                GROUP BY t"""
+
+
+def _merge_chain(n_merges: int, family: str) -> str:
+    """The CTE chain replaying operators/text.py:_merge_loop for the
+    ``family`` row of _MERGE_FAMILIES_DUCK: the seeded word table v0,
+    then per round the pair counts p{r}, the argmax pair b{r} (bp1,
+    bp2, n — by count, or for a scored family by the likelihood gain
+    ``score``, the ONE double division, IEEE-exact in both engines)
+    and the greedy left-to-right merge fold v{r} (w, wc, syms):
+    list_reduce over singleton lists, the same fold shape as Spark's
+    aggregate, with '##' stripped from the absorbed right symbol when
+    ``strip_cont``. An exhausted round's empty b{r} joins as null and
+    leaves every word as it is.
+
+    Every v{r} is MATERIALIZED: a scored round references it THREE
+    times (symbol counts, pair counts, next rewrite), so plain-CTE
+    inlining re-evaluates the word table 3^rounds times — measured as a
+    20 GB DuckDB spill and an out-of-disk abort at sf10 (the unigram
+    DP's sf1 Lloyd-replay lesson, third occurrence)."""
+    seed, scored, strip_cont = _MERGE_FAMILIES_DUCK[family]
+    right = (
+        "CASE WHEN bp2[1:2] = '##' THEN bp2[3:] ELSE bp2 END"
+        if strip_cont
+        else "bp2"
+    )
+    parts = [f"""
+        v0 AS MATERIALIZED (
+            SELECT w, wc, {seed} AS syms
+            FROM ({_WORDS_DUCK}
             )
         )"""]
     for r in range(1, n_merges + 1):
+        score, joins, rank = "", "", "p.n"
+        if scored:
+            parts.append(f"""
+        s{r} AS MATERIALIZED (
+            SELECT s, CAST(sum(wc) AS BIGINT) AS cnt
+            FROM v{r - 1}, UNNEST(syms) AS u(s)
+            GROUP BY s
+        )""")
+            score = """,
+                   CAST(p.n AS DOUBLE)
+                       / (CAST(c1.cnt AS DOUBLE) * CAST(c2.cnt AS DOUBLE))
+                       AS score"""
+            joins = f"""
+            JOIN s{r} c1 ON c1.s = p.s1
+            JOIN s{r} c2 ON c2.s = p.s2"""
+            rank = "score"
         parts.append(f"""
-        p{r} AS (
+        p{r} AS MATERIALIZED (
             SELECT syms[i] AS s1, syms[i + 1] AS s2,
                    CAST(sum(wc) AS BIGINT) AS n
             FROM v{r - 1}, UNNEST(range(1, len(syms))) AS rr(i)
             WHERE len(syms) >= 2
             GROUP BY 1, 2
         ),
-        b{r} AS (
-            SELECT s1 AS bp1, s2 AS bp2, n
-            FROM p{r} ORDER BY n DESC, s1 ASC, s2 ASC LIMIT 1
+        b{r} AS MATERIALIZED (
+            SELECT p.s1 AS bp1, p.s2 AS bp2, p.n{score}
+            FROM p{r} p{joins}
+            ORDER BY {rank} DESC, p.s1 ASC, p.s2 ASC LIMIT 1
         ),
-        v{r} AS (
+        v{r} AS MATERIALIZED (
             SELECT w, wc,
                    CASE WHEN len(syms) <= 1 THEN syms ELSE
                      list_reduce(list_transform(syms, x -> [x]),
                        (acc, el) ->
                          CASE WHEN acc[-1] = bp1 AND el[1] = bp2
                               THEN list_concat(acc[1:len(acc) - 1],
-                                               [bp1 || bp2])
+                                               [bp1 || {right}])
                               ELSE list_concat(acc, el) END)
                    END AS syms
             FROM v{r - 1} LEFT JOIN b{r} ON true
         )""")
+    return ",".join(parts)
+
+
+def _merge_train_oracle(n_merges: int, family: str) -> str:
+    """Unrolled replay of a merge family's training (see _merge_chain):
+    one merge-table row per round from b{r}, plus the trunc6 ``score``
+    for a scored family."""
+    from kafka_streams_dexcom_spark.functions.rounding import trunc6_sql
+
+    scored = _MERGE_FAMILIES_DUCK[family][1]
+    score = f", {trunc6_sql('score')} AS score" if scored else ""
+    selects = [
+        f"SELECT CAST({r} AS INTEGER) AS round, bp1 || '+' || bp2 AS pair,"
+        f" n AS n_occurrences{score} FROM b{r}"
+        for r in range(1, n_merges + 1)
+    ]
     return (
-        "WITH " + ",".join(parts) + f""",
-        enc AS (
-            SELECT w, len(syms) AS wtok, {wlen_duck} AS wlen
-            FROM v{n_merges}
-        )"""
+        "WITH " + _merge_chain(n_merges, family) + "\n"
+        + "\nUNION ALL\n".join(selects)
     )
 
 
-def _bpe_encode_oracle(
-    n_merges: int = 5,
-    syms_duck: str = _CHAR_SYMS_DUCK,
-    wlen_duck: str = "length(w)",
-    len_name: str = "n_chars",
-) -> str:
-    """Replay of bpe_encode_counts / bytebpe_encode_counts: the shared
-    merged vocabulary (_bpe_enc_head), then the per-doc word join and
-    exact integer count aggregation. ``len_name`` is the unit-mass
-    column (n_chars for the char family, n_bytes for byte-level)."""
-    return (
-        _bpe_enc_head(n_merges, syms_duck, wlen_duck) + f""",
+def _vocab_sums_duck(key: str, **sums: str) -> str:
+    """The twin of operators/text.py:vocab_sums, appended to any head
+    that ends at ``enc`` (w, wtok, ...): CTEs ``wcnt`` (word counts per
+    ``key``) and ``per`` (exact BIGINT n_words, n_tokens and
+    ``name = sum(n * col)`` for each keyword in ``sums``, per key)."""
+    cols = "".join(
+        f",\n                   CAST(sum(n * {col}) AS BIGINT) AS {name}"
+        for name, col in sums.items()
+    )
+    return f""",
         wcnt AS (
-            SELECT doc_id, t AS w, count(*) AS n
+            SELECT {key}, t AS w, count(*) AS n
             FROM documents,
                  UNNEST({DUCK_TOKENS.format(x='text')}) AS u(t)
-            GROUP BY doc_id, t
+            GROUP BY {key}, t
         ),
         per AS (
-            SELECT doc_id,
+            SELECT {key},
                    CAST(sum(n) AS BIGINT) AS n_words,
-                   CAST(sum(n * wtok) AS BIGINT) AS n_tokens,
-                   CAST(sum(n * wlen) AS BIGINT) AS {len_name}
+                   CAST(sum(n * wtok) AS BIGINT) AS n_tokens{cols}
             FROM wcnt JOIN enc USING (w)
-            GROUP BY doc_id
-        )
-        SELECT d.doc_id,
-               coalesce(per.n_words, 0) AS n_words,
-               coalesce(per.n_tokens, 0) AS n_tokens,
-               coalesce(per.{len_name}, 0) AS {len_name},
+            GROUP BY {key}
+        )"""
+
+
+def _encode_tail(**sums: str) -> str:
+    """Per-doc encode counts, the twin of operators/text.py:
+    _encode_counts: _vocab_sums_duck per doc_id, left-joined back to
+    every document so a doc with no words keeps zero counts, plus the
+    floor-truncated compression — the FIRST of ``sums`` (the unit
+    mass: chars or bytes) per token."""
+    unit = next(iter(sums))
+    cols = "".join(
+        f"\n               coalesce(per.{c}, 0) AS {c},"
+        for c in ("n_words", "n_tokens", *sums)
+    )
+    return _vocab_sums_duck("doc_id", **sums) + f"""
+        SELECT d.doc_id,{cols}
                CASE WHEN coalesce(per.n_tokens, 0) > 0
-                    THEN floor(per.{len_name} * 1000000.0 / per.n_tokens)
+                    THEN floor(per.{unit} * 1000000.0 / per.n_tokens)
                          / 1000000.0
                END AS compression
-        FROM documents d LEFT JOIN per USING (doc_id)
-    """
-    )
+        FROM documents d LEFT JOIN per USING (doc_id)"""
 
+
+def _fertility_tail(**sums: str) -> str:
+    """Per-language fertility, the twin of operators/text.py:
+    lang_fertility: _vocab_sums_duck per lang plus tokens per word,
+    floor-truncated to 6 decimals."""
+    cols = "".join(f" {c}," for c in sums)
+    return _vocab_sums_duck("lang", **sums) + f"""
+        SELECT lang, n_words, n_tokens,{cols}
+               floor(n_tokens * 1000000.0 / n_words) / 1000000.0
+                   AS fertility
+        FROM per"""
+
+
+def _bpe_enc_head(n_merges: int, family: str) -> str:
+    """Oracle head for the BPE apply family (``family`` "bpe" or
+    "bytebpe"): the merge chain, ending at ``enc`` (w, wtok, wlen) —
+    the word → token-length map, with wlen the unit mass (UTF-8 bytes
+    for the byte family, chars otherwise)."""
+    wlen = "octet_length(encode(w))" if family == "bytebpe" else "length(w)"
+    return "WITH " + _merge_chain(n_merges, family) + f""",
+        enc AS (
+            SELECT w, len(syms) AS wtok, {wlen} AS wlen
+            FROM v{n_merges}
+        )"""
 
 
 def bytebpe_artifacts(
@@ -1241,8 +1274,9 @@ def q_bytebpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language fertility under byte-level BPE — the fourth row of
     the bake-off's fertility table, plus bytes_per_token (the byte
     family reports compression against the raw byte stream, the unit
-    sequence-length budgets are written in). Same join shape as
-    bpe_fertility; exact integer sums, floor-truncated divisions."""
+    sequence-length budgets are written in). bpe_fertility's shape
+    (operators/text.py:lang_fertility) plus that one column; exact
+    integer sums, floor-truncated divisions."""
     docs = load_table(spark, sf_dir, "documents")
     _merges, vocab = bytebpe_artifacts(spark, sf_dir)
     enc = vocab.select(
@@ -1250,53 +1284,14 @@ def q_bytebpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size("syms").alias("wtok"),
         F.expr("octet_length(w)").alias("wb"),
     )
-    agg = tx.vocab_sums(docs, enc, "lang", n_bytes="wb")
-    return agg.select(
-        "lang",
-        "n_words",
-        "n_tokens",
-        "n_bytes",
-        (
-            F.floor(
-                F.col("n_tokens") * F.lit(1_000_000.0) / F.col("n_words")
-            )
-            / F.lit(1_000_000.0)
-        ).alias("fertility"),
+    return tx.lang_fertility(docs, enc, n_bytes="wb").select(
+        "*",
         (
             F.floor(
                 F.col("n_bytes") * F.lit(1_000_000.0) / F.col("n_tokens")
             )
             / F.lit(1_000_000.0)
         ).alias("bytes_per_token"),
-    )
-
-
-def _bytebpe_fertility_oracle(n_merges: int = BPE_MERGES) -> str:
-    """Replay: the byte-alphabet merged vocabulary (_bpe_enc_head with
-    the hex-pair seed), aggregated per language with the extra
-    bytes_per_token column."""
-    return (
-        _bpe_enc_head(
-            n_merges, _BYTE_SYMS_DUCK, "octet_length(encode(w))"
-        )
-        + f""",
-        wcnt AS (
-            SELECT lang, t AS w, count(*) AS n
-            FROM documents,
-                 UNNEST({DUCK_TOKENS.format(x='text')}) AS u(t)
-            GROUP BY lang, t
-        )
-        SELECT lang,
-               CAST(sum(n) AS BIGINT) AS n_words,
-               CAST(sum(n * wtok) AS BIGINT) AS n_tokens,
-               CAST(sum(n * wlen) AS BIGINT) AS n_bytes,
-               floor(sum(n * wtok) * 1000000.0 / sum(n)) / 1000000.0
-                   AS fertility,
-               floor(sum(n * wlen) * 1000000.0 / sum(n * wtok))
-                   / 1000000.0 AS bytes_per_token
-        FROM wcnt JOIN enc USING (w)
-        GROUP BY lang
-    """
     )
 
 
@@ -1432,10 +1427,8 @@ def _unigram_cte_chain(n_rounds: int = UNIGRAM_ROUNDS) -> str:
                 ORDER BY cnt DESC, pc ASC LIMIT {UNIGRAM_SEED_K})"""
     ctes = [f"""
         words AS MATERIALIZED (
-            SELECT t AS w, count(*) AS wc, length(t) AS L
-            FROM documents,
-                 UNNEST({DUCK_TOKENS.format(x='text')}) AS u(t)
-            GROUP BY t
+            SELECT w, wc, length(w) AS L FROM ({_WORDS_DUCK}
+            )
         ),
         short_words AS MATERIALIZED (
             SELECT * FROM words WHERE L <= {UNIGRAM_MAX_WORD}
@@ -1504,10 +1497,8 @@ def _unigram_train_oracle(n_rounds: int = UNIGRAM_ROUNDS) -> str:
 def _unigram_enc_head(n_rounds: int) -> str:
     """Shared oracle head for the unigram apply family: the unrolled EM
     chain, one more Viterbi pass under the FINAL piece table, long
-    words one-token-per-char, ending at ``enc`` (w, wtok, wlen).
-    _unigram_encode_oracle and _unigram_fertility_oracle append their
-    own word-count tail to this one chain — same de-splice refactor as
-    _bpe_enc_head (ADVICE r8). The OOV fallback leg the Spark apply
+    words one-token-per-char, ending at ``enc`` (w, wtok, wlen) for
+    _encode_tail or _fertility_tail. The OOV fallback leg the Spark apply
     path carries has no oracle counterpart by construction: the oracle
     trains and applies on the same corpus, where single-char coverage
     makes the OOV set empty."""
@@ -1519,37 +1510,6 @@ def _unigram_enc_head(n_rounds: int) -> str:
             UNION ALL
             SELECT w, L AS wtok, L AS wlen FROM long_words
         )"""
-    )
-
-
-def _unigram_encode_oracle(n_rounds: int = UNIGRAM_ROUNDS) -> str:
-    """Replay of unigram_encode_counts (see _unigram_enc_head), then the
-    per-doc (doc, word)-keyed aggregation — bpe_encode's oracle shape."""
-    return (
-        _unigram_enc_head(n_rounds) + f""",
-        wcnt AS (
-            SELECT doc_id, t AS w, count(*) AS n
-            FROM documents,
-                 UNNEST({DUCK_TOKENS.format(x='text')}) AS u(t)
-            GROUP BY doc_id, t
-        ),
-        per AS (
-            SELECT doc_id,
-                   CAST(sum(n) AS BIGINT) AS n_words,
-                   CAST(sum(n * wtok) AS BIGINT) AS n_tokens,
-                   CAST(sum(n * wlen) AS BIGINT) AS n_chars
-            FROM wcnt JOIN enc USING (w)
-            GROUP BY doc_id
-        )
-        SELECT d.doc_id,
-               coalesce(per.n_words, 0) AS n_words,
-               coalesce(per.n_tokens, 0) AS n_tokens,
-               coalesce(per.n_chars, 0) AS n_chars,
-               CASE WHEN coalesce(per.n_tokens, 0) > 0
-                    THEN floor(per.n_chars * 1000000.0 / per.n_tokens)
-                         / 1000000.0
-               END AS compression
-        FROM documents d LEFT JOIN per USING (doc_id)"""
     )
 
 
@@ -1792,18 +1752,21 @@ def _bm25_freetext_oracle() -> str:
 
 
 ORACLES = {
-    "bpe_train": _bpe_train_oracle(BPE_MERGES),
-    "bpe_encode": _bpe_encode_oracle(BPE_MERGES),
-    "bytebpe_train": _bpe_train_oracle(BPE_MERGES, _BYTE_SYMS_DUCK),
-    "bytebpe_encode": _bpe_encode_oracle(
-        BPE_MERGES,
-        _BYTE_SYMS_DUCK,
-        "octet_length(encode(w))",
-        "n_bytes",
-    ),
-    "bytebpe_fertility": _bytebpe_fertility_oracle(BPE_MERGES),
+    "bpe_train": _merge_train_oracle(BPE_MERGES, "bpe"),
+    "bpe_encode": _bpe_enc_head(BPE_MERGES, "bpe")
+    + _encode_tail(n_chars="wlen"),
+    "bytebpe_train": _merge_train_oracle(BPE_MERGES, "bytebpe"),
+    "bytebpe_encode": _bpe_enc_head(BPE_MERGES, "bytebpe")
+    + _encode_tail(n_bytes="wlen"),
+    "bytebpe_fertility": f"""
+        SELECT *,
+               floor(n_bytes * 1000000.0 / n_tokens) / 1000000.0
+                   AS bytes_per_token
+        FROM ({_bpe_enc_head(BPE_MERGES, "bytebpe")}
+        {_fertility_tail(n_bytes="wlen")})""",
     "unigram_train": _unigram_train_oracle(UNIGRAM_ROUNDS),
-    "unigram_encode": _unigram_encode_oracle(UNIGRAM_ROUNDS),
+    "unigram_encode": _unigram_enc_head(UNIGRAM_ROUNDS)
+    + _encode_tail(n_chars="wlen"),
     "bpe_pair_stats": f"""
         WITH words AS (
             SELECT t AS w, count(*) AS wc
@@ -2803,17 +2766,30 @@ def _span_excise(starts: str) -> str:
 """
 
 
-ORACLES["span_dedup_rewrite"] = f"""
-    WITH toks AS MATERIALIZED ({_span_toks()}),
-    g AS MATERIALIZED ({_span_grams("toks")}),
+def _span_doc_freq(policy: str) -> str:
+    """The twin of operators/text.py:_gram_doc_positions, after the
+    ``g`` gram CTE: ``st`` holds each gram's document count nd and its
+    smallest document mind, and ``dst`` the (doc_id, i) starts of the
+    grams a span rewrite's cover ``policy`` (a WHERE over g and st)
+    cuts."""
+    return f"""
     st AS MATERIALIZED (
         SELECT gk, min(doc_id) AS mind, count(DISTINCT doc_id) AS nd
         FROM g GROUP BY gk
     ),
     dst AS MATERIALIZED (
         SELECT g.doc_id, g.i FROM g JOIN st USING (gk)
-        WHERE st.nd >= 2 AND g.doc_id <> st.mind
-    ),{_span_excise("dst")}"""
+        WHERE {policy}
+    ),"""
+
+
+ORACLES["span_dedup_rewrite"] = (
+    f"""
+    WITH toks AS MATERIALIZED ({_span_toks()}),
+    g AS MATERIALIZED ({_span_grams("toks")}),"""
+    + _span_doc_freq("st.nd >= 2 AND g.doc_id <> st.mind")
+    + _span_excise("dst")
+)
 
 ORACLES["span_dedup_maximal"] = f"""
     WITH toks AS MATERIALIZED ({_span_toks()}),
@@ -3494,45 +3470,11 @@ def q_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     _merges, vocab = bpe_artifacts(spark, sf_dir, n_merges=5)
     enc = vocab.select("w", F.size("syms").alias("wtok"))
-    agg = tx.vocab_sums(docs, enc, "lang")
-    return agg.select(
-        "lang",
-        "n_words",
-        "n_tokens",
-        (
-            F.floor(
-                F.col("n_tokens") * F.lit(1_000_000.0) / F.col("n_words")
-            )
-            / F.lit(1_000_000.0)
-        ).alias("fertility"),
-    )
-
-
-def _bpe_fertility_oracle(n_merges: int = 5) -> str:
-    """Replay: the shared merged vocabulary (_bpe_enc_head), aggregated
-    per language."""
-    return (
-        _bpe_enc_head(n_merges)
-        + f""",
-        wcnt AS (
-            SELECT lang, t AS w, count(*) AS n
-            FROM documents,
-                 UNNEST({DUCK_TOKENS.format(x='text')}) AS u(t)
-            GROUP BY lang, t
-        )
-        SELECT lang,
-               CAST(sum(n) AS BIGINT) AS n_words,
-               CAST(sum(n * wtok) AS BIGINT) AS n_tokens,
-               floor(sum(n * wtok) * 1000000.0 / sum(n)) / 1000000.0
-                   AS fertility
-        FROM wcnt JOIN enc USING (w)
-        GROUP BY lang
-    """
-    )
+    return tx.lang_fertility(docs, enc)
 
 
 QUERIES["bpe_fertility"] = q_bpe_fertility
-ORACLES["bpe_fertility"] = _bpe_fertility_oracle(5)
+ORACLES["bpe_fertility"] = _bpe_enc_head(5, "bpe") + _fertility_tail()
 
 
 def q_unigram_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3555,45 +3497,13 @@ def q_unigram_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     enc = _unigram_word_tokens(
         words, vocab, UNIGRAM_MAX_PIECE, UNIGRAM_MAX_WORD
     ).select("w", "wtok")
-    agg = tx.vocab_sums(docs, enc, "lang")
-    return agg.select(
-        "lang",
-        "n_words",
-        "n_tokens",
-        (
-            F.floor(
-                F.col("n_tokens") * F.lit(1_000_000.0) / F.col("n_words")
-            )
-            / F.lit(1_000_000.0)
-        ).alias("fertility"),
-    )
-
-
-def _unigram_fertility_oracle(n_rounds: int = UNIGRAM_ROUNDS) -> str:
-    """Replay: the shared EM chain + final Viterbi pass
-    (_unigram_enc_head), aggregated per language."""
-    return (
-        _unigram_enc_head(n_rounds)
-        + f""",
-        wcnt AS (
-            SELECT lang, t AS w, count(*) AS n
-            FROM documents,
-                 UNNEST({DUCK_TOKENS.format(x='text')}) AS u(t)
-            GROUP BY lang, t
-        )
-        SELECT lang,
-               CAST(sum(n) AS BIGINT) AS n_words,
-               CAST(sum(n * wtok) AS BIGINT) AS n_tokens,
-               floor(sum(n * wtok) * 1000000.0 / sum(n)) / 1000000.0
-                   AS fertility
-        FROM wcnt JOIN enc USING (w)
-        GROUP BY lang
-    """
-    )
+    return tx.lang_fertility(docs, enc)
 
 
 QUERIES["unigram_fertility"] = q_unigram_fertility
-ORACLES["unigram_fertility"] = _unigram_fertility_oracle(UNIGRAM_ROUNDS)
+ORACLES["unigram_fertility"] = (
+    _unigram_enc_head(UNIGRAM_ROUNDS) + _fertility_tail()
+)
 
 
 # WordPiece (BERT) tokenizer family — the third production tokenizer.
@@ -3647,87 +3557,6 @@ def q_wordpiece_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _wordpiece_cte_chain(n_merges: int = WORDPIECE_MERGES) -> str:
-    """Shared CTE chain replaying _merge_loop's WORDPIECE family:
-    '##'-marked initial symbols, then per round the symbol counts, the
-    likelihood-scored argmax pair (the ONE double division — IEEE-exact
-    both engines), and the greedy left-to-right merge fold with '##'
-    stripped from the absorbed right symbol.
-
-    Every v{r} is MATERIALIZED: it is referenced THREE times (symbol
-    counts, pair counts, next rewrite), so plain-CTE inlining
-    re-evaluates the word table 3^rounds times — measured as a 20 GB
-    DuckDB spill and an out-of-disk abort at sf10 (the unigram DP's
-    sf1 Lloyd-replay lesson, third occurrence)."""
-    parts = [f"""
-        v0 AS MATERIALIZED (
-            SELECT w, wc,
-                   list_transform(range(1, length(w) + 1),
-                                  i -> CASE WHEN i = 1 THEN w[i:i]
-                                            ELSE '##' || w[i:i] END) AS syms
-            FROM (
-                SELECT t AS w, count(*) AS wc
-                FROM documents,
-                     UNNEST({DUCK_TOKENS.format(x='text')}) AS u(t)
-                GROUP BY t
-            )
-        )"""]
-    for r in range(1, n_merges + 1):
-        parts.append(f"""
-        s{r} AS MATERIALIZED (
-            SELECT s, CAST(sum(wc) AS BIGINT) AS cnt
-            FROM v{r - 1}, UNNEST(syms) AS u(s)
-            GROUP BY s
-        ),
-        p{r} AS MATERIALIZED (
-            SELECT syms[i] AS s1, syms[i + 1] AS s2,
-                   CAST(sum(wc) AS BIGINT) AS n
-            FROM v{r - 1}, UNNEST(range(1, len(syms))) AS rr(i)
-            WHERE len(syms) >= 2
-            GROUP BY 1, 2
-        ),
-        b{r} AS MATERIALIZED (
-            SELECT p.s1 AS bp1, p.s2 AS bp2, p.n,
-                   CAST(p.n AS DOUBLE)
-                       / (CAST(c1.cnt AS DOUBLE) * CAST(c2.cnt AS DOUBLE))
-                       AS score
-            FROM p{r} p
-            JOIN s{r} c1 ON c1.s = p.s1
-            JOIN s{r} c2 ON c2.s = p.s2
-            ORDER BY score DESC, p.s1 ASC, p.s2 ASC LIMIT 1
-        ),
-        v{r} AS MATERIALIZED (
-            SELECT w, wc,
-                   CASE WHEN len(syms) <= 1 THEN syms ELSE
-                     list_reduce(list_transform(syms, x -> [x]),
-                       (acc, el) ->
-                         CASE WHEN acc[-1] = bp1 AND el[1] = bp2
-                              THEN list_concat(acc[1:len(acc) - 1],
-                                   [bp1 || CASE WHEN bp2[1:2] = '##'
-                                                THEN bp2[3:]
-                                                ELSE bp2 END])
-                              ELSE list_concat(acc, el) END)
-                   END AS syms
-            FROM v{r - 1} LEFT JOIN b{r} ON true
-        )""")
-    return ",".join(parts)
-
-
-def _wordpiece_train_oracle(n_merges: int = WORDPIECE_MERGES) -> str:
-    """Unrolled replay of wordpiece_train (see _wordpiece_cte_chain)."""
-    from kafka_streams_dexcom_spark.functions.rounding import trunc6_sql
-
-    selects = [
-        f"SELECT CAST({r} AS INTEGER) AS round, bp1 || '+' || bp2 AS pair,"
-        f" n AS n_occurrences, {trunc6_sql('score')} AS score FROM b{r}"
-        for r in range(1, n_merges + 1)
-    ]
-    return (
-        "WITH " + _wordpiece_cte_chain(n_merges) + "\n"
-        + "\nUNION ALL\n".join(selects)
-    )
-
-
 def _wordpiece_enc_head(n_merges: int = WORDPIECE_MERGES) -> str:
     """Shared oracle head for the WordPiece apply family: the unrolled
     merge chain, the distinct piece set, the per-(word, start) LONGEST
@@ -3743,16 +3572,14 @@ def _wordpiece_enc_head(n_merges: int = WORDPIECE_MERGES) -> str:
 
     mw = WORDPIECE_MAX_WORD
     parts = [
-        _wordpiece_cte_chain(n_merges),
+        _merge_chain(n_merges, "wordpiece"),
         f"""
         wpv AS MATERIALIZED (
             SELECT DISTINCT s FROM v{n_merges}, UNNEST(syms) AS u(s)
         ),
         words AS MATERIALIZED (
-            SELECT t AS w, length(t) AS L
-            FROM documents,
-                 UNNEST({DUCK_TOKENS.format(x='text')}) AS u(t)
-            GROUP BY t
+            SELECT w, length(w) AS L FROM ({_WORDS_DUCK}
+            )
         ),
         wp_short AS (SELECT w, L FROM words WHERE L <= {mw}),
         wp_cand AS MATERIALIZED (
@@ -3800,44 +3627,15 @@ def _wordpiece_enc_head(n_merges: int = WORDPIECE_MERGES) -> str:
     return "WITH " + ",".join(parts)
 
 
-def _wordpiece_encode_oracle(n_merges: int = WORDPIECE_MERGES) -> str:
-    """Replay of wordpiece_encode_counts: the shared greedy-walk head,
-    then the per-doc word join and exact integer count aggregation."""
-    return (
-        _wordpiece_enc_head(n_merges) + f""",
-        wcnt AS (
-            SELECT doc_id, t AS w, count(*) AS n
-            FROM documents,
-                 UNNEST({DUCK_TOKENS.format(x='text')}) AS u(t)
-            GROUP BY doc_id, t
-        ),
-        per AS (
-            SELECT doc_id,
-                   CAST(sum(n) AS BIGINT) AS n_words,
-                   CAST(sum(n * wtok) AS BIGINT) AS n_tokens,
-                   CAST(sum(n * wlen) AS BIGINT) AS n_chars,
-                   CAST(sum(n * is_unk) AS BIGINT) AS n_unk_words
-            FROM wcnt JOIN enc USING (w)
-            GROUP BY doc_id
-        )
-        SELECT d.doc_id,
-               coalesce(per.n_words, 0) AS n_words,
-               coalesce(per.n_tokens, 0) AS n_tokens,
-               coalesce(per.n_chars, 0) AS n_chars,
-               coalesce(per.n_unk_words, 0) AS n_unk_words,
-               CASE WHEN coalesce(per.n_tokens, 0) > 0
-                    THEN floor(per.n_chars * 1000000.0 / per.n_tokens)
-                         / 1000000.0
-               END AS compression
-        FROM documents d LEFT JOIN per USING (doc_id)
-    """
-    )
-
-
 QUERIES["wordpiece_train"] = q_wordpiece_train
-ORACLES["wordpiece_train"] = _wordpiece_train_oracle(WORDPIECE_MERGES)
+ORACLES["wordpiece_train"] = _merge_train_oracle(
+    WORDPIECE_MERGES, "wordpiece"
+)
 QUERIES["wordpiece_encode"] = q_wordpiece_encode
-ORACLES["wordpiece_encode"] = _wordpiece_encode_oracle(WORDPIECE_MERGES)
+ORACLES["wordpiece_encode"] = (
+    _wordpiece_enc_head(WORDPIECE_MERGES)
+    + _encode_tail(n_chars="wlen", n_unk_words="is_unk")
+)
 
 
 def q_wordpiece_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3861,48 +3659,13 @@ def q_wordpiece_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     enc = _wordpiece_word_tokens(words, pieces, WORDPIECE_MAX_WORD).select(
         "w", "wtok", "is_unk"
     )
-    agg = tx.vocab_sums(docs, enc, "lang", n_unk_words="is_unk")
-    return agg.select(
-        "lang",
-        "n_words",
-        "n_tokens",
-        "n_unk_words",
-        (
-            F.floor(
-                F.col("n_tokens") * F.lit(1_000_000.0) / F.col("n_words")
-            )
-            / F.lit(1_000_000.0)
-        ).alias("fertility"),
-    )
-
-
-def _wordpiece_fertility_oracle(n_merges: int = WORDPIECE_MERGES) -> str:
-    """Replay: the shared greedy-walk head (_wordpiece_enc_head),
-    aggregated per language."""
-    return (
-        _wordpiece_enc_head(n_merges)
-        + f""",
-        wcnt AS (
-            SELECT lang, t AS w, count(*) AS n
-            FROM documents,
-                 UNNEST({DUCK_TOKENS.format(x='text')}) AS u(t)
-            GROUP BY lang, t
-        )
-        SELECT lang,
-               CAST(sum(n) AS BIGINT) AS n_words,
-               CAST(sum(n * wtok) AS BIGINT) AS n_tokens,
-               CAST(sum(n * is_unk) AS BIGINT) AS n_unk_words,
-               floor(sum(n * wtok) * 1000000.0 / sum(n)) / 1000000.0
-                   AS fertility
-        FROM wcnt JOIN enc USING (w)
-        GROUP BY lang
-    """
-    )
+    return tx.lang_fertility(docs, enc, n_unk_words="is_unk")
 
 
 QUERIES["wordpiece_fertility"] = q_wordpiece_fertility
-ORACLES["wordpiece_fertility"] = _wordpiece_fertility_oracle(
-    WORDPIECE_MERGES
+ORACLES["wordpiece_fertility"] = (
+    _wordpiece_enc_head(WORDPIECE_MERGES)
+    + _fertility_tail(n_unk_words="is_unk")
 )
 
 
@@ -3923,17 +3686,13 @@ def q_boilerplate_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 QUERIES["boilerplate_rewrite"] = q_boilerplate_rewrite
-ORACLES["boilerplate_rewrite"] = f"""
+ORACLES["boilerplate_rewrite"] = (
+    f"""
     WITH toks AS MATERIALIZED ({_span_toks()}),
-    g AS MATERIALIZED ({_span_grams("toks")}),
-    st AS MATERIALIZED (
-        SELECT gk, count(DISTINCT doc_id) AS nd
-        FROM g GROUP BY gk
-    ),
-    dst AS MATERIALIZED (
-        SELECT g.doc_id, g.i FROM g JOIN st USING (gk)
-        WHERE st.nd >= {tx.BOILERPLATE_MIN_DOCS}
-    ),{_span_excise("dst")}"""
+    g AS MATERIALIZED ({_span_grams("toks")}),"""
+    + _span_doc_freq(f"st.nd >= {tx.BOILERPLATE_MIN_DOCS}")
+    + _span_excise("dst")
+)
 
 
 # ------------------------------------------------ training-order shuffle

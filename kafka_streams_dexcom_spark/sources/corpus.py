@@ -36,6 +36,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from kafka_streams_dexcom_spark.functions.hashing import HASH60_TPL
+
 CORRUPT_COL = "_corrupt_record"
 
 
@@ -588,10 +590,7 @@ def write_webdataset(
     import os as _os
 
     _os.makedirs(out_dir, exist_ok=True)
-    shard = (
-        F.expr("CAST(conv(substr(md5(key), 1, 15), 16, 10) AS BIGINT)")
-        % n_shards
-    )
+    shard = F.expr(HASH60_TPL.format(x="key")) % n_shards
 
     def build(pdf: "pd.DataFrame") -> "pd.DataFrame":
         import pandas as pd

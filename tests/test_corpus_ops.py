@@ -10,15 +10,43 @@ divergence for identical distributions, weight arithmetic).
 
 from __future__ import annotations
 
+import ast
+import pathlib
+
 import pytest
 from pyspark.sql import functions as F
 
+import kafka_streams_dexcom_spark
 from kafka_streams_dexcom_spark.operators.text import (
     heavy_hitters,
     source_divergence,
     span_dedup_rewrite,
 )
 from tests.conftest import oracle_reach
+
+PKG_ROOT = pathlib.Path(kafka_streams_dexcom_spark.__file__).parent
+
+
+def _holders(files, needles, same_line):
+    """'path::definition' of each top-level statement in ``files``
+    whose source holds every needle (on one line, if ``same_line``). A
+    statement's source is the slice of its file's lines from its first
+    line to its last, taken from one split of the file."""
+    out = set()
+    for f in files:
+        src = f.read_text()
+        lines = src.splitlines()
+        for node in ast.parse(src).body:
+            seg = lines[node.lineno - 1 : node.end_lineno]
+            chunks = seg if same_line else ["\n".join(seg)]
+            if not any(all(n in c for n in needles) for c in chunks):
+                continue
+            if isinstance(node, ast.Assign):
+                name = ast.unparse(node.targets[0])
+            else:
+                name = getattr(node, "name", f"<line {node.lineno}>")
+            out.add(f"{f.relative_to(PKG_ROOT).as_posix()}::{name}")
+    return out
 
 
 def _rows(df):
@@ -976,19 +1004,21 @@ def test_exhausted_merge_round_keeps_vocabulary(spark, family):
     assert {r["w"]: r["syms"] for r in vocab.collect()} == {"ab": [merged]}
     if family == "bpe":
         enc = tx.bpe_encode_counts(df, n_merges=3)
-        oracle = qt._bpe_encode_oracle(3)
+        oracle = qt._bpe_enc_head(3, "bpe") + qt._encode_tail(n_chars="wlen")
         cols = ["n_words", "n_tokens", "n_chars", "compression"]
         want = {1: (2, 2, 4, 2.0), 2: (1, 1, 2, 2.0)}
     elif family == "bytebpe":
         enc = tx.bytebpe_encode_counts(df, vocab)
-        oracle = qt._bpe_encode_oracle(
-            3, qt._BYTE_SYMS_DUCK, "octet_length(encode(w))", "n_bytes"
+        oracle = qt._bpe_enc_head(3, "bytebpe") + qt._encode_tail(
+            n_bytes="wlen"
         )
         cols = ["n_words", "n_tokens", "n_bytes", "compression"]
         want = {1: (2, 2, 4, 2.0), 2: (1, 1, 2, 2.0)}
     else:
         enc = tx.wordpiece_encode_counts(df, n_merges=3)
-        oracle = qt._wordpiece_encode_oracle(3)
+        oracle = qt._wordpiece_enc_head(3) + qt._encode_tail(
+            n_chars="wlen", n_unk_words="is_unk"
+        )
         cols = ["n_words", "n_tokens", "n_chars", "n_unk_words", "compression"]
         want = {1: (2, 2, 4, 0, 2.0), 2: (1, 1, 2, 0, 2.0)}
     got = {r["doc_id"]: tuple(r[c] for c in cols) for r in enc.collect()}
@@ -1113,46 +1143,21 @@ def test_one_token_core_per_engine():
     once on the DuckDB side (queries/text._span_excise). And no oracle
     reaches a Spark-side token builder: an oracle that shares the
     engine's code cannot catch the engine's bug."""
-    import ast
-    import pathlib
-
-    import kafka_streams_dexcom_spark as pkg
-
-    root = pathlib.Path(pkg.__file__).parent
-    package = sorted(root.rglob("*.py"))
-    queries = sorted((root / "queries").glob("*.py"))
-
-    def holders(files, needles, same_line):
-        """'path::definition' of each top-level statement whose source
-        holds every needle (on one line, if ``same_line``)."""
-        out = set()
-        for f in files:
-            src = f.read_text()
-            for node in ast.parse(src).body:
-                seg = ast.get_source_segment(src, node)
-                chunks = seg.splitlines() if same_line else [seg]
-                if not any(all(n in c for n in needles) for c in chunks):
-                    continue
-                if isinstance(node, ast.Assign):
-                    name = ast.unparse(node.targets[0])
-                else:
-                    name = getattr(node, "name", f"<line {node.lineno}>")
-                out.add(f"{f.relative_to(root).as_posix()}::{name}")
-        return out
-
-    assert holders(package, ["split(", r"'\\\\s+'"], True) == {
+    package = sorted(PKG_ROOT.rglob("*.py"))
+    queries = sorted((PKG_ROOT / "queries").glob("*.py"))
+    assert _holders(package, ["split(", r"'\\\\s+'"], True) == {
         "operators/dedup.py::TOKENS_TPL"
     }
-    assert holders(queries, ["string_split_regex("], True) == {
+    assert _holders(queries, ["string_split_regex("], True) == {
         "queries/duck.py::DUCK_TOKENS"
     }
-    assert holders(package, ["sequence(1, size(tk) - {"], True) == {
+    assert _holders(package, ["sequence(1, size(tk) - {"], True) == {
         "operators/text.py::gram_starts"
     }
-    assert holders(package, ['"left_anti"', "posexplode("], False) == {
+    assert _holders(package, ['"left_anti"', "posexplode("], False) == {
         "operators/text.py::excise_spans"
     }
-    assert holders(queries, ["LEFT JOIN cov"], True) == {
+    assert _holders(queries, ["LEFT JOIN cov"], True) == {
         "queries/text.py::_span_excise"
     }
 
@@ -1162,4 +1167,48 @@ def test_one_token_core_per_engine():
     })
     assert {"DUCK_TOKENS", "_span_grams", "_span_excise"} <= seen
     assert "host_lines_sql" in seen
+    assert offenders == []
+
+
+def test_one_merge_chain_per_engine():
+    """The merge-trained tokenizer families (BPE, byte-level BPE,
+    WordPiece) run on one merge chain per engine, and all four
+    tokenizer families on one apply tail per engine. The greedy merge
+    fold is written once on each side (queries/text._merge_chain,
+    operators/text.MERGE_FOLD_TPL), the per-doc encode tail once
+    (queries/text._encode_tail, operators/text._encode_counts) and the
+    per-language fertility once (queries/text._fertility_tail,
+    operators/text.lang_fertility). And no oracle reaches a Spark
+    tokenizer builder."""
+    package = sorted(PKG_ROOT.rglob("*.py"))
+    queries = sorted((PKG_ROOT / "queries").glob("*.py"))
+
+    assert _holders(queries, ["list_reduce(list_transform(syms"], True) == {
+        "queries/text.py::_merge_chain"
+    }
+    assert _holders(
+        package, ["CAST(array() AS array<string>), (acc, s) ->"], True
+    ) == {"operators/text.py::MERGE_FOLD_TPL"}
+    assert _holders(queries, ["AS compression"], True) == {
+        "queries/text.py::_encode_tail"
+    }
+    assert _holders(package, ['alias("compression")'], True) == {
+        "operators/text.py::_encode_counts"
+    }
+    assert _holders(queries, ["AS fertility"], True) == {
+        "queries/text.py::_fertility_tail"
+    }
+    assert _holders(package, ['alias("fertility")'], True) == {
+        "operators/text.py::lang_fertility"
+    }
+
+    seen, offenders = oracle_reach({
+        "_merge_loop", "MergeFamily", "BPE", "BYTEBPE", "WORDPIECE",
+        "BYTEBPE_SYMS_TPL", "MERGE_FOLD_TPL", "vocab_sums", "_encode_counts",
+        "lang_fertility",
+    })
+    assert {
+        "_merge_chain", "_MERGE_FAMILIES_DUCK", "_WORDS_DUCK",
+        "_vocab_sums_duck", "_encode_tail", "_fertility_tail",
+    } <= seen
     assert offenders == []
