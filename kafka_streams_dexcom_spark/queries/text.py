@@ -1768,11 +1768,7 @@ ORACLES = {
     "unigram_encode": _unigram_enc_head(UNIGRAM_ROUNDS)
     + _encode_tail(n_chars="wlen"),
     "bpe_pair_stats": f"""
-        WITH words AS (
-            SELECT t AS w, count(*) AS wc
-            FROM documents,
-                 UNNEST({DUCK_TOKENS.format(x='text')}) AS u(t)
-            GROUP BY t
+        WITH words AS ({_WORDS_DUCK}
         ),
         prs AS (
             SELECT w[i:i+1] AS pair, wc
@@ -3468,13 +3464,13 @@ def q_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: sums are exact integers; the single fertility division
     per language row is floor-truncated to 6 decimals."""
     docs = load_table(spark, sf_dir, "documents")
-    _merges, vocab = bpe_artifacts(spark, sf_dir, n_merges=5)
+    _merges, vocab = bpe_artifacts(spark, sf_dir, n_merges=BPE_MERGES)
     enc = vocab.select("w", F.size("syms").alias("wtok"))
     return tx.lang_fertility(docs, enc)
 
 
 QUERIES["bpe_fertility"] = q_bpe_fertility
-ORACLES["bpe_fertility"] = _bpe_enc_head(5, "bpe") + _fertility_tail()
+ORACLES["bpe_fertility"] = _bpe_enc_head(BPE_MERGES, "bpe") + _fertility_tail()
 
 
 def q_unigram_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:

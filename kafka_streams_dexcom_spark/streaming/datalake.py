@@ -34,7 +34,12 @@ def overwrite_partitions(
     path: str,
     partition_cols: tuple[str, ...] = ("dt",),
 ) -> None:
-    """Idempotent backfill: replaces only the partitions present in df."""
+    """Idempotent backfill: replaces only the partitions present in df.
+
+    One backfill writes many partitions, which only a dynamic overwrite
+    replaces and no others, so this keeps it. The streaming sinks write
+    one batch into one known directory and use a plain overwrite of that
+    directory instead (``sinks.batch_dir``)."""
     (
         df.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")

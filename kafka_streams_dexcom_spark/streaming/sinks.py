@@ -8,8 +8,8 @@ commits after a successful bulk (ElasticSearchConsumer.java:55). Spark's
 equivalents here:
 
 - checkpointing replaces the manual offset commit (a failed batch replays),
-- deterministic ids / per-batch-partition dynamic overwrite make the
-  replay idempotent.
+- deterministic ids, and each micro-batch overwriting its own
+  ``__batch_id=N`` directory, make the replay idempotent.
 """
 
 from __future__ import annotations
@@ -85,23 +85,36 @@ def fan_out(
     )
 
 
+def batch_dir(path: str, batch_id: int) -> str:
+    """The directory micro-batch ``batch_id`` owns under a sink's
+    ``path``: a hive-style ``__batch_id=N`` partition, so
+    ``spark.read.parquet(path)`` discovers ``__batch_id`` as an int
+    column and DuckDB reads ``path/*/*.parquet`` with
+    ``hive_partitioning``. A plain overwrite of this one directory
+    deletes and rewrites the batch's own output and nothing else."""
+    return f"{path}/__batch_id={batch_id}"
+
+
 class IdempotentParquetSink:
-    """Exactly-once-effect file sink: each micro-batch writes into its own
-    ``__batch_id`` partition with dynamic partition overwrite, so a
-    replayed batch *replaces* its previous (possibly partial) output
-    instead of appending duplicates. This is the reference's
-    deterministic-id idempotency (§2.6 #7) transplanted to files."""
+    """Exactly-once-effect file sink: each micro-batch overwrites its own
+    ``__batch_id=N`` directory, so a replayed batch *replaces* its
+    previous (possibly partial) output instead of appending duplicates.
+    This is the reference's deterministic-id idempotency (§2.6 #7)
+    transplanted to files.
+
+    A crash before job commit leaves at most ``__batch_id=N/_temporary/``,
+    which both readers skip, or some of the batch's part files; the
+    replay deletes either before it writes. An empty micro-batch lands
+    one schema-only part file (0 rows) in its directory, where a dynamic
+    partition overwrite would land nothing: ``path`` stays readable and
+    its counts are unchanged."""
 
     def __init__(self, path: str) -> None:
         self.path = path
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("__batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch_id")
-            .parquet(self.path)
+        batch_df.write.mode("overwrite").parquet(
+            batch_dir(self.path, batch_id)
         )
 
 
@@ -154,9 +167,11 @@ def es_bulk_lines(
 
 
 class EsBulkFileSink:
-    """Offline ES sink: writes bulk NDJSON per batch (idempotent via the
-    batch-partition overwrite trick). Swap the write for an HTTP POST per
-    partition when an Elasticsearch endpoint exists."""
+    """Offline ES sink: writes bulk NDJSON per batch, idempotent the same
+    way as ``IdempotentParquetSink`` (each batch overwrites its own
+    ``__batch_id=N`` directory, and an empty batch lands one empty file
+    there). Swap the write for an HTTP POST per partition when an
+    Elasticsearch endpoint exists."""
 
     def __init__(self, path: str, batch_size: int = 100) -> None:
         # batch_size mirrors max.poll.records=100
@@ -167,13 +182,10 @@ class EsBulkFileSink:
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         lines = es_bulk_lines(with_stable_id(batch_df))
         (
-            lines.withColumn("__batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch_id")
+            lines.write.mode("overwrite")
             # one bulk request per output file: cap records per file at
             # batch_size so each file is a valid <=batch_size-record
             # bulk POST (the reference's max.poll.records pacing)
             .option("maxRecordsPerFile", self.batch_size)
-            .text(self.path)
+            .text(batch_dir(self.path, batch_id))
         )

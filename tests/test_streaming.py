@@ -9,9 +9,14 @@ micro-batched execution, and replayed batches must not duplicate output.
 from __future__ import annotations
 
 import glob
+import os
+import shutil
 import tempfile
 
+import duckdb
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType
 
 from kafka_streams_dexcom_spark.operators import core as ops
 from kafka_streams_dexcom_spark.queries.core import ranges_df
@@ -24,6 +29,8 @@ from kafka_streams_dexcom_spark.streaming.harness import (
 from kafka_streams_dexcom_spark.streaming.sinks import (
     EsBulkFileSink,
     IdempotentParquetSink,
+    batch_dir,
+    es_bulk_lines,
     fan_out,
     with_stable_id,
 )
@@ -163,6 +170,177 @@ def test_es_bulk_file_sink_writes_bulk_ndjson(spark):
                 lines.extend(l for l in fh.read().splitlines() if l)
         assert len(lines) == 4  # 2 records × (action + doc)
         assert any('"_id": "egvs_0_1"' in l or '"_id":"egvs_0_1"' in l for l in lines)
+
+
+def test_es_bulk_file_sink_replay_no_duplicates(spark):
+    with tempfile.TemporaryDirectory() as d:
+        sink = EsBulkFileSink(f"{d}/bulk")
+        batch = spark.createDataFrame(
+            [("egvs", 0, 1, 250), ("egvs", 0, 2, 100)],
+            "topic string, partition int, offset long, value int",
+        )
+        sink(batch, 7)
+        sink(batch, 7)  # replay of the same epoch (failure recovery)
+        got = spark.read.text(f"{d}/bulk")
+        assert got.count() == 4  # 2 records × (action + doc), not 8
+        sink(batch, 8)  # a new epoch appends
+        got = spark.read.text(f"{d}/bulk")
+        assert got.groupBy("__batch_id").count().orderBy("__batch_id").collect() == [
+            (7, 4),
+            (8, 4),
+        ]
+
+
+def _egv_batch(spark, lo: int, n: int):
+    """``n`` rows over two partitions, so the write lands two part files."""
+    return spark.createDataFrame(
+        [(i, f"v{i}") for i in range(lo, lo + n)], "id long, v string"
+    ).repartition(2)
+
+
+def _batch_counts(spark, path: str) -> tuple[dict, dict]:
+    """Rows per ``__batch_id`` as Spark and as DuckDB's hive glob (the
+    reader ``perfbench``'s egv check uses) see ``path``."""
+    by_spark = {
+        r["__batch_id"]: r["count"]
+        for r in spark.read.parquet(path).groupBy("__batch_id").count().collect()
+    }
+    by_duck = dict(
+        duckdb.sql(
+            f"SELECT __batch_id, count(*) FROM read_parquet('{path}/*/*.parquet', "
+            "hive_partitioning = true) GROUP BY ALL"
+        ).fetchall()
+    )
+    return by_spark, by_duck
+
+
+def _plant_task_committed(batch, stage: str, dst: str) -> None:
+    """What a crash between task commit and job commit leaves: the
+    batch's part files under ``_temporary/0/task_*`` (the file output
+    committer's task-commit layout) and nothing in the batch directory."""
+    batch.write.parquet(stage)
+    shutil.rmtree(dst)
+    for i, f in enumerate(sorted(glob.glob(f"{stage}/part-*.parquet"))):
+        task = f"{dst}/_temporary/0/task_202601010000_0000_m_{i:06d}"
+        os.makedirs(task)
+        shutil.copy(f, task)
+
+
+def _plant_partial(batch, stage: str, dst: str) -> None:
+    """What a crash midway through job commit leaves: the batch
+    directory holds only some of its part files."""
+    parts = sorted(glob.glob(f"{dst}/part-*.parquet"))
+    assert len(parts) == 2
+    os.remove(parts[1])
+
+
+@pytest.mark.parametrize(
+    "plant, temporary_only",
+    [(_plant_task_committed, True), (_plant_partial, False)],
+    ids=["task_committed", "partial_parts"],
+)
+def test_idempotent_sink_replay_after_crash_counts_batch_once(
+    spark, plant, temporary_only
+):
+    with tempfile.TemporaryDirectory() as d:
+        path = f"{d}/out"
+        sink = IdempotentParquetSink(path)
+        sink(_egv_batch(spark, 0, 6), 7)
+        batch = _egv_batch(spark, 100, 10)
+        sink(batch, 8)
+        plant(batch, f"{d}/stage", batch_dir(path, 8))
+        by_spark, by_duck = _batch_counts(spark, path)
+        assert by_spark[7] == by_duck[7] == 6
+        if temporary_only:
+            # both readers skip _temporary: nothing of batch 8 is counted
+            assert 8 not in by_spark and 8 not in by_duck
+        else:
+            assert 0 < by_spark[8] == by_duck[8] < 10
+        sink(batch, 8)  # the replay after recovery
+        assert _batch_counts(spark, path) == ({7: 6, 8: 10}, {7: 6, 8: 10})
+        assert not glob.glob(f"{batch_dir(path, 8)}/_temporary")
+        got = spark.read.parquet(path).where("__batch_id = 8")
+        assert sorted(got.select("id").collect()) == [(i,) for i in range(100, 110)]
+
+
+def _dynamic_overwrite_parquet(df, path: str, batch_id: int) -> None:
+    """The layout reference: the per-batch-partition dynamic overwrite
+    the sinks used before they wrote straight into ``__batch_id=N``."""
+    (
+        df.withColumn("__batch_id", F.lit(batch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("__batch_id")
+        .parquet(path)
+    )
+
+
+def _dynamic_overwrite_es(df, path: str, batch_id: int) -> None:
+    (
+        es_bulk_lines(with_stable_id(df))
+        .withColumn("__batch_id", F.lit(batch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("__batch_id")
+        .option("maxRecordsPerFile", 100)
+        .text(path)
+    )
+
+
+@pytest.mark.parametrize(
+    "make_sink, reference, read",
+    [
+        (IdempotentParquetSink, _dynamic_overwrite_parquet, "parquet"),
+        (EsBulkFileSink, _dynamic_overwrite_es, "text"),
+    ],
+    ids=["parquet", "es_bulk"],
+)
+def test_sink_layout_matches_dynamic_overwrite(spark, make_sink, reference, read):
+    batches = {
+        7: spark.createDataFrame(
+            [("egvs", 0, i, 60 + i) for i in range(5)],
+            "topic string, partition int, offset long, value int",
+        ),
+        8: spark.createDataFrame(
+            [("egvs", 1, i, 200 + i) for i in range(3)],
+            "topic string, partition int, offset long, value int",
+        ),
+    }
+    with tempfile.TemporaryDirectory() as d:
+        sink = make_sink(f"{d}/new")
+        for bid in (7, 8, 7):  # batch 7 replayed after batch 8
+            reference(batches[bid], f"{d}/old", bid)
+            sink(batches[bid], bid)
+        old = getattr(spark.read, read)(f"{d}/old")
+        new = getattr(spark.read, read)(f"{d}/new")
+        assert new.schema == old.schema
+        assert new.schema.fields[-1].name == "__batch_id"
+        assert new.schema.fields[-1].dataType == IntegerType()
+        rows = new.collect()
+        assert sorted(rows) == sorted(old.collect())
+        assert len(set(rows)) == len(rows)  # the replay of 7 added nothing
+
+
+@pytest.mark.parametrize(
+    "make_sink, read",
+    [(IdempotentParquetSink, "parquet"), (EsBulkFileSink, "text")],
+    ids=["parquet", "es_bulk"],
+)
+def test_sink_empty_batch_keeps_path_readable(spark, make_sink, read):
+    schema = "topic string, partition int, offset long, value int"
+    with tempfile.TemporaryDirectory() as d:
+        path = f"{d}/out"
+        sink = make_sink(path)
+        sink(spark.createDataFrame([("egvs", 0, 1, 250)], schema), 7)
+        before = getattr(spark.read, read)(path).collect()
+        sink(spark.createDataFrame([], schema), 8)
+        # a static write of an empty frame lands one 0-row file
+        assert glob.glob(f"{batch_dir(path, 8)}/part-*")
+        after = getattr(spark.read, read)(path).collect()
+        assert sorted(after) == sorted(before)
+        assert {r["__batch_id"] for r in after} == {7}
+        if read == "parquet":
+            assert _batch_counts(spark, path) == ({7: 1}, {7: 1})
 
 
 def test_observe_metrics_per_batch(spark):
