@@ -13,6 +13,14 @@ round's two shuffles even at cluster scale.
 
 Each round is one join + one groupBy — two shuffles on node id, both
 AQE-managed. No driver-side iteration state beyond the loop counter.
+
+The same module ranks pair graphs (fixed-point PageRank) and counts
+their triangles. Connected components and PageRank share one
+runtime-stats dispatch: a graph of at most ``CC_SINGLE_TASK_EDGES``
+mirrored edges runs as ONE executor task (repartition(1) + mapInPandas
+over int64 numpy arrays, both kernels loading edges through
+``_edge_arrays``) instead of the distributed round loop, whose every
+round is an eager Spark job. Either path gives bit-equal output.
 """
 
 from __future__ import annotations
@@ -69,14 +77,18 @@ def _hard_cut(df: DataFrame, rnd: int) -> tuple[DataFrame, str | None]:
     return spark.read.parquet(path), path
 
 
-# Below this edge count the pair graph runs as ONE union-find task on
-# one executor instead of the O(log d) distributed loop. The output is
-# bit-identical (min-id per component is canonical for any algorithm);
-# only the physical strategy changes — the same runtime-stats dispatch
-# AQE applies to joins. 2M edges ≈ 32 MB of int64 pairs: trivial for
-# one task, while the iterative loop would pay seconds of per-round
+# Below this edge count the pair graph runs as ONE task on one executor
+# instead of a distributed round loop: union-find for
+# connected_components (instead of the O(log d) hook+jump loop), the
+# fixed-point rounds on numpy arrays for pagerank. The output is
+# bit-identical (min-id per component is canonical for any algorithm;
+# PageRank's integer arithmetic is the same on both paths); only the
+# physical strategy changes — the same runtime-stats dispatch AQE
+# applies to joins. 2M edges ≈ 32 MB of int64 pairs: trivial for one
+# task, while the iterative loop would pay seconds of per-round
 # scheduling for a graph this small (measured: semdedup's 1.2k-edge
-# graph cost 11.4s in rounds, <1s as one task).
+# graph cost 11.4s in rounds, <1s as one task; pagerank_centrality at
+# sf0.01, 182 nodes, warm on 4 vCPUs: 2.5s as 6 eager jobs, 1.2s as 2).
 CC_SINGLE_TASK_EDGES = 2_000_000
 
 # Every HARD_CUT_EVERY rounds the iterative loop's label table is fully
@@ -84,6 +96,26 @@ CC_SINGLE_TASK_EDGES = 2_000_000
 # round's localCheckpoint (see connected_components for the measured
 # per-round degradation this resets).
 HARD_CUT_EVERY = 8
+
+
+def _edge_arrays(batches):
+    """The edge-array prologue both single-task graph kernels share:
+    ``(ids, ui, vi)`` from the pandas batches of a ``(u, v)`` edge
+    frame, where ``ids`` is the sorted distinct node ids and ``ui``/``vi``
+    are each edge's endpoints as indices into ``ids``. ``None`` when the
+    task received no batch (an empty edge frame)."""
+    import numpy as np
+
+    us, vs = [], []
+    for pdf in batches:
+        us.append(pdf["u"].to_numpy())
+        vs.append(pdf["v"].to_numpy())
+    if not us:
+        return None
+    u = np.concatenate(us)
+    v = np.concatenate(vs)
+    ids, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
+    return ids, inv[: len(u)], inv[len(u) :]
 
 
 def _cc_single_task(edges: DataFrame) -> DataFrame:
@@ -97,17 +129,11 @@ def _cc_single_task(edges: DataFrame) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        us, vs = [], []
-        for pdf in batches:
-            us.append(pdf["u"].to_numpy())
-            vs.append(pdf["v"].to_numpy())
-        if not us:
+        loaded = _edge_arrays(batches)
+        if loaded is None:
             yield pd.DataFrame({"node": [], "component": []})
             return
-        u = np.concatenate(us)
-        v = np.concatenate(vs)
-        ids, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
-        ui, vi = inv[: len(u)], inv[len(u) :]
+        ids, ui, vi = loaded
         parent = np.arange(len(ids))
 
         def find(x: int) -> int:
@@ -443,45 +469,49 @@ PR_UNIT = 1_000_000_000_000  # fixed-point scale: 1.0 == 10^12 units
 PR_DAMP_NUM, PR_DAMP_DEN = 85, 100  # damping d = 0.85 as a ratio
 
 
-def pagerank(
-    pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    rounds: int = 3,
-) -> DataFrame:
-    """PageRank over an undirected pair graph, in fixed-point integers.
+def _pr_single_task(p0: DataFrame, rounds: int) -> DataFrame:
+    """(node, pr) of a small normalized pair set as one executor task:
+    repartition(1) + mapInPandas running the distributed loop's
+    fixed-point rounds on int64 numpy arrays. Every quantity is the
+    loop's integer (pr div deg contributions, their sum per target, the
+    damped floor update), so the ranks are bit-equal to the loop's;
+    ``np.add.at`` sums integers, never floats."""
+    node_t = p0.schema["u"].dataType.simpleString()
 
-    Distributed float determinism is the real problem with iterative
-    rank algorithms: a double sum's value depends on partition reduce
-    order, so two runs (or two engines) drift. Here every quantity is a
-    BIGINT number of 10^-12 units and every division is integer floor
-    division — sums of integers are order-independent, so the result is
-    bit-identical on any partitioning and exactly replayable by the SQL
-    oracle's unrolled rounds.
+    def run(batches):
+        import numpy as np
+        import pandas as pd
 
-    Per round: contribution = pr div degree per node (narrow), one join
-    edges->contributions + one groupBy on the target node (two shuffles,
-    both on node id), then the damped update. Same shape and hygiene as
-    connected_components: loop-invariant edges persisted, per-round
-    lineage cut with localCheckpoint. Undirected near-dup graphs have no
-    dangling nodes (every node has degree >= 1), so no dangling-mass
-    redistribution term is needed.
-    """
-    # cut the pair pipeline ONCE before mirroring: the union references
-    # it from two branches, which would execute candidate generation
-    # twice during the persist materialization. Normalize + distinct
-    # first: the documented semantics are an undirected SIMPLE graph —
-    # duplicate or reversed input pairs must not inflate degrees or
-    # double-count contributions.
-    p0 = (
-        pairs.select(
-            F.least(F.col(a_col), F.col(b_col)).alias("u"),
-            F.greatest(F.col(a_col), F.col(b_col)).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
+        loaded = _edge_arrays(batches)
+        if loaded is None:
+            yield pd.DataFrame({"node": [], "pr": []})
+            return
+        ids, ui, vi = loaded
+        n = len(ids)
+        src = np.concatenate([ui, vi])
+        dst = np.concatenate([vi, ui])
+        deg = np.bincount(src, minlength=n)
+        base = (PR_UNIT * (PR_DAMP_DEN - PR_DAMP_NUM) // PR_DAMP_DEN) // n
+        pr = np.full(n, PR_UNIT // n, dtype=np.int64)
+        for _ in range(rounds):
+            s = np.zeros(n, dtype=np.int64)
+            np.add.at(s, dst, (pr // deg)[src])
+            nxt = base + PR_DAMP_NUM * s // PR_DAMP_DEN
+            if np.array_equal(nxt, pr):
+                break
+            pr = nxt
+        yield pd.DataFrame({"node": ids, "pr": pr})
+
+    return p0.repartition(1).mapInPandas(
+        run, schema=f"node {node_t}, pr bigint"
     )
+
+
+def _pr_loop(p0: DataFrame, rounds: int) -> DataFrame:
+    """(node, deg, n_nodes, pr) of the normalized pair set ``p0`` by the
+    distributed round loop: two shuffles per round on node id, edges
+    persisted, every round cut with an eager localCheckpoint and
+    followed by an early-exit count."""
     edges = p0.union(
         p0.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
@@ -543,6 +573,63 @@ def pagerank(
         ):
             break
     edges.unpersist()
+    return pr
+
+
+def pagerank(
+    pairs: DataFrame,
+    a_col: str = "doc_a",
+    b_col: str = "doc_b",
+    rounds: int = 3,
+    single_task_edges: int | None = CC_SINGLE_TASK_EDGES,
+) -> DataFrame:
+    """PageRank over an undirected pair graph, in fixed-point integers.
+
+    Distributed float determinism is the real problem with iterative
+    rank algorithms: a double sum's value depends on partition reduce
+    order, so two runs (or two engines) drift. Here every quantity is a
+    BIGINT number of 10^-12 units and every division is integer floor
+    division — sums of integers are order-independent, so the result is
+    bit-identical on any partitioning and exactly replayable by the SQL
+    oracle's unrolled rounds.
+
+    Per round: contribution = pr div degree per node, summed per target
+    node, then the damped update ``base + 85*s div 100``. The round
+    stops early once a round changes nothing. Undirected near-dup graphs
+    have no dangling nodes (every node has degree >= 1), so no
+    dangling-mass redistribution term is needed.
+
+    Two physical strategies, chosen by the same runtime-stats dispatch
+    as connected_components: a graph of at most ``single_task_edges``
+    mirrored edges runs as ONE executor task (repartition(1) + an int64
+    numpy kernel, :func:`_pr_single_task`); a larger one, or any graph
+    with ``single_task_edges=None``, runs the distributed loop
+    (:func:`_pr_loop`: one join + one groupBy per round, edges
+    persisted, every round cut with an eager localCheckpoint plus an
+    early-exit count). Both compute the same integers, so the ranks are
+    bit-equal; the small path only skips the loop's per-round jobs.
+    """
+    # cut the pair pipeline ONCE: the dispatch count and the chosen path
+    # both read it, and the loop's mirror union references it from two
+    # branches, which would execute candidate generation twice.
+    # Normalize + distinct first: the documented semantics are an
+    # undirected SIMPLE graph — duplicate or reversed input pairs must
+    # not inflate degrees or double-count contributions.
+    p0 = (
+        pairs.select(
+            F.least(F.col(a_col), F.col(b_col)).alias("u"),
+            F.greatest(F.col(a_col), F.col(b_col)).alias("v"),
+        )
+        .filter(F.col("u") != F.col("v"))
+        .distinct()
+        .localCheckpoint()
+    )
+    # 2·|p0| is the mirrored edge count, the quantity the CC threshold
+    # was calibrated against
+    if single_task_edges and 2 * p0.count() <= single_task_edges:
+        pr = _pr_single_task(p0, rounds)
+    else:
+        pr = _pr_loop(p0, rounds)
     # float view truncated to 9 decimals via integer div — never round a
     # computed double (engines disagree on ties; see BASELINE.md notes)
     return pr.select(

@@ -3,10 +3,12 @@ connected-components cluster representatives."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from kafka_streams_dexcom_spark.operators.clustering import kmeans_assign
 from kafka_streams_dexcom_spark.operators.graph import (
+    CC_SINGLE_TASK_EDGES,
     cluster_representatives,
     connected_components,
 )
@@ -52,18 +54,32 @@ def test_connected_components_exact_on_known_graph(spark):
     assert reps == {1: (1, 3), 10: (10, 2)}
 
 
-def test_pagerank_known_graph(spark):
-    """Path graph 1-2-3: the middle node must outrank the ends, total
-    mass stays ~1, and the result is bit-identical across runs
-    (fixed-point arithmetic)."""
+def _pr_units(pairs, **kw) -> dict:
     from kafka_streams_dexcom_spark.operators.graph import pagerank
 
+    return {r.node: r.pr_units for r in pagerank(pairs, **kw).collect()}
+
+
+# the default dispatches these small graphs to the one-task kernel;
+# None forces the distributed round loop
+PR_PATHS = pytest.mark.parametrize(
+    "single_task_edges", [CC_SINGLE_TASK_EDGES, None], ids=["task", "loop"]
+)
+
+
+@PR_PATHS
+def test_pagerank_known_graph(spark, single_task_edges):
+    """Path graph 1-2-3: the middle node must outrank the ends, total
+    mass stays ~1, and the result is bit-identical across runs
+    (fixed-point arithmetic) and across the two physical paths."""
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3)], "doc_a long, doc_b long"
     )
-    r1 = {r.node: r.pr_units for r in pagerank(pairs, rounds=3).collect()}
-    r2 = {r.node: r.pr_units for r in pagerank(pairs, rounds=3).collect()}
+    r1 = _pr_units(pairs, rounds=3, single_task_edges=single_task_edges)
+    r2 = _pr_units(pairs, rounds=3, single_task_edges=single_task_edges)
     assert r1 == r2  # deterministic to the unit
+    other = None if single_task_edges else CC_SINGLE_TASK_EDGES
+    assert r1 == _pr_units(pairs, rounds=3, single_task_edges=other)
     assert r1[2] > r1[1] and r1[2] > r1[3]
     assert r1[1] == r1[3]  # symmetry of the path ends
     # mass conservation up to integer-floor leakage (3 rounds x 3 nodes)
@@ -160,16 +176,76 @@ def test_connected_components_long_chain_log_rounds(spark):
     assert cc == {i: 0 for i in range(200)}
 
 
-def test_pagerank_early_exit_identity(spark):
+@PR_PATHS
+def test_pagerank_early_exit_identity(spark, single_task_edges):
     """Early exit is a pure optimization: a graph that stabilizes fast
     must produce bit-identical ranks whether rounds=3 or rounds=10
-    (after stabilization every round is a no-op)."""
+    (after stabilization every round is a no-op), on either path."""
+    pairs = spark.createDataFrame([(1, 2)], "doc_a long, doc_b long")
+    r3 = _pr_units(pairs, rounds=3, single_task_edges=single_task_edges)
+    r10 = _pr_units(pairs, rounds=10, single_task_edges=single_task_edges)
+    assert r3 == r10
+    other = None if single_task_edges else CC_SINGLE_TASK_EDGES
+    assert r10 == _pr_units(pairs, rounds=10, single_task_edges=other)
+
+
+def _both_paths(pairs, **kw):
+    """``pagerank`` on the one-task path and on the round loop."""
     from kafka_streams_dexcom_spark.operators.graph import pagerank
 
-    pairs = spark.createDataFrame([(1, 2)], "doc_a long, doc_b long")
-    r3 = {r.node: r.pr_units for r in pagerank(pairs, rounds=3).collect()}
-    r10 = {r.node: r.pr_units for r in pagerank(pairs, rounds=10).collect()}
-    assert r3 == r10
+    return (
+        pagerank(pairs, single_task_edges=CC_SINGLE_TASK_EDGES, **kw),
+        pagerank(pairs, single_task_edges=None, **kw),
+    )
+
+
+@pytest.mark.parametrize("rows", [[], [(4, 4)]], ids=["no_pair", "self_pair"])
+def test_pagerank_paths_agree_on_empty_graph(spark, rows):
+    """No pair, or only self-pairs, is an empty graph: both paths return
+    0 rows with the same schema."""
+    pairs = spark.createDataFrame(rows, "doc_a long, doc_b long")
+    task, loop = _both_paths(pairs)
+    assert task.schema == loop.schema
+    assert task.count() == loop.count() == 0
+
+
+def test_pagerank_paths_agree_on_two_components(spark):
+    """A triangle with a pendant beside a 4-star, ranked over 8 rounds:
+    bit-equal per node on both paths, hubs above their leaves."""
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (1, 3), (3, 4)]
+        + [(10, 10 + k) for k in range(1, 5)],
+        "doc_a long, doc_b long",
+    )
+    task, loop = _both_paths(pairs, rounds=8)
+    t = {r.node: r.pr_units for r in task.collect()}
+    assert t == {r.node: r.pr_units for r in loop.collect()}
+    assert set(t) == {1, 2, 3, 4, 10, 11, 12, 13, 14}
+    assert t[3] > t[1] == t[2] > t[4]
+    assert t[10] > t[11] == t[12] == t[13] == t[14]
+
+
+def test_pagerank_paths_agree_on_query_graph(spark, sf_dir):
+    """pagerank_centrality's own pair graph: bit-equal ranks and the
+    same float view on both paths."""
+    from kafka_streams_dexcom_spark.operators.dedup import (
+        embedding_cosine_pairs,
+    )
+    from kafka_streams_dexcom_spark.queries.dedup import (
+        COSINE_THRESHOLD,
+        PR_ROUNDS,
+    )
+    from kafka_streams_dexcom_spark.sources.files import load_table
+
+    pairs = embedding_cosine_pairs(
+        load_table(spark, sf_dir, "embeddings"), threshold=COSINE_THRESHOLD
+    )
+    task, loop = _both_paths(
+        pairs, a_col="vec_id_a", b_col="vec_id_b", rounds=PR_ROUNDS
+    )
+    assert task.schema == loop.schema
+    t = sorted(map(tuple, task.collect()))
+    assert t == sorted(map(tuple, loop.collect())) and len(t) > 10
 
 
 def test_triangle_counts_degree_cap_excludes_celebrity(spark):

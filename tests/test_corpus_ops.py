@@ -17,6 +17,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import kafka_streams_dexcom_spark
+from kafka_streams_dexcom_spark.operators.graph import CC_SINGLE_TASK_EDGES
 from kafka_streams_dexcom_spark.operators.text import (
     heavy_hitters,
     source_divergence,
@@ -369,10 +370,16 @@ def test_dq_rule_names_with_special_characters(spark):
     assert rv(df, {}).count() == 0
 
 
-def test_graph_ops_normalize_duplicate_and_reversed_edges(spark):
+@pytest.mark.parametrize(
+    "single_task_edges", [CC_SINGLE_TASK_EDGES, None], ids=["task", "loop"]
+)
+def test_graph_ops_normalize_duplicate_and_reversed_edges(
+    spark, single_task_edges
+):
     """Duplicate rows and reversed orientations of the same pair must
     not inflate degrees, ranks, or triangle counts — the operators
-    document an undirected simple graph."""
+    document an undirected simple graph. PageRank's one-task kernel and
+    its round loop (``single_task_edges=None``) agree to the unit."""
     from kafka_streams_dexcom_spark.operators.graph import (
         pagerank,
         triangle_counts,
@@ -392,13 +399,16 @@ def test_graph_ops_normalize_duplicate_and_reversed_edges(spark):
         (r["node"], r["triangles"], r["degree"]) for r in triangle_counts(dirty).collect()
     )
     assert t_clean == t_dirty
-    pr_clean = sorted(
-        (r["node"], r["pr_units"]) for r in pagerank(clean).collect()
-    )
-    pr_dirty = sorted(
-        (r["node"], r["pr_units"]) for r in pagerank(dirty).collect()
-    )
-    assert pr_clean == pr_dirty
+    def ranks(pairs, edges):
+        return sorted(
+            (r["node"], r["pr_units"])
+            for r in pagerank(pairs, single_task_edges=edges).collect()
+        )
+
+    other = None if single_task_edges else CC_SINGLE_TASK_EDGES
+    pr_clean = ranks(clean, single_task_edges)
+    assert pr_clean == ranks(dirty, single_task_edges)
+    assert pr_clean == ranks(dirty, other)
 
 
 def test_contamination_keeps_sub_n_token_eval_docs(spark):

@@ -228,6 +228,16 @@ def test_fingerprint_family_plan_shapes(query_shape):
         assert shape["python"] == 2 and _joins(shape) == 0, (name, shape)
 
 
+def test_pagerank_centrality_runs_as_one_task(query_census):
+    """The query's pair graph is far below the single-task threshold, so
+    PageRank runs as one Python task in the returned plan. Building it
+    runs only the pair cut and the dispatch count: no per-round
+    checkpoint and no early-exit count, each a Spark job of its own."""
+    shape, construction_plans = query_census("pagerank_centrality")
+    assert len(construction_plans) <= 2, len(construction_plans)
+    assert shape["python"] == 1, shape
+
+
 def test_filter_pushed_to_parquet_scan(spark, sf_dir):
     df = q_filter_high(spark, sf_dir)
     plan = explain_str(df)

@@ -126,6 +126,38 @@ def test_debounce_on_rocksdb_state_store(spark):
             spark.conf.unset(key)
 
 
+def _await_stopped(spark, q, ckpt: str, timeout_s: float = 60.0) -> None:
+    """Wait until ``q`` has ended, no task is running and nothing under
+    ``ckpt`` has changed for half a second. Stopping a query interrupts
+    its batch, and the batch's tasks abort their state stores after the
+    stop returns. An abort hands its file creation to a checksum writer
+    thread, which can still create a file under ``ckpt`` after the task
+    has ended. Removing the checkpoint meanwhile fails with ``OSError``
+    (directory not empty)."""
+    import os
+    import time
+
+    def files():
+        return sorted((root, sorted(names)) for root, _, names in os.walk(ckpt))
+
+    sc = spark.sparkContext._jsc.sc()  # noqa: SLF001
+    deadline, settled = time.time() + timeout_s, None
+    while time.time() < deadline:
+        sc.listenerBus().waitUntilEmpty()
+        running = sum(
+            e.numRunningTasks() for e in sc.statusTracker().getExecutorInfos()
+        )
+        if q.isActive or running:
+            settled = None
+        else:
+            now = files()
+            if now == settled:
+                return
+            settled = now
+        time.sleep(0.5)
+    raise AssertionError(f"query active: {q.isActive}; tasks running: {running}")
+
+
 def test_debounce_with_state_ttl_same_alerts(spark):
     """Enabling the production state-TTL knob (ProcessingTimeTimeout)
     must not change which alerts are emitted — expired state is
@@ -165,5 +197,6 @@ def test_debounce_with_state_ttl_same_alerts(spark):
             q.awaitTermination()
         except Exception:
             pass  # stopping a timer-busy query can raise engine-side
+        _await_stopped(spark, q, f"{d}/ckpt")
     got = sorted((r.user_id, r.ts_us, r.value) for r in collected)
     assert got == expected
